@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Per-query median of SPARK_GRAFT_BENCH_RUNS (default 3)
   * noop-sink executions — single-shot numbers on a shared box have a ±1-2s
@@ -176,13 +175,7 @@ object Bench {
     val (calibStart, calibParStart) =
       if (gateWait > 0) (calibrate(), calibratePar(nCpus))
       else (calibPreGate, calibParPreGate)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "WARN")
     // Untimed warm-up: JIT, codegen, parquet reader+writer, shuffle and
     // window exec paths — so per-query timings measure the queries, not
     // one-time JVM initialization landing on whichever query runs first.

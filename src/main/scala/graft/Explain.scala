@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of the named
   * queries (default: a few load-bearing ones) against a testdata dir.
   * Usage: runMain graft.Explain <sfDir> [query ...]
@@ -15,13 +13,7 @@ object Explain {
                   "q60_ngram_topk", "q66_contamination_probe", "q67_knn_pq"
                 )
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus, "ERROR")
     val qs = SparkEntry.queries
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.Tables
 import graft.pipeline.Features
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity probe: widen the events table N× by unioning shifted
@@ -46,13 +45,7 @@ object ScaleProbe {
         "binpack", "bloomdedup", "manifestplan"))
     def enabled(p: String): Boolean = probes.contains(p)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus, "ERROR")
 
     val base = Tables.events(spark, sfDir).select("user_id", "ts", "value")
     val nUsers = base.agg(max("user_id")).head().getLong(0) + 1
@@ -1123,11 +1116,11 @@ object ScaleProbe {
         // window selects a CONSTANT 1/16 of files at every scale
         val files = (0 until nf).map(i => (s"/synthetic/skip$snap/f$i.parquet", 1000L))
         SnapshotLog.recordColStats(
-          dbS, files.zipWithIndex.map { case ((p, _), i) =>
+          dbS, "c0", files.zipWithIndex.map { case ((p, _), i) =>
             (p, 1000L * i, 1000L * i + 999L) })
         SnapshotLog.commit(dbS, parent, snap, files)
         val t0 = System.nanoTime()
-        val pruned = SnapshotLog.pruneByRange(dbS, snap, 0L, 1000L * (nf / 16) - 1L)
+        val pruned = SnapshotLog.pruneByCols(dbS, snap, Seq(("c0", 0L, 1000L * (nf / 16) - 1L)))
         val planSec = (System.nanoTime() - t0) / 1e9
         parent = snap
         println(f"[scale] x$m%-3d stat_files=$nf%5d  plan(range)=$planSec%7.3f s  pruned=${pruned.size}%5d (${pruned.size * 100 / nf}%d%% kept)")
@@ -1183,7 +1176,7 @@ object ScaleProbe {
         val dbM = s"$logDir/m.duckdb"
         SnapshotLog.initLog(dbM)
         SnapshotLog.initManifestGroups(dbM)
-        SnapshotLog.initNdv(dbM)
+        SnapshotLog.initColNdv(dbM)
         var mParent = 0L
         val mpResults = mults.map { m =>
           val nf = 16 * m
@@ -1194,8 +1187,8 @@ object ScaleProbe {
             SnapshotLog.recordGroup(dbM, snap, snap * 1000000L + g,
               (0 until 4).map(j => (files(g * 4 + j)._1, (g * 4 + j).toLong)))
           }
-          SnapshotLog.recordNdv(dbM, files.flatMap { case (p, _) =>
-            (0 until 8).map(b => (p, b.toLong, ((math.abs(p.hashCode) + b) % 20 + 1).toLong))
+          SnapshotLog.recordColNdv(dbM, files.flatMap { case (p, _) =>
+            (0 until 8).map(b => (p, "k", b.toLong, ((math.abs(p.hashCode) + b) % 20 + 1).toLong))
           })
           val probeB = (nf / 2).toLong
           val t0 = System.nanoTime()
@@ -1213,7 +1206,7 @@ object ScaleProbe {
           }
           val planSec = (System.nanoTime() - t0) / 1e9
           val t1 = System.nanoTime()
-          val regs = SnapshotLog.ndvRegisters(dbM, files.map(_._1))
+          val regs = SnapshotLog.colNdvRegisters(dbM, files.map(_._1), "k")
           val mergeSec = (System.nanoTime() - t1) / 1e9
           mParent = snap
           println(

@@ -206,7 +206,9 @@ object DuckDbLive {
     * statement, `arity` for the second, ...).
     *
     * `sql` must have the shape `INSERT INTO <t> VALUES (?, ...)` —
-    * the template after VALUES is replicated per chunk row.
+    * the template after VALUES is replicated per chunk row, so anything
+    * else there (a suffix clause such as `ON CONFLICT`, a literal, a
+    * second tuple) is rejected before any statement runs.
     */
   def insertRows[A](
       conn: Connection,
@@ -217,6 +219,9 @@ object DuckDbLive {
       require(vIdx >= 0, s"insertRows needs an INSERT ... VALUES statement, got: $sql")
       val prefix = sql.substring(0, vIdx + "VALUES".length)
       val template = sql.substring(vIdx + "VALUES".length).trim
+      require(
+        template.matches("""\(\s*\?(\s*,\s*\?)*\s*\)"""),
+        s"insertRows needs exactly one (?, ..., ?) tuple after VALUES, got: $sql")
       val arity = template.count(_ == '?')
       val prevAuto = conn.getAutoCommit
       conn.setAutoCommit(false)

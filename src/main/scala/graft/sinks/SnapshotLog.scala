@@ -22,6 +22,16 @@ import org.apache.spark.sql.functions._
   *     stale committer gets a clean REJECT (optimistic concurrency,
   *     exactly Iceberg's commit protocol), never a half-visible table.
   *
+  * The protocol has one version of each primitive: [[initLog]] creates
+  * every table a commit touches; [[commit]] is the only writer of a
+  * snapshot — it swaps main's pointer or a named branch ref and writes
+  * the snapshot, data-manifest, delete-manifest and stale-marker rows in
+  * that one transaction; [[moveCurrent]] is the only snapshot-less
+  * pointer move (publish, rollback); [[expireSnapshots]] is the only
+  * expiry, and always keeps the root, the current snapshot and every
+  * ref-named snapshot. Every pointer move goes through one conditional
+  * swap statement.
+  *
   * The s39 query drives the full lifecycle: two committed snapshots
   * (epoch-0 slice, then append), one INJECTED stale-parent commit that
   * must be rejected, then a time-travel read of snapshot 1 next to the
@@ -64,7 +74,7 @@ object SnapshotLog {
       m.contains("TransactionContext Error") || m.contains("Conflict on update"))
 
   /** Rollback + clean reject on a write-write conflict; rollback +
-    * rethrow on anything else. Shared tail of every commit variant.
+    * rethrow on anything else. The tail of [[commit]].
     */
   private def rejectOnConflict(c: java.sql.Connection, e: Throwable): Boolean = {
     try c.rollback()
@@ -93,77 +103,146 @@ object SnapshotLog {
     }
   }
 
-  /** Insert manifest rows via PreparedStatement — paths are DATA, never
-    * spliced into SQL text (an apostrophe in a path must not be able to
-    * tear the layer whose whole contract is torn-proof commits).
+  /** Insert log rows via PreparedStatement inside the caller's
+    * transaction — paths are DATA, never spliced into SQL text (an
+    * apostrophe in a path must not be able to tear the layer whose
+    * whole contract is torn-proof commits). Every row a commit writes
+    * (snapshot, data/delete manifest entries, stale markers) goes
+    * through here; `DuckDbLive.insertRows` commits on its own and would
+    * split the commit's transaction.
     */
   private def insertManifests(
       c: java.sql.Connection,
       table: String,
-      snapshotId: Long,
-      files: Seq[(String, Long)]): Unit = {
-    val ps = c.prepareStatement(s"INSERT INTO $table VALUES (?, ?, ?)")
-    try files.foreach { case (p, n) =>
-      ps.setLong(1, snapshotId)
-      ps.setString(2, p)
-      ps.setLong(3, n)
-      ps.executeUpdate()
-    } finally ps.close()
-  }
+      rows: Seq[Product]): Unit =
+    if (rows.nonEmpty) {
+      val ps = c.prepareStatement(
+        s"INSERT INTO $table VALUES (${Seq.fill(rows.head.productArity)("?").mkString(", ")})")
+      try rows.foreach { r =>
+        r.productIterator.zipWithIndex.foreach {
+          case (v: Long, i) => ps.setLong(i + 1, v)
+          case (v: String, i) => ps.setString(i + 1, v)
+        }
+        ps.executeUpdate()
+      } finally ps.close()
+    }
 
-  /** Create the empty commit log: snapshot 0 is the empty table and the
-    * current pointer starts there.
+  /** Create the empty commit log — every table a commit touches, in one
+    * DDL: snapshot 0 is the empty table and the current pointer starts
+    * there.
+    *
+    *   - `refs`: named branch refs (Iceberg refs / Nessie branches). A
+    *     ref is a movable pointer into the SAME snapshot DAG the main
+    *     `current` pointer reads — staged work advances a branch ref
+    *     with the identical optimistic-swap discipline, and publishing
+    *     is a pointer move, never a data copy.
+    *   - `delete_manifests` + `file_seq`: merge-on-read metadata
+    *     (Iceberg v2 row-level-delete shape). Delete files are
+    *     first-class manifest entries per snapshot, and every file —
+    *     data or delete — carries the SEQUENCE NUMBER of the commit that
+    *     added it. The sequence number is the load-bearing rule: an
+    *     equality delete applies only to data files with a STRICTLY
+    *     LOWER seq, which is exactly what lets an update (delete old
+    *     version + insert new version in the same commit) not delete its
+    *     own re-inserted rows.
+    *   - `position_delete_manifests`: POSITION deletes (Iceberg v2's
+    *     second row-level-delete kind, the one Spark/Iceberg writers
+    *     emit by default) — a delete file of (data-file path, row
+    *     ordinal) tuples masking exact rows. The seq rule is deliberately
+    *     ASYMMETRIC to equality deletes: a position delete applies to
+    *     data files with seq <= its own (it names an exact file, so a
+    *     commit can position-delete rows of the file it writes — the
+    *     streaming-upsert flush pattern), while an equality delete
+    *     applies strictly below (so an update never eats its own
+    *     re-inserted keys).
+    *   - `stat_stale`: staleness markers for the long-form stat tables.
+    *     col_ndv is append-only and HLL registers cannot be decremented,
+    *     so a delete that removes rows from a file makes that file's
+    *     sketch rows an OVER-COUNT — silently, unless the delete commit
+    *     marks them. The marker is a separate log table (Iceberg's
+    *     stats-invalidation shape: metadata marks, never mutation of the
+    *     immutable sketch rows); readers exclude marked (path, column)
+    *     pairs and recompute the stale scope from data (q215's
+    *     pruned-scope read).
     */
   private[graft] def initLog(dbFile: String): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE snapshots(
-          |snapshot_id BIGINT PRIMARY KEY, parent_id BIGINT NOT NULL)""".stripMargin)
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE manifests(
-          |snapshot_id BIGINT NOT NULL, path VARCHAR NOT NULL,
-          |n_rows BIGINT NOT NULL)""".stripMargin)
-      DuckDbLive.execute(
-        c,
-        "CREATE TABLE current(pin BIGINT PRIMARY KEY CHECK (pin = 0), snapshot_id BIGINT NOT NULL)")
-      DuckDbLive.execute(c, "INSERT INTO current VALUES (0, 0)")
-      DuckDbLive.execute(c, "INSERT INTO snapshots VALUES (0, 0)")
+      val manifestCols = "snapshot_id BIGINT NOT NULL, path VARCHAR NOT NULL, n_rows BIGINT NOT NULL"
+      Seq(
+        "CREATE TABLE snapshots(snapshot_id BIGINT PRIMARY KEY, parent_id BIGINT NOT NULL)",
+        s"CREATE TABLE manifests($manifestCols)",
+        s"CREATE TABLE delete_manifests($manifestCols)",
+        s"CREATE TABLE position_delete_manifests($manifestCols)",
+        "CREATE TABLE current(pin BIGINT PRIMARY KEY CHECK (pin = 0), snapshot_id BIGINT NOT NULL)",
+        "CREATE TABLE refs(name VARCHAR PRIMARY KEY, snapshot_id BIGINT NOT NULL)",
+        "CREATE TABLE file_seq(path VARCHAR PRIMARY KEY, seq BIGINT NOT NULL)",
+        "CREATE TABLE stat_stale(path VARCHAR NOT NULL, col_name VARCHAR NOT NULL)",
+        "INSERT INTO current VALUES (0, 0)",
+        "INSERT INTO snapshots VALUES (0, 0)"
+      ).foreach(DuckDbLive.execute(c, _))
     }
 
-  /** Commit `snapshotId` whose manifest list is `files`, built on
+  /** The conditional pointer swap: move main's `current` pointer
+    * (`ref` = None) or the named branch ref from `expected` to `to`,
+    * true iff the pointer still sat at `expected`. The only statement in
+    * the log that moves a pointer.
+    */
+  private def swap(c: java.sql.Connection, ref: Option[String], expected: Long, to: Long): Boolean = {
+    val ps = c.prepareStatement(ref.fold(
+      "UPDATE current SET snapshot_id = ? WHERE snapshot_id = ? AND pin = 0")(_ =>
+      "UPDATE refs SET snapshot_id = ? WHERE snapshot_id = ? AND name = ?"))
+    try {
+      ps.setLong(1, to)
+      ps.setLong(2, expected)
+      ref.foreach(ps.setString(3, _))
+      ps.executeUpdate() == 1
+    } finally ps.close()
+  }
+
+  /** Commit `snapshotId` whose manifest list is `dataFiles`, built on
     * `expectedParent`. TRANSACTIONAL + OPTIMISTIC: the conditional
-    * pointer swap (`UPDATE current .. WHERE snapshot_id = parent`)
-    * runs in the same transaction as the snapshot + manifest inserts,
-    * so a stale parent (update count 0) rolls everything back and
-    * returns false — and a RACING committer that touched the pointer
-    * row first surfaces as DuckDB's optimistic-MVCC write-write
-    * conflict, which is caught and reported as the same clean reject
-    * (the loser retries against the new parent or gives up; it never
-    * half-commits). Returns true iff this call advanced the table.
+    * pointer swap runs in the same transaction as the snapshot row and
+    * every manifest row, so a stale parent (update count 0) rolls
+    * everything back and returns false — and a RACING committer that
+    * touched the pointer row first surfaces as DuckDB's optimistic-MVCC
+    * write-write conflict, which is caught and reported as the same
+    * clean reject (the loser retries against the new parent or gives
+    * up; it never half-commits). Returns true iff this call advanced
+    * the table.
+    *
+    * With `ref` set the commit advances that BRANCH ref instead of main:
+    * same transaction shape, so staged history is exactly as torn-proof
+    * as published history; main's pointer is never touched.
+    *
+    * Row-level deletes ride the same transaction: equality-delete and
+    * position-delete manifests land with the data manifest, so a torn
+    * commit can never leave data files visible without the delete
+    * files that mask their dead rows. `staleMarkers` (path, col) rows
+    * land in `stat_stale` INSIDE that transaction too — a delete that
+    * invalidates sketch rows must never become visible without its
+    * markers (a crash between the swap and a follow-up marker insert
+    * would leave col_ndv/col_topk/col_cms looking fresh over rows that
+    * no longer exist — the silent over-count s71/s74 exist to prevent).
     */
   private[graft] def commit(
       dbFile: String,
       expectedParent: Long,
       snapshotId: Long,
-      files: Seq[(String, Long)]): Boolean =
+      dataFiles: Seq[(String, Long)],
+      eqDeletes: Seq[(String, Long)] = Nil,
+      posDeletes: Seq[(String, Long)] = Nil,
+      staleMarkers: Seq[(String, String)] = Nil,
+      ref: Option[String] = None): Boolean =
     DuckDbLive.withConnection(dbFile) { c =>
+      def entries(files: Seq[(String, Long)]) = files.map { case (p, n) => (snapshotId, p, n) }
       c.setAutoCommit(false)
       try {
-        val swapped = {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"""UPDATE current SET snapshot_id = $snapshotId
-               WHERE pin = 0 AND snapshot_id = $expectedParent""") == 1
-          finally st.close()
-        }
-        if (swapped) {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"INSERT INTO snapshots VALUES ($snapshotId, $expectedParent)")
-          finally st.close()
-          insertManifests(c, "manifests", snapshotId, files)
+        if (swap(c, ref, expectedParent, snapshotId)) {
+          insertManifests(c, "snapshots", Seq((snapshotId, expectedParent)))
+          insertManifests(c, "manifests", entries(dataFiles))
+          insertManifests(c, "delete_manifests", entries(eqDeletes))
+          insertManifests(c, "position_delete_manifests", entries(posDeletes))
+          insertManifests(c, "stat_stale", staleMarkers)
           c.commit()
           true
         } else {
@@ -178,12 +257,30 @@ object SnapshotLog {
       } finally c.setAutoCommit(true)
     }
 
-  /** Expire every snapshot older than `olderThan` (never the empty root
-    * 0 and never the current pointer): delete their snapshot + manifest
-    * rows in ONE transaction. Iceberg's `expire_snapshots` shape — after
-    * this, those historical states are no longer time-travelable and any
-    * file referenced ONLY by them becomes garbage. Returns the expired
-    * ids (ascending).
+  /** Move main's pointer from `expected` to `to` without writing a
+    * snapshot — conditional on the expected head, so a racing writer is
+    * never silently clobbered or undone:
+    *
+    *   - PUBLISH: fast-forward main to an audited staged snapshot; it
+    *     succeeds only if main still sits at the parent the stage was
+    *     cut from (a concurrent main commit makes the staged lineage
+    *     stale, and the publish must reject, not clobber).
+    *   - ROLLBACK: move main back to an older snapshot, rewriting NO
+    *     history: the rolled-back-from lineage stays in the log,
+    *     readable and expirable, exactly like Iceberg's
+    *     rollback_to_snapshot.
+    */
+  private[graft] def moveCurrent(dbFile: String, expected: Long, to: Long): Boolean =
+    DuckDbLive.withConnection(dbFile)(swap(_, None, expected, to))
+
+  /** Expire every snapshot older than `olderThan` — never the empty root
+    * 0, never the current pointer, and never a snapshot any ref names
+    * (Iceberg's tag semantics: a tag pinning an audited state or a
+    * branch head survives expiry regardless of age): delete their
+    * snapshot + manifest rows in ONE transaction. Iceberg's
+    * `expire_snapshots` shape — after this, those historical states are
+    * no longer time-travelable and any file referenced ONLY by them
+    * becomes garbage. Returns the expired ids (ascending).
     */
   private[graft] def expireSnapshots(dbFile: String, olderThan: Long): Seq[Long] =
     DuckDbLive.withConnection(dbFile) { c =>
@@ -195,6 +292,7 @@ object SnapshotLog {
             s"""SELECT snapshot_id FROM snapshots
                WHERE snapshot_id > 0 AND snapshot_id < $olderThan
                AND snapshot_id <> (SELECT snapshot_id FROM current WHERE pin = 0)
+               AND snapshot_id NOT IN (SELECT snapshot_id FROM refs)
                ORDER BY snapshot_id""")
           .map(_.head.asInstanceOf[Number].longValue)
         val st = c.createStatement()
@@ -246,19 +344,6 @@ object SnapshotLog {
       }
     }
 
-  /** Named branch refs (Iceberg refs / Nessie branches): a ref is a
-    * movable pointer into the SAME snapshot DAG the main `current`
-    * pointer reads — staged work advances a branch ref with the
-    * identical optimistic-swap discipline, and publishing is a pointer
-    * move, never a data copy.
-    */
-  private[graft] def initRefs(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        "CREATE TABLE refs(name VARCHAR PRIMARY KEY, snapshot_id BIGINT NOT NULL)")
-    }
-
   private[graft] def createRef(dbFile: String, name: String, at: Long): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
       val ps = c.prepareStatement("INSERT INTO refs VALUES (?, ?)")
@@ -281,85 +366,6 @@ object SnapshotLog {
       } finally ps.close()
     }
 
-  /** Commit a snapshot that advances a BRANCH ref instead of main: same
-    * transaction shape as `commit` (conditional ref swap + snapshot +
-    * manifest rows), so staged history is exactly as torn-proof as
-    * published history; main's pointer is never touched.
-    */
-  private[graft] def commitToRef(
-      dbFile: String,
-      ref: String,
-      expectedParent: Long,
-      snapshotId: Long,
-      files: Seq[(String, Long)]): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      c.setAutoCommit(false)
-      try {
-        val swapped = {
-          val ps = c.prepareStatement(
-            "UPDATE refs SET snapshot_id = ? WHERE name = ? AND snapshot_id = ?")
-          try {
-            ps.setLong(1, snapshotId)
-            ps.setString(2, ref)
-            ps.setLong(3, expectedParent)
-            ps.executeUpdate() == 1
-          } finally ps.close()
-        }
-        if (swapped) {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"INSERT INTO snapshots VALUES ($snapshotId, $expectedParent)")
-          finally st.close()
-          insertManifests(c, "manifests", snapshotId, files)
-          c.commit()
-          true
-        } else {
-          c.rollback()
-          false
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) => rejectOnConflict(c, e)
-      } finally c.setAutoCommit(true)
-    }
-
-  /** PUBLISH: atomically fast-forward main's pointer to the audited
-    * staged snapshot — succeeds only if main still sits at the parent
-    * the stage was cut from (a concurrent main commit makes the staged
-    * lineage stale, and the publish must reject, not clobber).
-    */
-  private[graft] def publish(
-      dbFile: String,
-      expectedMainAt: Long,
-      stagedSnapshot: Long): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""UPDATE current SET snapshot_id = $stagedSnapshot
-           WHERE pin = 0 AND snapshot_id = $expectedMainAt""") == 1
-      finally st.close()
-    }
-
-  /** Merge-on-read metadata (Iceberg v2 row-level-delete shape): delete
-    * files are first-class manifest entries per snapshot, and every
-    * file — data or delete — carries the SEQUENCE NUMBER of the commit
-    * that added it. The sequence number is the load-bearing rule: a
-    * delete file applies only to data files with a STRICTLY LOWER seq,
-    * which is exactly what lets an update (delete old version + insert
-    * new version in the same commit) not delete its own re-inserted
-    * rows.
-    */
-  private[graft] def initMor(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE delete_manifests(
-          |snapshot_id BIGINT NOT NULL, path VARCHAR NOT NULL,
-          |n_rows BIGINT NOT NULL)""".stripMargin)
-      DuckDbLive.execute(
-        c,
-        "CREATE TABLE file_seq(path VARCHAR PRIMARY KEY, seq BIGINT NOT NULL)")
-    }
-
   private[graft] def recordSeq(dbFile: String, paths: Seq[String], seq: Long): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
       DuckDbLive.insertRows(c, "INSERT INTO file_seq VALUES (?, ?)", paths) {
@@ -367,118 +373,6 @@ object SnapshotLog {
           ps.setString(o + 1, p)
           ps.setLong(o + 2, seq)
       }
-    }
-
-  /** Commit with row-level deletes: same atomic conditional swap as
-    * `commit`, with the snapshot's delete-file manifest written in the
-    * SAME transaction — a torn commit can never leave data files
-    * visible without the delete files that mask their dead rows.
-    */
-  private[graft] def commitMor(
-      dbFile: String,
-      expectedParent: Long,
-      snapshotId: Long,
-      dataFiles: Seq[(String, Long)],
-      deleteFiles: Seq[(String, Long)]): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      c.setAutoCommit(false)
-      try {
-        val swapped = {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"""UPDATE current SET snapshot_id = $snapshotId
-               WHERE pin = 0 AND snapshot_id = $expectedParent""") == 1
-          finally st.close()
-        }
-        if (swapped) {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"INSERT INTO snapshots VALUES ($snapshotId, $expectedParent)")
-          finally st.close()
-          insertManifests(c, "manifests", snapshotId, dataFiles)
-          insertManifests(c, "delete_manifests", snapshotId, deleteFiles)
-          c.commit()
-          true
-        } else {
-          c.rollback()
-          false
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) => rejectOnConflict(c, e)
-      } finally c.setAutoCommit(true)
-    }
-
-  /** POSITION deletes (Iceberg v2's second row-level-delete kind, the
-    * one Spark/Iceberg writers emit by default): a delete file of
-    * (data-file path, row ordinal) tuples masking exact rows. The seq
-    * rule is deliberately ASYMMETRIC to equality deletes: a position
-    * delete applies to data files with seq <= its own (it names an
-    * exact file, so a commit can position-delete rows of the file it
-    * writes — the streaming-upsert flush pattern), while an equality
-    * delete applies strictly below (so an update never eats its own
-    * re-inserted keys).
-    */
-  private[graft] def initPosDeletes(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE position_delete_manifests(
-          |snapshot_id BIGINT NOT NULL, path VARCHAR NOT NULL,
-          |n_rows BIGINT NOT NULL)""".stripMargin)
-    }
-
-  /** Commit with BOTH row-level delete kinds: the same atomic
-    * conditional swap, with data, equality-delete and position-delete
-    * manifests written in one transaction. `staleMarkers` (path, col)
-    * rows land in `stat_stale` INSIDE that transaction — a delete that
-    * invalidates sketch rows must never become visible without its
-    * markers (a crash between the swap and a follow-up marker insert
-    * would leave col_ndv/col_topk/col_cms looking fresh over rows that
-    * no longer exist — the silent over-count s71/s74 exist to prevent).
-    */
-  private[graft] def commitMorV2(
-      dbFile: String,
-      expectedParent: Long,
-      snapshotId: Long,
-      dataFiles: Seq[(String, Long)],
-      eqDeleteFiles: Seq[(String, Long)],
-      posDeleteFiles: Seq[(String, Long)],
-      staleMarkers: Seq[(String, String)] = Seq.empty): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      c.setAutoCommit(false)
-      try {
-        val swapped = {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"""UPDATE current SET snapshot_id = $snapshotId
-               WHERE pin = 0 AND snapshot_id = $expectedParent""") == 1
-          finally st.close()
-        }
-        if (swapped) {
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"INSERT INTO snapshots VALUES ($snapshotId, $expectedParent)")
-          finally st.close()
-          insertManifests(c, "manifests", snapshotId, dataFiles)
-          insertManifests(c, "delete_manifests", snapshotId, eqDeleteFiles)
-          insertManifests(c, "position_delete_manifests", snapshotId, posDeleteFiles)
-          if (staleMarkers.nonEmpty) {
-            val ps = c.prepareStatement("INSERT INTO stat_stale VALUES (?, ?)")
-            try staleMarkers.foreach { case (p, cn) =>
-              ps.setString(1, p)
-              ps.setString(2, cn)
-              ps.executeUpdate()
-            } finally ps.close()
-          }
-          c.commit()
-          true
-        } else {
-          c.rollback()
-          false
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) => rejectOnConflict(c, e)
-      } finally c.setAutoCommit(true)
     }
 
   /** Snapshot N's position-delete files with their sequence numbers. */
@@ -616,9 +510,9 @@ object SnapshotLog {
         .head.head.asInstanceOf[Number].longValue
     }
 
-  /** COMMIT-CARRIED counts for the s39-class lifecycles (r18 verdict
-    * #6, retiring the post-write `_metadata.file_path` re-scan the
-    * bucket-base lifecycles already dropped): write `df` as (at most)
+  /** COMMIT-CARRIED counts for the s39-class lifecycles (no post-write
+    * `_metadata.file_path` re-scan, like the bucket-base lifecycles):
+    * write `df` as (at most)
     * `nParts` part files under `dir` with an Observation of
     * per-partition conditional counts attached to the WRITE JOB itself,
     * attributed to files by the part index Spark embeds in the file
@@ -1360,7 +1254,6 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s46_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initRefs(dbFile)
 
       // main at snapshot 1: the non-staged two-thirds
       val files1 = writeCounted(spark, o.filter(!stagePred).select("k", "cents"), s"$base/b1", 2)
@@ -1372,7 +1265,7 @@ object SnapshotLog {
       val filesBad = writeCounted(spark, o.filter(stagePred)
         .select(col("k"),
           when(corruptPred, -col("cents")).otherwise(col("cents")).as("cents")), s"$base/bad", 2)
-      val cA = commitToRef(dbFile, "wap", 1L, 2L, files1 ++ filesBad)
+      val cA = commit(dbFile, 1L, 2L, files1 ++ filesBad, ref = Some("wap"))
 
       // audit the staged snapshot through the log; count bad rows
       def audit(snap: Long): Long = spark.read
@@ -1387,12 +1280,12 @@ object SnapshotLog {
 
       // staged commit B: the fixed append; audit passes; publish
       val filesGood = writeCounted(spark, o.filter(stagePred).select("k", "cents"), s"$base/good", 2)
-      val cB = commitToRef(dbFile, "wap", 2L, 3L, files1 ++ filesGood)
+      val cB = commit(dbFile, 2L, 3L, files1 ++ filesGood, ref = Some("wap"))
       val nBadFixed = audit(refSnapshot(dbFile, "wap"))
-      val pub = nBadFixed == 0L && publish(dbFile, expectedMainAt = 1L, stagedSnapshot = 3L)
+      val pub = nBadFixed == 0L && moveCurrent(dbFile, expected = 1L, to = 3L)
 
       // a stale retry of the ABANDONED bad stage must reject
-      val stalePub = publish(dbFile, expectedMainAt = 1L, stagedSnapshot = 2L)
+      val stalePub = moveCurrent(dbFile, expected = 1L, to = 2L)
 
       val mainPub = spark.read
         .parquet(manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
@@ -1652,21 +1545,6 @@ object SnapshotLog {
              ORDER BY ts DESC, snapshot_id DESC LIMIT 1""")
         .headOption
         .map(_.head.asInstanceOf[Number].longValue)
-    }
-
-  /** ROLLBACK: move the current pointer back to `to` — conditional on
-    * the expected head (a racing writer must not be silently undone),
-    * rewriting NO history: the rolled-back-from lineage stays in the
-    * log, readable and expirable, exactly like Iceberg's
-    * rollback_to_snapshot.
-    */
-  private[graft] def rollback(dbFile: String, expectedCurrent: Long, to: Long): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""UPDATE current SET snapshot_id = $to
-           WHERE pin = 0 AND snapshot_id = $expectedCurrent""") == 1
-      finally st.close()
     }
 
   /** Schema registry (Iceberg schema evolution): schemas are LOG
@@ -1968,7 +1846,7 @@ object SnapshotLog {
       // ROLLBACK 3 → 1 (the bad-deploy recovery), then: current serves
       // snapshot 1, the abandoned head still time-travels, and a retry
       // claiming it is rejected
-      val rb = rollback(dbFile, expectedCurrent = 3L, to = 1L)
+      val rb = moveCurrent(dbFile, expected = 3L, to = 1L)
       // the pointer is read HERE (between rollback and redo — the value
       // under audit); the census scan itself runs fused below, over
       // immutable committed files
@@ -2032,7 +1910,7 @@ object SnapshotLog {
   /** s47 — STREAMING UPSERT through the merge-on-read log: the
     * production form of s30's stream upsert when the sink is a snapshot
     * table instead of a KV store (Delta/Iceberg streaming MERGE, MOR
-    * mode). Every micro-batch commits, in ONE atomic commitMor:
+    * mode). Every micro-batch commits, in ONE atomic commit:
     *
     *   - an EQUALITY-DELETE file holding the batch's keys (masking all
     *     prior versions of those users — seq-scoped, so it never masks
@@ -2065,7 +1943,6 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s47_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initMor(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
       val schema = s.read.parquet(s"$staged/0.parquet").schema
@@ -2094,7 +1971,7 @@ object SnapshotLog {
           recordSeq(dbFile, (dataF ++ delF).map(_._1), seqNo)
           commits.put(
             epoch,
-            commitMor(dbFile, epoch, seqNo,
+            commit(dbFile, epoch, seqNo,
               manifest(dbFile, epoch) ++ dataF,
               deleteSeq(dbFile, epoch).map { case (p, _) =>
                 (p, 0L) // carried delete entries; n_rows not re-derived
@@ -2194,7 +2071,7 @@ object SnapshotLog {
     *     the 2 bucket-2 files of 5), rewrites them as one file, carries
     *     the rest by path, and drops all delete files — its census must
     *     equal snapshot 3's, and the delete-manifest must be empty;
-    *   - delete files ride the SAME atomic swap as data (commitMor) —
+    *   - delete files ride the SAME atomic swap as data (one commit) —
     *     a torn commit can't leave data visible without its masks.
     *
     * Scale shape: the read path is one anti-join of the scan against
@@ -2216,7 +2093,6 @@ object SnapshotLog {
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
-      initMor(dbFile)
 
       // the MOR read path, reconstructed from the log alone: data files
       // unioned with their seq, dead rows masked by the seq-scoped
@@ -2248,7 +2124,7 @@ object SnapshotLog {
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
       recordSeq(dbFile, baseFiles.map(_._1), 1L)
-      val c1 = commitMor(dbFile, 0L, 1L, baseFiles, Seq.empty)
+      val c1 = commit(dbFile, 0L, 1L, baseFiles)
 
       // The three delta-file WRITES of snapshots 2–3 depend only on the
       // source relation — independent, overlapped (guide §2.6, r21);
@@ -2263,13 +2139,13 @@ object SnapshotLog {
       // snapshot 2 (seq 2): MOR DELETE — dead keys land in an equality-
       // delete file; no data file is touched
       recordSeq(dbFile, del1.map(_._1), 2L)
-      val c2 = commitMor(dbFile, 1L, 2L, baseFiles, del1)
+      val c2 = commit(dbFile, 1L, 2L, baseFiles, del1)
 
       // snapshot 3 (seq 3): MOR UPDATE = delete(old) + insert(new) in
       // one commit; the seq rule keeps the delete off the new versions
       recordSeq(dbFile, (del2 ++ ins1).map(_._1), 3L)
       recordStats(dbFile, ins1.map(p => (p._1, 2L))) // all updated keys ≡ 2 (mod 4)
-      val c3 = commitMor(dbFile, 2L, 3L, baseFiles ++ ins1, del1 ++ del2)
+      val c3 = commit(dbFile, 2L, 3L, baseFiles ++ ins1, del1 ++ del2)
 
       // snapshot 4 (seq 4): COMPACTION — partition stats prune the two
       // bucket-2 files (f2 + the update inserts), the delete files fold
@@ -2299,7 +2175,7 @@ object SnapshotLog {
       recordSeq(dbFile, comp.map(_._1), 4L)
       recordStats(dbFile, comp.map(p => (p._1, 2L)))
       val carriedEntries = manifest(dbFile, 3L).filter(f => carried.contains(f._1))
-      val c4 = commitMor(dbFile, 3L, 4L, carriedEntries ++ comp, Seq.empty)
+      val c4 = commit(dbFile, 3L, 4L, carriedEntries ++ comp)
 
       // time-travel censuses of ALL FOUR snapshots through the MOR read,
       // fused into ONE tagged union job (the s49 r20 pattern, guide
@@ -2402,8 +2278,6 @@ object SnapshotLog {
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
-      initMor(dbFile)
-      initPosDeletes(dbFile)
 
       def read(snap: Long): DataFrame = morReadV2(spark, dbFile, snap, "k")
 
@@ -2411,7 +2285,7 @@ object SnapshotLog {
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
       recordSeq(dbFile, baseFiles.map(_._1), 1L)
-      val c1 = commitMorV2(dbFile, 0L, 1L, baseFiles, Seq.empty, Seq.empty)
+      val c1 = commit(dbFile, 0L, 1L, baseFiles)
 
       // The four delta-file WRITES of snapshots 2–4 are independent of
       // one another (each depends only on the base files / source
@@ -2449,18 +2323,18 @@ object SnapshotLog {
 
       // snapshot 2 (seq 2)
       recordSeq(dbFile, pd1.map(_._1), 2L)
-      val c2 = commitMorV2(dbFile, 1L, 2L, baseFiles, Seq.empty, pd1)
+      val c2 = commit(dbFile, 1L, 2L, baseFiles, posDeletes = pd1)
 
       // snapshot 3 (seq 3): delete(old) + insert(new) in one commit; the
       // strict seq rule keeps the delete off its own inserts
       recordSeq(dbFile, (del1 ++ ins1).map(_._1), 3L)
       recordStats(dbFile, ins1.map(p => (p._1, 2L)))
-      val c3 = commitMorV2(dbFile, 2L, 3L, baseFiles ++ ins1, del1, pd1)
+      val c3 = commit(dbFile, 2L, 3L, baseFiles ++ ins1, del1, pd1)
 
       // snapshot 4 (seq 4): pseq >= fseq must bite
       recordStats(dbFile, ins2.map(p => (p._1, 2L)))
       recordSeq(dbFile, (ins2 ++ pd2).map(_._1), 4L)
-      val c4 = commitMorV2(dbFile, 3L, 4L, baseFiles ++ ins1 ++ ins2, del1, pd1 ++ pd2)
+      val c4 = commit(dbFile, 3L, 4L, baseFiles ++ ins1 ++ ins2, del1, pd1 ++ pd2)
 
       // snapshot 5 (seq 5): COMPACTION folding BOTH kinds. Affected =
       // the position deletes' referenced files (exact — read from the
@@ -2486,7 +2360,7 @@ object SnapshotLog {
       recordSeq(dbFile, comp.map(_._1), 5L)
       recordStats(dbFile, comp.map(p => (p._1, 2L)))
       val carriedEntries = manifest(dbFile, 4L).filter(f => carried.contains(f._1))
-      val c5 = commitMorV2(dbFile, 4L, 5L, carriedEntries ++ comp, Seq.empty, Seq.empty)
+      val c5 = commit(dbFile, 4L, 5L, carriedEntries ++ comp)
 
       // time-travel censuses of ALL FIVE snapshots through the v2 read,
       // fused into ONE tagged job (previously one job per snapshot —
@@ -2545,10 +2419,10 @@ object SnapshotLog {
   /** ONE long-form stat table for every column-stats consumer (the
     * Iceberg shape: lower_bounds/upper_bounds keyed by column): s52/s55
     * record single-column cents ranges, s57 records the (x, y) pair —
-    * all land as (path, col_name, min_v, max_v) rows, and
-    * pruneByRange/pruneByBox are the SAME planner query with one resp.
-    * two per-column stat joins (an n-dimensional box is n joins).
-    * Idempotent so lifecycles composing both recorders share the table.
+    * all land as (path, col_name, min_v, max_v) rows, and a 1-D range
+    * and a 2-D box are the SAME planner query (pruneByCols) with one
+    * resp. two per-column stat joins (an n-dimensional box is n joins).
+    * Idempotent so lifecycles composing several columns share the table.
     */
   private[graft] def initColStats(dbFile: String): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
@@ -2560,7 +2434,7 @@ object SnapshotLog {
           |PRIMARY KEY (path, col_name))""".stripMargin)
     }
 
-  private[graft] def recordColStatsNamed(
+  private[graft] def recordColStats(
       dbFile: String,
       col: String,
       stats: Seq[(String, Long, Long)]): Unit =
@@ -2573,12 +2447,6 @@ object SnapshotLog {
           ps.setLong(o + 4, r._3)
       }
     }
-
-  /** Single-column recorder (s52/s55's cents stats → column "c0"). */
-  private[graft] def recordColStats(
-      dbFile: String,
-      stats: Seq[(String, Long, Long)]): Unit =
-    recordColStatsNamed(dbFile, "c0", stats)
 
   /** Snapshot N's data files whose recorded per-column [min, max] range
     * OVERLAPS [lo, hi] on EVERY queried column — Iceberg's
@@ -2609,19 +2477,12 @@ object SnapshotLog {
     }
   }
 
-  private[graft] def pruneByRange(
-      dbFile: String,
-      snapshotId: Long,
-      lo: Long,
-      hi: Long): Seq[String] =
-    pruneByCols(dbFile, snapshotId, Seq(("c0", lo, hi)))
-
   /** Write `df` (columns k, cents, g — g confined to `gDomain`)
     * partitioned by the bucket column g — one immutable file per present
     * bucket value — and return per file (path, n_rows, min_cents,
     * max_cents) with the stats captured IN THE WRITE JOB ITSELF: an
     * `Observation` of per-bucket conditional aggregates rides the write
-    * (the commit's own metrics — r17 verdict item 7), so there is NO
+    * (the commit's own metrics), so there is NO
     * post-write re-scan and no `_metadata.file_path` path-form matching
     * at all. The bounded bucket domain (≤16 across callers) keeps the
     * observation a fixed ≤3·|domain|-column row. The loud-failure
@@ -2758,9 +2619,9 @@ object SnapshotLog {
       // cents, so every file's range covers ~the whole domain)
       val f1 = writeBucketed(
         spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/u", 0L to 3L)
-      recordColStats(dbFile, f1.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "c0", f1.map(f => (f._1, f._3, f._4)))
       val c1 = commit(dbFile, 0L, 1L, f1.map(f => (f._1, f._2)))
-      val scan1 = pruneByRange(dbFile, 1L, lo, hi)
+      val scan1 = pruneByCols(dbFile, 1L, Seq(("c0", lo, hi)))
       val sel1 = spark.read.parquet(scan1: _*)
         .filter(col("cents").between(lo, hi))
         .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
@@ -2775,9 +2636,9 @@ object SnapshotLog {
         s"$base/c",
         // bw = (mx-mn)/4 + 1 > (mx-mn)/4, so (cents-mn) div bw ∈ [0, 3]
         0L to 3L)
-      recordColStats(dbFile, f2.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "c0", f2.map(f => (f._1, f._3, f._4)))
       val c2 = commit(dbFile, 1L, 2L, f2.map(f => (f._1, f._2)))
-      val scan2 = pruneByRange(dbFile, 2L, lo, hi)
+      val scan2 = pruneByCols(dbFile, 2L, Seq(("c0", lo, hi)))
       // the four audit censuses are independent scans — overlapped
       // (guide §2.6, r21)
       val Seq(sel2, full2, direct, total) = graft.ops.Par.run(Seq(
@@ -2842,42 +2703,6 @@ object SnapshotLog {
       } finally ps.close()
     }
 
-  /** expireSnapshots with REF RETENTION (Iceberg's tag semantics): a
-    * snapshot named by any ref — a tag pinning an audited state, a
-    * branch head — survives expiry regardless of age, exactly like the
-    * current pointer and the root. Same one-transaction shape as
-    * expireSnapshots; the refs table must exist (the caller inits it).
-    */
-  private[graft] def expireSnapshotsRetainingRefs(
-      dbFile: String,
-      olderThan: Long): Seq[Long] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      c.setAutoCommit(false)
-      try {
-        val ids = DuckDbLive
-          .queryRows(
-            c,
-            s"""SELECT snapshot_id FROM snapshots
-               WHERE snapshot_id > 0 AND snapshot_id < $olderThan
-               AND snapshot_id <> (SELECT snapshot_id FROM current WHERE pin = 0)
-               AND snapshot_id NOT IN (SELECT snapshot_id FROM refs)
-               ORDER BY snapshot_id""")
-          .map(_.head.asInstanceOf[Number].longValue)
-        val st = c.createStatement()
-        try ids.foreach { id =>
-          st.executeUpdate(s"DELETE FROM manifests WHERE snapshot_id = $id")
-          st.executeUpdate(s"DELETE FROM snapshots WHERE snapshot_id = $id")
-        } finally st.close()
-        c.commit()
-        ids
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          try c.rollback()
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw e
-      } finally c.setAutoCommit(true)
-    }
-
   /** s54 — snapshot TAGS and retention-aware expiry (Iceberg tags /
     * `expire_snapshots` honoring refs): the compliance story — "keep
     * the audited Q1 state forever, expire the rest". Lifecycle:
@@ -2912,7 +2737,6 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s54_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initRefs(dbFile)
 
       // the two generation stagings are independent writes — overlapped
       // (guide §2.6, r21); commits stay strictly ordered
@@ -2927,7 +2751,7 @@ object SnapshotLog {
       val c3 = commit(dbFile, 2L, 3L, f3)
 
       val live0 = liveFiles(dbFile).size.toLong
-      val exp1 = expireSnapshotsRetainingRefs(dbFile, olderThan = 99L)
+      val exp1 = expireSnapshots(dbFile, olderThan = 99L)
       val live1 = liveFiles(dbFile).size.toLong
 
       // the tagged snapshot is still readable THROUGH the tag
@@ -2939,7 +2763,7 @@ object SnapshotLog {
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       val dropped = dropRef(dbFile, "audit-snap1")
-      val exp2 = expireSnapshotsRetainingRefs(dbFile, olderThan = 99L)
+      val exp2 = expireSnapshots(dbFile, olderThan = 99L)
       val live2 = liveFiles(dbFile).size.toLong
 
       val tagsOk = c1 && c2 && c3 && dropped &&
@@ -3016,7 +2840,7 @@ object SnapshotLog {
         o.filter(col("k") % 2 === 0).withColumn("g", pmod(col("k"), lit(2L))),
         s"$base/f1", 0L to 1L)
       val v1 = minCentsOk(f1)
-      recordColStats(dbFile, f1.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "c0", f1.map(f => (f._1, f._3, f._4)))
       val c1 = v1 && commit(dbFile, 0L, 1L, f1.map(f => (f._1, f._2)))
 
       // staged second commit: cleaned slice + 5 poison rows
@@ -3042,7 +2866,7 @@ object SnapshotLog {
         o.filter(col("k") % 2 === 1).withColumn("g", pmod(col("k"), lit(2L))),
         s"$base/f3", 0L to 1L)
       val v3 = minCentsOk(f3)
-      recordColStats(dbFile, f3.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "c0", f3.map(f => (f._1, f._3, f._4)))
       val c3 = v3 && commit(dbFile, 1L, 2L, (f1 ++ f3).map(f => (f._1, f._2)))
       val fin = spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
@@ -3397,28 +3221,6 @@ object SnapshotLog {
   // s57 — multi-dimensional (z-order) clustering + box skipping
   // ------------------------------------------------------------------
 
-  /** Two-column stats land as two long-form col_stats rows per file
-    * ("x" and "y") — same table, same planner (see initColStats). */
-  private[graft] def initColStats2(dbFile: String): Unit =
-    initColStats(dbFile)
-
-  private[graft] def recordColStats2(
-      dbFile: String,
-      stats: Seq[(String, Long, Long, Long, Long)]): Unit = {
-    recordColStatsNamed(dbFile, "x", stats.map(s => (s._1, s._2, s._3)))
-    recordColStatsNamed(dbFile, "y", stats.map(s => (s._1, s._4, s._5)))
-  }
-
-  /** Snapshot N's data files whose recorded per-file (x, y) stat ranges
-    * BOTH overlap the query box — pruneByCols over the two named
-    * columns, still a pure metadata join (zero data reads). */
-  private[graft] def pruneByBox(
-      dbFile: String,
-      snapshotId: Long,
-      xlo: Long, xhi: Long,
-      ylo: Long, yhi: Long): Seq[String] =
-    pruneByCols(dbFile, snapshotId, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
-
   /** writeBucketed for the two-dimensional stats: write df (columns
     * k, cents, x, y, g) partitioned by g and return per file
     * (path, n_rows, min_x, max_x, min_y, max_y) — stats carried by the
@@ -3490,7 +3292,7 @@ object SnapshotLog {
     *     file = the top 4 interleaved bits x3 y3 x2 y2, i.e. each file
     *     is one 4×4 block of the (x, y) grid;
     *   - queries: an (x ∈ [4,7], y ∈ [8,11]) box — one grid block —
-    *     and a y ∈ [0,3] stripe; planning is pruneByBox (a metadata
+    *     and a y ∈ [0,3] stripe; planning is pruneByCols on x and y (a metadata
     *     join over the per-file 2-D stats, zero data reads);
     *   - per (layout, query) row: files, files scanned, and the pruned
     *     census — which must equal the direct full-scan predicate
@@ -3524,11 +3326,12 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s57_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initColStats2(dbFile)
+      initColStats(dbFile)
 
       val f1 = writeBucketed2(
         spark, d.withColumn("g", col("x")), s"$base/lin", 0L to 15L)
-      recordColStats2(dbFile, f1.map(f => (f._1, f._3, f._4, f._5, f._6)))
+      recordColStats(dbFile, "x", f1.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "y", f1.map(f => (f._1, f._5, f._6)))
       val c1 = commit(dbFile, 0L, 1L, f1.map(f => (f._1, f._2)))
 
       val f2 = writeBucketed2(
@@ -3537,7 +3340,8 @@ object SnapshotLog {
           .select(col("k"), col("cents"), col("x"), col("y"))
           .withColumn("g", expr(zKey)),
         s"$base/z", 0L to 15L)
-      recordColStats2(dbFile, f2.map(f => (f._1, f._3, f._4, f._5, f._6)))
+      recordColStats(dbFile, "x", f2.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "y", f2.map(f => (f._1, f._5, f._6)))
       val c2 = commit(dbFile, 1L, 2L, f2.map(f => (f._1, f._2)))
       val committed = c1 && c2 && currentSnapshot(dbFile) == 2L
 
@@ -3555,7 +3359,7 @@ object SnapshotLog {
         (layout, snap) <- Seq(("linear", 1L), ("zorder", 2L))
         (qn, xlo, xhi, ylo, yhi) <- queries
       } yield { () =>
-        val scanned = pruneByBox(dbFile, snap, xlo, xhi, ylo, yhi)
+        val scanned = pruneByCols(dbFile, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
         val boxPred = col("x").between(xlo, xhi) && col("y").between(ylo, yhi)
         val sel = spark.read.parquet(scanned: _*)
           .filter(boxPred)
@@ -4274,7 +4078,6 @@ object SnapshotLog {
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
-      initRefs(dbFile)
 
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
@@ -4297,8 +4100,8 @@ object SnapshotLog {
 
       // branch `dev` cut at 1: bucket-3 rewrite → snapshot 2 (ref only)
       createRef(dbFile, "dev", at = 1L)
-      val cDev = commitToRef(dbFile, "dev", 1L, 2L,
-        rewriteFiles(1L, 3L, 7L, 11L, 300L, insDev, s"$base/mdev"))
+      val cDev = commit(dbFile, 1L, 2L,
+        rewriteFiles(1L, 3L, 7L, 11L, 300L, insDev, s"$base/mdev"), ref = Some("dev"))
       // main moves independently: bucket-0 rewrite → snapshot 3
       val cMain = commit(dbFile, 1L, 3L,
         rewriteFiles(1L, 0L, 8L, 0L, 200L, insMain, s"$base/mmain"))
@@ -4337,8 +4140,8 @@ object SnapshotLog {
       // branch `dev2`, also cut at 1, rewrites bucket 0 like main did:
       // its merge must conflict on f0 and leave the pointer at 4
       createRef(dbFile, "dev2", at = 1L)
-      val cDev2 = commitToRef(dbFile, "dev2", 1L, 5L,
-        rewriteFiles(1L, 0L, 16L, 12L, 100L, Seq.empty, s"$base/mdev2"))
+      val cDev2 = commit(dbFile, 1L, 5L,
+        rewriteFiles(1L, 0L, 16L, 12L, 100L, Seq.empty, s"$base/mdev2"), ref = Some("dev2"))
       val (merged2, conflict2) = mergeBranch("dev2", 1L)
 
       val mergeOk = c1 && cDev && cMain && cDev2 &&
@@ -4374,57 +4177,6 @@ object SnapshotLog {
     }
   }
 
-  /** Per-file NDV sketches (Iceberg puffin / theta-sketch shape, on the
-    * exact-integer HLL kernel `graft.ops.Hll`): each data file carries
-    * its ≤64 (bucket, max-rank) register rows as STATS METADATA, and a
-    * planner estimates the distinct count of any file subset by
-    * merging registers (per-bucket max) — metadata-only, no scan.
-    */
-  private[graft] def initNdv(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE file_ndv(
-          |path VARCHAR NOT NULL, bucket BIGINT NOT NULL,
-          |mr BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordNdv(dbFile: String, rows: Seq[(String, Long, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_ndv VALUES (?, ?, ?)", rows) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setLong(o + 2, r._2)
-          ps.setLong(o + 3, r._3)
-      }
-    }
-
-  private def ndvPathList(paths: Seq[String]): String =
-    paths.map(p => s"'${p.replace("'", "''")}'").mkString(", ")
-
-  /** Merged register set of a file subset — per-bucket max over the
-    * subset's sketch rows. ≤64 rows of metadata through the JDBC hop.
-    */
-  private[graft] def ndvRegisters(dbFile: String, paths: Seq[String]): Seq[(Long, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT bucket, CAST(max(mr) AS BIGINT) FROM file_ndv
-             WHERE path IN (${ndvPathList(paths)})
-             GROUP BY bucket ORDER BY bucket""")
-        .map(r => (r(0).asInstanceOf[Number].longValue, r(1).asInstanceOf[Number].longValue))
-    }
-
-  private[graft] def ndvRowCount(dbFile: String, paths: Seq[String]): Long =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"SELECT count(*) FROM file_ndv WHERE path IN (${ndvPathList(paths)})")
-        .head(0).asInstanceOf[Number].longValue
-    }
-
   // ------------------------------------------------------------------
   // q212 — per-COLUMN NDV registers in the long-form stat table
   // ------------------------------------------------------------------
@@ -4438,8 +4190,12 @@ object SnapshotLog {
     (Seq[(String, Long)], Seq[(String, Long)], Seq[(String, Long)],
       Seq[(String, String, Long, Long)])]()
 
-  /** Long-form per-file, per-COLUMN HLL register rows — s64's file_ndv
-    * generalized by col_name exactly as initColStats generalizes the
+  /** Per-file NDV sketches (Iceberg puffin / theta-sketch shape, on the
+    * exact-integer HLL kernel `graft.ops.Hll`): each data file carries
+    * its ≤64 (bucket, max-rank) register rows per column as STATS
+    * METADATA, and a planner estimates the distinct count of any file
+    * subset by merging registers (per-bucket max) — metadata-only, no
+    * scan. Long-form by col_name exactly as initColStats is for the
     * min/max stats: ONE table answers "registers of column c over file
     * scope X" for ANY recorded column, which is what turns q210's
     * dedicated-census demo into a planner input (q212).
@@ -4646,23 +4402,9 @@ object SnapshotLog {
   // s71 — stat STALENESS markers (the delete-side contract of col_ndv)
   // ------------------------------------------------------------------
 
-  /** Staleness markers for the long-form stat tables. col_ndv is
-    * append-only and HLL registers cannot be decremented, so a delete
-    * that removes rows from a file makes that file's sketch rows an
-    * OVER-COUNT — silently, unless the delete commit marks them. The
-    * marker is a separate log table (Iceberg's stats-invalidation
-    * shape: metadata marks, never mutation of the immutable sketch
-    * rows); readers exclude marked (path, column) pairs and recompute
-    * the stale scope from data (q215's pruned-scope read).
+  /** Mark `paths`' `colName` stat rows stale outside a commit (the
+    * `stat_stale` table is created by [[initLog]]).
     */
-  private[graft] def initStatStale(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE IF NOT EXISTS stat_stale(
-          |path VARCHAR NOT NULL, col_name VARCHAR NOT NULL)""".stripMargin)
-    }
-
   private[graft] def markStatsStale(
       dbFile: String,
       paths: Seq[String],
@@ -5358,7 +5100,6 @@ object SnapshotLog {
       initColNdv(dbFile)
       initColTopk(dbFile)
       initColCms(dbFile)
-      initStatStale(dbFile) // the guarded reader consults staleness (s71)
       recordColNdv(dbFile, regRows)
       recordColTopk(dbFile, topkRows)
       recordColCms(dbFile, cmsRows)
@@ -6401,10 +6142,7 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s71_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initMor(dbFile)
-      initPosDeletes(dbFile)
       initColNdv(dbFile)
-      initStatStale(dbFile)
 
       // snapshot 1: one immutable file per cust%4 bucket + ONE stats
       // job recording each file's cust registers — two independent
@@ -6426,7 +6164,7 @@ object SnapshotLog {
       recordColNdv(dbFile, cells)
       val dataFiles = files.map(f => (f._1, f._2))
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commitMorV2(dbFile, 0L, 1L, dataFiles, Seq.empty, Seq.empty)
+      val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
       def snapRow(step: Long, snap: Long, ok: Boolean) = {
         val paths = manifestSeq(dbFile, snap).map(_._1)
@@ -6489,7 +6227,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commitMorV2(dbFile, 1L, 2L, dataFiles, Seq.empty, pd1,
+      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "cust")))
 
       Seq(row1, snapRow(2L, 2L, c1 && c2))
@@ -6582,10 +6320,7 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s73_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initMor(dbFile)
-      initPosDeletes(dbFile)
       initColNdv(dbFile)
-      initStatStale(dbFile)
 
       // bucketed write + write-time register job: independent scans of
       // the same input, overlapped (guide §2.6, r21)
@@ -6606,7 +6341,7 @@ object SnapshotLog {
       recordColNdv(dbFile, cells)
       val dataFiles = files.map(f => (f._1, f._2))
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commitMorV2(dbFile, 0L, 1L, dataFiles, Seq.empty, Seq.empty)
+      val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
       def snapRow(step: Long, snap: Long, ok: Boolean) = {
         val paths = manifestSeq(dbFile, snap).map(_._1)
@@ -6657,7 +6392,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commitMorV2(dbFile, 1L, 2L, dataFiles, Seq.empty, pd1,
+      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "cust")))
 
       // snapshot 3: COMPACTION of exactly the stale scope + re-stat.
@@ -6683,7 +6418,7 @@ object SnapshotLog {
       recordColNdv(dbFile, newRegs.map { case (b, mr) => (comp.head._1, "cust", b, mr) })
       recordSeq(dbFile, comp.map(_._1), 3L)
       val carried = dataFiles.filterNot(f => stale2.contains(f._1))
-      val c3 = commitMorV2(dbFile, 2L, 3L, carried ++ comp, Seq.empty, Seq.empty)
+      val c3 = commit(dbFile, 2L, 3L, carried ++ comp)
       val (row3, _) = snapRow(3L, 3L, c1 && c2 && c3)
 
       Seq(row1, row2, row3)
@@ -6905,12 +6640,9 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s74_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initMor(dbFile)
-      initPosDeletes(dbFile)
       initColNdv(dbFile)
       initColTopk(dbFile)
       initColCms(dbFile)
-      initStatStale(dbFile)
 
       // the bucketed write and the write-time stats job are independent
       // scans of the same input — overlapped (guide §2.6, r21); the
@@ -6932,7 +6664,7 @@ object SnapshotLog {
       }
       val dataFiles = files.map(f => (f._1, f._2))
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commitMorV2(dbFile, 0L, 1L, dataFiles, Seq.empty, Seq.empty)
+      val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
       def addCells(a: Map[(Long, Long), Long], b: Map[(Long, Long), Long]) =
         (a.keySet ++ b.keySet).map(k =>
@@ -7006,7 +6738,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commitMorV2(dbFile, 1L, 2L, dataFiles, Seq.empty, pd1,
+      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "k")))
       val row2 = snapRow(2L, 2L, c1 && c2)
 
@@ -7104,12 +6836,9 @@ object SnapshotLog {
     if (DuckDbLive.available) withTempTableDir("graft_s75_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
-      initMor(dbFile)
-      initPosDeletes(dbFile)
       initColNdv(dbFile)
       initColTopk(dbFile)
       initColCms(dbFile)
-      initStatStale(dbFile)
 
       // the bucketed write and the write-time stats job are independent
       // scans of the same input — overlapped (guide §2.6, r21); the
@@ -7135,7 +6864,7 @@ object SnapshotLog {
       }
       val dataFiles = files.map(f => (f._1, f._2))
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commitMorV2(dbFile, 0L, 1L, dataFiles, Seq.empty, Seq.empty)
+      val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
       def addCells(a: Map[(Long, Long), Long], b: Map[(Long, Long), Long]) =
         (a.keySet ++ b.keySet).map(k =>
@@ -7219,7 +6948,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commitMorV2(dbFile, 1L, 2L, dataFiles, Seq.empty, pd1,
+      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "k")))
 
       // snapshot 3: COMPACTION of exactly the stale scope + a re-stat of
@@ -7245,7 +6974,7 @@ object SnapshotLog {
       recordAll(comp.head._1, tk3, rg3, cm3)
       recordSeq(dbFile, comp.map(_._1), 3L)
       val carried = dataFiles.filterNot(f => stale2.contains(f._1))
-      val c3 = commitMorV2(dbFile, 2L, 3L, carried ++ comp, Seq.empty, Seq.empty)
+      val c3 = commit(dbFile, 2L, 3L, carried ++ comp)
       val (row3, _) = snapRow(3L, 3L, c1 && c2 && c3)
 
       Seq(row1, row2, row3)
@@ -7340,7 +7069,7 @@ object SnapshotLog {
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
-      initNdv(dbFile)
+      initColNdv(dbFile)
 
       // ONE write-time scan: per-file (= per residue) register census
       val perFileRegs = o
@@ -7349,8 +7078,8 @@ object SnapshotLog {
         .groupBy("f", "bucket").agg(max("rk").as("mr"))
         .collect() // ≤256 sketch cells (64 × 4 files) — stats metadata
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // ONE partitionBy write for all four files (previously one
-      // filtered write job per residue — 4 scans of o; r20, §2.4), with
+      // ONE partitionBy write for all four files (not one filtered
+      // write job per residue — 4 scans of o), with
       // the per-file counts carried by the write job's own Observation
       // (the writeBucketed / commit-carried-counts discipline)
       val obs = org.apache.spark.sql.Observation()
@@ -7364,7 +7093,7 @@ object SnapshotLog {
       // group per bucket BEFORE building the map: toMap would silently
       // keep only the last file of a multi-file bucket (e.g. under
       // spark.sql.files.maxRecordsPerFile), committing one file while
-      // its sibling's rows sit unregistered on disk (ADVICE r20)
+      // its sibling's rows sit unregistered on disk
       val grouped: Map[Long, Seq[String]] = new java.io.File(s"$base/data")
         .listFiles().filter(_.getName.startsWith("f="))
         .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
@@ -7378,22 +7107,22 @@ object SnapshotLog {
       val files = (0L to 3L).map { b =>
         val pf = (byF(b), m(s"n_$b").asInstanceOf[Long])
         recordStats(dbFile, Seq((pf._1, b)))
-        recordNdv(dbFile, perFileRegs.collect {
-          case (f, bkt, mr) if f == b => (pf._1, bkt, mr)
-        })
+        recordColNdv(dbFile, perFileRegs.collect {
+          case (f, bkt, mr) if f == b => (pf._1, "cust", bkt, mr)
+        }.toSeq)
         pf
       }
       commit(dbFile, 0L, 1L, files)
 
       def scopeRow(scope: String, buckets: Seq[Long]) = {
         val paths = prunePaths(dbFile, 1L, buckets)
-        val merged = ndvRegisters(dbFile, paths) // plan-time: metadata only
+        val merged = colNdvRegisters(dbFile, paths, "cust") // plan-time: metadata only
         val est = estimate(merged)
         // audit scan, fused: exact NDV + direct census from ONE
         // per-key pass (ndvAudit — previously two scans per scope)
         val (_, exact, direct) =
           ndvAudit(spark.read.parquet(paths: _*), "cust")
-        (scope, paths.size.toLong, ndvRowCount(dbFile, paths), est, exact,
+        (scope, paths.size.toLong, colNdvRowCount(dbFile, paths, "cust"), est, exact,
           math.abs(est - exact) * 10000L / exact,
           merged.sortBy(_._1) == direct, true)
       }
@@ -7687,7 +7416,7 @@ object SnapshotLog {
           .groupBy("g", "bucket").agg(max("rk").as("mr"))
           .collect() // ≤256 sketch cells — stats metadata
           .map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2))).toSeq)
-      recordColStats(dbFile, files.map(f => (f._1, f._3, f._4)))
+      recordColStats(dbFile, "c0", files.map(f => (f._1, f._3, f._4)))
       val bucketRe = "/g=(\\d+)/".r
       val pathOf: Map[Long, String] = files
         .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
@@ -7704,7 +7433,7 @@ object SnapshotLog {
         (scope, paths.size.toLong, est, exact,
           math.abs(est - exact) * 10000L / exact, merged == direct, true)
       }
-      val pruned = pruneByRange(dbFile, 1L, lo, hi) // col_stats: the s52 plan
+      val pruned = pruneByCols(dbFile, 1L, Seq(("c0", lo, hi))) // col_stats: the s52 plan
       // [lo, hi] sits inside bucket 0's value domain and every bucket is
       // non-empty by quartile construction — an empty prune is a stats
       // defect, failed loudly instead of dividing by zero below

@@ -134,6 +134,26 @@ class DuckDbLiveSpec extends AnyFunSuite {
     assert(idSum == 4950L)
   }
 
+  test("insertRows rejects a template with a suffix clause before anything runs") {
+    // the tuple after VALUES is replicated per row, so a trailing clause
+    // would be replicated too and fail late inside DuckDB's parser
+    val db = java.nio.file.Files.createTempDirectory("graft_live_ins_").toString + "/t.db"
+    val sql = "INSERT INTO t VALUES (?, ?) ON CONFLICT DO NOTHING"
+    val n = DuckDbLive.withConnection(db) { c =>
+      DuckDbLive.execute(c, "CREATE TABLE t(k BIGINT PRIMARY KEY, v BIGINT)")
+      DuckDbLive.execute(c, "INSERT INTO t VALUES (0, 0)")
+      val e = intercept[IllegalArgumentException] {
+        DuckDbLive.insertRows(c, sql, Seq((1L, 10L), (2L, 20L))) { (ps, o, r) =>
+          ps.setLong(o + 1, r._1)
+          ps.setLong(o + 2, r._2)
+        }
+      }
+      assert(e.getMessage.contains(sql))
+      DuckDbLive.queryRow(c, "SELECT count(*) FROM t")(0).asInstanceOf[Number].longValue
+    }
+    assert(n == 1L, "a rejected template must leave the table unchanged")
+  }
+
   test("featuresF32Schema matches the pipeline's real f32 export schema") {
     // the s01 DDL oracle is generated from the STATIC schema; this pins it
     // to the actual pipeline output so they cannot drift apart

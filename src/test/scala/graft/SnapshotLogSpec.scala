@@ -141,17 +141,16 @@ class SnapshotLogSpec extends AnyFunSuite {
   test("MOR commit is atomic over data AND delete manifests; seq metadata round-trips") {
     withLog { db =>
       SnapshotLog.initLog(db)
-      SnapshotLog.initMor(db)
       SnapshotLog.recordSeq(db, Seq("a", "b"), 1L)
-      assert(SnapshotLog.commitMor(db, 0L, 1L, Seq(("a", 3L), ("b", 4L)), Seq.empty))
+      assert(SnapshotLog.commit(db, 0L, 1L, Seq(("a", 3L), ("b", 4L))))
       SnapshotLog.recordSeq(db, Seq("del1"), 2L)
-      assert(SnapshotLog.commitMor(db, 1L, 2L, Seq(("a", 3L), ("b", 4L)), Seq(("del1", 2L))))
+      assert(SnapshotLog.commit(db, 1L, 2L, Seq(("a", 3L), ("b", 4L)), Seq(("del1", 2L))))
       assert(SnapshotLog.manifestSeq(db, 2L) == Seq(("a", 1L), ("b", 1L)))
       assert(SnapshotLog.deleteSeq(db, 2L) == Seq(("del1", 2L)))
       // snapshot 1 never sees snapshot 2's delete file
       assert(SnapshotLog.deleteSeq(db, 1L).isEmpty)
       // a stale MOR commit leaves NEITHER data nor delete manifest rows
-      assert(!SnapshotLog.commitMor(db, 1L, 3L, Seq(("c", 1L)), Seq(("del2", 1L))))
+      assert(!SnapshotLog.commit(db, 1L, 3L, Seq(("c", 1L)), Seq(("del2", 1L))))
       assert(SnapshotLog.manifest(db, 3L).isEmpty)
       assert(SnapshotLog.deleteSeq(db, 3L).isEmpty)
       assert(SnapshotLog.currentSnapshot(db) == 2L)
@@ -161,24 +160,23 @@ class SnapshotLogSpec extends AnyFunSuite {
   test("branch refs: staged commits never move main; publish is conditional") {
     withLog { db =>
       SnapshotLog.initLog(db)
-      SnapshotLog.initRefs(db)
       assert(SnapshotLog.commit(db, 0L, 1L, Seq(("a", 1L))))
       SnapshotLog.createRef(db, "wap", 1L)
       // two staged commits advance the BRANCH; main never moves
-      assert(SnapshotLog.commitToRef(db, "wap", 1L, 2L, Seq(("a", 1L), ("x", 2L))))
-      assert(SnapshotLog.commitToRef(db, "wap", 2L, 3L, Seq(("a", 1L), ("y", 3L))))
+      assert(SnapshotLog.commit(db, 1L, 2L, Seq(("a", 1L), ("x", 2L)), ref = Some("wap")))
+      assert(SnapshotLog.commit(db, 2L, 3L, Seq(("a", 1L), ("y", 3L)), ref = Some("wap")))
       assert(SnapshotLog.currentSnapshot(db) == 1L)
       assert(SnapshotLog.refSnapshot(db, "wap") == 3L)
       // a stale staged commit rejects without touching either pointer
-      assert(!SnapshotLog.commitToRef(db, "wap", 2L, 4L, Seq(("z", 1L))))
+      assert(!SnapshotLog.commit(db, 2L, 4L, Seq(("z", 1L)), ref = Some("wap")))
       assert(SnapshotLog.manifest(db, 4L).isEmpty)
       // publish fast-forwards main only from the expected position
-      assert(!SnapshotLog.publish(db, expectedMainAt = 2L, stagedSnapshot = 3L))
+      assert(!SnapshotLog.moveCurrent(db, expected = 2L, to = 3L))
       assert(SnapshotLog.currentSnapshot(db) == 1L)
-      assert(SnapshotLog.publish(db, expectedMainAt = 1L, stagedSnapshot = 3L))
+      assert(SnapshotLog.moveCurrent(db, expected = 1L, to = 3L))
       assert(SnapshotLog.currentSnapshot(db) == 3L)
       // re-publishing the superseded stage is rejected
-      assert(!SnapshotLog.publish(db, expectedMainAt = 1L, stagedSnapshot = 2L))
+      assert(!SnapshotLog.moveCurrent(db, expected = 1L, to = 2L))
       assert(SnapshotLog.currentSnapshot(db) == 3L)
     }
   }
@@ -208,32 +206,58 @@ class SnapshotLogSpec extends AnyFunSuite {
   }
 
   test("4-way race on the same parent: exactly one commit wins, losers leave nothing") {
-    withLog { db =>
-      SnapshotLog.initLog(db)
-      assert(SnapshotLog.commit(db, 0L, 1L, Seq(("base", 1L))))
-      import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-      val pool = Executors.newFixedThreadPool(4)
-      val gate = new CountDownLatch(1)
-      val results = (0 until 4).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = {
-            gate.await()
-            // each racer proposes its own snapshot id built on parent 1
-            SnapshotLog.commit(db, 1L, 10L + i, Seq((s"race$i", 1L)))
+    // each case races the same commit path: (branch ref, row-level deletes
+    // and stale markers carried by every racer). Case 2 moves a branch
+    // ref and must never move main.
+    Seq(None, Some("b")).foreach { ref =>
+      withLog { db =>
+        SnapshotLog.initLog(db)
+        assert(SnapshotLog.commit(db, 0L, 1L, Seq(("base", 1L))))
+        ref.foreach(SnapshotLog.createRef(db, _, 1L))
+        def extras(i: Int): Seq[(String, Long)] =
+          if (ref.isEmpty) Nil else Seq((s"del$i", 1L))
+        import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+        val pool = Executors.newFixedThreadPool(4)
+        val gate = new CountDownLatch(1)
+        val results = (0 until 4).map { i =>
+          pool.submit(new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              gate.await()
+              // each racer proposes its own snapshot id built on parent 1
+              SnapshotLog.commit(db, 1L, 10L + i, Seq((s"race$i", 1L)),
+                eqDeletes = extras(i), posDeletes = extras(i),
+                staleMarkers = extras(i).map { case (p, _) => (p, "k") }, ref = ref)
+            }
+          })
+        }
+        gate.countDown()
+        pool.shutdown()
+        assert(pool.awaitTermination(60, TimeUnit.SECONDS))
+        val wins = results.map(_.get()).count(identity)
+        assert(wins == 1, s"expected exactly one winning commit, got $wins")
+        val cur = ref.fold(SnapshotLog.currentSnapshot(db))(SnapshotLog.refSnapshot(db, _))
+        assert(cur >= 10L && cur < 14L)
+        // a branch commit never moves main
+        if (ref.nonEmpty) assert(SnapshotLog.currentSnapshot(db) == 1L)
+        def rows(table: String, where: String): Long =
+          DuckDbLive.withConnection(db) { c =>
+            DuckDbLive.queryRows(c, s"SELECT count(*) FROM $table WHERE $where")
+              .head.head.asInstanceOf[Number].longValue
           }
-        })
-      }
-      gate.countDown()
-      pool.shutdown()
-      assert(pool.awaitTermination(60, TimeUnit.SECONDS))
-      val wins = results.map(_.get()).count(identity)
-      assert(wins == 1, s"expected exactly one winning commit, got $wins")
-      val cur = SnapshotLog.currentSnapshot(db)
-      assert(cur >= 10L && cur < 14L)
-      // the winner's manifest is intact; every loser left zero rows
-      assert(SnapshotLog.manifest(db, cur).size == 1)
-      (10L until 14L).filter(_ != cur).foreach { l =>
-        assert(SnapshotLog.manifest(db, l).isEmpty, s"loser $l leaked manifest rows")
+        val deleteTables = Seq("delete_manifests", "position_delete_manifests")
+        val nExtras = extras((cur - 10L).toInt).size.toLong
+        // the winner's manifests are intact; every loser left zero rows
+        assert(SnapshotLog.manifest(db, cur).size == 1)
+        deleteTables.foreach(t => assert(rows(t, s"snapshot_id = $cur") == nExtras))
+        assert(rows("stat_stale", "true") == nExtras)
+        (10L until 14L).filter(_ != cur).foreach { l =>
+          assert(SnapshotLog.manifest(db, l).isEmpty, s"loser $l leaked manifest rows")
+          deleteTables.foreach { t =>
+            assert(rows(t, s"snapshot_id = $l") == 0L, s"loser $l leaked $t rows")
+          }
+          assert(rows("stat_stale", s"path = 'del${l - 10L}'") == 0L,
+            s"loser $l leaked stat_stale rows")
+        }
       }
     }
   }
@@ -316,8 +340,6 @@ class SnapshotLogSpec extends AnyFunSuite {
       val base = java.nio.file.Files.createTempDirectory("graft_s49_spec_")
       try {
         SnapshotLog.initLog(db)
-        SnapshotLog.initMor(db)
-        SnapshotLog.initPosDeletes(db)
         val rows = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "cents")
         rows.coalesce(1).write.parquet(s"$base/a")
         rows.coalesce(1).write.parquet(s"$base/b")
@@ -335,7 +357,7 @@ class SnapshotLogSpec extends AnyFunSuite {
         Seq(2L).toDF("k").coalesce(1).write.parquet(s"$base/eq")
         val eq = pf("eq").map { case (p, _) => (p, 1L) }
         SnapshotLog.recordSeq(db, (fa ++ fb ++ pd ++ eq).map(_._1), 1L)
-        assert(SnapshotLog.commitMorV2(db, 0L, 1L, fa ++ fb, eq, pd))
+        assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb, eq, pd))
         val got = SnapshotLog.morReadV2(spark, db, 1L, "k")
           .groupBy("k").count().orderBy("k")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -354,21 +376,20 @@ class SnapshotLogSpec extends AnyFunSuite {
   test("expiry honors refs: a tagged snapshot survives expire-everything until the tag drops") {
     withLog { db =>
       SnapshotLog.initLog(db)
-      SnapshotLog.initRefs(db)
       SnapshotLog.commit(db, 0L, 1L, Seq(("a", 1L), ("b", 2L)))
       SnapshotLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L), ("c", 3L)))
       SnapshotLog.commit(db, 2L, 3L, Seq(("d", 6L))) // compaction
       SnapshotLog.createRef(db, "audit", 1L)
       // tag retains snapshot 1; snapshot 2 expires; files a,b stay live
-      assert(SnapshotLog.expireSnapshotsRetainingRefs(db, 99L) == Seq(2L))
+      assert(SnapshotLog.expireSnapshots(db, 99L) == Seq(2L))
       assert(SnapshotLog.manifest(db, 1L) == Seq(("a", 1L), ("b", 2L)))
       assert(SnapshotLog.liveFiles(db) == Set("a", "b", "d"))
       // idempotent while the tag holds
-      assert(SnapshotLog.expireSnapshotsRetainingRefs(db, 99L).isEmpty)
+      assert(SnapshotLog.expireSnapshots(db, 99L).isEmpty)
       // dropping the tag releases it; only then does the same expiry bite
       assert(SnapshotLog.dropRef(db, "audit"))
       assert(!SnapshotLog.dropRef(db, "audit")) // second drop: clean false
-      assert(SnapshotLog.expireSnapshotsRetainingRefs(db, 99L) == Seq(1L))
+      assert(SnapshotLog.expireSnapshots(db, 99L) == Seq(1L))
       assert(SnapshotLog.manifest(db, 1L).isEmpty)
       assert(SnapshotLog.liveFiles(db) == Set("d"))
       assert(SnapshotLog.currentSnapshot(db) == 3L)
@@ -382,47 +403,51 @@ class SnapshotLogSpec extends AnyFunSuite {
       SnapshotLog.commit(db, 0L, 1L, Seq(("lo", 4L), ("mid", 4L), ("hi", 4L)))
       SnapshotLog.recordColStats(
         db,
+        "c0",
         Seq(("lo", 0L, 10L), ("mid", 5L, 15L), ("hi", 20L, 30L)))
+      def inRange(snap: Long, lo: Long, hi: Long) =
+        SnapshotLog.pruneByCols(db, snap, Seq(("c0", lo, hi)))
       // [12, 22]: "lo" ends at 10 (skipped), "mid" and "hi" overlap
-      assert(SnapshotLog.pruneByRange(db, 1L, 12L, 22L) == Seq("hi", "mid"))
+      assert(inRange(1L, 12L, 22L) == Seq("hi", "mid"))
       // touching at a single endpoint is still an overlap (Iceberg's
       // inclusive bounds): hi's min == the query's upper bound
-      assert(SnapshotLog.pruneByRange(db, 1L, 16L, 20L) == Seq("hi"))
-      assert(SnapshotLog.pruneByRange(db, 1L, 10L, 10L) == Seq("lo", "mid"))
+      assert(inRange(1L, 16L, 20L) == Seq("hi"))
+      assert(inRange(1L, 10L, 10L) == Seq("lo", "mid"))
       // a gap between files prunes everything — and planning an empty
       // set is a VALID answer here (the read side guards the empty case)
-      assert(SnapshotLog.pruneByRange(db, 1L, 16L, 19L).isEmpty)
+      assert(inRange(1L, 16L, 19L).isEmpty)
       // stats are per-file, pruning is per-snapshot: a file absent from
       // the snapshot's manifest never resurfaces via its stats row
       SnapshotLog.commit(db, 1L, 2L, Seq(("lo", 4L)))
-      assert(SnapshotLog.pruneByRange(db, 2L, 0L, 99L) == Seq("lo"))
+      assert(inRange(2L, 0L, 99L) == Seq("lo"))
     }
   }
 
   test("box pruning requires overlap in BOTH dimensions, endpoints inclusive") {
     withLog { db =>
       SnapshotLog.initLog(db)
-      SnapshotLog.initColStats2(db)
+      SnapshotLog.initColStats(db)
       SnapshotLog.commit(db, 0L, 1L, Seq(("a", 4L), ("b", 4L), ("c", 4L)))
       // a: x[0,3] y[0,3]; b: x[4,7] y[8,11]; c: x[4,7] y[0,3]
-      SnapshotLog.recordColStats2(
-        db,
-        Seq(("a", 0L, 3L, 0L, 3L), ("b", 4L, 7L, 8L, 11L), ("c", 4L, 7L, 0L, 3L)))
+      SnapshotLog.recordColStats(db, "x", Seq(("a", 0L, 3L), ("b", 4L, 7L), ("c", 4L, 7L)))
+      SnapshotLog.recordColStats(db, "y", Seq(("a", 0L, 3L), ("b", 8L, 11L), ("c", 0L, 3L)))
+      def inBox(snap: Long, xlo: Long, xhi: Long, ylo: Long, yhi: Long) =
+        SnapshotLog.pruneByCols(db, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
       // the box hits b only: a fails on x, c fails on y — a file
       // overlapping one dimension but not the other must be pruned
       // (this is the whole point of 2-D stats over 1-D)
-      assert(SnapshotLog.pruneByBox(db, 1L, 4L, 7L, 8L, 11L) == Seq("b"))
+      assert(inBox(1L, 4L, 7L, 8L, 11L) == Seq("b"))
       // endpoint touch counts in both dims (inclusive bounds): the box
       // corner (3, 3) touches a's max corner exactly
-      assert(SnapshotLog.pruneByBox(db, 1L, 3L, 5L, 3L, 5L) == Seq("a", "c"))
+      assert(inBox(1L, 3L, 5L, 3L, 5L) == Seq("a", "c"))
       // a y-stripe keeps every file whose y range overlaps, any x
-      assert(SnapshotLog.pruneByBox(db, 1L, 0L, 7L, 0L, 3L) == Seq("a", "c"))
+      assert(inBox(1L, 0L, 7L, 0L, 3L) == Seq("a", "c"))
       // disjoint in y everywhere → empty plan (valid; read side guards)
-      assert(SnapshotLog.pruneByBox(db, 1L, 0L, 7L, 4L, 7L).isEmpty)
+      assert(inBox(1L, 0L, 7L, 4L, 7L).isEmpty)
       // pruning is per-snapshot: dropping a file from the manifest
       // hides it regardless of its stats row
       SnapshotLog.commit(db, 1L, 2L, Seq(("b", 4L)))
-      assert(SnapshotLog.pruneByBox(db, 2L, 0L, 99L, 0L, 99L) == Seq("b"))
+      assert(inBox(2L, 0L, 99L, 0L, 99L) == Seq("b"))
     }
   }
 
@@ -455,8 +480,6 @@ class SnapshotLogSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     withLog { db =>
       SnapshotLog.initLog(db)
-      SnapshotLog.initMor(db)
-      SnapshotLog.initPosDeletes(db)
       SnapshotLog.commit(db, 0L, 1L, Seq(("a", 3L)))
       SnapshotLog.recordSeq(db, Seq("a"), 1L)
       val e = intercept[IllegalArgumentException] {
@@ -473,8 +496,8 @@ class SnapshotLogSpec extends AnyFunSuite {
 
   test("stale stat rows: the guarded register read REJECTS a scope with a stale path, accepts after exclusion") {
     withLog { db =>
+      SnapshotLog.initLog(db)
       SnapshotLog.initColNdv(db)
-      SnapshotLog.initStatStale(db)
       SnapshotLog.recordColNdv(db, Seq(("fA", "cust", 0L, 3L), ("fB", "cust", 0L, 5L)))
       // fresh everywhere: full scope accepted, per-bucket max merged
       assert(SnapshotLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "cust") == Seq((0L, 5L)))
