@@ -20,10 +20,10 @@ object StreamDemos {
 
   /** s69's memoized staging per source dir (the q212Staged pattern,
     * ADVICE r18): dir → temp root holding the engine's parquet export
-    * and — when the driver is available — the DuckDB file with BOTH
-    * ingested tables. The export + double ingest is the one-time
-    * handoff cost; what repeats (and what the bench should time) is
-    * the parity CHECK — the two in-DuckDB censuses.
+    * and the DuckDB file with BOTH ingested tables. The export + double
+    * ingest is the one-time handoff cost; what repeats (and what the
+    * bench should time) is the parity CHECK — the two in-DuckDB
+    * censuses.
     */
   private val s69Staged =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -38,8 +38,8 @@ object StreamDemos {
     // DuckDB table over JDBC, so the hash check proves the full round
     // trip: Spark plan → parquet → appender → DuckDB storage → SQL. The
     // oracle recomputes the same integer-exact census (plus the exact DDL
-    // text) from the feature CTEs; `live_appender` is only TRUE when the
-    // live sink actually ran.
+    // text) from the feature CTEs; without the driver the entry fails
+    // by name instead of returning a result.
     Q(
       "s01_duckdb_sink",
       (s, dir) => {
@@ -51,37 +51,20 @@ object StreamDemos {
         val df = Features.featuresFull(Tables.events(s, dir), cfg, ordered = false)
         val (ddl, _) = DuckDbSink.write(df, "Features", out)
         val exported = s.read.parquet(out) // float32, ordinal column order
-        val (live, facts) =
-          if (DuckDbLive.available)
-            (true, DuckDbLive.withConnection(s"$out/features.duckdb") { c =>
-              DuckDbLive.execute(c, ddl)
-              DuckDbLive.appendAll(c, "Features", exported, commitEvery = 500)
-              DuckDbLive
-                .queryRow(
-                  c,
-                  """SELECT count(*), count(DISTINCT user_id), min("Day"), max("Day"),
-                    |CAST(sum("Time") AS BIGINT),
-                    |count(CASE WHEN "Close" > "Open" THEN 1 END)
-                    |FROM "Features"""".stripMargin
-                )
-                .map(_.asInstanceOf[Number].longValue)
-            })
-          else // honest fallback: the oracle expects TRUE, so a missing
-            // driver surfaces as a hash mismatch, not a silent pass
-            (false, {
-              val r = exported
-                .agg(
-                  count(lit(1)),
-                  countDistinct(col("user_id")),
-                  min(col("Day")),
-                  max(col("Day")),
-                  sum(col("Time")),
-                  count(when(col("Close") > col("Open"), 1))
-                )
-                .head()
-              (0 until 6).map(r.getLong)
-            })
-        Seq((ddl, live, facts(0), facts(1), facts(2), facts(3), facts(4), facts(5)))
+        val facts = DuckDbLive.withConnection(s"$out/features.duckdb") { c =>
+          DuckDbLive.execute(c, ddl)
+          DuckDbLive.appendAll(c, "Features", exported, commitEvery = 500)
+          DuckDbLive
+            .queryRow(
+              c,
+              """SELECT count(*), count(DISTINCT user_id), min("Day"), max("Day"),
+                |CAST(sum("Time") AS BIGINT),
+                |count(CASE WHEN "Close" > "Open" THEN 1 END)
+                |FROM "Features"""".stripMargin
+            )
+            .map(_.asInstanceOf[Number].longValue)
+        }
+        Seq((ddl, true, facts(0), facts(1), facts(2), facts(3), facts(4), facts(5)))
           .toDF("ddl", "live_appender", "n_rows", "n_users", "min_day", "max_day", "sum_time", "n_up")
       },
       Some(s"""WITH $featCte,
@@ -2103,8 +2086,8 @@ object StreamDemos {
     // exercised), and the JDBC read-back compares census + an
     // order-free modular row digest (md5-content per row, summed mod
     // 1e9+7 — the q148 digest class) computed INSIDE DuckDB over each
-    // table. parity_ok rides the hash; a missing driver degrades to
-    // live_sink=false and fails the oracle's TRUE.
+    // table. parity_ok rides the hash; without the driver the entry
+    // fails by name.
     Q(
       "s69_duckdb_bulk_parity",
       (s, dir) => {
@@ -2120,32 +2103,30 @@ object StreamDemos {
             col("o_orderdate").cast("date").as("d"))
           // the engine's own export — the 100 TB handoff artifact
           df.repartition(4).write.parquet(s"$o/export")
-          if (DuckDbLive.available) {
-            DuckDbLive.withConnection(s"$o/par.duckdb") { c =>
-              DuckDbLive.execute(
-                c, "CREATE TABLE t_app(k BIGINT, cents BIGINT, st VARCHAR, d DATE)")
-              // path 1: the appender (the O21/O22 cadence demo — driver
-              // loop). d rides the driver hop as its ISO string: the
-              // appender writes DATE via the varchar-with-cast path
-              // anyway (DuckDbLive type map), and java.sql.Date decoding
-              // through toLocalIterator proved flaky deep into long
-              // multi-query suites (r19 bench: suite-only
-              // EXPRESSION_DECODING_FAILED on the date field, never
-              // reproducible in isolation) — the string form keeps the
-              // driver decode to longs+strings with identical storage.
-              DuckDbLive.appendAll(
-                c,
-                "t_app",
-                s.read.parquet(s"$o/export").select(
-                  col("k"), col("cents"), col("st"),
-                  col("d").cast("string").as("d")),
-                commitEvery = 1000)
-              // path 2: DuckDB bulk-ingests the export — no driver hop
-              DuckDbLive.execute(
-                c,
-                s"""CREATE TABLE t_bulk AS SELECT k, cents, st, d
-                   FROM read_parquet('$o/export/*.parquet')""")
-            }
+          DuckDbLive.withConnection(s"$o/par.duckdb") { c =>
+            DuckDbLive.execute(
+              c, "CREATE TABLE t_app(k BIGINT, cents BIGINT, st VARCHAR, d DATE)")
+            // path 1: the appender (the O21/O22 cadence demo — driver
+            // loop). d rides the driver hop as its ISO string: the
+            // appender writes DATE via the varchar-with-cast path
+            // anyway (DuckDbLive type map), and java.sql.Date decoding
+            // through toLocalIterator proved flaky deep into long
+            // multi-query suites (r19 bench: suite-only
+            // EXPRESSION_DECODING_FAILED on the date field, never
+            // reproducible in isolation) — the string form keeps the
+            // driver decode to longs+strings with identical storage.
+            DuckDbLive.appendAll(
+              c,
+              "t_app",
+              s.read.parquet(s"$o/export").select(
+                col("k"), col("cents"), col("st"),
+                col("d").cast("string").as("d")),
+              commitEvery = 1000)
+            // path 2: DuckDB bulk-ingests the export — no driver hop
+            DuckDbLive.execute(
+              c,
+              s"""CREATE TABLE t_bulk AS SELECT k, cents, st, d
+                 FROM read_parquet('$o/export/*.parquet')""")
           }
           o
         })
@@ -2158,38 +2139,18 @@ object StreamDemos {
              ), 1, 15)) AS BIGINT) % 1000000007) AS BIGINT)
              FROM $t"""
 
-        if (DuckDbLive.available) {
-          // the repeating parity CHECK: two in-DuckDB censuses over the
-          // staged tables (staging memoized above)
-          val (app, bulk) = DuckDbLive.withConnection(s"$out/par.duckdb") { c =>
-            (DuckDbLive.queryRow(c, censusSql("t_app"))
-               .map(_.asInstanceOf[Number].longValue),
-              DuckDbLive.queryRow(c, censusSql("t_bulk"))
-                .map(_.asInstanceOf[Number].longValue))
-          }
-          Seq((app(0), app(1), app(2), app(3), app(4), app == bulk, true))
-            .toDF("n_rows", "n_status", "sum_k", "sum_cents", "row_digest",
-              "parity_ok", "live_sink")
-            .orderBy("n_rows")
-        } else {
-          // honest fallback: the same census from the export via Spark;
-          // parity untestable without the driver → fails the oracle's TRUE
-          import graft.ops.Hashing
-          val r = s.read.parquet(s"$out/export")
-            .agg(
-              count(lit(1)), countDistinct(col("st")),
-              sum(col("k")), sum(col("cents")),
-              sum(pmod(
-                Hashing.h60(concat_ws("|",
-                  col("k"), col("cents"), col("st"), col("d").cast("string"))),
-                lit(1000000007L))))
-            .head()
-          Seq((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), false, false))
-            .toDF("n_rows", "n_status", "sum_k", "sum_cents", "row_digest",
-              "parity_ok", "live_sink")
-            .orderBy("n_rows")
+        // the repeating parity CHECK: two in-DuckDB censuses over the
+        // staged tables (staging memoized above)
+        val (app, bulk) = DuckDbLive.withConnection(s"$out/par.duckdb") { c =>
+          (DuckDbLive.queryRow(c, censusSql("t_app"))
+             .map(_.asInstanceOf[Number].longValue),
+            DuckDbLive.queryRow(c, censusSql("t_bulk"))
+              .map(_.asInstanceOf[Number].longValue))
         }
+        Seq((app(0), app(1), app(2), app(3), app(4), app == bulk, true))
+          .toDF("n_rows", "n_status", "sum_k", "sum_cents", "row_digest",
+            "parity_ok", "live_sink")
+          .orderBy("n_rows")
       },
       Some {
         val h = graft.oracle.OracleSql.h60(

@@ -14,13 +14,14 @@ import scala.util.control.NonFatal
   * the commit cadence), re-expressed against the public
   * `org.duckdb:duckdb_jdbc` driver.
   *
-  * The binding is deliberately REFLECTIVE and OPTIONAL: the jar is
-  * discovered in the machine-local artifact caches (the same pre-warmed,
-  * offline cache the test dependencies resolve from — no remote fetch, no
-  * repository host named anywhere) and loaded in a child classloader, so
-  * `build.sbt`'s dependency set stays fixed and every caller degrades to
-  * the open-format handshake (parquet + generated DDL/`read_parquet`
-  * INSERT, `DuckDbSink.write`) when no jar is present.
+  * The binding is REFLECTIVE: the jar is discovered in the
+  * machine-local artifact caches (the same pre-warmed, offline cache the
+  * test dependencies resolve from — no remote fetch, no repository host
+  * named anywhere) and loaded in a child classloader, so `build.sbt`'s
+  * dependency set stays fixed. The jar is REQUIRED by every DuckDB-backed
+  * entry: without it the first connection throws
+  * `IllegalStateException("duckdb_jdbc not present …")` from
+  * `openConnection`, and that entry fails by name.
   *
   * Type coverage mirrors the reference's full appender map
   * (`DatabaseWriter.cs:299-315`): integral widths, float32/float64,

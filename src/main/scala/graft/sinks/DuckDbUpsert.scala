@@ -67,7 +67,7 @@ object DuckDbUpsert {
       )
       .collect() // bounded by the key domain = the upsert target's size
 
-    if (DuckDbLive.available) DuckDbLive.cachingScope {
+    DuckDbLive.cachingScope {
       // one native DuckDB open for the whole lifecycle (DDL + one
       // upsert transaction per micro-batch + the final state read)
       // instead of an open/close — each with a WAL checkpoint — per
@@ -138,23 +138,6 @@ object DuckDbUpsert {
         .withColumn("n_batches", lit(nBatches.get))
         .withColumn("n_stale_rejected", lit(nStale.get))
         .withColumn("upsert_live", lit(true))
-    } else {
-      // honest fallback: batch latest-wins; upsert_live=false fails the
-      // oracle's TRUE, so a missing driver can never silently pass
-      Tables
-        .events(spark, dir)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("last"))
-        .select(
-          col("user_id"),
-          unix_micros(col("last.ts")).as("ts_us"),
-          col("last.event_id").as("event_id"),
-          col("last.value").as("value")
-        )
-        .withColumn("n_batches", lit(0L))
-        .withColumn("n_stale_rejected", lit(0L))
-        .withColumn("upsert_live", lit(false))
-        .orderBy("user_id")
     }
   }
 }

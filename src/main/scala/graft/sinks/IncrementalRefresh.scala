@@ -176,82 +176,64 @@ object IncrementalRefresh {
           .otherwise(lit("changed")))
       .ckpt() // bucket-domain-sized (~80 cells)
 
-    if (DuckDbLive.available) {
-      val base = java.nio.file.Files.createTempDirectory("graft_s35_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case scala.util.control.NonFatal(_) => () }))
-      val dbFile = s"$base/view.duckdb"
-      initStore(dbFile)
+    val base = java.nio.file.Files.createTempDirectory("graft_s35_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
+          .foreach(f => java.nio.file.Files.deleteIfExists(f))
+      } catch { case scala.util.control.NonFatal(_) => () }))
+    val dbFile = s"$base/view.duckdb"
+    initStore(dbFile)
 
-      // bucket-domain-bounded batch collects — the view's own size
-      def collectBatch(df: DataFrame): Seq[(Long, Long, Long, Long)] =
-        df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // bucket-domain-bounded batch collects — the view's own size
+    def collectBatch(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
 
-      // refresh 0: the previous run — view built from the SNAPSHOT only
-      val snapshotBatch = collectBatch(
-        census.filter(col("cnt_a") > 0L).select("bucket", "cnt_a", "sum_a", "dig_a"))
-      applyRefresh(dbFile, 0L, snapshotBatch)
-      // refresh 1: the incremental run — manifest diff's to-process set
-      // is exactly the buckets with a delta; only their partials ship
-      val deltaBatch = collectBatch(
-        census.filter(col("cnt_d") > 0L).select("bucket", "cnt_d", "sum_d", "dig_d"))
-      applyRefresh(dbFile, 1L, deltaBatch)
-      // INJECTED stale re-delivery of the same refresh: must be rejected
-      val rejected = Seq(applyRefresh(dbFile, 1L, deltaBatch)).count(_ == false).toLong
+    // refresh 0: the previous run — view built from the SNAPSHOT only
+    val snapshotBatch = collectBatch(
+      census.filter(col("cnt_a") > 0L).select("bucket", "cnt_a", "sum_a", "dig_a"))
+    applyRefresh(dbFile, 0L, snapshotBatch)
+    // refresh 1: the incremental run — manifest diff's to-process set
+    // is exactly the buckets with a delta; only their partials ship
+    val deltaBatch = collectBatch(
+      census.filter(col("cnt_d") > 0L).select("bucket", "cnt_d", "sum_d", "dig_d"))
+    applyRefresh(dbFile, 1L, deltaBatch)
+    // INJECTED stale re-delivery of the same refresh: must be rejected
+    val rejected = Seq(applyRefresh(dbFile, 1L, deltaBatch)).count(_ == false).toLong
 
-      // read back the maintained view (bucket-domain-bounded)
-      val viewRows = DuckDbLive.withConnection(dbFile) { c =>
-        val st = c.createStatement()
-        try {
-          val rs =
-            st.executeQuery("SELECT bucket, n_rows, sum_cents, dig FROM view_m ORDER BY bucket")
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-          while (rs.next()) buf += ((rs.getLong(1), rs.getLong(2), rs.getLong(3), rs.getLong(4)))
-          buf.toSeq
-        } finally st.close()
-      }
-      import spark.implicits._
-      val viewDf = viewRows.toDF("v_bucket", "v_rows", "v_sum", "v_dig")
-      // from-scratch equality per bucket (the q134 discipline), then the
-      // q148-style per-status report
-      census
-        .join(broadcast(viewDf), col("bucket") === col("v_bucket"))
-        .withColumn(
-          "ok",
-          col("v_rows") === col("cnt_b") && col("v_sum") === col("sum_b") &&
-            col("v_dig") === col("dig_b"))
-        .groupBy("status")
-        .agg(
-          count(lit(1)).as("n_buckets"),
-          sum(col("cnt_b")).as("rows_current"),
-          sum(when(col("status") =!= "unchanged", col("cnt_b")).otherwise(0L))
-            .as("rows_to_process"),
-          sum(col("v_rows")).as("n_rows_view"),
-          sum(col("v_sum")).as("sum_cents_view"),
-          expr("bool_and(ok)").as("view_ok"))
-        .withColumn("n_redeliveries_rejected", lit(rejected))
-        .withColumn("refresh_live", lit(true))
-        .orderBy("status")
-    } else {
-      // honest fallback: scratch-only report; refresh_live=false fails
-      // the oracle's TRUE, so a missing driver can never silently pass
-      census
-        .groupBy("status")
-        .agg(
-          count(lit(1)).as("n_buckets"),
-          sum(col("cnt_b")).as("rows_current"),
-          sum(when(col("status") =!= "unchanged", col("cnt_b")).otherwise(0L))
-            .as("rows_to_process"),
-          sum(col("cnt_b")).as("n_rows_view"),
-          sum(col("sum_b")).as("sum_cents_view"),
-          lit(false).as("view_ok"))
-        .withColumn("n_redeliveries_rejected", lit(0L))
-        .withColumn("refresh_live", lit(false))
-        .orderBy("status")
+    // read back the maintained view (bucket-domain-bounded)
+    val viewRows = DuckDbLive.withConnection(dbFile) { c =>
+      val st = c.createStatement()
+      try {
+        val rs =
+          st.executeQuery("SELECT bucket, n_rows, sum_cents, dig FROM view_m ORDER BY bucket")
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+        while (rs.next()) buf += ((rs.getLong(1), rs.getLong(2), rs.getLong(3), rs.getLong(4)))
+        buf.toSeq
+      } finally st.close()
     }
+    import spark.implicits._
+    val viewDf = viewRows.toDF("v_bucket", "v_rows", "v_sum", "v_dig")
+    // from-scratch equality per bucket (the q134 discipline), then the
+    // q148-style per-status report
+    census
+      .join(broadcast(viewDf), col("bucket") === col("v_bucket"))
+      .withColumn(
+        "ok",
+        col("v_rows") === col("cnt_b") && col("v_sum") === col("sum_b") &&
+          col("v_dig") === col("dig_b"))
+      .groupBy("status")
+      .agg(
+        count(lit(1)).as("n_buckets"),
+        sum(col("cnt_b")).as("rows_current"),
+        sum(when(col("status") =!= "unchanged", col("cnt_b")).otherwise(0L))
+          .as("rows_to_process"),
+        sum(col("v_rows")).as("n_rows_view"),
+        sum(col("v_sum")).as("sum_cents_view"),
+        expr("bool_and(ok)").as("view_ok"))
+      .withColumn("n_redeliveries_rejected", lit(rejected))
+      .withColumn("refresh_live", lit(true))
+      .orderBy("status")
   }
 }

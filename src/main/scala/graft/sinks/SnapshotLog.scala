@@ -83,11 +83,8 @@ object SnapshotLog {
   }
 
   /** Run `body` against a fresh temp dir and ALWAYS delete it on the way
-    * out: every s39–s50 lifecycle fully materializes its censuses inside
-    * the call, so the parquet staging is dead weight afterwards. The old
-    * shape (one JVM shutdown hook + one table copy per invocation)
-    * accumulated ~150 hooks and dozens of copies across a bench sweep —
-    * real disk pressure at larger SFs.
+    * out: every lifecycle fully materializes its censuses inside the
+    * call, so the parquet staging is dead weight afterwards.
     */
   private def withTempTableDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
     val base = java.nio.file.Files.createTempDirectory(prefix)
@@ -603,7 +600,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),
         col("o_orderdate").cast("date").as("d"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s39_") { base =>
+    withTempTableDir("graft_s39_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -647,18 +644,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
           "conflict_rejected")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: scratch censuses only; conflict_rejected=false
-      // fails the oracle's TRUE, so a missing driver can never pass
-      val s1 = o.filter(col("d") < lit(Cutoff).cast("date"))
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      val s2 = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq(
-        (1L, 2L, s1.getLong(0), s1.getLong(1), false, false),
-        (2L, 5L, s2.getLong(0), s2.getLong(1), true, false))
-        .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
-          "conflict_rejected")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -690,7 +675,7 @@ object SnapshotLog {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cents = expr("CAST(floor(value * 100) AS BIGINT)").as("cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s41_") { base =>
+    withTempTableDir("graft_s41_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -746,23 +731,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
           "exactly_once")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: batch censuses only; exactly_once=false fails
-      // the oracle's TRUE, so a missing driver can never pass
-      val ev = Tables.events(spark, dir)
-        .select(cents, graft.ops.TimeCodec.dayInt(col("ts")).as("day"))
-      val b0 = ev.filter(col("day") <= graft.streaming.Watermarks.splitDay)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      val ba = ev.agg(count(lit(1)), sum(col("cents"))).head()
-      val br = ev.filter(col("day") < graft.streaming.Watermarks.replayBefore)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      Seq(
-        (1L, 2L, b0.getLong(0), b0.getLong(1), false, false),
-        (2L, 4L, ba.getLong(0), ba.getLong(1), false, false),
-        (3L, 6L, ba.getLong(0) + br.getLong(0), ba.getLong(1) + br.getLong(1), true, false))
-        .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
-          "exactly_once")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -801,7 +769,7 @@ object SnapshotLog {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
 
-    if (DuckDbLive.available) withTempTableDir("graft_s40_") { base =>
+    withTempTableDir("graft_s40_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       IncrementalRefresh.initStore(dbFile)
@@ -857,16 +825,6 @@ object SnapshotLog {
         .toDF("n_files_added", "rows_added", "n_buckets", "n_rows_view",
           "sum_cents_view", "view_ok", "n_redeliveries_rejected", "refresh_live")
         .orderBy("n_files_added")
-    } else {
-      // honest fallback: from-scratch numbers, refresh_live=false fails
-      // the oracle's TRUE
-      val nb = o.select(countDistinct(col("bucket"))).head().getLong(0)
-      val ra = o.filter(!(col("d") < lit(Cutoff).cast("date"))).count()
-      val agg = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((3L, ra, nb, agg.getLong(0), agg.getLong(1), false, 0L, false))
-        .toDF("n_files_added", "rows_added", "n_buckets", "n_rows_view",
-          "sum_cents_view", "view_ok", "n_redeliveries_rejected", "refresh_live")
-        .orderBy("n_files_added")
     }
   }
 
@@ -905,7 +863,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),
         col("o_orderdate").cast("date").as("d"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s42_") { base =>
+    withTempTableDir("graft_s42_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -956,15 +914,6 @@ object SnapshotLog {
         agg.getLong(0),
         agg.getLong(1),
         gcSafe))
-        .toDF("n_snapshots_expired", "n_orphans_deleted",
-          "n_expired_files_deleted", "n_files_live", "n_rows", "sum_cents",
-          "gc_safe")
-        .orderBy("n_rows")
-    } else {
-      // honest fallback: scratch census only; gc_safe=false fails the
-      // oracle's TRUE, so a missing driver can never pass
-      val agg = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((2L, 2L, 5L, 2L, agg.getLong(0), agg.getLong(1), false))
         .toDF("n_snapshots_expired", "n_orphans_deleted",
           "n_expired_files_deleted", "n_files_live", "n_rows", "sum_cents",
           "gc_safe")
@@ -1020,7 +969,7 @@ object SnapshotLog {
       .map(i => (mx - (mx % 4) + 4L * (i + 1) + 2L, 1000000L + 7L * i))
       .toDF("k", "cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s43_") { base =>
+    withTempTableDir("graft_s43_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -1073,19 +1022,6 @@ object SnapshotLog {
           "n_deleted", "n_updated", "n_inserted", "n_rows", "sum_cents",
           "n_rows_pre", "sum_cents_pre", "merge_ok")
         .orderBy("n_rows")
-    } else {
-      // honest fallback: from-scratch merge arithmetic; merge_ok=false
-      // fails the oracle's TRUE
-      val b = o.agg(count(lit(1)), sum(col("cents"))).head()
-      val sd = deltaAgg.getLong(2)
-      val si = (0 until 10).map(i => 1000000L + 7L * i).sum
-      Seq((4L, 1L, 3L, nd, nu, 10L,
-        b.getLong(0) - nd + 10L, b.getLong(1) - sd + 1000L * nu + si,
-        b.getLong(0), b.getLong(1), false))
-        .toDF("n_files_base", "n_files_rewritten", "n_files_carried",
-          "n_deleted", "n_updated", "n_inserted", "n_rows", "sum_cents",
-          "n_rows_pre", "sum_cents_pre", "merge_ok")
-        .orderBy("n_rows")
     }
   }
 
@@ -1134,7 +1070,7 @@ object SnapshotLog {
       .map(i => (mx - (mx % 4) + 4L * (i + 1) + 2L, 1000000L + 7L * i))
       .toDF("k", "cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s45_") { base =>
+    withTempTableDir("graft_s45_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -1186,26 +1122,6 @@ object SnapshotLog {
         .toDF("change_type", "n_rows", "key_sum", "sum_cents_pre",
           "sum_cents_post", "n_files_scanned")
         .orderBy("change_type")
-    } else {
-      // honest fallback: predicate arithmetic; n_files_scanned=0 fails
-      // the oracle's 2
-      val agg = o.agg(
-        sum(when(delPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(delPred, col("k")).otherwise(lit(0L))),
-        sum(when(delPred, col("cents")).otherwise(lit(0L))),
-        sum(when(updPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(updPred, col("k")).otherwise(lit(0L))),
-        sum(when(updPred, col("cents")).otherwise(lit(0L)))).head()
-      val insK = (0 until 10).map(i => mx - (mx % 4) + 4L * (i + 1) + 2L).sum
-      val insC = (0 until 10).map(i => 1000000L + 7L * i).sum
-      Seq(
-        ("delete", agg.getLong(0), agg.getLong(1), agg.getLong(2), 0L, 0L),
-        ("insert", 10L, insK, 0L, insC, 0L),
-        ("update", agg.getLong(3), agg.getLong(4), agg.getLong(5),
-          agg.getLong(5) + 1000L * agg.getLong(3), 0L))
-        .toDF("change_type", "n_rows", "key_sum", "sum_cents_pre",
-          "sum_cents_post", "n_files_scanned")
-        .orderBy("change_type")
     }
   }
 
@@ -1251,7 +1167,7 @@ object SnapshotLog {
     val stagePred = col("k") % 3 === 0
     val corruptPred = col("k") % 150 === 3
 
-    if (DuckDbLive.available) withTempTableDir("graft_s46_") { base =>
+    withTempTableDir("graft_s46_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -1297,20 +1213,6 @@ object SnapshotLog {
       Seq((
         nBadStaged, mainStaged.getLong(0), mainStaged.getLong(1),
         mainPub.getLong(0), mainPub.getLong(1), pub, !stalePub, wapOk))
-        .toDF("n_bad_staged", "n_rows_main_staged", "sum_cents_main_staged",
-          "n_rows_main_published", "sum_cents_main_published", "published",
-          "stale_publish_rejected", "wap_ok")
-        .orderBy("n_bad_staged")
-    } else {
-      // honest fallback: predicate arithmetic; wap_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(corruptPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(!stagePred, lit(1L)).otherwise(lit(0L))),
-        sum(when(!stagePred, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      Seq((agg.getLong(0), agg.getLong(1), agg.getLong(2),
-        agg.getLong(3), agg.getLong(4), false, false, false))
         .toDF("n_bad_staged", "n_rows_main_staged", "sum_cents_main_staged",
           "n_rows_main_published", "sum_cents_main_published", "published",
           "stale_publish_rejected", "wap_ok")
@@ -1404,7 +1306,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),
         col("o_orderdate").cast("date").as("d"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s48_") { base =>
+    withTempTableDir("graft_s48_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initSpecs(dbFile)
@@ -1485,25 +1387,6 @@ object SnapshotLog {
         manifest(dbFile, 2L).size.toLong, pruned.size.toLong,
         sel.getLong(0), sel.getLong(1),
         snap1.getLong(0), snap1.getLong(1), evolutionOk))
-        .toDF("n_files_total", "n_files_scanned", "n_rows_sel",
-          "sum_cents_sel", "n_rows_snap1", "sum_cents_snap1", "evolution_ok")
-        .orderBy("n_rows_sel")
-    } else {
-      // honest fallback: predicate arithmetic; evolution_ok=false fails
-      // the oracle's TRUE
-      val pre = col("d") < lit(Cutoff).cast("date")
-      val agg = o.agg(
-        countDistinct(when(!pre, col("k") % 8)),
-        sum(when(pre && col("k") % 4 === 1, lit(1L)).otherwise(lit(0L))),
-        sum(when(!pre && col("k") % 8 === 5, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 8 === 5, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 8 === 5, col("cents")).otherwise(lit(0L))),
-        sum(when(pre, lit(1L)).otherwise(lit(0L))),
-        sum(when(pre, col("cents")).otherwise(lit(0L)))).head()
-      val scanned = (if (agg.getLong(1) > 0) 1L else 0L) +
-        (if (agg.getLong(2) > 0) 1L else 0L)
-      Seq((4L + agg.getLong(0), scanned, agg.getLong(3), agg.getLong(4),
-        agg.getLong(5), agg.getLong(6), false))
         .toDF("n_files_total", "n_files_scanned", "n_rows_sel",
           "sum_cents_sel", "n_rows_snap1", "sum_cents_snap1", "evolution_ok")
         .orderBy("n_rows_sel")
@@ -1689,7 +1572,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s50_") { base =>
+    withTempTableDir("graft_s50_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initSchemas(dbFile)
@@ -1756,28 +1639,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "schema_id", "n_files", "n_rows", "sum_cents",
           "n_disc", "sum_disc", "evolution_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: predicate arithmetic; evolution_ok=false fails
-      // the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 3 === 0, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 0, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, col("k") % 5 + 1).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 2, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 2, col("k") % 7 + 3).otherwise(lit(0L)))).head()
-      val (n0, s0) = (agg.getLong(0), agg.getLong(1))
-      val (n1, s1, d1) = (agg.getLong(2), agg.getLong(3), agg.getLong(4))
-      val (n2, s2, d2) = (agg.getLong(5), agg.getLong(6), agg.getLong(7))
-      Seq(
-        (1L, 1L, 2L, n0, s0, 0L, 0L, false),
-        (2L, 2L, 4L, n0 + n1, s0 + s1, n1, d1, false),
-        (3L, 3L, 6L, n0 + n1 + n2, s0 + s1 + s2, n2, d2, false))
-        .toDF("snapshot_id", "schema_id", "n_files", "n_rows", "sum_cents",
-          "n_disc", "sum_disc", "evolution_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -1814,17 +1675,12 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s51_") { base =>
+    withTempTableDir("graft_s51_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initTimestamps(dbFile)
 
       def slice(r: Long) = o.filter(col("k") % 3 === r)
-      def census(snap: Long): (Long, Long) = {
-        val a = spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        (a.getLong(0), a.getLong(1))
-      }
 
       // the three slice stagings are independent writes — overlapped
       // (guide §2.6, r21); the commits stay strictly ordered below
@@ -1886,24 +1742,6 @@ object SnapshotLog {
         ("redo_snapshot4", 4L, redoCensus._1, redoCensus._2, ok))
         .toDF("read", "snapshot_id", "n_rows", "sum_cents", "rollback_ok")
         .orderBy("read")
-    } else {
-      // honest fallback: slice arithmetic; rollback_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 3 === 0, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 0, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (n0, s0) = (agg.getLong(0), agg.getLong(1))
-      val (n01, s01) = (n0 + agg.getLong(2), s0 + agg.getLong(3))
-      Seq(
-        ("asof_t2500", 2L, n01, s01, false),
-        ("current_after_rollback", 1L, n0, s0, false),
-        ("history_snapshot3", 3L, agg.getLong(4), agg.getLong(5), false),
-        ("redo_snapshot4", 4L, n01, s01, false))
-        .toDF("read", "snapshot_id", "n_rows", "sum_cents", "rollback_ok")
-        .orderBy("read")
     }
   }
 
@@ -1940,7 +1778,7 @@ object SnapshotLog {
     val s = graft.streaming.StreamSessions.tuned(spark)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s47_") { base =>
+    withTempTableDir("graft_s47_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -2022,29 +1860,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_users",
           "sum_cents", "upsert_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: batch recompute of the per-snapshot upsert
-      // states; upsert_ok=false fails the oracle's TRUE
-      val ev = Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"),
-          expr("CAST(floor(value * 100) AS BIGINT)").as("cents"),
-          graft.ops.TimeCodec.dayInt(col("ts")).as("day"))
-      val sd = graft.streaming.Watermarks.splitDay
-      val rb = graft.streaming.Watermarks.replayBefore
-      val del = ev.filter(col("day") <= sd).withColumn("e", lit(0L))
-        .unionByName(ev.filter(col("day") > sd).withColumn("e", lit(1L)))
-        .unionByName(ev.filter(col("day") < rb).withColumn("e", lit(2L)))
-      val rows = (1L to 3L).map { snap =>
-        val w = del.filter(col("e") < snap)
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("e"), col("event_id"), col("cents"))).as("w"))
-          .agg(count(lit(1)), sum(col("w.cents"))).head()
-        (snap, snap, snap, w.getLong(0), w.getLong(1), false)
-      }
-      rows
-        .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_users",
-          "sum_cents", "upsert_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -2089,7 +1904,7 @@ object SnapshotLog {
     val delPred = col("k") % 20 === 6
     val updPred = col("k") % 20 === 2
 
-    if (DuckDbLive.available) withTempTableDir("graft_s44_") { base =>
+    withTempTableDir("graft_s44_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -2202,24 +2017,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_rows",
           "sum_cents", "mor_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: predicate arithmetic only; mor_ok=false fails
-      // the oracle's TRUE
-      val agg = o.agg(
-        count(lit(1)), sum(col("cents")),
-        sum(when(delPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(delPred, col("cents")).otherwise(lit(0L))),
-        sum(when(updPred, lit(1L)).otherwise(lit(0L)))).head()
-      val (n, s) = (agg.getLong(0), agg.getLong(1))
-      val (nd, sd, nu) = (agg.getLong(2), agg.getLong(3), agg.getLong(4))
-      Seq(
-        (1L, 4L, 0L, n, s, false),
-        (2L, 4L, 1L, n - nd, s - sd, false),
-        (3L, 5L, 2L, n - nd, s - sd + 1000L * nu, false),
-        (4L, 4L, 0L, n - nd, s - sd + 1000L * nu, false))
-        .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_rows",
-          "sum_cents", "mor_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -2274,7 +2071,7 @@ object SnapshotLog {
     // (cents - 1000000) div 7 ≡ 0 (mod 3) — i ∈ {0, 3, 6, 9}
     val insDelPred = expr("((cents - 1000000) div 7) % 3 = 0")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s49_") { base =>
+    withTempTableDir("graft_s49_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -2388,27 +2185,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_data_files", "n_eq_delete_files",
           "n_pos_delete_files", "n_rows", "sum_cents", "posmor_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: predicate arithmetic only; posmor_ok=false
-      // fails the oracle's TRUE
-      val agg = o.agg(
-        count(lit(1)), sum(col("cents")),
-        sum(when(delPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(delPred, col("cents")).otherwise(lit(0L))),
-        sum(when(updPred, lit(1L)).otherwise(lit(0L)))).head()
-      val (n, s) = (agg.getLong(0), agg.getLong(1))
-      val (nd, sd, nu) = (agg.getLong(2), agg.getLong(3), agg.getLong(4))
-      val keptIns = (0 until 10).filter(_ % 3 != 0)
-      val (ni, si) = (keptIns.size.toLong, keptIns.map(i => 1000000L + 7L * i).sum)
-      Seq(
-        (1L, 4L, 0L, 0L, n, s, false),
-        (2L, 4L, 0L, 1L, n - nd, s - sd, false),
-        (3L, 5L, 1L, 1L, n - nd, s - sd + 1000L * nu, false),
-        (4L, 6L, 1L, 2L, n - nd + ni, s - sd + 1000L * nu + si, false),
-        (5L, 5L, 0L, 0L, n - nd + ni, s - sd + 1000L * nu + si, false))
-        .toDF("snapshot_id", "n_data_files", "n_eq_delete_files",
-          "n_pos_delete_files", "n_rows", "sum_cents", "posmor_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -2477,34 +2253,46 @@ object SnapshotLog {
     }
   }
 
-  /** Write `df` (columns k, cents, g — g confined to `gDomain`)
-    * partitioned by the bucket column g — one immutable file per present
-    * bucket value — and return per file (path, n_rows, min_cents,
-    * max_cents) with the stats captured IN THE WRITE JOB ITSELF: an
-    * `Observation` of per-bucket conditional aggregates rides the write
-    * (the commit's own metrics), so there is NO
-    * post-write re-scan and no `_metadata.file_path` path-form matching
-    * at all. The bounded bucket domain (≤16 across callers) keeps the
-    * observation a fixed ≤3·|domain|-column row. The loud-failure
-    * contract is kept by construction: every listed bucket directory
-    * must be in the declared domain, hold exactly one part file, and
-    * the listed bucket set must EQUAL the write-observed present set
-    * (partitionBy never writes empty files) — mis-attribution fails
-    * the require, never zeroes a manifest row count. Same
-    * single-attempt assumption as [[writeCounted]]: accumulator-carried
-    * stats are exact only without task retries / speculation.
+  /** One file of a [[writeBucketed]] write: its bucket value `g`, row
+    * count, and the observed (min, max) of each requested stat column.
+    */
+  private final case class BucketFile(
+      path: String, nRows: Long, g: Long, stats: Map[String, (Long, Long)]) {
+    def entry: (String, Long) = (path, nRows)
+    def range(c: String): (String, Long, Long) = (path, stats(c)._1, stats(c)._2)
+  }
+
+  /** Write `df` (column g confined to `gDomain`, plus every column in
+    * `statCols`) partitioned by the bucket column g — one immutable file
+    * per present bucket value — and return one [[BucketFile]] per file
+    * with the stats captured IN THE WRITE JOB ITSELF: an `Observation`
+    * of per-bucket conditional aggregates rides the write (the commit's
+    * own metrics), so there is NO post-write re-scan and no
+    * `_metadata.file_path` path-form matching at all. The bounded bucket
+    * domain (≤16 across callers) keeps the observation a fixed
+    * (1 + 2·|statCols|)·|domain|-column row. The loud-failure contract
+    * is kept by construction: every listed bucket directory must be in
+    * the declared domain, hold exactly one part file, and the listed
+    * bucket set must EQUAL the write-observed present set (partitionBy
+    * never writes empty files) — mis-attribution fails the require,
+    * never zeroes a manifest row count. Same single-attempt assumption
+    * as [[writeCounted]]: accumulator-carried stats are exact only
+    * without task retries / speculation.
     */
   private def writeBucketed(
       spark: SparkSession,
       df: DataFrame,
       out: String,
-      gDomain: Seq[Long]): Seq[(String, Long, Long, Long)] = {
+      gDomain: Seq[Long],
+      statCols: Seq[String]): Seq[BucketFile] = {
     val obs = org.apache.spark.sql.Observation()
     val aggs = gDomain.flatMap { g =>
-      Seq(
-        sum(when(col("g") === g, lit(1L)).otherwise(lit(0L))).as(s"n_$g"),
-        min(when(col("g") === g, col("cents"))).as(s"mn_$g"),
-        max(when(col("g") === g, col("cents"))).as(s"mx_$g"))
+      sum(when(col("g") === g, lit(1L)).otherwise(lit(0L))).as(s"n_$g") +:
+        statCols.flatMap { c =>
+          Seq(
+            min(when(col("g") === g, col(c))).as(s"mn_${c}_$g"),
+            max(when(col("g") === g, col(c))).as(s"mx_${c}_$g"))
+        }
     }
     df.observe(obs, aggs.head, aggs.tail: _*)
       .repartition(col("g")).write.partitionBy("g").parquet(out)
@@ -2531,8 +2319,9 @@ object SnapshotLog {
         s"${listed.map(_._1).sorted.mkString(",")} but the write observed " +
         s"${present.toSeq.sorted.mkString(",")} — stats would be mis-attributed")
     listed.sortBy(_._2).map { case (g, p) =>
-      (p, m(s"n_$g").asInstanceOf[Long],
-        m(s"mn_$g").asInstanceOf[Long], m(s"mx_$g").asInstanceOf[Long])
+      BucketFile(p, m(s"n_$g").asInstanceOf[Long], g, statCols.map { c =>
+        c -> (m(s"mn_${c}_$g").asInstanceOf[Long], m(s"mx_${c}_$g").asInstanceOf[Long])
+      }.toMap)
     }
   }
 
@@ -2550,16 +2339,10 @@ object SnapshotLog {
       o: DataFrame,
       out: String,
       nBuckets: Int): Seq[(String, Long, Long)] = {
-    // anchored to the path SEGMENT: an unanchored "g=(\d+)" would match
-    // anywhere in the absolute path (e.g. a temp root named tmp_g=7_x)
-    // and silently mis-bucket every file's recorded stats
-    val bucketRe = "/g=(\\d+)/".r
     val files = writeBucketed(
       spark, o.select(col("k"), col("cents"), (col("k") % nBuckets).as("g")), out,
-      0L until nBuckets.toLong)
-      .map { case (p, n, _, _) =>
-        (p, n, bucketRe.findFirstMatchIn(p).get.group(1).toLong)
-      }
+      0L until nBuckets.toLong, Nil)
+      .map(f => (f.path, f.nRows, f.g))
     recordStats(dbFile, files.map(f => (f._1, f._3)))
     files
   }
@@ -2610,7 +2393,7 @@ object SnapshotLog {
     val bw = (mxv - mn) / 4L + 1L
     val (lo, hi) = (mn + bw / 2L, mn + bw - 1L)
 
-    if (DuckDbLive.available) withTempTableDir("graft_s52_") { base =>
+    withTempTableDir("graft_s52_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
@@ -2618,9 +2401,10 @@ object SnapshotLog {
       // snapshot 1: unclustered layout (file = k%4 — uncorrelated with
       // cents, so every file's range covers ~the whole domain)
       val f1 = writeBucketed(
-        spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/u", 0L to 3L)
-      recordColStats(dbFile, "c0", f1.map(f => (f._1, f._3, f._4)))
-      val c1 = commit(dbFile, 0L, 1L, f1.map(f => (f._1, f._2)))
+        spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/u", 0L to 3L,
+        Seq("cents"))
+      recordColStats(dbFile, "c0", f1.map(_.range("cents")))
+      val c1 = commit(dbFile, 0L, 1L, f1.map(_.entry))
       val scan1 = pruneByCols(dbFile, 1L, Seq(("c0", lo, hi)))
       val sel1 = spark.read.parquet(scan1: _*)
         .filter(col("cents").between(lo, hi))
@@ -2635,9 +2419,10 @@ object SnapshotLog {
           .withColumn("g", expr(s"(cents - $mn) div $bw")),
         s"$base/c",
         // bw = (mx-mn)/4 + 1 > (mx-mn)/4, so (cents-mn) div bw ∈ [0, 3]
-        0L to 3L)
-      recordColStats(dbFile, "c0", f2.map(f => (f._1, f._3, f._4)))
-      val c2 = commit(dbFile, 1L, 2L, f2.map(f => (f._1, f._2)))
+        0L to 3L,
+        Seq("cents"))
+      recordColStats(dbFile, "c0", f2.map(_.range("cents")))
+      val c2 = commit(dbFile, 1L, 2L, f2.map(_.entry))
       val scan2 = pruneByCols(dbFile, 2L, Seq(("c0", lo, hi)))
       // the four audit censuses are independent scans — overlapped
       // (guide §2.6, r21)
@@ -2664,25 +2449,6 @@ object SnapshotLog {
         f1.size.toLong, scan1.size.toLong, f2.size.toLong, scan2.size.toLong,
         direct.getLong(0), direct.getLong(1),
         total.getLong(0), total.getLong(1), skipOk))
-        .toDF("n_files_unclustered", "n_scanned_unclustered",
-          "n_files_clustered", "n_scanned_clustered",
-          "n_sel", "sum_sel", "n_rows", "sum_cents", "skip_ok")
-        .orderBy("n_sel")
-    } else {
-      // honest fallback: group arithmetic only; skip_ok=false fails the
-      // oracle's TRUE
-      val ov1 = o.groupBy(pmod(col("k"), lit(4L)))
-        .agg(min(col("cents")).as("fmn"), max(col("cents")).as("fmx"))
-        .filter(col("fmx") >= lo && col("fmn") <= hi).count()
-      val g2 = o.groupBy(expr(s"(cents - $mn) div $bw"))
-        .agg(min(col("cents")).as("fmn"), max(col("cents")).as("fmx"))
-      val nf2 = g2.count()
-      val ov2 = g2.filter(col("fmx") >= lo && col("fmn") <= hi).count()
-      val direct = o.filter(col("cents").between(lo, hi))
-        .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
-      val total = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((4L, ov1, nf2, ov2, direct.getLong(0), direct.getLong(1),
-        total.getLong(0), total.getLong(1), false))
         .toDF("n_files_unclustered", "n_scanned_unclustered",
           "n_files_clustered", "n_scanned_clustered",
           "n_sel", "sum_sel", "n_rows", "sum_cents", "skip_ok")
@@ -2734,7 +2500,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s54_") { base =>
+    withTempTableDir("graft_s54_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -2780,19 +2546,6 @@ object SnapshotLog {
           "sum_cents_current", "n_expired_first", "n_live_after_first",
           "n_expired_second", "n_live_after_second", "tags_ok")
         .orderBy("n_rows_tagged")
-    } else {
-      // honest fallback: slice arithmetic only; tags_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 4 < 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 4 < 2, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      Seq((agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3),
-        1L, 3L, 1L, 1L, false))
-        .toDF("n_rows_tagged", "sum_cents_tagged", "n_rows_current",
-          "sum_cents_current", "n_expired_first", "n_live_after_first",
-          "n_expired_second", "n_live_after_second", "tags_ok")
-        .orderBy("n_rows_tagged")
     }
   }
 
@@ -2828,20 +2581,21 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s55_") { base =>
+    withTempTableDir("graft_s55_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
-      def minCentsOk(stats: Seq[(String, Long, Long, Long)]): Boolean =
-        stats.forall(_._3 >= 0L) // metadata-only: the recorded min
+      def minCents(f: BucketFile): Long = f.stats("cents")._1
+      def minCentsOk(files: Seq[BucketFile]): Boolean =
+        files.forall(minCents(_) >= 0L) // metadata-only: the recorded min
 
       val f1 = writeBucketed(
         spark,
         o.filter(col("k") % 2 === 0).withColumn("g", pmod(col("k"), lit(2L))),
-        s"$base/f1", 0L to 1L)
+        s"$base/f1", 0L to 1L, Seq("cents"))
       val v1 = minCentsOk(f1)
-      recordColStats(dbFile, "c0", f1.map(f => (f._1, f._3, f._4)))
-      val c1 = v1 && commit(dbFile, 0L, 1L, f1.map(f => (f._1, f._2)))
+      recordColStats(dbFile, "c0", f1.map(_.range("cents")))
+      val c1 = v1 && commit(dbFile, 0L, 1L, f1.map(_.entry))
 
       // staged second commit: cleaned slice + 5 poison rows
       val mx = o.agg(max(col("k"))).head().getLong(0)
@@ -2852,9 +2606,9 @@ object SnapshotLog {
         spark,
         o.filter(col("k") % 2 === 1).unionByName(poison)
           .withColumn("g", pmod(col("k"), lit(2L))),
-        s"$base/f2", 0L to 1L)
+        s"$base/f2", 0L to 1L, Seq("cents"))
       val v2 = minCentsOk(f2)
-      val nViolating = f2.count(_._3 < 0L).toLong
+      val nViolating = f2.count(minCents(_) < 0L).toLong
       // REJECTED: nothing recorded, pointer untouched
       val curAfterReject = currentSnapshot(dbFile)
       val s1 = spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
@@ -2864,10 +2618,10 @@ object SnapshotLog {
       val f3 = writeBucketed(
         spark,
         o.filter(col("k") % 2 === 1).withColumn("g", pmod(col("k"), lit(2L))),
-        s"$base/f3", 0L to 1L)
+        s"$base/f3", 0L to 1L, Seq("cents"))
       val v3 = minCentsOk(f3)
-      recordColStats(dbFile, "c0", f3.map(f => (f._1, f._3, f._4)))
-      val c3 = v3 && commit(dbFile, 1L, 2L, (f1 ++ f3).map(f => (f._1, f._2)))
+      recordColStats(dbFile, "c0", f3.map(_.range("cents")))
+      val c3 = v3 && commit(dbFile, 1L, 2L, (f1 ++ f3).map(_.entry))
       val fin = spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
@@ -2879,19 +2633,6 @@ object SnapshotLog {
         s1.getLong(0), s1.getLong(1),
         f2.size.toLong, nViolating,
         fin.getLong(0), fin.getLong(1), constraintOk))
-        .toDF("n_rows_s1", "sum_cents_s1", "n_staged_files",
-          "n_violating_files", "n_rows_final", "sum_cents_final",
-          "constraint_ok")
-        .orderBy("n_rows_s1")
-    } else {
-      // honest fallback: slice arithmetic; constraint_ok=false fails
-      // the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 2 === 0, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 2 === 0, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      Seq((agg.getLong(0), agg.getLong(1), 2L, 2L,
-        agg.getLong(2), agg.getLong(3), false))
         .toDF("n_rows_s1", "sum_cents_s1", "n_staged_files",
           "n_violating_files", "n_rows_final", "sum_cents_final",
           "constraint_ok")
@@ -2936,7 +2677,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s53_") { base =>
+    withTempTableDir("graft_s53_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -3018,25 +2759,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "parent_id", "depth", "n_files", "n_added",
           "n_rows_meta", "n_rows_read", "sum_cents", "meta_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: slice arithmetic only; meta_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 4 < 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 4 < 2, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 4 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 4 === 2, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (n1, s1) = (agg.getLong(0), agg.getLong(1))
-      val (n2, s2) = (n1 + agg.getLong(2), s1 + agg.getLong(3))
-      val (n3, s3) = (agg.getLong(4), agg.getLong(5))
-      Seq(
-        (1L, 0L, 1L, 2L, 2L, n1, n1, s1, false),
-        (2L, 1L, 2L, 3L, 1L, n2, n2, s2, false),
-        (3L, 2L, 3L, 4L, 1L, n3, n3, s3, false))
-        .toDF("snapshot_id", "parent_id", "depth", "n_files", "n_added",
-          "n_rows_meta", "n_rows_read", "sum_cents", "meta_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -3080,8 +2802,7 @@ object SnapshotLog {
       .select(
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-    // lazy so the live path can overlap this probe with the base write
-    // (guide §2.6) — the fallback path forces it on first use
+    // lazy so this probe can overlap the base write (guide §2.6)
     lazy val mx = o.agg(max(col("k"))).head().getLong(0)
     lazy val mxb = mx - mx % 4
     // snapshot-2 / snapshot-3 insert batches (keys past mx, in the
@@ -3089,7 +2810,7 @@ object SnapshotLog {
     lazy val ins1 = (0 until 10).map(i => (mxb + 4L * (i + 1) + 2L, 1000000L + 7L * i))
     lazy val ins2 = (0 until 5).map(i => (mxb + 4L * (i + 1) + 1L, 2000000L + 11L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s56_") { base =>
+    withTempTableDir("graft_s56_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3190,89 +2911,12 @@ object SnapshotLog {
         .toDF("step", "n_delete", "n_update", "n_insert", "n_files_diff",
           "replica_rows", "replica_cents", "src_rows", "src_cents", "apply_ok")
         .orderBy("step")
-    } else {
-      // honest fallback: predicate arithmetic; n_files_diff=0 fails
-      // the oracle's 2
-      val agg = o.agg(
-        sum(when(col("k") % 20 === 6, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 6, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 17, lit(1L)).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (nd1, sd1, nu1) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-      val (nd2, sd2, nu2) = (agg.getLong(3), agg.getLong(4), agg.getLong(5))
-      val (n, s) = (agg.getLong(6), agg.getLong(7))
-      val n2 = n - nd1 + ins1.size
-      val s2 = s - sd1 + 1000L * nu1 + ins1.map(_._2).sum
-      val n3 = n2 - nd2 + ins2.size
-      val s3 = s2 - sd2 + 500L * nu2 + ins2.map(_._2).sum
-      Seq(
-        (1L, nd1, nu1, ins1.size.toLong, 0L, n2, s2, n2, s2, true),
-        (2L, nd2, nu2, ins2.size.toLong, 0L, n3, s3, n3, s3, true))
-        .toDF("step", "n_delete", "n_update", "n_insert", "n_files_diff",
-          "replica_rows", "replica_cents", "src_rows", "src_cents", "apply_ok")
-        .orderBy("step")
     }
   }
 
   // ------------------------------------------------------------------
   // s57 — multi-dimensional (z-order) clustering + box skipping
   // ------------------------------------------------------------------
-
-  /** writeBucketed for the two-dimensional stats: write df (columns
-    * k, cents, x, y, g) partitioned by g and return per file
-    * (path, n_rows, min_x, max_x, min_y, max_y) — stats carried by the
-    * WRITE JOB's Observation (the writeBucketed discipline, no
-    * post-write re-scan), attributed by the g= directory value, with
-    * the listed value set required to EQUAL the write-observed present
-    * set so mis-attribution fails loudly. Same single-attempt
-    * assumption as [[writeCounted]]. */
-  private def writeBucketed2(
-      spark: SparkSession,
-      df: DataFrame,
-      out: String,
-      gDomain: Seq[Long]): Seq[(String, Long, Long, Long, Long, Long)] = {
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = gDomain.flatMap { g =>
-      Seq(
-        sum(when(col("g") === g, lit(1L)).otherwise(lit(0L))).as(s"n_$g"),
-        min(when(col("g") === g, col("x"))).as(s"mnx_$g"),
-        max(when(col("g") === g, col("x"))).as(s"mxx_$g"),
-        min(when(col("g") === g, col("y"))).as(s"mny_$g"),
-        max(when(col("g") === g, col("y"))).as(s"mxy_$g"))
-    }
-    df.observe(obs, aggs.head, aggs.tail: _*)
-      .repartition(col("g")).write.partitionBy("g").parquet(out)
-    val m = obs.get // blocks until the write job's listener fires
-    val listed: Seq[(Long, String)] = new java.io.File(out)
-      .listFiles().filter(_.getName.startsWith("g="))
-      .map { d =>
-        val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
-        require(
-          parts.length == 1,
-          s"bucketed write under $out produced ${parts.length} part files " +
-            s"for ${d.getName} — hash repartition on g must give one file per bucket")
-        (d.getName.drop(2).toLong, parts.head.getAbsolutePath)
-      }.toSeq
-    val strays = listed.map(_._1).filterNot(gDomain.contains)
-    require(
-      strays.isEmpty,
-      s"bucketed write under $out produced bucket value(s) outside the " +
-        s"declared domain: ${strays.take(3).mkString(", ")}")
-    val present = gDomain.filter(g => m(s"n_$g").asInstanceOf[Long] > 0L).toSet
-    require(
-      listed.map(_._1).toSet == present,
-      s"bucketed write under $out listed buckets " +
-        s"${listed.map(_._1).sorted.mkString(",")} but the write observed " +
-        s"${present.toSeq.sorted.mkString(",")} — stats would be mis-attributed")
-    listed.sortBy(_._2).map { case (g, p) =>
-      (p, m(s"n_$g").asInstanceOf[Long],
-        m(s"mnx_$g").asInstanceOf[Long], m(s"mxx_$g").asInstanceOf[Long],
-        m(s"mny_$g").asInstanceOf[Long], m(s"mxy_$g").asInstanceOf[Long])
-    }
-  }
 
   /** s57 — MULTI-DIMENSIONAL clustering (Delta OPTIMIZE ZORDER BY /
     * Iceberg rewrite with a z sort order) + box skipping: s52 proved
@@ -3323,26 +2967,26 @@ object SnapshotLog {
       ("box_xy", 4L, 7L, 8L, 11L),
       ("stripe_y", 0L, 15L, 0L, 3L))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s57_") { base =>
+    withTempTableDir("graft_s57_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
 
-      val f1 = writeBucketed2(
-        spark, d.withColumn("g", col("x")), s"$base/lin", 0L to 15L)
-      recordColStats(dbFile, "x", f1.map(f => (f._1, f._3, f._4)))
-      recordColStats(dbFile, "y", f1.map(f => (f._1, f._5, f._6)))
-      val c1 = commit(dbFile, 0L, 1L, f1.map(f => (f._1, f._2)))
+      val f1 = writeBucketed(
+        spark, d.withColumn("g", col("x")), s"$base/lin", 0L to 15L, Seq("x", "y"))
+      recordColStats(dbFile, "x", f1.map(_.range("x")))
+      recordColStats(dbFile, "y", f1.map(_.range("y")))
+      val c1 = commit(dbFile, 0L, 1L, f1.map(_.entry))
 
-      val f2 = writeBucketed2(
+      val f2 = writeBucketed(
         spark,
         spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
           .select(col("k"), col("cents"), col("x"), col("y"))
           .withColumn("g", expr(zKey)),
-        s"$base/z", 0L to 15L)
-      recordColStats(dbFile, "x", f2.map(f => (f._1, f._3, f._4)))
-      recordColStats(dbFile, "y", f2.map(f => (f._1, f._5, f._6)))
-      val c2 = commit(dbFile, 1L, 2L, f2.map(f => (f._1, f._2)))
+        s"$base/z", 0L to 15L, Seq("x", "y"))
+      recordColStats(dbFile, "x", f2.map(_.range("x")))
+      recordColStats(dbFile, "y", f2.map(_.range("y")))
+      val c2 = commit(dbFile, 1L, 2L, f2.map(_.entry))
       val committed = c1 && c2 && currentSnapshot(dbFile) == 2L
 
       // the DIRECT ground-truth census depends only on the query box,
@@ -3371,30 +3015,6 @@ object SnapshotLog {
         (layout, qn, manifest(dbFile, snap).size.toLong, scanned.size.toLong,
           direct.getLong(0), direct.getLong(1), ok)
       })
-      rows
-        .toDF("layout", "query", "n_files", "n_scanned", "n_sel", "sum_sel",
-          "scan_ok")
-        .orderBy("layout", "query")
-    } else {
-      // honest fallback: group arithmetic only; scan_ok=false fails the
-      // oracle's TRUE
-      val rows = for {
-        (layout, gExpr) <- Seq(("linear", "x"), ("zorder", zKey))
-        (qn, xlo, xhi, ylo, yhi) <- queries
-      } yield {
-        val g = d.groupBy(expr(gExpr))
-          .agg(
-            min(col("x")).as("mnx"), max(col("x")).as("mxx"),
-            min(col("y")).as("mny"), max(col("y")).as("mxy"))
-        val nf = g.count()
-        val ov = g.filter(
-          col("mxx") >= xlo && col("mnx") <= xhi &&
-            col("mxy") >= ylo && col("mny") <= yhi).count()
-        val direct = d
-          .filter(col("x").between(xlo, xhi) && col("y").between(ylo, yhi))
-          .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
-        (layout, qn, nf, ov, direct.getLong(0), direct.getLong(1), false)
-      }
       rows
         .toDF("layout", "query", "n_files", "n_scanned", "n_sel", "sum_sel",
           "scan_ok")
@@ -3469,7 +3089,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s58_") { base =>
+    withTempTableDir("graft_s58_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3536,14 +3156,6 @@ object SnapshotLog {
         .toDF("n_files_s1", "n_small_planned", "n_groups", "n_files_s2",
           "n_files_tt1", "n_rows", "sum_cents", "compact_ok")
         .orderBy("n_files_s1")
-    } else {
-      // honest fallback: construction constants; compact_ok=false fails
-      // the oracle's TRUE
-      val direct = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((9L, 8L, 2L, 3L, 9L, direct.getLong(0), direct.getLong(1), false))
-        .toDF("n_files_s1", "n_small_planned", "n_groups", "n_files_s2",
-          "n_files_tt1", "n_rows", "sum_cents", "compact_ok")
-        .orderBy("n_files_s1")
     }
   }
 
@@ -3586,7 +3198,7 @@ object SnapshotLog {
     val insA = (0 until 10).map(i => (mx + 1L + i, 3000000L + 13L * i))
     val insB = (0 until 10).map(i => (mx + 11L + i, 4000000L + 17L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s60_") { base =>
+    withTempTableDir("graft_s60_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -3631,16 +3243,6 @@ object SnapshotLog {
           "rebase_committed", "n_rows_s2", "n_rows_s3", "sum_cents_s3",
           "retry_ok")
         .orderBy("n_rows_base")
-    } else {
-      // honest fallback: retry_ok=false fails the oracle's TRUE
-      val r = o.agg(count(lit(1)), sum(col("cents"))).head()
-      val (nb, sb) = (r.getLong(0), r.getLong(1))
-      Seq((nb, 10L, 10L, true, true, nb + 10L, nb + 20L,
-        sb + insA.map(_._2).sum + insB.map(_._2).sum, false))
-        .toDF("n_rows_base", "n_a", "n_b", "first_b_rejected",
-          "rebase_committed", "n_rows_s2", "n_rows_s3", "sum_cents_s3",
-          "retry_ok")
-        .orderBy("n_rows_base")
     }
   }
 
@@ -3674,7 +3276,7 @@ object SnapshotLog {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cents = expr("CAST(floor(value * 100) AS BIGINT)").as("cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s61_") { base =>
+    withTempTableDir("graft_s61_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3737,24 +3339,6 @@ object SnapshotLog {
           loopOk)
       }
       rows
-        .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "compacted",
-          "is_current", "loop_ok")
-        .orderBy("snapshot_id")
-    } else {
-      // honest fallback: batch censuses; loop_ok=false fails the oracle
-      val ev = Tables.events(spark, dir)
-        .select(cents, graft.ops.TimeCodec.dayInt(col("ts")).as("day"))
-      val b0 = ev.filter(col("day") <= graft.streaming.Watermarks.splitDay)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      val ba = ev.agg(count(lit(1)), sum(col("cents"))).head()
-      val br = ev.filter(col("day") < graft.streaming.Watermarks.replayBefore)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      Seq(
-        (1L, 2L, b0.getLong(0), b0.getLong(1), false, false, false),
-        (2L, 4L, ba.getLong(0), ba.getLong(1), false, false, false),
-        (3L, 1L, ba.getLong(0), ba.getLong(1), true, false, false),
-        (4L, 3L, ba.getLong(0) + br.getLong(0), ba.getLong(1) + br.getLong(1),
-          false, true, false))
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "compacted",
           "is_current", "loop_ok")
         .orderBy("snapshot_id")
@@ -3830,14 +3414,13 @@ object SnapshotLog {
       .select(
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-    // lazy so the live path can overlap this probe with the base write
-    // (guide §2.6) — the fallback path forces it on first use
+    // lazy so this probe can overlap the base write (guide §2.6)
     lazy val mx = o.agg(max(col("k"))).head().getLong(0)
     lazy val mxb = mx - mx % 4
     lazy val ins1 = (0 until 10).map(i => (mxb + 4L * (i + 1) + 2L, 1000000L + 7L * i))
     lazy val ins2 = (0 until 5).map(i => (mxb + 4L * (i + 1) + 1L, 2000000L + 11L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s62_") { base =>
+    withTempTableDir("graft_s62_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3951,6 +3534,10 @@ object SnapshotLog {
           val hdr = batch.groupBy(col("change_type"))
             .agg(count(lit(1)).as("c"), max(col("batch_id")).as("mb"))
             .collect()
+          require(
+            hdr.nonEmpty,
+            s"s62 micro-batch $epoch is empty: every staged change file " +
+              "carries at least one row, so the batch id cannot be read")
           val bid = hdr.map(_.getLong(2)).max
           val cc = hdr.map(r => r.getString(0) -> r.getLong(1)).toMap
           val claimed = claimApply(dbFile, bid)
@@ -3996,32 +3583,6 @@ object SnapshotLog {
         (epoch + 1L, bid, nd, nu, ni, applied, rn, rs, sn, ss,
           rn == sn && rs == ss, consumeOk)
       }
-        .toDF("step", "batch_id", "n_delete", "n_update", "n_insert",
-          "applied", "replica_rows", "replica_cents", "src_rows",
-          "src_cents", "apply_ok", "consume_ok")
-        .orderBy("step")
-    } else {
-      // honest fallback: predicate arithmetic; applied/consume_ok=false
-      // fails the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 20 === 6, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 6, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 17, lit(1L)).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (nd1, sd1, nu1) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-      val (nd2, sd2, nu2) = (agg.getLong(3), agg.getLong(4), agg.getLong(5))
-      val (n, sm) = (agg.getLong(6), agg.getLong(7))
-      val n2 = n - nd1 + ins1.size
-      val s2 = sm - sd1 + 1000L * nu1 + ins1.map(_._2).sum
-      val n3 = n2 - nd2 + ins2.size
-      val s3 = s2 - sd2 + 500L * nu2 + ins2.map(_._2).sum
-      Seq(
-        (1L, 1L, nd1, nu1, 10L, false, n2, s2, n2, s2, true, false),
-        (2L, 2L, nd2, nu2, 5L, false, n3, s3, n3, s3, true, false),
-        (3L, 2L, nd2, nu2, 5L, false, n3, s3, n3, s3, true, false))
         .toDF("step", "batch_id", "n_delete", "n_update", "n_insert",
           "applied", "replica_rows", "replica_cents", "src_rows",
           "src_cents", "apply_ok", "consume_ok")
@@ -4074,7 +3635,7 @@ object SnapshotLog {
     val insDev = (0 until 6).map(i => (mxb + 4L * (i + 1) + 3L, 3000000L + 13L * i))
     val insMain = (0 until 4).map(i => (mxb + 4L * (i + 1), 4000000L + 17L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s63_") { base =>
+    withTempTableDir("graft_s63_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -4150,26 +3711,6 @@ object SnapshotLog {
 
       Seq((brAdd, brRem, mnAdd, mnRem, merged,
         mergedC.getLong(0), mergedC.getLong(1), conflict2, mergeOk))
-        .toDF("n_branch_added", "n_branch_removed", "n_main_added",
-          "n_main_removed", "merged", "n_rows_merged", "sum_cents_merged",
-          "conflict_rejected", "merge_ok")
-        .orderBy("n_branch_added")
-    } else {
-      // honest fallback: predicate arithmetic; merged/merge_ok=false
-      // fails the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 20 === 7, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 7, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 11, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 8, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 8, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 0, lit(1L)).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val n = agg.getLong(6) - agg.getLong(0) - agg.getLong(3) + 10L
-      val sm = agg.getLong(7) - agg.getLong(1) - agg.getLong(4) +
-        300L * agg.getLong(2) + 200L * agg.getLong(5) +
-        insDev.map(_._2).sum + insMain.map(_._2).sum
-      Seq((1L, 1L, 1L, 1L, false, n, sm, false, false))
         .toDF("n_branch_added", "n_branch_removed", "n_main_added",
           "n_main_removed", "merged", "n_rows_merged", "sum_cents_merged",
           "conflict_rejected", "merge_ok")
@@ -4346,8 +3887,7 @@ object SnapshotLog {
     * (lower-bound) observed sum beats both bounds. On a uniform column
     * the bit goes FALSE — exactly the q222-measured underestimate
     * (merged 11 vs exact 24) a planner must not silently trust.
-    * Pure arithmetic over ≤ k·n_files metadata rows; shared by the
-    * DuckDB reader and q218's no-DuckDB fallback.
+    * Pure arithmetic over ≤ k·n_files metadata rows.
     */
   private[graft] def top1Reliability(
       rows: Seq[(String, Long, Long)],
@@ -4620,7 +4160,7 @@ object SnapshotLog {
     val dim = Tables.part(spark, dir).select(col("p_partkey").cast("long").as("pk"))
     val saltCol = pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int")
 
-    if (DuckDbLive.available) withTempTableDir("graft_q218_") { tmp =>
+    withTempTableDir("graft_q218_") { tmp =>
       val (files, topkRows, regRows) = q218Staged.computeIfAbsent(
         dir,
         _ => {
@@ -4750,43 +4290,6 @@ object SnapshotLog {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
-    } else {
-      // honest fallback: identical numbers from direct per-file
-      // groupings, but census_match/plan_ok=false fail the oracle's TRUE
-      def edgeRow(cn: String) = {
-        val nRows = bigRel.count()
-        val ndv = Hll.estimateInt(Hll.registerCensus(bigRel, col(cn).cast("string")))
-        // raw per-file top-8 rows (≤ 4·8, bounded) — the same frame the
-        // stat table would hold, decided by the shared top1Reliability
-        val tkRows = bigRel
-          .select(col("g"), col(cn).as("k"))
-          .groupBy("g", "k").agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("g").orderBy(col("c").desc, col("k"))))
-          .filter(col("rn") <= 8)
-          .select("g", "k", "c")
-          .collect() // ≤ 4·8 stat rows — metadata
-          .map(r => (r.getLong(0).toString, r.getLong(1), r.getLong(2)))
-          .toSeq
-        val (t1k, t1c, t1Rel) = top1Reliability(tkRows)
-        val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
-        val salted = skewX100 >= 800L
-        val r = bigRel.join(dim, col(cn) === col("pk"))
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        val ex = bigRel.groupBy(col(cn).as("k")).agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("k")).head()
-        val maxSalt = bigRel.groupBy(col(cn), saltCol.as("s"))
-          .agg(count(lit(1)).as("c")).agg(max("c")).head().getLong(0)
-        (cn, nRows, ndv, t1k, t1c, t1Rel, skewX100, salted, r.getLong(0),
-          r.getLong(1), false, if (salted) 1L else 0L, ex.getLong(1), maxSalt,
-          ex.getLong(0), t1k == ex.getLong(0) && t1c == ex.getLong(1), false)
-      }
-      Seq(edgeRow("pk_skew"), edgeRow("pk_unif"))
-        .toDF("edge", "n_rows", "ndv_est", "top1_key", "top1_cnt",
-          "top1_reliable", "skew_x100", "salted", "n_join", "sum_cents",
-          "census_match", "gen_nodes", "max_group", "max_salt_group",
-          "top1_key_exact", "top1_is_exact", "plan_ok")
-        .orderBy("edge")
     }
   }
 
@@ -4844,17 +4347,14 @@ object SnapshotLog {
     def cellJ(i: Int, k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       pmod(Hashing.h60(concat(lit(s"$i:"), k.cast("string"))), lit(CmsWidth))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q220_") { tmp =>
+    withTempTableDir("graft_q220_") { tmp =>
       val (files, cmsRows) = q220Staged.computeIfAbsent(
         dir,
         _ => {
           val base = java.nio.file.Files
             .createTempDirectory("graft_q220_tbl_").toAbsolutePath.toString
-          val fs = writeBucketed(spark, bigRel, s"$base/line", 0L to 3L)
-          val bucketRe = "/g=(\\d+)/".r
-          val pathOf: Map[Long, String] = fs
-            .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1))
-            .toMap
+          val fs = writeBucketed(spark, bigRel, s"$base/line", 0L to 3L, Nil)
+          val pathOf: Map[Long, String] = fs.map(f => (f.g, f.path)).toMap
           // ONE stats job: per-(file, key) exact counts → the 4 hash
           // rows' cells, all map-side-combined aggregation
           val cells = bigRel
@@ -4866,7 +4366,7 @@ object SnapshotLog {
             .collect() // ≤ 4 files · 4·64 cells — stats metadata
             .map(r => (pathOf(r.getLong(0)), "k", r.getLong(1), r.getLong(2), r.getLong(3)))
             .toSeq
-          (fs.map(f => (f._1, f._2)), cells)
+          (fs.map(_.entry), cells)
         })
 
       val dbFile = s"$tmp/log.duckdb"
@@ -4905,39 +4405,6 @@ object SnapshotLog {
         (name, key, tru, est,
           (BigInt(est - tru) * 10000 / BigInt(math.max(tru, 1L))).toLong,
           est >= tru, nRows, nStatRows, skewCms, skewCms >= 800L, true)
-      }
-        .toDF("probe", "key", "true_cnt", "cms_est", "over_bp", "ge_ok",
-          "n_rows", "n_stat_rows", "skew_cms_x100", "salted_cms", "live_log")
-        .orderBy("probe")
-    } else {
-      // honest fallback: the same sketch from a direct grouping;
-      // live_log=false fails the oracle's TRUE
-      val cells = bigRel
-        .groupBy(col("k")).agg(count(lit(1)).as("c"))
-        .select(col("c"), explode(array((0 until CmsDepth).map(i =>
-          struct(lit(i.toLong).as("i"), cellJ(i, col("k")).as("j"))): _*)).as("ij"))
-        .groupBy(col("ij.i").as("i"), col("ij.j").as("j"))
-        .agg(sum(col("c")).as("cnt"))
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-      val nRows = bigRel.count()
-      def estimate(key: Long): Long =
-        (0 until CmsDepth).map { i =>
-          cells.getOrElse(
-            (i.toLong, Hashing.h60Local(s"$i:$key") % CmsWidth), 0L)
-        }.min
-      val exact: Map[Long, Long] = bigRel
-        .filter(col("k").isin(probes.map(_._2): _*))
-        .groupBy("k").agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val ndv = graft.ops.Hll.estimateInt(
-        graft.ops.Hll.registerCensus(bigRel, col("k").cast("string")))
-      val skewCms = (BigInt(estimate(1L)) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
-      probes.map { case (name, key) =>
-        val est = estimate(key)
-        val tru = exact.getOrElse(key, 0L)
-        (name, key, tru, est,
-          (BigInt(est - tru) * 10000 / BigInt(math.max(tru, 1L))).toLong,
-          est >= tru, nRows, cells.size.toLong, skewCms, skewCms >= 800L, false)
       }
         .toDF("probe", "key", "true_cnt", "cms_est", "over_bp", "ge_ok",
           "n_rows", "n_stat_rows", "skew_cms_x100", "salted_cms", "live_log")
@@ -5008,7 +4475,7 @@ object SnapshotLog {
         when(col("l_returnflag") === "R", lit(1L))
           .otherwise(col("l_orderkey").cast("long")).as("lk_skew"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q222_") { tmp =>
+    withTempTableDir("graft_q222_") { tmp =>
       val (fO, fC, fL, regRows, topkRows, cmsRows) = q222Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5208,76 +4675,6 @@ object SnapshotLog {
             "generates", "plan_ok", "live_log")
           .orderBy("edge")
       }
-    } else {
-      // honest fallback: direct censuses stand in for the stat tables
-      // (q221's shape); live_log=false fails the oracle's TRUE
-      import org.apache.spark.sql.expressions.Window
-      def edgeRow(edge: String, probeKey: String, build: DataFrame,
-          buildKey: String) = {
-        val probe = ordersRel
-        val (nP, nB) = (probe.count(), build.count())
-        val (budget, buildBytes) = (nP * 8L / 4L, nB * 8L)
-        val t1 = probe
-          .select((col("k_ord") % 4).as("g"), col(probeKey).as("k"))
-          .groupBy("g", "k").agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("g").orderBy(col("c").desc, col("k"))))
-          .filter(col("rn") <= 8)
-          .groupBy("k").agg(sum("c").as("c"))
-          .orderBy(col("c").desc, col("k")).head()
-        val (t1k, t1c) = (t1.getLong(0), t1.getLong(1))
-        val ndv = Hll.estimateInt(
-          Hll.registerCensus(probe, col(probeKey).cast("string")))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nP)).toLong
-        val bNdv = Hll.estimateInt(
-          Hll.registerCensus(build, col(buildKey).cast("string")))
-        val bPerKey = build.groupBy(col(buildKey).as("hk"))
-          .agg(count(lit(1)).as("c"))
-        val bt1c = bPerKey.agg(max("c")).head().getLong(0)
-        val bSkew = (BigInt(bt1c) * 100 * BigInt(bNdv) / BigInt(nB)).toLong
-        val hot = bPerKey
-          .filter(col("c") * 100 * bNdv / nB >= 800)
-          .select("hk").collect().map(_.getLong(0)).toSeq.sorted
-        val hotEst = if (hot.isEmpty) 0L
-          else probe.filter(col(probeKey).isin(hot: _*)).count()
-        val strategy =
-          if (buildBytes <= budget) "broadcast"
-          else if (skew >= 800L) "salted"
-          else if (hot.nonEmpty && hotEst * 8L <= nP * 8L / 2L) "split"
-          else "shuffle"
-        val nNdvRows = probe
-          .select((col("k_ord") % 4).as("g"),
-            Hashing.h60(col(probeKey).cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        val j = strategy match {
-          case "salted" =>
-            Salting.saltedJoinWith(probe, build, col(probeKey), col(buildKey),
-              pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int"), 8)
-          case _ => probe.join(build, col(probeKey) === col(buildKey))
-        }
-        val r = j.agg(count(lit(1)), sum(col(probeKey))).head()
-        val expected = strategy match {
-          case "broadcast" => (1L, 0L, 0L)
-          case "shuffle" => (0L, 2L, 0L)
-          case "salted" => (0L, 2L, 1L)
-          case "split" => (1L, 2L, 0L)
-        }
-        (edge, strategy, nP, nB, budget, buildBytes, ndv, t1k, t1c, skew,
-          bSkew, hotEst, nNdvRows, r.getLong(0), r.getLong(1), expected._1,
-          expected._2, expected._3, false, false)
-      }
-      Seq(
-        edgeRow("e1_dim", "k_cust", custRel, "ck"),
-        edgeRow("e2_flat", "k_ord", lineRel, "lk"),
-        edgeRow("e3_skew", "k_skew", lineRel, "lk"),
-        edgeRow("e4_build_skew", "k_ord", lineRel, "lk_skew"))
-        .toDF("edge", "strategy", "n_probe", "n_build", "budget_bytes",
-          "build_bytes", "ndv_probe", "top1_key", "top1_cnt", "skew_x100",
-          "build_skew_x100", "hot_probe_est",
-          "n_ndv_rows_read", "n_join", "sum_k", "bhj", "shuffles",
-          "generates", "plan_ok", "live_log")
-        .orderBy("edge")
     }
   }
 
@@ -5369,7 +4766,7 @@ object SnapshotLog {
       col("c_custkey").cast("long").as("bk_cust"),
       (col("c_custkey") % 10).cast("long").as("bk_seg"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q225_") { tmp =>
+    withTempTableDir("graft_q225_") { tmp =>
       val (fP, fB, regRows) = q225Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5507,56 +4904,6 @@ object SnapshotLog {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
-    } else {
-      // honest fallback: the same estimates from direct censuses;
-      // live_log=false fails the oracle's TRUE
-      val probe = probeRel
-      val build = buildRel
-      val (nP, nB) = (probe.count(), build.count())
-      val ndvCust = Hll.estimateInt(
-        Hll.registerCensus(probe, col("k_cust").cast("string")))
-      val ndvSeg = Hll.estimateInt(
-        Hll.registerCensus(probe, col("k_seg").cast("string")))
-      val pairPDirect = Hll.estimateInt(Hll.registerCensus(
-        probe, concat(col("k_cust").cast("string"), lit("|"),
-          col("k_seg").cast("string"))))
-      val pairBDirect = Hll.estimateInt(Hll.registerCensus(
-        build, concat(col("bk_cust").cast("string"), lit("|"),
-          col("bk_seg").cast("string"))))
-      val ndvBc = Hll.estimateInt(
-        Hll.registerCensus(build, col("bk_cust").cast("string")))
-      val ndvBs = Hll.estimateInt(
-        Hll.registerCensus(build, col("bk_seg").cast("string")))
-      val jD = probe.join(
-        build,
-        col("k_cust") === col("bk_cust") && col("k_seg") === col("bk_seg"))
-      val exactJ = jD.agg(count(lit(1))).head().getLong(0)
-      val probe2 = probe.select(col("k_cust").as("p2k"))
-      val r2 = probe2.join(jD, col("p2k") === col("k_cust"))
-        .agg(count(lit(1)), sum(col("p2k"))).head()
-      def edgeRow(edge: String, pairP: Long, pairB: Long, rows: Long) = {
-        val used = if (rows > 0L) "pair" else "product"
-        val estJ = (BigInt(nP) * BigInt(nB) /
-          BigInt(math.max(math.max(pairP, pairB), 1L))).toLong
-        val (estBytes, budget) = (estJ * 8L, nP * 8L / 2L)
-        val decision = if (estBytes <= budget) "broadcast" else "shuffle"
-        val errBp = (BigInt(estJ - exactJ) * 10000 / BigInt(exactJ)).toLong
-        (edge, used, rows, rows, nP, nB, ndvCust, ndvSeg, pairP, pairB,
-          estJ, exactJ, errBp, budget, estBytes, decision,
-          r2.getLong(0), r2.getLong(1),
-          if (decision == "broadcast") 1L else 0L, 0L, false, false)
-      }
-      val prodP = (BigInt(ndvCust) * BigInt(ndvSeg)).min(BigInt(nP)).toLong
-      val prodB = (BigInt(ndvBc) * BigInt(ndvBs)).min(BigInt(nB)).toLong
-      Seq(
-        edgeRow("e1_pair_stats", pairPDirect, pairBDirect, 64L),
-        edgeRow("e2_no_pair_stats", prodP, prodB, 0L))
-        .toDF("edge", "used", "pair_rows_probe", "pair_rows_build",
-          "n_probe", "n_build", "ndv_cust", "ndv_seg", "pair_ndv_probe",
-          "pair_ndv_build", "est_join", "exact_join", "err_bp",
-          "budget_bytes", "est_bytes", "decision", "n_second",
-          "sum_second", "bhj", "shuffles", "plan_ok", "live_log")
-        .orderBy("edge")
     }
   }
 
@@ -5697,7 +5044,7 @@ object SnapshotLog {
         (col("o_custkey") % 2).cast("long").as("g"),
         col("o_orderkey").cast("long").as("k"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q226_") { tmp =>
+    withTempTableDir("graft_q226_") { tmp =>
       val (fB, fP, topkRows, regRows, cmsRows) = q226Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5856,42 +5203,6 @@ object SnapshotLog {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
-    } else {
-      // honest fallback: direct stats; live_log=false fails the
-      // oracle's TRUE
-      val big = buildRel
-      val probe = probeRel
-      val (nB, nP) = (big.count(), probe.count())
-      def edgeRow(cn: String) = {
-        val ndvB = Hll.estimateInt(Hll.registerCensus(big, col(cn).cast("string")))
-        val perKey = big.groupBy(col(cn).as("hk")).agg(count(lit(1)).as("c"))
-        val hot = perKey
-          .filter(col("c") * 100 * ndvB / nB >= 800)
-          .select("hk").collect().map(_.getLong(0)).toSeq.sorted
-        val t1 = perKey.orderBy(col("c").desc, col("hk")).head()
-        val (t1k, t1c) = (t1.getLong(0), t1.getLong(1))
-        val skewX100 = (BigInt(t1c) * 100 * BigInt(ndvB) / BigInt(nB)).toLong
-        val hotEst = if (hot.isEmpty) 0L
-          else probe.filter(col("k").isin(hot: _*)).count()
-        val (estBytes, budget) = (hotEst * 8L, nP * 8L / 2L)
-        val strategy =
-          if (hot.isEmpty) "shuffle"
-          else if (estBytes <= budget) "split"
-          else "salted"
-        val r = probe.join(big, col("k") === col(cn))
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        (cn, strategy, nP, nB, ndvB, t1k, t1c, skewX100,
-          hot.size.toLong, hotEst, estBytes, budget,
-          r.getLong(0), r.getLong(1), false,
-          if (strategy == "split") 1L else 0L, 1L, false, false)
-      }
-      Seq(edgeRow("bk_skew"), edgeRow("bk_flat"))
-        .toDF("edge", "strategy", "n_probe", "n_build", "ndv_b",
-          "top1_key", "top1_cnt", "skew_x100", "n_hot_keys",
-          "hot_probe_est", "est_bytes", "budget_bytes",
-          "n_join", "sum_cents", "census_match", "bhj", "smj",
-          "plan_ok", "live_log")
-        .orderBy("edge")
     }
   }
 
@@ -5946,7 +5257,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
     val saltCol = pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s76_") { tmp =>
+    withTempTableDir("graft_s76_") { tmp =>
       val dbFile = s"$tmp/log.duckdb"
       initLog(dbFile)
       initColNdv(dbFile)
@@ -5981,12 +5292,10 @@ object SnapshotLog {
         } finally { perKey.unpersist(); () }
       }
 
-      val files1 = writeBucketed(spark, base, s"$tmp/data", 0L to 3L)
-      val bucketRe = "/g=(\\d+)/".r
-      val byG1: Map[Long, String] = files1
-        .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
+      val files1 = writeBucketed(spark, base, s"$tmp/data", 0L to 3L, Nil)
+      val byG1: Map[Long, String] = files1.map(f => (f.g, f.path)).toMap
       statsFor(base, byG1)
-      val c1 = commit(dbFile, 0L, 1L, files1.map(f => (f._1, f._2)))
+      val c1 = commit(dbFile, 0L, 1L, files1.map(_.entry))
 
       // the appended skew delta (snapshot 2): one file, own stat rows
       val files2 = writeCounted(spark, delta.select("k", "rid", "cents"),
@@ -5995,7 +5304,7 @@ object SnapshotLog {
         spark.read.parquet(files2.map(_._1): _*).withColumn("g", lit(4L)),
         Map(4L -> files2.head._1))
       val c2 = commit(
-        dbFile, 1L, 2L, files1.map(f => (f._1, f._2)) ++ files2)
+        dbFile, 1L, 2L, files1.map(_.entry) ++ files2)
 
       // the dim is probed by FOUR join censuses below (plain + salted at
       // two snapshots) — persist it so the distinct is computed once,
@@ -6060,28 +5369,6 @@ object SnapshotLog {
         "skew_x100", "strategy", "audit_ok", "n_log_rows", "flipped_from_prev",
         "live_log")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: direct stats per board state; live_log=false
-      // fails the oracle's TRUE
-      def row(snap: Long) = {
-        val fact = if (snap == 1L) base.select("k", "rid", "cents")
-          else base.select("k", "rid", "cents")
-            .unionByName(delta.select("k", "rid", "cents"))
-        val n = fact.count()
-        val ndv = Hll.estimateInt(Hll.registerCensus(fact, col("k").cast("string")))
-        val t1 = fact.groupBy("k").agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("k")).head()
-        val (t1k, t1c) = (t1.getLong(0), t1.getLong(1))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(n)).toLong
-        (snap, n, ndv, t1k, t1c, skew,
-          if (skew >= 800L) "salted" else "shuffle", false, 2L,
-          snap == 2L, false)
-      }
-      Seq(row(1L), row(2L))
-        .toDF("snapshot_id", "n_rows", "ndv_est", "top1_key", "top1_cnt",
-          "skew_x100", "strategy", "audit_ok", "n_log_rows",
-          "flipped_from_prev", "live_log")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -6139,7 +5426,7 @@ object SnapshotLog {
     def errBp(est: Long, exact: Long): Long =
       (BigInt(est - exact) * 10000 / BigInt(exact)).toLong
 
-    if (DuckDbLive.available) withTempTableDir("graft_s71_") { base =>
+    withTempTableDir("graft_s71_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColNdv(dbFile)
@@ -6149,7 +5436,8 @@ object SnapshotLog {
       // scans of the same input, overlapped (guide §2.6, r21)
       val (files, rawCells) = graft.ops.Par.run2(
         () => writeBucketed(
-          spark, o.withColumn("g", pmod(col("cust"), lit(4L))), s"$base/data", 0L to 3L),
+          spark, o.withColumn("g", pmod(col("cust"), lit(4L))), s"$base/data", 0L to 3L,
+          Nil),
         () => o
           .select(pmod(col("cust"), lit(4L)).as("g"),
             Hashing.h60(col("cust").cast("string")).as("h"))
@@ -6157,12 +5445,10 @@ object SnapshotLog {
           .groupBy("g", "bucket").agg(max("rk").as("mr"))
           .collect() // ≤ 4·64 sketch cells — stats metadata
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
-      val bucketRe = "/g=(\\d+)/".r
-      val pathOf: Map[Long, String] = files
-        .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
+      val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       val cells = rawCells.map { case (g, b, mr) => (pathOf(g), "cust", b, mr) }
       recordColNdv(dbFile, cells)
-      val dataFiles = files.map(f => (f._1, f._2))
+      val dataFiles = files.map(_.entry)
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
       val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
@@ -6235,39 +5521,6 @@ object SnapshotLog {
           "n_fresh_stat_rows", "est_ndv", "naive_est_ndv", "exact_ndv",
           "err_bp", "naive_err_bp", "regs_match", "stale_guard_ok", "live_log")
         .orderBy("step")
-    } else {
-      // honest fallback: the same estimates from direct censuses;
-      // regs_match/stale_guard_ok/live_log=false fail the oracle's TRUE
-      def row(step: Long, pred: org.apache.spark.sql.Column) = {
-        val live = o.filter(pred)
-        val regsAll = Hll.registerCensus(o, col("cust").cast("string"))
-        val fresh03 = Hll.registerCensus(
-          o.filter(col("cust") % 4 =!= 2), col("cust").cast("string"))
-        val rec2 = Hll.registerCensus(
-          live.filter(col("cust") % 4 === 2), col("cust").cast("string"))
-        val est =
-          if (step == 1L) Hll.estimateInt(regsAll)
-          else Hll.estimateInt(Hll.mergeRegisters(fresh03, rec2))
-        val a = live.agg(count(lit(1)), countDistinct(col("cust"))).head()
-        val nStale = if (step == 1L) 0L else 1L
-        // fresh stat ROWS = Σ per-file register cells over the fresh
-        // scope (matches colNdvRowCount's long-form row count)
-        val nFreshCells = o
-          .filter(if (step == 1L) lit(true) else col("cust") % 4 =!= 2)
-          .select(pmod(col("cust"), lit(4L)).as("g"),
-            Hashing.h60(col("cust").cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        (step, a.getLong(0), 4L, nStale, nFreshCells, est,
-          Hll.estimateInt(regsAll), a.getLong(1),
-          errBp(est, a.getLong(1)), errBp(Hll.estimateInt(regsAll), a.getLong(1)),
-          false, false, false)
-      }
-      Seq(row(1L, lit(true)), row(2L, !delPred))
-        .toDF("step", "n_live_rows", "n_files", "n_stale_files",
-          "n_fresh_stat_rows", "est_ndv", "naive_est_ndv", "exact_ndv",
-          "err_bp", "naive_err_bp", "regs_match", "stale_guard_ok", "live_log")
-        .orderBy("step")
     }
   }
 
@@ -6317,7 +5570,7 @@ object SnapshotLog {
     def errBp(est: Long, exact: Long): Long =
       (BigInt(est - exact) * 10000 / BigInt(exact)).toLong
 
-    if (DuckDbLive.available) withTempTableDir("graft_s73_") { base =>
+    withTempTableDir("graft_s73_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColNdv(dbFile)
@@ -6326,7 +5579,8 @@ object SnapshotLog {
       // the same input, overlapped (guide §2.6, r21)
       val (files, rawCells) = graft.ops.Par.run2(
         () => writeBucketed(
-          spark, o.withColumn("g", pmod(col("cust"), lit(4L))), s"$base/data", 0L to 3L),
+          spark, o.withColumn("g", pmod(col("cust"), lit(4L))), s"$base/data", 0L to 3L,
+          Nil),
         () => o
           .select(pmod(col("cust"), lit(4L)).as("g"),
             Hashing.h60(col("cust").cast("string")).as("h"))
@@ -6334,12 +5588,10 @@ object SnapshotLog {
           .groupBy("g", "bucket").agg(max("rk").as("mr"))
           .collect() // ≤ 4·64 sketch cells — stats metadata
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
-      val bucketRe = "/g=(\\d+)/".r
-      val pathOf: Map[Long, String] = files
-        .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
+      val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       val cells = rawCells.map { case (g, b, mr) => (pathOf(g), "cust", b, mr) }
       recordColNdv(dbFile, cells)
-      val dataFiles = files.map(f => (f._1, f._2))
+      val dataFiles = files.map(_.entry)
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
       val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
@@ -6422,39 +5674,6 @@ object SnapshotLog {
       val (row3, _) = snapRow(3L, 3L, c1 && c2 && c3)
 
       Seq(row1, row2, row3)
-        .toDF("step", "n_live_rows", "n_files", "n_stale_files",
-          "n_recompute_files", "n_pos_delete_files", "n_fresh_stat_rows",
-          "est_ndv", "naive_est_ndv", "exact_ndv", "err_bp", "naive_err_bp",
-          "regs_match", "stale_guard_ok", "live_log")
-        .orderBy("step")
-    } else {
-      // honest fallback: direct censuses; the guard/log flags false
-      // fail the oracle's TRUE
-      def row(step: Long, pred: org.apache.spark.sql.Column) = {
-        val live = o.filter(pred)
-        val regsAll = Hll.registerCensus(o, col("cust").cast("string"))
-        val liveRegs = Hll.registerCensus(live, col("cust").cast("string"))
-        val est = Hll.estimateInt(liveRegs)
-        val naive =
-          if (step == 3L) est else Hll.estimateInt(regsAll)
-        val a = live.agg(count(lit(1)), countDistinct(col("cust"))).head()
-        val nStale = if (step == 2L) 1L else 0L
-        val nFresh = o
-          .filter(if (step == 1L) lit(true) else col("cust") % 4 =!= 2)
-          .select(pmod(col("cust"), lit(4L)).as("g"),
-            Hashing.h60(col("cust").cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count() +
-          (if (step == 3L)
-            live.filter(col("cust") % 4 === 2)
-              .select(Hashing.h60(col("cust").cast("string")).as("h"))
-              .select(Hll.bucketCol.as("bucket")).distinct().count()
-          else 0L)
-        (step, a.getLong(0), 4L, nStale, nStale, nStale, nFresh, est, naive,
-          a.getLong(1), errBp(est, a.getLong(1)), errBp(naive, a.getLong(1)),
-          false, false, false)
-      }
-      Seq(row(1L, lit(true)), row(2L, !delPred), row(3L, !delPred))
         .toDF("step", "n_live_rows", "n_files", "n_stale_files",
           "n_recompute_files", "n_pos_delete_files", "n_fresh_stat_rows",
           "est_ndv", "naive_est_ndv", "exact_ndv", "err_bp", "naive_err_bp",
@@ -6627,7 +5846,7 @@ object SnapshotLog {
     */
   def freqStatsStaleness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.ops.{Hashing, Hll}
+    import graft.ops.Hll
 
     val o = Tables
       .orders(spark, dir)
@@ -6637,7 +5856,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("rid"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s74_") { base =>
+    withTempTableDir("graft_s74_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColNdv(dbFile)
@@ -6650,11 +5869,10 @@ object SnapshotLog {
       // files' three families) is bit-identical to the per-bucket path
       val (files, statsAll) = graft.ops.Par.run2(
         () => writeBucketed(
-          spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/data", 0L to 3L),
+          spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/data", 0L to 3L,
+          Nil),
         () => freqStatFamiliesByG(o.withColumn("g", pmod(col("k"), lit(4L)))))
-      val bucketRe = "/g=(\\d+)/".r
-      val pathOf: Map[Long, String] = files
-        .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
+      val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       (0L to 3L).foreach { g =>
         val (tk, rg, cm) = statsAll(g)
         val p = pathOf(g)
@@ -6662,7 +5880,7 @@ object SnapshotLog {
         recordColNdv(dbFile, rg.map { case (b, mr) => (p, "k", b, mr) })
         recordColCms(dbFile, cm.toSeq.map { case ((i, j), c) => (p, "k", i, j, c) })
       }
-      val dataFiles = files.map(f => (f._1, f._2))
+      val dataFiles = files.map(_.entry)
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
       val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
@@ -6750,38 +5968,6 @@ object SnapshotLog {
           "cms_hot_fresh", "cms_hot_naive", "hot_live",
           "cms_ge_ok", "decision_ok", "stale_guard_ok", "live_log")
         .orderBy("step")
-    } else {
-      // honest fallback: direct stats both ways; guard/log flags false
-      // fail the oracle's TRUE
-      def row(step: Long) = {
-        val live = if (step == 1L) o else o.filter(col("k") =!= 1L)
-        val nMan = o.count()
-        def top1(df: DataFrame): (Long, Long) = {
-          val r = df.groupBy("k").agg(count(lit(1)).as("c"))
-            .orderBy(col("c").desc, col("k")).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val (t1k, t1c) = top1(live)
-        val ndv = Hll.estimateInt(Hll.registerCensus(live, col("k").cast("string")))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nMan)).toLong
-        val (n1k, n1c) = top1(o)
-        val nNdv = Hll.estimateInt(Hll.registerCensus(o, col("k").cast("string")))
-        val nSkew = (BigInt(n1c) * 100 * BigInt(nNdv) / BigInt(nMan)).toLong
-        val hotLive = live.filter(col("k") === 1L).count()
-        (step, live.count(), if (step == 2L) 1L else 0L,
-          t1k, t1c, ndv, skew, skew >= 800L,
-          n1k, n1c, nSkew, nSkew >= 800L,
-          t1k, t1c, skew >= 800L,
-          hotLive, n1c, hotLive, true, true, false, false)
-      }
-      Seq(row(1L), row(2L))
-        .toDF("step", "n_live_rows", "n_stale_files",
-          "top1_key", "top1_cnt", "ndv_est", "skew_x100", "salted",
-          "naive_top1_key", "naive_top1_cnt", "naive_skew_x100", "naive_salted",
-          "top1_exact_key", "top1_exact_cnt", "exact_salted",
-          "cms_hot_fresh", "cms_hot_naive", "hot_live",
-          "cms_ge_ok", "decision_ok", "stale_guard_ok", "live_log")
-        .orderBy("step")
     }
   }
 
@@ -6823,7 +6009,7 @@ object SnapshotLog {
     */
   def freqStatsCompactionHeal(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.ops.{Hashing, Hll}
+    import graft.ops.Hll
 
     val o = Tables
       .orders(spark, dir)
@@ -6833,7 +6019,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("rid"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s75_") { base =>
+    withTempTableDir("graft_s75_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColNdv(dbFile)
@@ -6846,11 +6032,10 @@ object SnapshotLog {
       // files' three families) is bit-identical to the per-bucket path
       val (files, statsAll) = graft.ops.Par.run2(
         () => writeBucketed(
-          spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/data", 0L to 3L),
+          spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/data", 0L to 3L,
+          Nil),
         () => freqStatFamiliesByG(o.withColumn("g", pmod(col("k"), lit(4L)))))
-      val bucketRe = "/g=(\\d+)/".r
-      val pathOf: Map[Long, String] = files
-        .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
+      val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
 
       def recordAll(p: String, tk: Seq[(Long, Long)], rg: Seq[(Long, Long)],
           cm: Map[(Long, Long), Long]): Unit = {
@@ -6862,7 +6047,7 @@ object SnapshotLog {
         val (tk, rg, cm) = statsAll(g)
         recordAll(pathOf(g), tk, rg, cm)
       }
-      val dataFiles = files.map(f => (f._1, f._2))
+      val dataFiles = files.map(_.entry)
       recordSeq(dbFile, dataFiles.map(_._1), 1L)
       val c1 = commit(dbFile, 0L, 1L, dataFiles)
 
@@ -6986,42 +6171,6 @@ object SnapshotLog {
           "cms_ge_ok", "decision_ok", "naive_matches_fresh",
           "stale_guard_ok", "live_log")
         .orderBy("step")
-    } else {
-      // honest fallback: direct stats both ways; guard/log flags false
-      // fail the oracle's TRUE
-      def row(step: Long) = {
-        val live = if (step == 1L) o else o.filter(col("k") =!= 1L)
-        val nMan = o.count()
-        def top1(df: DataFrame): (Long, Long) = {
-          val r = df.groupBy("k").agg(count(lit(1)).as("c"))
-            .orderBy(col("c").desc, col("k")).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val (t1k, t1c) = top1(live)
-        val ndv = Hll.estimateInt(Hll.registerCensus(live, col("k").cast("string")))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nMan)).toLong
-        val naive = if (step == 3L) live else o
-        val (_, n1c) = top1(naive)
-        val nNdv = Hll.estimateInt(Hll.registerCensus(naive, col("k").cast("string")))
-        val nSkew = (BigInt(n1c) * 100 * BigInt(nNdv) / BigInt(nMan)).toLong
-        val hotLive = live.filter(col("k") === 1L).count()
-        (step, live.count(),
-          if (step == 2L) 1L else 0L,
-          0L, 0L, 0L,
-          t1k, t1c, ndv, skew, skew >= 800L,
-          n1c, nSkew >= 800L,
-          skew >= 800L,
-          hotLive, n1c, hotLive, true, true, step != 2L, false, false)
-      }
-      Seq(row(1L), row(2L), row(3L))
-        .toDF("step", "n_live_rows", "n_recompute_files",
-          "n_topk_rows_fresh", "n_ndv_rows_fresh", "n_cms_rows_fresh",
-          "top1_key", "top1_cnt", "ndv_est", "skew_x100", "salted",
-          "naive_top1_cnt", "naive_salted", "exact_salted",
-          "cms_hot_fresh", "cms_hot_naive", "hot_live",
-          "cms_ge_ok", "decision_ok", "naive_matches_fresh",
-          "stale_guard_ok", "live_log")
-        .orderBy("step")
     }
   }
 
@@ -7060,12 +6209,9 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("cust"))
 
-    def exactAndDirect(df: DataFrame): (Long, Seq[(Long, Long)]) = (
-      df.agg(countDistinct(col("cust"))).head().getLong(0),
-      Hll.registerCensus(df, col("cust").cast("string")))
     def estimate(regs: Seq[(Long, Long)]): Long = Hll.estimateInt(regs)
 
-    if (DuckDbLive.available) withTempTableDir("graft_s64_") { base =>
+    withTempTableDir("graft_s64_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -7130,27 +6276,6 @@ object SnapshotLog {
         .toDF("scope", "n_files", "n_sketch_rows", "est_ndv", "exact_ndv",
           "err_bp", "regs_match", "log_ok")
         .orderBy("scope")
-    } else {
-      // honest fallback: same estimates from predicate groupings, but
-      // regs_match/log_ok=false fail the oracle's TRUE
-      def row(scope: String, nf: Long, pred: org.apache.spark.sql.Column) = {
-        val scoped = o.filter(pred)
-        val (exact, regs) = exactAndDirect(scoped)
-        val nRows = o
-          .filter(pred)
-          .select((col("k") % 4).as("f"), Hashing.h60(col("cust").cast("string")).as("h"))
-          .select(col("f"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        val est = estimate(regs)
-        (scope, nf, nRows, est, exact,
-          math.abs(est - exact) * 10000L / exact, false, false)
-      }
-      Seq(
-        row("all", 4L, lit(true)),
-        row("b01", 2L, col("k") % 4 < 2))
-        .toDF("scope", "n_files", "n_sketch_rows", "est_ndv", "exact_ndv",
-          "err_bp", "regs_match", "log_ok")
-        .orderBy("scope")
     }
   }
 
@@ -7208,7 +6333,7 @@ object SnapshotLog {
       (BigInt(nL) * BigInt(nR) / BigInt(math.max(ndvL, ndvR))).toLong
     def errBp(est: Long, t: Long): Long = (BigInt(est - t) * 10000 / BigInt(t)).toLong
 
-    if (DuckDbLive.available) withTempTableDir("graft_q212_") { tmp =>
+    withTempTableDir("graft_q212_") { tmp =>
       // staging (the write-once stats cost) memoized per dir — the q209
       // discipline: production stat tables are written once per table
       // version and READ by every plan; repeated bench invocations must
@@ -7318,33 +6443,6 @@ object SnapshotLog {
         .toDF("join_key", "n_left", "n_right", "ndv_left", "ndv_right",
           "est_join_rows", "true_join_rows", "err_bp", "n_stat_rows", "regs_match")
         .orderBy("join_key")
-    } else {
-      // honest fallback: same estimates from direct censuses; the stat
-      // rows come from per-file groupings without a log, and
-      // regs_match=false fails the oracle's TRUE
-      def statRows(df: DataFrame, gCol: org.apache.spark.sql.Column,
-          key: org.apache.spark.sql.Column): Long =
-        df.select(gCol.as("g"), Hashing.h60(key.cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-      def ndvOf(df: DataFrame, key: String): Long =
-        Hll.estimateInt(Hll.registerCensus(df, col(key).cast("string")))
-      val (trueOC, trueOL) = (trueOCJob(), trueOLJob())
-      val (nO, nC, nL) = (orders.count(), custT.count(), lineT.count())
-      val (ndvOc, ndvC) = (ndvOf(orders, "cust"), ndvOf(custT, "ck"))
-      val (ndvOk, ndvL2) = (ndvOf(orders, "k"), ndvOf(lineT, "lk"))
-      val e1 = estJoin(nO, nC, ndvOc, ndvC)
-      val e2 = estJoin(nO, nL, ndvOk, ndvL2)
-      val s1 = statRows(orders, col("k") % 4, col("cust")) +
-        statRows(custT, col("ck") % 2, col("ck"))
-      val s2 = statRows(orders, col("k") % 4, col("k")) +
-        statRows(lineT, col("lk") % 2, col("lk"))
-      Seq(
-        ("orders_customer", nO, nC, ndvOc, ndvC, e1, trueOC, errBp(e1, trueOC), s1, false),
-        ("orders_lineitem", nO, nL, ndvOk, ndvL2, e2, trueOL, errBp(e2, trueOL), s2, false))
-        .toDF("join_key", "n_left", "n_right", "ndv_left", "ndv_right",
-          "est_join_rows", "true_join_rows", "err_bp", "n_stat_rows", "regs_match")
-        .orderBy("join_key")
     }
   }
 
@@ -7389,11 +6487,7 @@ object SnapshotLog {
     val bw = (mxv - mn) / 4L + 1L
     val (lo, hi) = (mn + bw / 2L, mn + bw - 1L)
 
-    def exactAndDirect(df: DataFrame): (Long, Seq[(Long, Long)]) = (
-      df.agg(countDistinct(col("cust"))).head().getLong(0),
-      Hll.registerCensus(df, col("cust").cast("string")))
-
-    if (DuckDbLive.available) withTempTableDir("graft_q215_") { base =>
+    withTempTableDir("graft_q215_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
@@ -7407,7 +6501,8 @@ object SnapshotLog {
           spark,
           o.withColumn("g", expr(s"(cents - $mn) div $bw")),
           s"$base/data",
-          0L to 3L),
+          0L to 3L,
+          Seq("cents")),
         () => o
           .select(
             expr(s"(cents - $mn) div $bw").as("g"),
@@ -7416,13 +6511,11 @@ object SnapshotLog {
           .groupBy("g", "bucket").agg(max("rk").as("mr"))
           .collect() // ≤256 sketch cells — stats metadata
           .map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2))).toSeq)
-      recordColStats(dbFile, "c0", files.map(f => (f._1, f._3, f._4)))
-      val bucketRe = "/g=(\\d+)/".r
-      val pathOf: Map[Long, String] = files
-        .map(f => (bucketRe.findFirstMatchIn(f._1).get.group(1).toLong, f._1)).toMap
+      recordColStats(dbFile, "c0", files.map(_.range("cents")))
+      val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       val cells = rawCells.map { case (g, b, mr) => (pathOf(g), "cust", b, mr) }
       recordColNdv(dbFile, cells)
-      require(commit(dbFile, 0L, 1L, files.map(f => (f._1, f._2))), "q215 commit rejected")
+      require(commit(dbFile, 0L, 1L, files.map(_.entry)), "q215 commit rejected")
 
       def scopeRow(scope: String, paths: Seq[String]) = {
         val merged = colNdvRegisters(dbFile, paths, "cust") // metadata only
@@ -7441,25 +6534,9 @@ object SnapshotLog {
       // the two scope audits are independent scans — overlapped
       // (guide §2.6, r21)
       val (rowAll, rowPruned) = graft.ops.Par.run2(
-        () => scopeRow("all", files.map(_._1)),
+        () => scopeRow("all", files.map(_.path)),
         () => scopeRow("pruned", pruned))
       Seq(rowAll, rowPruned)
-        .toDF("scope", "n_files", "est_ndv", "exact_ndv", "err_bp",
-          "regs_match", "composed_ok")
-        .orderBy("scope")
-    } else {
-      // honest fallback: predicate groupings, composed_ok=false fails
-      // the oracle's TRUE
-      def row(scope: String, pred: org.apache.spark.sql.Column) = {
-        val scoped = o.filter(pred)
-        val nf = scoped.select(expr(s"(cents - $mn) div $bw")).distinct().count()
-        val (exact, regs) = exactAndDirect(scoped)
-        val est = Hll.estimateInt(regs)
-        (scope, nf, est, exact, math.abs(est - exact) * 10000L / exact, false, false)
-      }
-      Seq(
-        row("all", lit(true)),
-        row("pruned", expr(s"(cents - $mn) div $bw") === 0L))
         .toDF("scope", "n_files", "est_ndv", "exact_ndv", "err_bp",
           "regs_match", "composed_ok")
         .orderBy("scope")
@@ -7576,7 +6653,7 @@ object SnapshotLog {
       (r.getLong(0), r.getLong(1))
     }
 
-    if (DuckDbLive.available) withTempTableDir("graft_s67_") { tmp =>
+    withTempTableDir("graft_s67_") { tmp =>
       val (o8, c8, o16, c16) = s67Staged.compute(
         dir,
         (_, prev) => {
@@ -7638,14 +6715,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
           "exchanges_join", "census_ok", "spec_guard_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: plain-join censuses; guard untestable without
-      // the log, so spec_guard_ok=false fails the oracle's TRUE
-      val (n, s) = census(joined(ordersDf, custDf))
-      Seq((1L, 8L, n, s, 0L, true, false), (2L, 16L, n, s, 0L, true, false))
-        .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
-          "exchanges_join", "census_ok", "spec_guard_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -7694,7 +6763,7 @@ object SnapshotLog {
       (r.getLong(0), r.getLong(1))
     }
 
-    if (DuckDbLive.available) withTempTableDir("graft_s72_") { tmp =>
+    withTempTableDir("graft_s72_") { tmp =>
       val names = s72Staged.compute(
         dir,
         (_, prev) => {
@@ -7758,16 +6827,6 @@ object SnapshotLog {
         .map { case ((snap, b, n, s, ex, cen, acc), fin) =>
           (snap, b, n, s, ex, cen, acc, fin)
         }
-        .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
-          "exchanges_join", "census_ok", "accept_ok", "final_state_ok")
-        .orderBy("snapshot_id")
-    } else {
-      // honest fallback: plain-join censuses; guards untestable without
-      // the log, so accept_ok/final_state_ok=false fail the oracle's TRUE
-      val (n, s) = census(joined(ordersDf, custDf))
-      Seq((1L, 8L, n, s, 0L, true, false, false),
-        (2L, 16L, n, s, 0L, true, false, false),
-        (3L, 32L, n, s, 0L, true, false, false))
         .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
           "exchanges_join", "census_ok", "accept_ok", "final_state_ok")
         .orderBy("snapshot_id")
@@ -7846,7 +6905,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
       .withColumn("b", col("k") % 16)
 
-    if (DuckDbLive.available) withTempTableDir("graft_s65_") { base =>
+    withTempTableDir("graft_s65_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -7894,19 +6953,6 @@ object SnapshotLog {
             planned.getLong(1) == direct.getLong(1))
       }
       Seq(queryRow("point_b5", 5L, 5L), queryRow("range_b6_12", 6L, 12L))
-        .toDF("query", "n_groups", "n_groups_read", "n_entries_read",
-          "n_files_scanned", "n_rows", "sum_cents", "plan_ok")
-        .orderBy("query")
-    } else {
-      // honest fallback: predicate censuses with plan_ok=false failing
-      // the oracle's TRUE
-      def row(name: String, lo: Long, hi: Long, ng: Long, ne: Long, nf: Long) = {
-        val a = o.filter(col("b") >= lo && col("b") <= hi)
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        (name, 4L, ng, ne, nf, a.getLong(0), a.getLong(1), false)
-      }
-      Seq(row("point_b5", 5L, 5L, 1L, 4L, 1L),
-        row("range_b6_12", 6L, 12L, 3L, 12L, 7L))
         .toDF("query", "n_groups", "n_groups_read", "n_entries_read",
           "n_files_scanned", "n_rows", "sum_cents", "plan_ok")
         .orderBy("query")

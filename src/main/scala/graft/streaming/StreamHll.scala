@@ -108,94 +108,64 @@ object StreamHll {
     * (doc_id < 250 is epoch 0 — the stageDocBatches split).
     */
   def streamedNdvMaintenance(outer: SparkSession, dir: String): DataFrame = {
-    import graft.sinks.{DuckDbLive, SnapshotLog}
+    import graft.sinks.SnapshotLog
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
     val base = java.nio.file.Files.createTempDirectory("graft_s70_").toAbsolutePath
 
-    if (DuckDbLive.available) {
-      val dbFile = s"$base/stats.duckdb"
-      SnapshotLog.initColNdv(dbFile)
-      val results = new java.util.concurrent.ConcurrentHashMap[
-        Long, (Long, Long, Long, Long, Long, Boolean)]()
-      val q = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("basePath", staged)
-        .parquet(s"$staged/[01].parquet")
-        .select(col("doc_id"), col("text"))
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .foreachBatch { (b: DataFrame, epoch: Long) =>
-          val batch = b.persist()
-          val nDocs = batch.count()
-          val cells = batch
-            .select(Hashing.h60(col("text")).as("h"))
-            .select(Hll.bucketCol.as("bucket"), Hll.rankCol.as("rk"))
-            .groupBy("bucket").agg(max("rk").as("mr"))
-            .collect() // ≤64 register cells — the epoch's stats append
-            .map(r => (s"epoch$epoch", "text", r.getLong(0), r.getLong(1)))
-          SnapshotLog.recordColNdv(dbFile, cells.toSeq)
-          // the planner read: cumulative merge out of the stat table
-          val paths = (0L to epoch).map(e => s"epoch$e")
-          val merged = SnapshotLog.colNdvRegisters(dbFile, paths, "text")
-          val est = Hll.estimateInt(merged)
-          val nStat = SnapshotLog.colNdvRowCount(dbFile, paths, "text")
-          // audit layer: exact + direct census over everything so far
-          val cum = s.read.parquet((0L to epoch).map(e => s"$staged/$e.parquet"): _*)
-          val exact = cum.agg(countDistinct(col("text"))).head().getLong(0)
-          val direct = Hll.registerCensus(cum, col("text"))
-          results.computeIfAbsent(
-            epoch,
-            _ => (nDocs, nStat, est, exact,
-              math.abs(est - exact) * 10000L / exact, merged == direct))
-          batch.unpersist()
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-
-      require(results.size() == 2, s"s70 expected 2 epochs, got ${results.size()}")
-      import outer.implicits._
-      import scala.jdk.CollectionConverters._
-      results.asScala.toSeq.sortBy(_._1)
-        .map { case (epoch, (n, st, est, ex, err, rm)) =>
-          (epoch + 1L, n, st, est, ex, err, rm, true)
-        }
-        .toDF("step", "n_docs", "n_stat_rows", "est_ndv", "exact_ndv",
-          "err_bp", "regs_match", "live_stats")
-        .orderBy("step")
-    } else {
-      // honest fallback: cumulative doc_id slices, direct censuses; the
-      // per-epoch register-set sizes come from per-slice groupings and
-      // live_stats=false fails the oracle's TRUE
-      import outer.implicits._
-      val docs = graft.ops.Tables.documents(s, dir)
-      def row(step: Long) = {
-        val cum =
-          if (step == 1L) docs.filter(col("doc_id") < 250L) else docs
-        val nDocs =
-          (if (step == 1L) docs.filter(col("doc_id") < 250L)
-           else docs.filter(col("doc_id") >= 250L)).count()
-        val regs = Hll.registerCensus(cum, col("text"))
-        val est = Hll.estimateInt(regs)
+    val dbFile = s"$base/stats.duckdb"
+    SnapshotLog.initColNdv(dbFile)
+    val results = new java.util.concurrent.ConcurrentHashMap[
+      Long, (Long, Long, Long, Long, Long, Boolean)]()
+    val q = s.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("basePath", staged)
+      .parquet(s"$staged/[01].parquet")
+      .select(col("doc_id"), col("text"))
+      .writeStream
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode("append")
+      .foreachBatch { (b: DataFrame, epoch: Long) =>
+        val batch = b.persist()
+        val nDocs = batch.count()
+        val cells = batch
+          .select(Hashing.h60(col("text")).as("h"))
+          .select(Hll.bucketCol.as("bucket"), Hll.rankCol.as("rk"))
+          .groupBy("bucket").agg(max("rk").as("mr"))
+          .collect() // ≤64 register cells — the epoch's stats append
+          .map(r => (s"epoch$epoch", "text", r.getLong(0), r.getLong(1)))
+        SnapshotLog.recordColNdv(dbFile, cells.toSeq)
+        // the planner read: cumulative merge out of the stat table
+        val paths = (0L to epoch).map(e => s"epoch$e")
+        val merged = SnapshotLog.colNdvRegisters(dbFile, paths, "text")
+        val est = Hll.estimateInt(merged)
+        val nStat = SnapshotLog.colNdvRowCount(dbFile, paths, "text")
+        // audit layer: exact + direct census over everything so far
+        val cum = s.read.parquet((0L to epoch).map(e => s"$staged/$e.parquet"): _*)
         val exact = cum.agg(countDistinct(col("text"))).head().getLong(0)
-        val nStat = docs
-          .withColumn("ep", when(col("doc_id") < 250L, 0L).otherwise(1L))
-          .filter(col("ep") < step)
-          .select(col("ep"), Hashing.h60(col("text")).as("h"))
-          .select(col("ep"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        (step, nDocs, nStat, est, exact,
-          math.abs(est - exact) * 10000L / exact, false, false)
+        val direct = Hll.registerCensus(cum, col("text"))
+        results.computeIfAbsent(
+          epoch,
+          _ => (nDocs, nStat, est, exact,
+            math.abs(est - exact) * 10000L / exact, merged == direct))
+        batch.unpersist()
+        ()
       }
-      Seq(row(1L), row(2L))
-        .toDF("step", "n_docs", "n_stat_rows", "est_ndv", "exact_ndv",
-          "err_bp", "regs_match", "live_stats")
-        .orderBy("step")
-    }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+
+    require(results.size() == 2, s"s70 expected 2 epochs, got ${results.size()}")
+    import outer.implicits._
+    import scala.jdk.CollectionConverters._
+    results.asScala.toSeq.sortBy(_._1)
+      .map { case (epoch, (n, st, est, ex, err, rm)) =>
+        (epoch + 1L, n, st, est, ex, err, rm, true)
+      }
+      .toDF("step", "n_docs", "n_stat_rows", "est_ndv", "exact_ndv",
+        "err_bp", "regs_match", "live_stats")
+      .orderBy("step")
   }
 }

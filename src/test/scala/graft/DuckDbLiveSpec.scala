@@ -17,7 +17,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
   test("duckdb_jdbc resolves from the offline artifact cache") {
     // Rounds 5-8 each disproved an "environment-blocked" premise (imageio,
     // sound.sampled, RIFF/AVI); this pins the round-8 one: the driver jar
-    // IS reachable offline, so s01's live path must run, not fall back.
+    // IS reachable offline, so every DuckDB-backed entry can run.
     assert(DuckDbLive.available, s"expected a duckdb_jdbc jar; found ${DuckDbLive.jarPath}")
   }
 
@@ -152,6 +152,40 @@ class DuckDbLiveSpec extends AnyFunSuite {
       DuckDbLive.queryRow(c, "SELECT count(*) FROM t")(0).asInstanceOf[Number].longValue
     }
     assert(n == 1L, "a rejected template must leave the table unchanged")
+  }
+
+  test("a missing duckdb_jdbc jar fails each DuckDB-backed entry by name") {
+    // a child Verify run whose user.home is an empty dir finds no jar in
+    // any artifact cache; each entry must fail with the one named error
+    // from DuckDbLive.openConnection and write no result
+    val home = java.nio.file.Files.createTempDirectory("graft_nojar_home_")
+    val out = java.nio.file.Files.createTempDirectory("graft_nojar_out_")
+    val log = out.resolve("verify.log").toFile
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val addOpens = jvmArgs.zip(jvmArgs.drop(1)).flatMap {
+      case ("--add-opens", v) => Seq("--add-opens", v)
+      case _ => Nil
+    } ++ jvmArgs.filter(_.startsWith("--add-opens="))
+    val entries = Seq("s39_snapshot_commits", "s01_duckdb_sink")
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq(
+      "-Xmx1g",
+      s"-Duser.home=$home",
+      "-cp", sys.props("java.class.path"),
+      "graft.Verify", "/root/testdata/sf0.001", out.toString) ++ entries
+    val proc = new ProcessBuilder(cmd: _*)
+      .redirectErrorStream(true)
+      .redirectOutput(log)
+      .start()
+    assert(proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES), "child Verify timed out")
+    val text = new String(java.nio.file.Files.readAllBytes(log.toPath))
+    assert(proc.exitValue == 0, text.takeRight(2000))
+    entries.foreach { name =>
+      assert(
+        text.contains(s"[verify] $name failed: duckdb_jdbc not present in the local artifact cache"),
+        s"$name must fail by name without the jar:\n${text.takeRight(2000)}")
+      assert(!out.resolve(name).toFile.exists, s"$name must write no result dir")
+    }
   }
 
   test("featuresF32Schema matches the pipeline's real f32 export schema") {
