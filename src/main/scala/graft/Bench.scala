@@ -187,13 +187,7 @@ object Bench {
         // loudly, not silently poison every timed run after it
         warm.get(n).foreach(fn => try fn(spark, sfDir).count() catch { case NonFatal(_) => })
       }
-      val tmp = java.nio.file.Files.createTempDirectory("graft_warm_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverseIterator
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case NonFatal(_) => () }))
+      val tmp = graft.ops.Scratch.scratchDir("graft_warm_")
       try spark.range(8).toDF("i").write.mode("overwrite").parquet(s"$tmp/w")
       catch { case NonFatal(_) => }
     }

@@ -129,21 +129,13 @@ object Media {
     stagedCache.computeIfAbsent(
       key,
       _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_s05_")
         // staging is JVM-lifetime scratch — reclaim it on exit instead of
         // leaking one temp dir per (JVM, source key)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(dir)))
+        val dir = graft.ops.Scratch.scratchDir("graft_s05_")
         fromDocumentsDecodable(docs).write.mode("overwrite").parquet(s"$dir/media")
         s"$dir/media"
       }
     )
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Batched partition-level decode + feature extraction — the
     * mapPartitions shape: per-partition setup once, then a streamed

@@ -1,8 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.ClassTag
 
 /** Bucketed co-located join — the shuffle-elimination path for repeated
   * big⋈big joins (SURVEY.md §4: "bucketing for co-located joins"). Both
@@ -21,76 +26,44 @@ object BucketedJoin {
     */
   private val staged = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
-  /** Structural shuffle count of a plan — `ShuffleExchangeExec` nodes
-    * collected from the physical plan (unwrapping adaptive wrappers),
-    * NOT a substring match on the rendered plan text, which would also
-    * count ReusedExchange/BroadcastExchange and track AQE's string
-    * format across Spark versions. Used by q209/q211's measured
-    * zero-exchange claims.
+  /** Structural count of `T` nodes in a plan — collected from the
+    * physical plan, NOT a substring match on the rendered plan text,
+    * which would also count look-alikes (ReusedExchange and
+    * BroadcastExchange for a shuffle) and track AQE's string format
+    * across Spark versions. QueryStageExec is ALSO a leaf wrapper: a
+    * plan inspected after AQE has materialized stages hides the stage
+    * plans behind it, so both adaptive wrappers are unwrapped.
     */
-  def countShuffles(df: DataFrame): Long = {
-    // QueryStageExec is ALSO a leaf wrapper (ADVICE r18): a plan
-    // inspected after AQE has materialized stages hides the stage plans
-    // behind it, so both adaptive wrappers are unwrapped.
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Long =
+  private def countNodes[T <: SparkPlan](df: DataFrame)(implicit t: ClassTag[T]): Long = {
+    def walk(p: SparkPlan): Long =
       p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case _: ShuffleExchangeExec => 1L
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case n if t.runtimeClass.isInstance(n) => 1L
       }.sum
     walk(df.queryExecution.executedPlan)
   }
 
-  /** Structural count of broadcast hash joins — q216's plan audit (same
-    * discipline as [[countShuffles]]: collected nodes, not plan text).
+  /** Structural shuffle count (`ShuffleExchangeExec` nodes) — q209/q211's
+    * measured zero-exchange claims.
     */
-  def countBroadcastHashJoins(df: DataFrame): Long = {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Long =
-      p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => 1L
-      }.sum
-    walk(df.queryExecution.executedPlan)
-  }
+  def countShuffles(df: DataFrame): Long = countNodes[ShuffleExchangeExec](df)
+
+  /** Structural count of broadcast hash joins — q216's plan audit. */
+  def countBroadcastHashJoins(df: DataFrame): Long = countNodes[BroadcastHashJoinExec](df)
 
   /** Structural count of sort-merge joins — q226's split-join audit
     * (one BroadcastHashJoin for the hot-key slice + one SortMergeJoin
-    * for the remainder). Same collected-node discipline as
-    * [[countShuffles]].
+    * for the remainder).
     */
-  def countSortMergeJoins(df: DataFrame): Long = {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Long =
-      p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => 1L
-      }.sum
-    walk(df.queryExecution.executedPlan)
-  }
+  def countSortMergeJoins(df: DataFrame): Long = countNodes[SortMergeJoinExec](df)
 
   /** Structural count of Generate (explode) nodes — q218's plan audit:
     * the salted join's small-side replication is an explode, so a plan
     * that chose the salted path carries exactly one GenerateExec and the
-    * plain path zero. Same collected-node discipline as [[countShuffles]].
+    * plain path zero.
     */
-  def countGenerates(df: DataFrame): Long = {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Long =
-      p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case _: org.apache.spark.sql.execution.GenerateExec => 1L
-      }.sum
-    walk(df.queryExecution.executedPlan)
-  }
+  def countGenerates(df: DataFrame): Long = countNodes[GenerateExec](df)
 
   /** Write lineitem/orders bucketed by order key (once per JVM+dir), join
     * co-located, and report (row count, revenue, whether any shuffle

@@ -105,37 +105,65 @@ object DuckDbLive {
   /** Scoped per-dbFile connection reuse. A metadata lifecycle makes
     * dozens of `withConnection` calls against the SAME file; under the
     * default each call pays a full DuckDB open (catalog + WAL replay) and
-    * close (WAL checkpoint) — measured r20/r21 as a large share of the
-    * lifecycle entries' driver gap. Inside `cachingScope`, calls reuse
-    * ONE open connection per dbFile (access serialized on the
-    * connection — callers from streaming callback threads reuse the same
-    * session instead of racing a second native open), and every cached
-    * connection is closed when the OUTERMOST scope exits — before the
-    * scope owner deletes the files. Transaction boundaries are untouched:
-    * each call still commits exactly where it used to (autocommit per
-    * statement, or the call's own explicit transaction).
+    * close (WAL checkpoint) — a large share of the lifecycle entries'
+    * driver gap. Inside `cachingScope(root)`, calls on a dbFile under
+    * `root` reuse ONE open connection per dbFile (access serialized on
+    * the connection — callers from streaming callback threads reuse the
+    * same session instead of racing a second native open). The scope
+    * owns exactly the connections it cached and closes them when it
+    * exits — before the scope owner deletes `root` — however other
+    * scopes (nested, or on other threads) overlap it. A dbFile under no
+    * open scope's root gets its own connection per call.
+    * Transaction boundaries are untouched: each call still commits
+    * exactly where it used to (autocommit per statement, or the call's
+    * own explicit transaction).
     */
-  private val cacheDepth = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val cachedConns = new java.util.concurrent.ConcurrentHashMap[String, Connection]()
+  private final class Scope {
+    private val conns = scala.collection.mutable.HashMap.empty[String, Connection]
+    private var open = true
 
-  def cachingScope[A](body: => A): A = {
-    cacheDepth.incrementAndGet()
-    try body
-    finally if (cacheDepth.decrementAndGet() == 0) {
-      val it = cachedConns.values().iterator()
-      while (it.hasNext) { val c = it.next(); try c.close() catch { case NonFatal(_) => () } }
-      cachedConns.clear()
+    /** The scope's connection for `dbFile`; None once the scope has exited. */
+    def connection(dbFile: String): Option[Connection] = synchronized {
+      if (open) Some(conns.getOrElseUpdate(dbFile, openConnection(dbFile))) else None
+    }
+
+    def close(): Unit = synchronized {
+      open = false
+      conns.values.foreach(c => try c.close() catch { case NonFatal(_) => () })
+      conns.clear()
     }
   }
 
+  private val scopes = new java.util.concurrent.ConcurrentHashMap[Path, Scope]()
+
+  def cachingScope[A](root: Path)(body: => A): A = {
+    val key = root.toAbsolutePath.normalize
+    val scope = new Scope
+    require(scopes.putIfAbsent(key, scope) == null, s"a caching scope is already open on $key")
+    try body
+    finally {
+      scopes.remove(key, scope)
+      scope.close()
+    }
+  }
+
+  /** The innermost open scope whose root holds `dbFile`. */
+  private def scopeOf(dbFile: String): Option[Scope] =
+    if (scopes.isEmpty) None
+    else
+      Iterator
+        .iterate(Paths.get(dbFile).toAbsolutePath.normalize.getParent)(_.getParent)
+        .takeWhile(_ != null)
+        .map(scopes.get)
+        .find(_ != null)
+
   def withConnection[A](dbFile: String)(f: Connection => A): A =
-    if (cacheDepth.get > 0) {
-      val conn = cachedConns.computeIfAbsent(dbFile, openConnection(_))
-      conn.synchronized(f(conn))
-    } else {
-      val conn = openConnection(dbFile)
-      try f(conn)
-      finally conn.close()
+    scopeOf(dbFile).flatMap(_.connection(dbFile)) match {
+      case Some(conn) => conn.synchronized(f(conn))
+      case None =>
+        val conn = openConnection(dbFile)
+        try f(conn)
+        finally conn.close()
     }
 
   def execute(conn: Connection, sql: String): Unit = {

@@ -44,13 +44,7 @@ object DuckDbUpsert {
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$streamDir/*.parquet")
     )
-    val base = java.nio.file.Files.createTempDirectory("graft_s30_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }))
+    val base = graft.ops.Scratch.scratchDir("graft_s30_")
     val dbFile = s"$base/upsert.duckdb"
 
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0)
@@ -67,11 +61,11 @@ object DuckDbUpsert {
       )
       .collect() // bounded by the key domain = the upsert target's size
 
-    DuckDbLive.cachingScope {
+    DuckDbLive.cachingScope(base) {
       // one native DuckDB open for the whole lifecycle (DDL + one
       // upsert transaction per micro-batch + the final state read)
       // instead of an open/close — each with a WAL checkpoint — per
-      // call (r21; the cachingScope discipline of withTempTableDir)
+      // call (the cachingScope discipline of withTempTableDir)
       DuckDbLive.withConnection(dbFile) { c =>
         DuckDbLive.execute(
           c,

@@ -176,13 +176,7 @@ object IncrementalRefresh {
           .otherwise(lit("changed")))
       .ckpt() // bucket-domain-sized (~80 cells)
 
-    val base = java.nio.file.Files.createTempDirectory("graft_s35_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }))
+    val base = graft.ops.Scratch.scratchDir("graft_s35_")
     val dbFile = s"$base/view.duckdb"
     initStore(dbFile)
 

@@ -90,14 +90,8 @@ object SnapshotLog {
     val base = java.nio.file.Files.createTempDirectory(prefix)
     // connection reuse for the lifecycle's metadata calls; the scope
     // closes every cached connection BEFORE the finally deletes the files
-    try DuckDbLive.cachingScope(body(base))
-    finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    try DuckDbLive.cachingScope(base)(body(base))
+    finally graft.ops.Scratch.deleteTree(base)
   }
 
   /** Insert log rows via PreparedStatement inside the caller's
@@ -2944,10 +2938,10 @@ object SnapshotLog {
     *     scans 4 linear files but 1 z-file; the stripe scans ALL 16
     *     linear files but 4 z-files.
     *
-    * Scale shape: identical to s52 — planning cost ∝ manifest rows
-    * (the r16g tablefmt ScaleProbe curves), and the z rewrite is one
-    * shuffle by file key. The oracle recomputes every census AND every
-    * scanned-file count from the same g arithmetic over `orders` —
+    * Scale shape: identical to s52 — planning cost ∝ manifest rows, and
+    * the z rewrite is one shuffle by file key. The oracle recomputes
+    * every census AND every scanned-file count from the same g
+    * arithmetic over `orders` —
     * stats are grouped actual min/max, so both engines agree even
     * where a sparse file doesn't span its block.
     */

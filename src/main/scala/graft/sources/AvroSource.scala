@@ -125,13 +125,7 @@ object AvroSource {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val out = java.nio.file.Files.createTempDirectory("graft_q142_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverseIterator
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          } catch { case scala.util.control.NonFatal(_) => () }))
+        val out = graft.ops.Scratch.scratchDir("graft_q142_")
         val orders = graft.ops.Tables.orders(spark, d)
         writeAvro(orders, s"$out/orders_avro")
         s"$out/orders_avro"

@@ -21,13 +21,7 @@ object OrcSource {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val out = java.nio.file.Files.createTempDirectory("graft_q95_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverseIterator
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          } catch { case scala.util.control.NonFatal(_) => () }))
+        val out = graft.ops.Scratch.scratchDir("graft_q95_")
         graft.ops.Tables
           .orders(spark, d)
           .write

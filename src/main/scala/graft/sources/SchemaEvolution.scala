@@ -31,13 +31,7 @@ object SchemaEvolution {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val out = java.nio.file.Files.createTempDirectory("graft_q106_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverseIterator
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          } catch { case scala.util.control.NonFatal(_) => () }))
+        val out = graft.ops.Scratch.scratchDir("graft_q106_")
         val docs = graft.ops.Tables.documents(spark, d)
         val dataDir = new java.io.File(s"$out/documents_evolved")
         dataDir.mkdirs()

@@ -29,13 +29,7 @@ object XmlSource {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val out = java.nio.file.Files.createTempDirectory("graft_q124_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverseIterator
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          } catch { case scala.util.control.NonFatal(_) => () }))
+        val out = graft.ops.Scratch.scratchDir("graft_q124_")
         graft.ops.Tables
           .orders(spark, d)
           .write

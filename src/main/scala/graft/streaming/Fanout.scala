@@ -37,16 +37,9 @@ object Fanout {
 
   def fanoutTwoSinks(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    import scala.util.control.NonFatal
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
-    val scratch = java.nio.file.Files.createTempDirectory("graft_s32_").toAbsolutePath
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(scratch).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case NonFatal(_) => () }))
+    val scratch = graft.ops.Scratch.scratchDir("graft_s32_")
     val rowSink = s"$scratch/rows"
     val aggSink = s"$scratch/agg"
     val committedA = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()

@@ -39,13 +39,7 @@ object Recovery {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val base = java.nio.file.Files.createTempDirectory("graft_s22_").toAbsolutePath
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-              .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          } catch { case scala.util.control.NonFatal(_) => () }))
+        val base = graft.ops.Scratch.scratchDir("graft_s22_")
         val ev = Tables
           .events(spark, d)
           .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -68,13 +62,7 @@ object Recovery {
     val staged = stageGenerations(spark, dir)
     // per-call scratch: each invocation runs the full stop/restart
     // lifecycle from a fresh checkpoint (JVM-lifetime, reclaimed on exit)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_s22_run_").toAbsolutePath
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(scratch).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }))
+    val scratch = graft.ops.Scratch.scratchDir("graft_s22_run_")
     val streamDir = java.nio.file.Files.createDirectory(scratch.resolve("in"))
     val outDir = scratch.resolve("out").toString
     val ckptDir = scratch.resolve("ckpt").toString

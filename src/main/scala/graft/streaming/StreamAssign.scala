@@ -20,16 +20,6 @@ object StreamAssign {
 
   private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Probe hook (ScaleProbe's s34 rows-per-epoch curve): pre-register a
-    * staged epoch-file layout for a synthetic dir key, bypassing the
-    * fixed vec_id<250 epoch split — the probe widens rows PER EPOCH
-    * with the epoch count held at 2, which the threshold split cannot
-    * express. `base` must hold 0.parquet/1.parquet with ascending
-    * mtimes (the file-stream arrival order).
-    */
-  private[graft] def registerStaged(dir: String, base: String): Unit =
-    stageCache.put(dir, base)
-
   /** Stage `embeddings` as an ordered two-file stream (vec_id < 250,
     * then the rest) — memoized per source dir.
     */

@@ -194,13 +194,6 @@ object Watermarks {
 
   private val docStageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Probe hook (ScaleProbe's s36 rows-per-epoch curve): pre-register a
-    * staged doc-epoch layout for a synthetic dir key — see
-    * StreamAssign.registerStaged.
-    */
-  private[graft] def registerDocStaged(dir: String, base: String): Unit =
-    docStageCache.put(dir, base)
-
   /** Stage `documents` as an ordered two-file stream (doc_id < 250, then
     * the rest) — memoized per source dir.
     */

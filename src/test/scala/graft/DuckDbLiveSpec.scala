@@ -188,6 +188,30 @@ class DuckDbLiveSpec extends AnyFunSuite {
     }
   }
 
+  test("a caching scope closes its own connections on exit inside an open outer scope") {
+    // the inner scope's connection must close when the inner scope exits,
+    // not when the outermost one does: its owner deletes the files next,
+    // and a database recreated at the same path must read fresh
+    val tmp = java.nio.file.Files.createTempDirectory("graft_scope_test_")
+    val outer = java.nio.file.Files.createDirectory(tmp.resolve("outer"))
+    val inner = outer.resolve("inner")
+    val db = s"$inner/x.duckdb"
+    def tables(): Long = DuckDbLive.withConnection(db) { c =>
+      DuckDbLive.queryRow(c, "SELECT count(*) FROM duckdb_tables() WHERE table_name = 't'")(0)
+        .asInstanceOf[Number].longValue
+    }
+    try DuckDbLive.cachingScope(outer) {
+      java.nio.file.Files.createDirectory(inner)
+      DuckDbLive.cachingScope(inner) {
+        DuckDbLive.withConnection(db)(c => DuckDbLive.execute(c, "CREATE TABLE t(i INTEGER)"))
+        assert(tables() == 1L)
+      }
+      graft.ops.Scratch.deleteTree(inner)
+      java.nio.file.Files.createDirectory(inner)
+      assert(tables() == 0L, "a connection cached by the exited inner scope outlived it")
+    } finally graft.ops.Scratch.deleteTree(tmp)
+  }
+
   test("featuresF32Schema matches the pipeline's real f32 export schema") {
     // the s01 DDL oracle is generated from the STATIC schema; this pins it
     // to the actual pipeline output so they cannot drift apart

@@ -269,6 +269,35 @@ class PlanSpec extends AnyFunSuite {
     } finally sims.unpersist()
   }
 
+  test("q81 incremental probe: batch bands semi-prune the banded index below the cap window") {
+    // work∝batch: the corpus side of the probe join is pruned to the
+    // batch's bands by a broadcast left-semi join BEFORE the per-band cap
+    // window, so the shuffle carries the batch bands' buckets, never the
+    // whole banded index. The probe frame is checkpointed, so its plan is
+    // read from the checkpoint recorder; cleared caches make q81 rebuild it.
+    queries.DedupQueries.clearStageCaches()
+    ops.Ckpt.startRecording()
+    plan("q81_curation_incremental")
+    val recorded = ops.Ckpt.stopRecording()
+    def column(l: String): Int = l.indexWhere(_.isLetter)
+    // the cap window (row_number per band) and the lines of its subtree
+    def capSubtrees(p: String): Seq[Seq[String]] = {
+      val lines = p.linesIterator.toIndexedSeq
+      lines.indices.filter { i =>
+        lines(i).contains("Window [row_number()") && lines(i).contains("[band#")
+      }.map { i =>
+        lines.drop(i + 1).takeWhile(l => column(l) > column(lines(i)))
+      }
+    }
+    val semiPruned = recorded.flatMap(capSubtrees).filter(_.exists { l =>
+      l.contains("BroadcastHashJoin [band#") && l.contains("LeftSemi")
+    })
+    assert(
+      semiPruned.nonEmpty,
+      s"no cap window over a broadcast band semi-join in q81's checkpointed plans:\n" +
+        recorded.mkString("\n---\n"))
+  }
+
   test("q92 BM25: map-only scan + TakeOrdered — zero joins") {
     // corpus constants fold to literals at build time, so the executed
     // plan must be scan -> tf/score projection -> top-k; a word-explode
