@@ -315,7 +315,7 @@ object Bench {
     val javaBin = java.nio.file.Paths
       .get(System.getProperty("java.home"), "bin", "java").toString
     val cp = currentClasspath()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bench_chunks_")
+    val tmp = graft.ops.Scratch.scratchDir("graft_bench_chunks_")
     val metas = scala.collection.mutable.ArrayBuffer.empty[ChunkMeta]
     val merged = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Double])]
     groups.zipWithIndex.foreach { case (g, i) =>

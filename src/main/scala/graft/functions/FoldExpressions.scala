@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native codegen'd fold expressions — the hot-path replacements for the
-  * interpreted higher-order-function folds in `graft.ops.Folds` /
-  * `graft.ops.VectorOps`.
+/** Native codegen'd fold expressions — the hot-path replacements for
+  * interpreted higher-order-function folds over arrays.
   *
   * Spark's `aggregate`/`transform` HOFs evaluate their lambda per element
   * through the interpreted expression tree (they are not whole-stage
@@ -17,7 +16,8 @@ import org.apache.spark.sql.types._
   * ~8s of 10s at sf0.1). These expressions emit a tight Java loop over
   * `ArrayData` instead — identical IEEE-754 operations in identical
   * left-to-right order, so results are bit-identical to the HOF versions
-  * (asserted by FoldParitySpec) and to the DuckDB oracle's list_reduce.
+  * (kept in the tests' `graft.ops.Folds` as the parity reference,
+  * FoldParitySpec) and to the DuckDB oracle's list_reduce.
   *
   * Registered as SQL functions (`graft_ema`, `graft_autocorr1`,
   * `graft_dotf`) via `GraftFunctions.register` /
@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
 
 /** graft_ema(xs array<double>, period int): seed-first EMA fold,
   * `ema = x_1; ema = ema*(1-k) + x_i*k`, k = 2/(period+1). Null on null
-  * input or empty array (mirrors Folds.emaLR).
+  * input or empty array.
   */
 case class EmaFold(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -94,8 +94,8 @@ case class EmaFold(left: Expression, right: Expression) extends BinaryExpression
 
 /** graft_autocorr1(xs array<double>, tol double): lag-1 Pearson-style
   * autocorrelation with the reference guards (Common.cs:29-60): 0.0 when
-  * n <= 1 or |den| < tol. Mirrors Folds.autocorrLag1 bit-for-bit: mean and
-  * both sums are zero-seeded left-to-right folds.
+  * n <= 1 or |den| < tol. The interpreted path is `FeatureKernel.autocorr1`;
+  * the generated loop spells out the same operations in the same order.
   */
 case class AutocorrLag1(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -115,20 +115,8 @@ case class AutocorrLag1(left: Expression, right: Expression) extends BinaryExpre
     val arr = left.eval(input)
     val t = right.eval(input)
     if (arr == null || t == null) return null
-    val a = arr.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n <= 1) return 0.0
-    var s = 0.0
-    var i = 0
-    while (i < n) { s = s + a.getDouble(i); i += 1 }
-    val mu = s / n
-    var num = 0.0
-    i = 1
-    while (i < n) { num = num + (a.getDouble(i) - mu) * (a.getDouble(i - 1) - mu); i += 1 }
-    var den = 0.0
-    i = 0
-    while (i < n) { val d = a.getDouble(i) - mu; den = den + d * d; i += 1 }
-    if (math.abs(den) < t.asInstanceOf[Double]) 0.0 else num / den
+    val a = arr.asInstanceOf[ArrayData].toDoubleArray()
+    FeatureKernel.autocorr1(a, 0, a.length, t.asInstanceOf[Double])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

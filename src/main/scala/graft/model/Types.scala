@@ -68,12 +68,10 @@ final case class FeaturesRow(
   * `StrategyAnalyzerExporter.cs:86,96-97,124-125` defaults.
   *
   * `barsRequiredToTrade`: warm-up row count before features are emitted
-  * (`FeaturesBarService.cs:44`). `emaMaxLookback`: legacy cap for the
-  * capped-fold EMA form (`Folds.emaLR` over `BarOps.wEma`) — the analog of
-  * the host's `MaximumBarsLookBack.TwoHundredFiftySix`
-  * (`StrategyAnalyzerExporter.cs:79`). The pipeline now uses the
-  * NT-faithful UNCAPPED running EMA (`graft_ema_run`), so this knob only
-  * parameterizes the legacy composed form.
+  * (`FeaturesBarService.cs:44`); the trailing buffers hold
+  * barsRequiredToTrade + 1 bars. `lookbackFast`/`lookbackSlow`: the two EMA
+  * periods, run uncapped from series start like the reference's indicators
+  * (`StrategyAnalyzerExporter.cs:138-139`).
   * `tolerance`: the guard epsilon used by every feature function
   * (`Common.cs:14,29`, `Price.cs:24,32`, `MovingAverage.cs:35`).
   */
@@ -82,7 +80,6 @@ final case class FeaturesConfig(
     lookbackFast: Int = 9,
     lookbackSlow: Int = 21,
     tolerance: Double = 1e-6,
-    emaMaxLookback: Int = 256,
     timeStart: Int = 90000,
     timeEnd: Int = 155500
 )

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Bar formation and the shared window specs of the feature pipeline.
+/** Bar formation and the per-series window spec of the feature pipeline.
   *
   * The reference receives already-formed bars from its host (one
   * `OnBarUpdate` callback per closed bar, `StrategyAnalyzerExporter.cs:
@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * that yields multi-event bars and enough bars per series for the 20-bar
   * warm-up (SURVEY.md §2.4 grain adaptation).
   *
-  * Scale note: the groupBy shuffles once on (user_id, day) — embarrassingly
-  * parallel across series×days at 100 TB; AQE handles per-series skew.
+  * Scale note: the groupBy combines map-side, then shuffles once. Alone it
+  * hashes on (user_id, day); under a per-series window it hashes on user_id,
+  * the window's key (`functions.ClusteredAggregate`). AQE handles
+  * per-series skew.
   */
 object BarOps {
 
@@ -42,23 +44,11 @@ object BarOps {
       )
   }
 
-  /** Per-series bar ordering — one hash exchange on user_id, reused by
-    * every window below (they share partitioning + ordering, so Catalyst
-    * plans a single Exchange + Sort for the whole feature stage).
+  /** Per-series bar ordering. The feature pipeline evaluates `row_number`
+    * and its `graft_trailing` running-frame aggregate over this spec in one
+    * WindowExec, which reuses the day-bar aggregate's hash exchange on
+    * user_id (`functions.ClusteredAggregate`): one Exchange + Sort for the
+    * whole feature stage.
     */
   def wSeries: WindowSpec = Window.partitionBy("user_id").orderBy("day")
-
-  /** Capped EMA fold frame (legacy composed form; the pipeline now uses
-    * the uncapped running `graft_ema_run` aggregate) — the analog of the
-    * host's MaximumBarsLookBack=256 (`StrategyAnalyzerExporter.cs:79`).
-    */
-  def wEma(maxLookback: Int): WindowSpec =
-    wSeries.rowsBetween(-(maxLookback - 1), 0)
-
-  /** Trailing feature buffer frame — capacity barsRequiredToTrade+1 = 21
-    * rows, mirroring the reference ring buffers (`FeaturesBarService.cs:
-    * 22-26`, `CircularBuffer.cs:30-37`).
-    */
-  def wBuf(barsRequired: Int): WindowSpec =
-    wSeries.rowsBetween(-barsRequired, 0)
 }

@@ -81,7 +81,7 @@ object BucketedJoin {
         ) prev
         else {
           val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-          val base = java.nio.file.Files.createTempDirectory("graft_s08_").toAbsolutePath.toString
+          val base = Scratch.scratchDir("graft_s08_").toString
           val liN = s"li_b_$suffix"
           val ordN = s"o_b_$suffix"
           Tables

@@ -34,7 +34,7 @@ object DynamicPruning {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val out = java.nio.file.Files.createTempDirectory("graft_s19_").toAbsolutePath.toString
+        val out = Scratch.scratchDir("graft_s19_").toString
         Tables
           .events(spark, d)
           .withColumn("day", TimeCodec.dayInt(col("ts")))

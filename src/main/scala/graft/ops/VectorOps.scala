@@ -36,17 +36,6 @@ object VectorOps {
   def dot(a: Column, b: Column): Column =
     call_function("graft_dotf", a, b)
 
-  /** Composed HOF form of dot — parity reference for the codegen'd
-    * `graft_dotf` (FoldExpressions.DotF).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    Folds.sumZ(
-      transform(
-        sequence(lit(1), size(a)),
-        i => element_at(a, i).cast("double") * element_at(b, i).cast("double")
-      )
-    )
-
   /** Cosine similarity dot/(|a||b|) with the same fold discipline. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))

@@ -1,14 +1,16 @@
 package graft.oracle
 
 /** DuckDB oracle SQL fragments that mirror the engine's FP-deterministic
-  * folds (graft.ops.Folds) operation-for-operation, so both engines produce
+  * folds (functions.FeatureKernel, functions.FoldExpressions)
+  * operation-for-operation, so both engines produce
   * bit-identical doubles (SURVEY.md §2.3 determinism conventions).
   *
   * Conventions used in every fragment:
   *   - double literals in `1e0` scientific form (DuckDB parses `1.0` as
   *     DECIMAL, whose arithmetic would diverge from IEEE doubles);
-  *   - seed-first fold  = `list_reduce(l, λ)`            ↔ Folds.foldLR;
-  *   - zero-seeded fold = `list_reduce(list_prepend(s,l), λ)` ↔ Folds.foldZ
+  *   - seed-first fold  = `list_reduce(l, λ)`            ↔ the EMA recurrence;
+  *   - zero-seeded fold = `list_reduce(list_prepend(s,l), λ)` ↔ a
+  *     zero-seeded left-to-right loop (`functions.FeatureKernel`)
   *     (also empty-safe: DuckDB's list_reduce errors on empty lists);
   *   - integer outputs CAST to BIGINT (Spark LongType everywhere).
   */
@@ -28,11 +30,11 @@ object OracleSql {
   def timeInt(ts: String): String =
     s"CAST(hour($ts)*10000 + minute($ts)*100 + second($ts) AS BIGINT)"
 
-  /** Order-deterministic sum ↔ Folds.sumZ */
+  /** Order-deterministic sum: `((0 + x1) + x2) + …` */
   def sumZ(l: String): String =
     s"list_reduce(list_prepend(0e0, $l), (a, b) -> a + b)"
 
-  /** EMA seed-first fold ↔ Folds.emaLR. k spelled as a double division so
+  /** EMA seed-first fold ↔ FeatureKernel.emaStep. k spelled as a double division so
     * both engines compute the identical IEEE constant.
     */
   def ema(l: String, period: Int): String = {
@@ -40,7 +42,7 @@ object OracleSql {
     s"list_reduce($l, (acc, x) -> acc * (1e0 - 2e0/$p) + x * (2e0/$p))"
   }
 
-  /** Lag-1 autocorrelation ↔ Folds.autocorrLag1 (tol fixed at 1e-6). */
+  /** Lag-1 autocorrelation ↔ FeatureKernel.autocorr1 (tol fixed at 1e-6). */
   def autocorrLag1(l: String): String = {
     val mu = s"(${sumZ(l)} / len($l))"
     val num = sumZ(s"list_transform(generate_series(2, len($l)), i -> ($l[i] - $mu) * ($l[i-1] - $mu))")
@@ -152,7 +154,7 @@ object OracleSql {
 
   /** bars + EMA CTE chain ↔ Features.barsWithEma (final CTE named `ema`):
     * running EMA from partition start — unbounded frame, mirroring the
-    * graft_ema_run incremental aggregate's recurrence exactly.
+    * graft_trailing aggregate's incremental recurrence exactly.
     */
   val emaCte: String =
     s"""$barsCte,
@@ -167,6 +169,8 @@ object OracleSql {
 
   /** Full enriched-pipeline CTE chain ↔ Features.enriched (final CTE named
     * `feat`; trailing-21 frame columns lma/lms/ma_first/wn + warm-up rn).
+    * The engine keeps this frame in graft_trailing's rings; the oracle
+    * recomputes it with a sliding frame.
     */
   val featCte: String =
     s"""$emaCte,

@@ -1,70 +1,65 @@
 package graft.pipeline
 
 import graft.model.FeaturesConfig
-import graft.ops.{BarOps, FeatureOps, Folds}
+import graft.ops.{BarOps, FeatureOps}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The flagship feature pipeline — the Spark-native re-expression of the
   * reference's per-bar dataflow (`OnBarUpdate` → `FeaturesBarService` →
   * `FeaturesBarCreator`, SURVEY.md §3.2):
   *
-  *   events → day bars (O1/O2) → EMA9/EMA21 (O7) → trailing-21 feature
-  *   windows (O5/O6) → 7 `F_*` features (O8-O13) → warm-up filter (O3) →
-  *   14-column ordinal-sorted output (O20 schema discipline).
+  *   events → day bars (O1/O2) → one running window pass: EMA9/EMA21 (O7)
+  *   and the trailing-21 buffers (O5/O6) → 7 `F_*` features (O8-O13) →
+  *   warm-up filter (O3) → 14-column ordinal-sorted output (O20 schema
+  *   discipline).
   *
-  * One declarative plan: Catalyst prunes the parquet scan to the three used
-  * columns, the groupBy and all window stages share a single hash exchange
-  * lineage on user_id, and every feature expression is whole-stage
-  * codegen'd except the two fold aggregates (higher-order functions).
+  * One declarative plan and one shuffle: Catalyst prunes the parquet scan
+  * to the three used columns; the day-bar aggregate combines map-side and
+  * its final half rides the window's hash exchange on user_id
+  * (`functions.ClusteredAggregate`); `row_number` and the `graft_trailing`
+  * running-frame aggregate share one WindowExec — the reference's single
+  * step per closed bar (`FeaturesBarService.cs:22-55`); every feature
+  * expression above it is whole-stage codegen'd.
   */
 object Features {
 
-  /** Bars + both EMAs. EMA is computed over the per-series bar stream from
-    * partition start (capped fold frame), not day-reset — matching the
-    * reference, whose EMA indicators are attached to the raw series
-    * (`StrategyAnalyzerExporter.cs:138-139`, deviation note SURVEY.md
-    * §2.4.3).
+  /** Bars, both EMAs, the warm-up row number and the `graft_trailing`
+    * struct `run`: the one window pass every output below projects. The
+    * EMAs run from partition start, not day-reset — like the reference's
+    * indicators on the raw series (`StrategyAnalyzerExporter.cs:138-139`,
+    * deviation note SURVEY.md §2.4.3). Oracle mirror: `OracleSql.featCte`.
     */
-  def barsWithEma(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame = {
-    // Running EMA from partition start via the graft_ema_run aggregate —
-    // O(1) state per row over an incremental running frame, no per-row
-    // array materialization, and NT-faithful (the reference's EMA
-    // indicators run over the whole loaded series with no lookback cap,
-    // StrategyAnalyzerExporter.cs:138-139). Oracle mirror: unbounded
-    // list(close) + list_reduce — bit-identical recurrence.
-    val wRun = BarOps.wSeries.rowsBetween(Long.MinValue, 0)
-    BarOps
-      .dayBars(events)
-      .withColumn("ema_fast", call_function("graft_ema_run", col("close"), lit(cfg.lookbackFast)).over(wRun))
-      .withColumn("ema_slow", call_function("graft_ema_run", col("close"), lit(cfg.lookbackSlow)).over(wRun))
+  private def running(events: DataFrame, cfg: FeaturesConfig): DataFrame = {
+    val bars = BarOps.dayBars(events)
+    val run = call_function("graft_trailing", col("close"), lit(cfg.lookbackFast), lit(cfg.lookbackSlow),
+      lit(cfg.barsRequiredToTrade + 1), lit(cfg.tolerance))
+    val wRun = BarOps.wSeries.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    bars
+      .select(col("*"), run.over(wRun).as("run"), row_number().over(BarOps.wSeries).as("rn"))
+      .select(bars.columns.map(col).toIndexedSeq ++
+        Seq(col("run.ema_fast").as("ema_fast"), col("run.ema_slow").as("ema_slow"), col("rn"), col("run")): _*)
   }
+
+  /** Bars + both EMAs. */
+  def barsWithEma(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame =
+    running(events, cfg).drop("rn", "run")
 
   /** Full enriched frame: every bar column, both EMAs, all seven features,
     * and the warm-up row number. Downstream queries filter/project.
     */
   def enriched(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame = {
     val tol = cfg.tolerance
-    val wb = BarOps.wBuf(cfg.barsRequiredToTrade)
-    val lFast = collect_list(col("ema_fast")).over(wb)
-    val lSlow = collect_list(col("ema_slow")).over(wb)
-    barsWithEma(events, cfg)
-      .withColumn("rn", row_number().over(BarOps.wSeries))
+    running(events, cfg)
       .withColumn("f_clv", FeatureOps.clv(col("close"), col("high"), col("low"), tol))
       .withColumn("f_olv", FeatureOps.olv(col("open"), col("high"), col("low"), tol))
       .withColumn("f_ma_dist", FeatureOps.maDistance(col("close"), col("ema_fast"), tol))
       .withColumn("f_ma_dist_slow", FeatureOps.maDistance(col("close"), col("ema_slow"), tol))
-      .withColumn(
-        "f_ma_slope",
-        FeatureOps.slopePct(
-          first(col("ema_fast")).over(wb),
-          col("ema_fast"),
-          count(lit(1)).over(wb),
-          tol
-        )
-      )
-      .withColumn("f_ma_ac", Folds.autocorrLag1(lFast, tol))
-      .withColumn("f_ma_ac_slow", Folds.autocorrLag1(lSlow, tol))
+      .withColumn("f_ma_slope", FeatureOps.slopePct(col("run.ma_first"), col("ema_fast"), col("run.wn"), tol))
+      .withColumn("f_ma_ac", col("run.ac_fast"))
+      .withColumn("f_ma_ac_slow", col("run.ac_slow"))
+      .drop("run")
   }
 
   /** The `FeaturesBar` output in the reference's dynamic-schema column

@@ -178,11 +178,12 @@ object BarQueries {
       Some(s"""WITH $featCte SELECT user_id, day, floor((${autocorrLag1("lma")}) * 1e6 + 5e-1) / 1e6 AS ac1
         FROM feat ORDER BY user_id, day""")
     ),
-    // O15: window min/max over the trailing buffer (CircularBuffer.cs:175-216).
+    // O15: window min/max over the trailing buffer of barsRequiredToTrade+1
+    // bars (CircularBuffer.cs:30-37,175-216).
     Q(
       "q13_window_minmax",
       (s, dir) => {
-        val wb = BarOps.wBuf(cfg.barsRequiredToTrade)
+        val wb = BarOps.wSeries.rowsBetween(-cfg.barsRequiredToTrade, 0)
         BarOps
           .dayBars(Tables.events(s, dir))
           .select(
@@ -290,24 +291,18 @@ object BarQueries {
       Some(s"""WITH $featCte SELECT $featuresSelect FROM feat
         WHERE rn >= ${cfg.barsRequiredToTrade} ORDER BY user_id, day""")
     ),
-    // O7 (NT-faithful variant): running EMA from partition start via the
-    // graft_ema_run TypedImperativeAggregate over an unbounded running
-    // frame — O(1) state per row instead of the capped collect_list+fold
-    // (the reference's own incremental recurrence,
-    // StrategyAnalyzerExporter.cs:138-139).
+    // O7 (NT-faithful variant): running EMA from partition start, read from
+    // the pipeline's graft_trailing running-frame aggregate — O(1) state per
+    // row (the reference's own incremental recurrence,
+    // StrategyAnalyzerExporter.cs:138-139); the oracle recomputes it from
+    // the unbounded list of closes.
     Q(
       "q42_ema_running",
-      (s, dir) => {
-        val wRun = BarOps.wSeries.rowsBetween(Long.MinValue, 0)
-        BarOps
-          .dayBars(Tables.events(s, dir))
-          .select(
-            col("user_id"),
-            col("day"),
-            FeatureOps.r6(call_function("graft_ema_run", col("close"), lit(9)).over(wRun)).as("ema_run")
-          )
-          .orderBy("user_id", "day")
-      },
+      (s, dir) =>
+        Features
+          .barsWithEma(Tables.events(s, dir), cfg)
+          .select(col("user_id"), col("day"), FeatureOps.r6(col("ema_fast")).as("ema_run"))
+          .orderBy("user_id", "day"),
       Some(s"""WITH $barsCte,
         framed AS (
           SELECT user_id, day, list(close) OVER wr AS lc FROM bars

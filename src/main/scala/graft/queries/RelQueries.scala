@@ -4865,8 +4865,7 @@ object RelQueries {
         val (to, tc) = (s"graft_q209_orders_$tag", s"graft_q209_cust_$tag")
         if (prev != null && s.catalog.tableExists(to) && !s.sparkContext.isStopped) prev
         else {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q209_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q209_").toString
           s.sql(s"DROP TABLE IF EXISTS $to")
           s.sql(s"DROP TABLE IF EXISTS $tc")
           Tables.orders(s, dir)

@@ -44,28 +44,29 @@ object StreamDemos {
       "s01_duckdb_sink",
       (s, dir) => {
         import s.implicits._
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_s01_")
-          .toAbsolutePath
-          .toString
-        val df = Features.featuresFull(Tables.events(s, dir), cfg, ordered = false)
-        val (ddl, _) = DuckDbSink.write(df, "Features", out)
-        val exported = s.read.parquet(out) // float32, ordinal column order
-        val facts = DuckDbLive.withConnection(s"$out/features.duckdb") { c =>
-          DuckDbLive.execute(c, ddl)
-          DuckDbLive.appendAll(c, "Features", exported, commitEvery = 500)
-          DuckDbLive
-            .queryRow(
-              c,
-              """SELECT count(*), count(DISTINCT user_id), min("Day"), max("Day"),
-                |CAST(sum("Time") AS BIGINT),
-                |count(CASE WHEN "Close" > "Open" THEN 1 END)
-                |FROM "Features"""".stripMargin
-            )
-            .map(_.asInstanceOf[Number].longValue)
-        }
-        Seq((ddl, true, facts(0), facts(1), facts(2), facts(3), facts(4), facts(5)))
-          .toDF("ddl", "live_appender", "n_rows", "n_users", "min_day", "max_day", "sum_time", "n_up")
+        // the result is a local frame, so the staging goes with the call
+        val staging = java.nio.file.Files.createTempDirectory("graft_s01_").toAbsolutePath
+        val out = staging.toString
+        try {
+          val df = Features.featuresFull(Tables.events(s, dir), cfg, ordered = false)
+          val (ddl, _) = DuckDbSink.write(df, "Features", out)
+          val exported = s.read.parquet(out) // float32, ordinal column order
+          val facts = DuckDbLive.withConnection(s"$out/features.duckdb") { c =>
+            DuckDbLive.execute(c, ddl)
+            DuckDbLive.appendAll(c, "Features", exported, commitEvery = 500)
+            DuckDbLive
+              .queryRow(
+                c,
+                """SELECT count(*), count(DISTINCT user_id), min("Day"), max("Day"),
+                  |CAST(sum("Time") AS BIGINT),
+                  |count(CASE WHEN "Close" > "Open" THEN 1 END)
+                  |FROM "Features"""".stripMargin
+              )
+              .map(_.asInstanceOf[Number].longValue)
+          }
+          Seq((ddl, true, facts(0), facts(1), facts(2), facts(3), facts(4), facts(5)))
+            .toDF("ddl", "live_appender", "n_rows", "n_users", "min_day", "max_day", "sum_time", "n_up")
+        } finally graft.ops.Scratch.deleteTree(staging)
       },
       Some(s"""WITH $featCte,
         f AS (SELECT $featuresSelect FROM feat WHERE rn >= ${cfg.barsRequiredToTrade})
@@ -91,7 +92,7 @@ object StreamDemos {
         val s = graft.streaming.StreamSessions.tuned(outer)
         import s.implicits._
         import org.apache.spark.sql.streaming.Trigger
-        val base = java.nio.file.Files.createTempDirectory("graft_s02_").toAbsolutePath
+        val base = graft.ops.Scratch.scratchDir("graft_s02_")
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // the staged multi-file replay gives one epoch per file — each
         // epoch is a transaction (append + checkpoint), the commit-cadence
@@ -311,7 +312,7 @@ object StreamDemos {
     Q(
       "s15_jsonl_export",
       (s, dir) => {
-        val out = java.nio.file.Files.createTempDirectory("graft_s15_").toAbsolutePath.toString
+        val out = graft.ops.Scratch.scratchDir("graft_s15_").toString
         val docs = Tables
           .documents(s, dir)
           .select("doc_id", "text", "lang", "source", "n_chars")
@@ -2094,8 +2095,7 @@ object StreamDemos {
         import s.implicits._
         import graft.sinks.DuckDbLive
         val out = s69Staged.computeIfAbsent(dir, _ => {
-          val o = java.nio.file.Files
-            .createTempDirectory("graft_s69_").toAbsolutePath.toString
+          val o = graft.ops.Scratch.scratchDir("graft_s69_").toString
           val df = Tables.orders(s, dir).select(
             col("o_orderkey").cast("long").as("k"),
             expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),

@@ -4158,8 +4158,7 @@ object SnapshotLog {
       val (files, topkRows, regRows) = q218Staged.computeIfAbsent(
         dir,
         _ => {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q218_tbl_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q218_tbl_").toString
           val out = s"$base/line"
           bigRel.repartition(col("g")).write.partitionBy("g").parquet(out)
           val bucketRe = "/g=(\\d+)/".r
@@ -4345,8 +4344,7 @@ object SnapshotLog {
       val (files, cmsRows) = q220Staged.computeIfAbsent(
         dir,
         _ => {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q220_tbl_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q220_tbl_").toString
           val fs = writeBucketed(spark, bigRel, s"$base/line", 0L to 3L, Nil)
           val pathOf: Map[Long, String] = fs.map(f => (f.g, f.path)).toMap
           // ONE stats job: per-(file, key) exact counts → the 4 hash
@@ -4473,8 +4471,7 @@ object SnapshotLog {
       val (fO, fC, fL, regRows, topkRows, cmsRows) = q222Staged.computeIfAbsent(
         dir,
         _ => {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q222_tbl_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q222_tbl_").toString
 
           /** ONE partitionBy write + ONE stats job: per-(file, column,
             * key) counts feed top-8 rows, register cells, count-min
@@ -4764,8 +4761,7 @@ object SnapshotLog {
       val (fP, fB, regRows) = q225Staged.computeIfAbsent(
         dir,
         _ => {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q225_tbl_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q225_tbl_").toString
 
           /** ONE partitionBy write + ONE stats job (the q222 stage
             * discipline): per-(file, column, key-string) counts feed
@@ -5042,8 +5038,7 @@ object SnapshotLog {
       val (fB, fP, topkRows, regRows, cmsRows) = q226Staged.computeIfAbsent(
         dir,
         _ => {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q226_tbl_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q226_tbl_").toString
           val bucketRe = "/g=(\\d+)/".r
           def listByG(out: String, n: Int): Map[Long, String] = {
             val byG = new java.io.File(out)
@@ -6337,8 +6332,7 @@ object SnapshotLog {
       val (fO, fC, fL, regsAll) = q212Staged.computeIfAbsent(
         dir,
         _ => {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_q212_tbl_").toAbsolutePath.toString
+          val base = graft.ops.Scratch.scratchDir("graft_q212_tbl_").toString
 
           /** ONE partitionBy write + ONE stats job per relation: the
             * stats job stacks every key column (explode of (name,
@@ -6658,8 +6652,7 @@ object SnapshotLog {
               s"${java.lang.Integer.toUnsignedString(dir.hashCode)}_${dir.length}"
             val names = (s"graft_s67_o8_$tag", s"graft_s67_c8_$tag",
               s"graft_s67_o16_$tag", s"graft_s67_c16_$tag")
-            val base = java.nio.file.Files
-              .createTempDirectory("graft_s67_tbl_").toAbsolutePath.toString
+            val base = graft.ops.Scratch.scratchDir("graft_s67_tbl_").toString
             Seq(names._1, names._2, names._3, names._4)
               .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
             ordersDf.write.bucketBy(8, "ck").sortBy("ck")
@@ -6768,8 +6761,7 @@ object SnapshotLog {
               s"${java.lang.Integer.toUnsignedString(dir.hashCode)}_${dir.length}"
             val ns = Seq(8L, 16L, 32L).flatMap(b =>
               Seq(s"graft_s72_o${b}_$tag", s"graft_s72_c${b}_$tag"))
-            val base = java.nio.file.Files
-              .createTempDirectory("graft_s72_tbl_").toAbsolutePath.toString
+            val base = graft.ops.Scratch.scratchDir("graft_s72_tbl_").toString
             ns.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
             ordersDf.write.bucketBy(8, "ck").sortBy("ck")
               .option("path", s"$base/o8").saveAsTable(ns(0))

@@ -27,7 +27,7 @@ object StreamAssign {
     stageCache.computeIfAbsent(
       dir,
       d => {
-        val base = java.nio.file.Files.createTempDirectory("graft_s14_").toAbsolutePath.toString
+        val base = graft.ops.Scratch.scratchDir("graft_s14_").toString
         val e = spark.read.parquet(s"$d/embeddings.parquet")
         def writeOne(df: DataFrame, out: String, name: String, mtime: Long): Unit = {
           df.coalesce(1).write.mode("overwrite").parquet(out)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.FeatureKernel
 import graft.model.{FeaturesConfig, FeaturesRow}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -7,13 +8,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Stateful streaming feature pipeline — the `flatMapGroupsWithState`
   * re-expression of the reference's per-bar service
   * (`FeaturesBarService.cs:22-55` + ring buffers `CircularBuffer.cs:
-  * 30-52`): state per series holds the open day-bar plus bounded buffers
-  * (≤256 closes for the capped EMA fold, ≤21 EMAs for the trailing
-  * feature frame), exactly the reference's bounded-memory design.
+  * 30-52`): state per series holds the open day-bar, the two running
+  * EMAs and two ≤21-EMA buffers for the trailing feature frame, exactly
+  * the reference's bounded-memory design.
   *
-  * Every arithmetic step replicates the batch pipeline's Catalyst
-  * expressions operation-for-operation (same left-to-right folds, same
-  * guard order, same rounding), so the streaming output is bit-identical
+  * The EMA step and the autocorrelation loop are the batch aggregate's
+  * own (`functions.FeatureKernel`); the scalar features replicate the
+  * batch Catalyst expressions operation-for-operation (same guard order,
+  * same rounding), so the streaming output is bit-identical
   * to `pipeline.Features.featuresFull` — and therefore to the DuckDB
   * oracle (the driver checks s04 against the same SQL as q18).
   *
@@ -50,23 +52,8 @@ object StreamFeatures {
   private val empty =
     SeriesState(0L, 0, 0, 0, 0, 0, 0, 0.0, 0.0, emaInit = false, Vector.empty, Vector.empty, 0)
 
-  // ---- exact mirrors of the batch Column expressions (ops.Folds /
-  // ops.FeatureOps) — identical operation order, hence identical doubles.
-
-  /** One running-EMA step — the exact update of functions.EmaRunning. */
-  private def emaStep(prev: Double, init: Boolean, x: Double, period: Int): Double = {
-    val k = 2.0 / (period + 1.0)
-    if (!init) x else prev * (1.0 - k) + x * k
-  }
-
-  private def autocorr1(xs: Seq[Double], tol: Double): Double = {
-    val n = xs.length
-    if (n <= 1) return 0.0
-    val mu = xs.foldLeft(0.0)(_ + _) / n
-    val num = (1 until n).map(i => (xs(i) - mu) * (xs(i - 1) - mu)).foldLeft(0.0)(_ + _)
-    val den = xs.map(x => (x - mu) * (x - mu)).foldLeft(0.0)(_ + _)
-    if (math.abs(den) < tol) 0.0 else num / den
-  }
+  // ---- exact mirrors of the batch Column expressions (ops.FeatureOps) —
+  // identical operation order, hence identical doubles.
 
   private def maDist(close: Double, ma: Double, tol: Double): Double =
     if (ma.isNaN || close.isNaN || ma.isInfinite || close.isInfinite || math.abs(ma) < tol) 0.0
@@ -101,8 +88,11 @@ object StreamFeatures {
       st: SeriesState,
       cfg: FeaturesConfig
   ): (SeriesState, Option[FeaturesRow]) = {
-    val ef = emaStep(st.runFast, st.emaInit, st.close, cfg.lookbackFast)
-    val es = emaStep(st.runSlow, st.emaInit, st.close, cfg.lookbackSlow)
+    def ema(prev: Double, period: Int) =
+      if (st.emaInit) FeatureKernel.emaStep(prev, st.close, FeatureKernel.emaK(period)) else st.close
+    def autocorr1(buf: Seq[Double]) = FeatureKernel.autocorr1(buf.toArray, 0, buf.length, cfg.tolerance)
+    val ef = ema(st.runFast, cfg.lookbackFast)
+    val es = ema(st.runSlow, cfg.lookbackSlow)
     val bufF = (st.emaF :+ ef).takeRight(cfg.barsRequiredToTrade + 1)
     val bufS = (st.emaS :+ es).takeRight(cfg.barsRequiredToTrade + 1)
     val n = st.barCount + 1
@@ -114,10 +104,10 @@ object StreamFeatures {
             Close = st.close,
             Day = st.curDay,
             F_CloseLocationValue = r6(clv(st.close, st.high, st.low, cfg.tolerance)),
-            F_MovingAverageAutocorrelation = r6(autocorr1(bufF, cfg.tolerance)),
+            F_MovingAverageAutocorrelation = r6(autocorr1(bufF)),
             F_MovingAverageDistance = r6(maDist(st.close, ef, cfg.tolerance)),
             F_MovingAverageSlope = r6(slopePct(bufF.head, ef, bufF.length, cfg.tolerance)),
-            F_MovingAverageSlowAutocorrelation = r6(autocorr1(bufS, cfg.tolerance)),
+            F_MovingAverageSlowAutocorrelation = r6(autocorr1(bufS)),
             F_MovingAverageSlowDistance = r6(maDist(st.close, es, cfg.tolerance)),
             F_OpenLocationValue = r6(olv(st.open, st.high, st.low, cfg.tolerance)),
             High = st.high,

@@ -30,7 +30,7 @@ object StreamHll {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s36_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s36_")
     // epoch -> (bucket -> max rank): per-epoch register partials
     val partials =
       new java.util.concurrent.ConcurrentHashMap[Long, Map[Long, Long]]()
@@ -112,7 +112,7 @@ object StreamHll {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s70_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s70_")
 
     val dbFile = s"$base/stats.duckdb"
     SnapshotLog.initColNdv(dbFile)

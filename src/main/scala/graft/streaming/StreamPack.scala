@@ -38,7 +38,7 @@ object StreamPack {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s37_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s37_")
     val outDir = s"$base/segments"
 
     // epoch -> (source -> tokens BEFORE this epoch): the carried state

@@ -82,7 +82,7 @@ object StreamQuality {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s59_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s59_")
 
     val results =
       new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long, Long, Long, Long)]()
@@ -179,7 +179,7 @@ object StreamQuality {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s66_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s66_")
 
     val results = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Long, Long, Long, Long, Long, Long, Long)]()
@@ -288,7 +288,7 @@ object StreamQuality {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s68_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s68_")
 
     val results = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long)]()

@@ -45,7 +45,7 @@ object StreamRecall {
     val s = StreamSessions.tuned(outer)
     val staged = StreamAssign.stageBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s38_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s38_")
     import s.implicits._
 
     // the fixed evaluation probes (q174's set): 20·dim floats of

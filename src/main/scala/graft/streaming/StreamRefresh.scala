@@ -59,7 +59,7 @@ object StreamRefresh {
     val s = StreamSessions.tuned(outer)
     val staged = StreamAssign.stageBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s34_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s34_")
 
     // initial codebook: trained pre-stream on the epoch-0 regime only
     // (seeds vec_id < K, Lloyd over vec_id ∈ [K, 250)) — the served

@@ -33,7 +33,7 @@ object StreamSketch {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageBatches(s, dir)
     val schema = s.read.parquet(s"$staged/0.parquet").schema
-    val base = java.nio.file.Files.createTempDirectory("graft_s33_").toAbsolutePath
+    val base = graft.ops.Scratch.scratchDir("graft_s33_")
     // epoch -> (bin -> count): per-epoch partial sketches. putIfAbsent
     // semantics via put-on-epoch-key keeps a retried epoch idempotent.
     val partials =

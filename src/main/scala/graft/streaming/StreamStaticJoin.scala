@@ -61,10 +61,7 @@ object StreamStaticJoin {
         col("value"),
         col("ts")
       )
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_s18_")
-      .toAbsolutePath
-      .toString
+    val out = graft.ops.Scratch.scratchDir("graft_s18_").toString
     val q = joined.writeStream
       .option("checkpointLocation", s"$out/ckpt")
       .foreachBatch { (b: DataFrame, _: Long) =>

@@ -45,7 +45,7 @@ object Watermarks {
     stageCache.computeIfAbsent(dir, d => stageBatchesUncached(spark, d))
 
   private def stageBatchesUncached(spark: SparkSession, dir: String): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_s07_").toAbsolutePath.toString
+    val base = graft.ops.Scratch.scratchDir("graft_s07_").toString
     val ev = Tables
       .events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -113,7 +113,7 @@ object Watermarks {
     dedupStageCache.computeIfAbsent(
       dir,
       d => {
-        val base = java.nio.file.Files.createTempDirectory("graft_s17_").toAbsolutePath.toString
+        val base = graft.ops.Scratch.scratchDir("graft_s17_").toString
         val ev = Tables
           .events(spark, d)
           .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -201,7 +201,7 @@ object Watermarks {
     docStageCache.computeIfAbsent(
       dir,
       d => {
-        val base = java.nio.file.Files.createTempDirectory("graft_s12_").toAbsolutePath.toString
+        val base = graft.ops.Scratch.scratchDir("graft_s12_").toString
         val docs = spark.read.parquet(s"$d/documents.parquet")
         def writeOne(df: DataFrame, out: String, name: String, mtime: Long): Unit = {
           df.coalesce(1).write.mode("overwrite").parquet(out)

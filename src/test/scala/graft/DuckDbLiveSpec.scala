@@ -154,23 +154,18 @@ class DuckDbLiveSpec extends AnyFunSuite {
     assert(n == 1L, "a rejected template must leave the table unchanged")
   }
 
-  test("a missing duckdb_jdbc jar fails each DuckDB-backed entry by name") {
-    // a child Verify run whose user.home is an empty dir finds no jar in
-    // any artifact cache; each entry must fail with the one named error
-    // from DuckDbLive.openConnection and write no result
-    val home = java.nio.file.Files.createTempDirectory("graft_nojar_home_")
-    val out = java.nio.file.Files.createTempDirectory("graft_nojar_out_")
-    val log = out.resolve("verify.log").toFile
+  /** Run `graft.Verify` at sf0.001 on `entries` in a child JVM on this
+    * JVM's class path and `--add-opens`, with extra `-D` properties; its
+    * combined output goes to `log`. Returns the exit code.
+    */
+  private def childVerify(props: Seq[String], out: java.nio.file.Path, log: java.io.File, entries: Seq[String]): Int = {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
     val addOpens = jvmArgs.zip(jvmArgs.drop(1)).flatMap {
       case ("--add-opens", v) => Seq("--add-opens", v)
       case _ => Nil
     } ++ jvmArgs.filter(_.startsWith("--add-opens="))
-    val entries = Seq("s39_snapshot_commits", "s01_duckdb_sink")
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq(
-      "-Xmx1g",
-      s"-Duser.home=$home",
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq("-Xmx1g") ++ props ++ Seq(
       "-cp", sys.props("java.class.path"),
       "graft.Verify", "/root/testdata/sf0.001", out.toString) ++ entries
     val proc = new ProcessBuilder(cmd: _*)
@@ -178,13 +173,47 @@ class DuckDbLiveSpec extends AnyFunSuite {
       .redirectOutput(log)
       .start()
     assert(proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES), "child Verify timed out")
+    proc.exitValue
+  }
+
+  test("a missing duckdb_jdbc jar fails each DuckDB-backed entry by name") {
+    // a child Verify run whose user.home is an empty dir finds no jar in
+    // any artifact cache; each entry must fail with the one named error
+    // from DuckDbLive.openConnection and write no result
+    val home = java.nio.file.Files.createTempDirectory("graft_nojar_home_")
+    val out = java.nio.file.Files.createTempDirectory("graft_nojar_out_")
+    val log = out.resolve("verify.log").toFile
+    val entries = Seq("s39_snapshot_commits", "s01_duckdb_sink")
+    val rc = childVerify(Seq(s"-Duser.home=$home"), out, log, entries)
     val text = new String(java.nio.file.Files.readAllBytes(log.toPath))
-    assert(proc.exitValue == 0, text.takeRight(2000))
+    assert(rc == 0, text.takeRight(2000))
     entries.foreach { name =>
       assert(
         text.contains(s"[verify] $name failed: duckdb_jdbc not present in the local artifact cache"),
         s"$name must fail by name without the jar:\n${text.takeRight(2000)}")
       assert(!out.resolve(name).toFile.exists, s"$name must write no result dir")
+    }
+  }
+
+  test("staging entries leave no graft_* dir in the temp dir once the JVM exits") {
+    // s01 and s10 stage the features export and delete it when the call
+    // returns; q218 memoizes its staging for the JVM's lifetime and
+    // reclaims it at exit. A child Verify with its own java.io.tmpdir
+    // must leave that dir free of graft_* entries.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_leak_tmp_")
+    val out = java.nio.file.Files.createTempDirectory("graft_leak_out_")
+    val log = out.resolve("verify.log").toFile
+    val entries = Seq("s01_duckdb_sink", "s10_partitioned_export", "q218_skew_salt_decision")
+    try {
+      val rc = childVerify(Seq(s"-Djava.io.tmpdir=$tmp"), out, log, entries)
+      val text = new String(java.nio.file.Files.readAllBytes(log.toPath))
+      assert(rc == 0, text.takeRight(2000))
+      entries.foreach(name => assert(out.resolve(name).toFile.exists, s"$name wrote no result:\n${text.takeRight(2000)}"))
+      val left = Option(tmp.toFile.list()).toSeq.flatten.filter(_.startsWith("graft_")).sorted
+      assert(left.isEmpty, s"staging left behind: ${left.mkString(", ")}")
+    } finally {
+      graft.ops.Scratch.deleteTree(tmp)
+      graft.ops.Scratch.deleteTree(out)
     }
   }
 

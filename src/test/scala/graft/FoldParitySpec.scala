@@ -39,7 +39,7 @@ class FoldParitySpec extends AnyFunSuite {
     }
     val got = vecs
       .toDF("a", "b")
-      .select(VectorOps.dot(col("a"), col("b")), VectorOps.dotHof(col("a"), col("b")))
+      .select(VectorOps.dot(col("a"), col("b")), Folds.dotHof(col("a"), col("b")))
       .as[(Double, Double)]
       .collect()
     got.foreach { case (native, hof) => assert(native == hof) }

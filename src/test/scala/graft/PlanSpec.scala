@@ -39,8 +39,65 @@ class PlanSpec extends AnyFunSuite {
       }
     }
 
-  test("q18 flagship: exactly 3 exchanges (partial-agg, window lineage, final sort)") {
-    assert(count(plan("q18_features_full"), "Exchange") == 3)
+  test("q18 flagship: exactly 2 exchanges (user_id hash under the window, final sort)") {
+    val p = plan("q18_features_full")
+    assert(count(p, "Exchange") == 2)
+    assert(count(p, "Exchange hashpartitioning(user_id") == 1)
+    assert(count(p, "Window [") == 1, "one window pass: row_number + graft_trailing")
+    // day bars still combine map-side: the node under the hash exchange is
+    // the partial aggregate
+    val lines = p.linesIterator.toIndexedSeq
+    val ex = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+    assert(lines(ex + 1).contains("HashAggregate") && lines(ex + 1).contains("partial_"), lines(ex + 1))
+  }
+
+  test("a batch aggregate under a keyed window hashes on the window's keys only") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val agg = Seq((1L, 1L, 1.0), (1L, 2L, 2.0), (2L, 1L, 3.0), (2L, 2L, 4.0)).toDF("k", "b", "v")
+      .groupBy("k", "b").agg(sum("v").as("s"))
+    def hashes(df: org.apache.spark.sql.DataFrame) =
+      "hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(df.queryExecution.executedPlan.toString)
+        .map(_.group(1).replaceAll("#\\d+L?", "")).toSeq
+    val keyed = agg.withColumn("r", row_number().over(Window.partitionBy("k").orderBy("b")))
+    assert(hashes(keyed) == Seq("k, 4"), "one exchange, on the window's key")
+    assert(keyed.orderBy("k", "b").select("r").as[Int].collect().toSeq == Seq(1, 2, 1, 2))
+    // a window without partition keys leaves the aggregate its own exchange
+    val global = agg.withColumn("r", row_number().over(Window.orderBy("k", "b")))
+    assert(hashes(global) == Seq("k, b, 4"))
+  }
+
+  test("s03 streaming bar aggregate keeps its own two-key stateful exchange") {
+    // The batch strategy that plans a window's aggregate onto the window's
+    // exchange must leave a streaming aggregate alone: its state store
+    // pins the (user_id, window) partitioning. Read the micro-batch plan
+    // that s03 actually executed from the SQL execution events.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.physicalPlanDescription.contains("StateStoreSave") =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.streaming.StreamBars.runDayBars(spark, s"$dir/events.parquet")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!plans.isEmpty, "no micro-batch plan with a state store was observed")
+    val p = plans.peek()
+    val hashes = "hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(hashes.nonEmpty)
+    hashes.foreach { h =>
+      assert(h.contains("user_id") && h.contains("window"), s"stateful exchange keys: $h")
+    }
+    assert(count(p, "partial_") > 0, "partial aggregation stays map-side")
+    assert(!p.contains("Window ["))
   }
 
   test("q18 scan is pruned to the 3 used event columns") {
@@ -597,7 +654,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join"))
     assert(p.contains("TakeOrderedAndProject"))
     assert(p.contains("partial_count"), "bigram counts combine map-side")
-    assert(count(p, "Exchange hashpartitioning") == 3, "spread + (w1,w2) agg + w1 window")
+    assert(count(p, "Exchange hashpartitioning") == 2, "spread + (w1,w2) agg on the w1 window's exchange")
   }
 
   test("q127 FK audit: every parent key-set broadcasts, child tables never shuffle") {
@@ -1136,10 +1193,11 @@ class PlanSpec extends AnyFunSuite {
     // partition-total windows sit on ONE source-keyed exchange over the
     // (source, logit) CENSUS (docs collapsed first), and the threshold
     // rollup reuses that partitioning — no join anywhere, and exactly
-    // 4 exchanges total (doc logits, census, window lineage, final sort)
+    // 3 exchanges total (doc logits, the census on the windows' source
+    // exchange, final sort)
     val p = plan("q191_quality_topk_threshold")
     assert(count(p, "Join") == 0)
-    assert(count(p, "Exchange") == 4)
+    assert(count(p, "Exchange") == 3)
     assert(count(p, "Window") == 2)
   }
 

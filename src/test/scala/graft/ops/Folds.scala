@@ -3,13 +3,17 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** FP-deterministic left-to-right folds over array columns.
+/** FP-deterministic left-to-right folds over array columns — the Column
+  * forms of the engine's recurrences that the tests use as references.
   *
   * Every recurrence the engine computes (EMA, autocorrelation sums, rolling
-  * hashes) is expressed as an explicit left-to-right fold so that the DuckDB
-  * oracle can mirror the exact same operation order with `list_reduce` and
-  * produce bit-identical IEEE-754 doubles (SURVEY.md §2.3 determinism
-  * conventions).
+  * hashes) is an explicit left-to-right fold so that the DuckDB oracle can
+  * mirror the exact same operation order with `list_reduce` and produce
+  * bit-identical IEEE-754 doubles (SURVEY.md §2.3 determinism
+  * conventions). The engine itself runs them as native expressions
+  * (`functions.FoldExpressions`) and as the `graft_trailing` running-frame
+  * aggregate; the composed higher-order-function forms below are the
+  * parity references those replaced.
   *
   * Two fold shapes, each with an exact DuckDB mirror:
   *   - seed-first (`foldLR`): accumulator starts as the FIRST element,
@@ -94,4 +98,15 @@ object Folds {
     when(n <= 1, lit(0.0))
       .otherwise(when(abs(den) < lit(tol), lit(0.0)).otherwise(num / den))
   }
+
+  /** Composed HOF form of `VectorOps.dot` — parity reference for the
+    * codegen'd `graft_dotf` (FoldExpressions.DotF).
+    */
+  def dotHof(a: Column, b: Column): Column =
+    sumZ(
+      transform(
+        sequence(lit(1), size(a)),
+        i => element_at(a, i).cast("double") * element_at(b, i).cast("double")
+      )
+    )
 }
