@@ -18,7 +18,8 @@ object FeatureKernel {
   /** Lag-1 autocorrelation of `a(from until from + n)`: mean over n,
     * num = Σ_{i≥2}(x_i−μ)(x_{i−1}−μ), den = Σ(x_i−μ)², each a zero-seeded
     * left-to-right sum; 0.0 when n ≤ 1 or |den| < tol. The guard reads as
-    * `graft_autocorr1`'s generated code does, so a NaN den gives 0.0.
+    * the oracle's `CASE WHEN abs(den) < tol THEN 0` does, so a NaN den
+    * (a NaN in the window) gives NaN, not 0.0.
     */
   def autocorr1(a: Array[Double], from: Int, n: Int, tol: Double): Double = {
     if (n <= 1) return 0.0
@@ -33,6 +34,6 @@ object FeatureKernel {
     var den = 0.0
     i = from
     while (i < end) { val d = a(i) - mu; den = den + d * d; i += 1 }
-    if (math.abs(den) >= tol) num / den else 0.0
+    if (math.abs(den) < tol) 0.0 else num / den
   }
 }

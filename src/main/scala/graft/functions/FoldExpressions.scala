@@ -152,9 +152,7 @@ case class AutocorrLag1(left: Expression, right: Expression) extends BinaryExpre
             double $d = $a.getDouble($i) - $mu;
             $den = $den + $d * $d;
           }
-          if (java.lang.Math.abs($den) >= ${r.value}) {
-            ${ev.value} = $num / $den;
-          }
+          ${ev.value} = java.lang.Math.abs($den) < ${r.value} ? 0.0 : $num / $den;
         }
       }""")
   }

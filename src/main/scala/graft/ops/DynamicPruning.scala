@@ -53,7 +53,7 @@ object DynamicPruning {
     */
   def demo(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val facts = spark.read.parquet(stagedFacts(spark, dir))
+    val facts = Tables.parquet(spark, stagedFacts(spark, dir))
     val hotDays = Tables
       .events(spark, dir)
       .filter(col("event_type") === HotEventType && col("value") > HotValueMin)

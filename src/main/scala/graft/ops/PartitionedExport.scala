@@ -26,7 +26,7 @@ object PartitionedExport {
       val feats = Features.featuresFull(Tables.events(spark, dir), FeaturesConfig(), ordered = false)
       feats.write.partitionBy("Day").mode("overwrite").parquet(out)
 
-      val back = spark.read.parquet(out)
+      val back = Tables.parquet(spark, out)
       val days = back.select("Day").distinct().count()
       val total = back.count()
       // min over the written partition values — NOT over `feats`, which

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Test-table readers. All engine queries take a scale-factor directory and
   * read the driver-generated parquet tables (TESTDATA.md). Column pruning /
@@ -8,6 +10,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * just declare projections and filters.
   */
 object Tables {
+
+  /** The engine's one parquet reader: `spark.read.parquet(paths)` with
+    * the schema inference would find, read from one footer on the driver.
+    * Inference runs a one-task job (and ships the Hadoop conf in its
+    * closure) to read that same footer; here the footer is read in
+    * place, then Spark reads with it as the given schema. The file is
+    * the one `ParquetUtils.inferSchema` picks among the files Spark
+    * lists: a `_common_metadata`, else a `_metadata` summary, else the
+    * first data file by full path. Partition columns still come from
+    * Spark's partition discovery. Paths with no such file read through
+    * `spark.read.parquet`, so their error is Spark's own.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val files = FooterSchema.listedFiles(spark, paths).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    named(PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summaries(f.getPath.getName)))
+      .flatMap(FooterSchema.read(spark, _)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Every query path reads through here and the driver harness builds
     // its own SparkSession, so this is the engine's central hook: register
@@ -17,7 +44,7 @@ object Tables {
     // default would silently shift all day/time codes.
     graft.functions.GraftFunctions.register(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
 
   /** Normalize `events.ts` to Spark's TIMESTAMP type regardless of how the

@@ -47,19 +47,20 @@ object Features {
     running(events, cfg).drop("rn", "run")
 
   /** Full enriched frame: every bar column, both EMAs, all seven features,
-    * and the warm-up row number. Downstream queries filter/project.
+    * and the warm-up row number. Downstream queries filter/project. One
+    * `select`, so the analyzer runs over the plan once, not once per column.
     */
   def enriched(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame = {
     val tol = cfg.tolerance
-    running(events, cfg)
-      .withColumn("f_clv", FeatureOps.clv(col("close"), col("high"), col("low"), tol))
-      .withColumn("f_olv", FeatureOps.olv(col("open"), col("high"), col("low"), tol))
-      .withColumn("f_ma_dist", FeatureOps.maDistance(col("close"), col("ema_fast"), tol))
-      .withColumn("f_ma_dist_slow", FeatureOps.maDistance(col("close"), col("ema_slow"), tol))
-      .withColumn("f_ma_slope", FeatureOps.slopePct(col("run.ma_first"), col("ema_fast"), col("run.wn"), tol))
-      .withColumn("f_ma_ac", col("run.ac_fast"))
-      .withColumn("f_ma_ac_slow", col("run.ac_slow"))
-      .drop("run")
+    val r = running(events, cfg)
+    r.select(r.columns.filter(_ != "run").map(col).toIndexedSeq ++ Seq(
+      FeatureOps.clv(col("close"), col("high"), col("low"), tol).as("f_clv"),
+      FeatureOps.olv(col("open"), col("high"), col("low"), tol).as("f_olv"),
+      FeatureOps.maDistance(col("close"), col("ema_fast"), tol).as("f_ma_dist"),
+      FeatureOps.maDistance(col("close"), col("ema_slow"), tol).as("f_ma_dist_slow"),
+      FeatureOps.slopePct(col("run.ma_first"), col("ema_fast"), col("run.wn"), tol).as("f_ma_slope"),
+      col("run.ac_fast").as("f_ma_ac"),
+      col("run.ac_slow").as("f_ma_ac_slow")): _*)
   }
 
   /** The `FeaturesBar` output in the reference's dynamic-schema column

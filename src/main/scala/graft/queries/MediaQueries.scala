@@ -49,7 +49,7 @@ object MediaQueries {
           Tables.documentsSpread(s, dir),
           dir
         )
-        val media = s.read.parquet(staged).as[Media.MediaRow]
+        val media = Tables.parquet(s, staged).as[Media.MediaRow]
         // f0 = feature(0) re-derived from the integer facets: the float
         // vector IS hist_counts normalized (Media.normalize), so bin0 /
         // Σbins through the shared r6 convention surfaces the float facet
@@ -192,7 +192,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         val staged = Media.stageDecodable(Tables.documentsSpread(s, dir), dir)
-        val media = s.read.parquet(staged).as[Media.MediaRow]
+        val media = Tables.parquet(s, staged).as[Media.MediaRow]
         Media
           .extractFeatures(media.filter(col("kind") === "audio"))
           .toDF()
@@ -232,7 +232,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         val staged = Media.stageDecodable(Tables.documentsSpread(s, dir), dir)
-        val media = s.read.parquet(staged).as[Media.MediaRow]
+        val media = Tables.parquet(s, staged).as[Media.MediaRow]
         Media
           .extractFeatures(media.filter(col("kind") === "image"))
           .toDF()
@@ -305,7 +305,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         val staged = Media.stageDecodable(Tables.documentsSpread(s, dir), dir)
-        val media = s.read.parquet(staged).as[Media.MediaRow]
+        val media = Tables.parquet(s, staged).as[Media.MediaRow]
         Media
           .extractFeatures(media.filter(col("kind") === "video"))
           .toDF()
@@ -431,7 +431,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         val staged = Media.stageDecodable(Tables.documentsSpread(s, dir), dir)
-        val media = s.read.parquet(staged).as[Media.MediaRow]
+        val media = Tables.parquet(s, staged).as[Media.MediaRow]
         val feats = Media
           .extractFeatures(media.filter(col("kind") === "image"))
           .toDF()

@@ -50,10 +50,10 @@ object StreamDemos {
         try {
           val df = Features.featuresFull(Tables.events(s, dir), cfg, ordered = false)
           val (ddl, _) = DuckDbSink.write(df, "Features", out)
-          val exported = s.read.parquet(out) // float32, ordinal column order
+          val exported = Tables.parquet(s, out) // float32, ordinal column order
           val facts = DuckDbLive.withConnection(s"$out/features.duckdb") { c =>
             DuckDbLive.execute(c, ddl)
-            DuckDbLive.appendAll(c, "Features", exported, commitEvery = 500)
+            DuckDbLive.appendAll(c, "Features", exported)
             DuckDbLive
               .queryRow(
                 c,
@@ -98,7 +98,7 @@ object StreamDemos {
         // epoch is a transaction (append + checkpoint), the commit-cadence
         // analog of CommitEveryRows/CHECKPOINT
         val staged = graft.streaming.Watermarks.stageBatches(s, dir)
-        val schema = s.read.parquet(s"$staged/0.parquet").schema
+        val schema = Tables.parquet(s, s"$staged/0.parquet").schema
         val epochs = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
         val q = s.readStream
           .schema(schema)
@@ -118,7 +118,7 @@ object StreamDemos {
         // the sink of record is the parquet dir — read it back and require
         // the committed rows to equal the per-epoch counts (exactly-once
         // under AvailableNow with no retries)
-        val written = s.read.parquet(s"$base/out").count()
+        val written = Tables.parquet(s, s"$base/out").count()
         val reported = epochs.asScala.values.sum
         require(
           written == reported,
@@ -2118,10 +2118,9 @@ object StreamDemos {
             DuckDbLive.appendAll(
               c,
               "t_app",
-              s.read.parquet(s"$o/export").select(
+              Tables.parquet(s, s"$o/export").select(
                 col("k"), col("cents"), col("st"),
-                col("d").cast("string").as("d")),
-              commitEvery = 1000)
+                col("d").cast("string").as("d")))
             // path 2: DuckDB bulk-ingests the export — no driver hop
             DuckDbLive.execute(
               c,

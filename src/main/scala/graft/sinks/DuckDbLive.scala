@@ -293,6 +293,13 @@ object DuckDbLive {
     sb.toString
   }
 
+  /** Rows per appender flush: the reference's `CommitEveryRows`
+    * (`StrategyAnalyzerExporter.cs:114`, SURVEY O22). Under autocommit
+    * DuckDB runs each flush in its own transaction, so every flush is a
+    * commit; the flush dominates the appender's task time at 1,000.
+    */
+  val DefaultCommitEvery: Int = 10000
+
   /** Append rows through ONE native appender on `conn` — the shared core
     * of the driver-side (`appendAll`) and executor-side
     * (`appendPartitioned`) paths. Every setter is null-guarded: a null
@@ -305,7 +312,7 @@ object DuckDbLive {
       table: String,
       schema: StructType,
       rows: Iterator[Row],
-      commitEvery: Int = 1000
+      commitEvery: Int = DefaultCommitEvery
   ): Long = {
     val createAppender =
       conn.getClass.getMethod("createAppender", classOf[String], classOf[String])
@@ -399,7 +406,7 @@ object DuckDbLive {
     * doc); rows stream via `toLocalIterator`, so only one partition is
     * resident at a time. For the distributed form see `appendPartitioned`.
     */
-  def appendAll(conn: Connection, table: String, df: DataFrame, commitEvery: Int = 1000): Long = {
+  def appendAll(conn: Connection, table: String, df: DataFrame, commitEvery: Int = DefaultCommitEvery): Long = {
     import scala.jdk.CollectionConverters._
     appendRows(conn, table, df.schema, df.toLocalIterator().asScala, commitEvery)
   }
@@ -419,7 +426,7 @@ object DuckDbLive {
       df: DataFrame,
       dbDir: String,
       table: String,
-      commitEvery: Int = 1000
+      commitEvery: Int = DefaultCommitEvery
   ): Seq[String] = {
     val schema = df.schema
     val ddl = DuckDbSink.ddlFor(schema, table, useFloat32 = false)

@@ -37,7 +37,7 @@ object DuckDbUpsert {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val stream = Tables.normalizeEvents(
       spark.readStream
         .schema(schema)

@@ -406,7 +406,7 @@ object SnapshotLog {
     val data = dataFiles
       .groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (sq, fs) =>
-        spark.read.parquet(fs.map(_._1): _*)
+        Tables.parquet(spark, fs.map(_._1): _*)
           .withColumn("fseq", lit(sq))
           .withColumn("fpath", col("_metadata.file_path"))
           .withColumn("fpos", col("_metadata.row_index"))
@@ -418,7 +418,7 @@ object SnapshotLog {
       else data.as("f").join(
         eq.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (sq, fs) =>
-            spark.read.parquet(fs.map(_._1): _*).withColumn("dseq", lit(sq))
+            Tables.parquet(spark, fs.map(_._1): _*).withColumn("dseq", lit(sq))
           }
           .reduce(_ unionByName _)
           .as("dv"),
@@ -430,7 +430,7 @@ object SnapshotLog {
       else afterEq.as("f").join(
         pos.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (sq, fs) =>
-            spark.read.parquet(fs.map(_._1): _*).withColumn("pseq", lit(sq))
+            Tables.parquet(spark, fs.map(_._1): _*).withColumn("pseq", lit(sq))
           }
           .reduce(_ unionByName _)
           .as("pv"),
@@ -564,7 +564,7 @@ object SnapshotLog {
     if (sys.env.get("SPARK_GRAFT_VERIFY_COUNTS").contains("1")) {
       // debug cross-check for retry/speculation environments: the
       // observed counts must equal a committed-output census
-      val actual = spark.read.parquet(dir)
+      val actual = Tables.parquet(spark, dir)
         .groupBy(col("_metadata.file_path").as("fp"))
         .agg(count(lit(1)).as("c"))
         .collect() // one row per part file — manifest-scale metadata
@@ -623,7 +623,7 @@ object SnapshotLog {
       // both snapshots' censuses fused into ONE tagged union job (the
       // s49 r20 pattern, guide §2.4; per-snapshot values unchanged)
       val census: Map[Long, (Long, Long)] = Seq(1L, 2L)
-        .map(snap => spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
           .select(lit(snap).as("snap"), col("cents")))
         .reduce(_ unionByName _)
         .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
@@ -674,7 +674,7 @@ object SnapshotLog {
       initLog(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
-      val schema = s.read.parquet(s"$staged/0.parquet").schema
+      val schema = Tables.parquet(s, s"$staged/0.parquet").schema
       val commits = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
       val q = s.readStream
         .schema(schema)
@@ -710,7 +710,7 @@ object SnapshotLog {
       // the three snapshots' censuses fused into ONE tagged union job
       // (the s49 r20 pattern, guide §2.4; per-snapshot values unchanged)
       val census: Map[Long, (Long, Long)] = Seq(1L, 2L, 3L)
-        .map(snap => spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
           .select(lit(snap).as("snap"), col("cents")))
         .reduce(_ unionByName _)
         .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
@@ -774,7 +774,7 @@ object SnapshotLog {
       // truth for what the table contains, not the raw fixture)
       val built = IncrementalRefresh.applyRefresh(
         dbFile, 1L,
-        partials(spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)))
+        partials(Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)))
 
       val files2 = writeCounted(spark, o.filter(!(col("d") < lit(Cutoff).cast("date"))).drop("d"), s"$base/b2", 3)
       commit(dbFile, 1L, 2L, files1 ++ files2)
@@ -782,13 +782,13 @@ object SnapshotLog {
       // the refresh delta = manifest(2) \ manifest(1): log metadata only
       val added = manifest(dbFile, 2L).map(_._1)
         .filterNot(manifest(dbFile, 1L).map(_._1).toSet)
-      val addedPartials = partials(spark.read.parquet(added: _*))
+      val addedPartials = partials(Tables.parquet(spark, added: _*))
       val refreshed = IncrementalRefresh.applyRefresh(dbFile, 2L, addedPartials)
       // injected re-delivery of the same refresh batch: ledger rejects
       val redelivered = IncrementalRefresh.applyRefresh(dbFile, 2L, addedPartials)
 
       // per-bucket from-scratch equality over snapshot 2's full manifest
-      val scratch = spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+      val scratch = Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
         .withColumn("fp",
           expr("""(o_orderkey * 1000003 + cents * 31 + o_custkey) % 1000000007"""))
         .groupBy("bucket")
@@ -870,7 +870,7 @@ object SnapshotLog {
       // snapshot 3: COMPACTION — q131's algebra run against the log:
       // read exactly what snapshot 2's manifest lists, rewrite as 2 new
       // files, commit a manifest that references ONLY the new files
-      val files3 = writeCounted(spark, spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*), s"$base/b3", 2)
+      val files3 = writeCounted(spark, Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*), s"$base/b3", 2)
       val c3 = commit(dbFile, 2L, 3L, files3)
 
       // ORPHANS: a loser of the commit race has already written its data
@@ -891,7 +891,7 @@ object SnapshotLog {
       // census snapshot 3 AFTER the deletions — the proof GC kept every
       // live file and compaction preserved every row
       val mf3 = manifest(dbFile, 3L)
-      val agg = spark.read.parquet(mf3.map(_._1): _*)
+      val agg = Tables.parquet(spark, mf3.map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
       val gcSafe = c1 && c2 && c3 && !stale &&
         expired == Seq(1L, 2L) &&
@@ -985,7 +985,7 @@ object SnapshotLog {
       val carried = manifest(dbFile, 1L).filterNot(f => affected.contains(f._1))
 
       // COW rewrite of exactly the affected file(s)
-      val newFiles = writeCounted(spark, spark.read.parquet(affected: _*)
+      val newFiles = writeCounted(spark, Tables.parquet(spark, affected: _*)
         .filter(!delPred)
         .withColumn("cents",
           when(updPred, col("cents") + 1000L).otherwise(col("cents")))
@@ -997,9 +997,9 @@ object SnapshotLog {
       // snapshot 1 — both read after the merge committed; independent
       // scans, overlapped (guide §2.6, r21)
       val (post, pre) = graft.ops.Par.run2(
-        () => spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head(),
-        () => spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+        () => Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head())
       val mergeOk = c1 && c2 &&
         affected.size == 1 && carried.size == 3 &&
@@ -1075,7 +1075,7 @@ object SnapshotLog {
       commit(dbFile, 0L, 1L, baseFiles)
       val affected = prunePaths(dbFile, 1L, Seq(2L))
       val carried = manifest(dbFile, 1L).filterNot(f => affected.contains(f._1))
-      val newFiles = writeCounted(spark, spark.read.parquet(affected: _*)
+      val newFiles = writeCounted(spark, Tables.parquet(spark, affected: _*)
         .filter(!delPred)
         .withColumn("cents",
           when(updPred, col("cents") + 1000L).otherwise(col("cents")))
@@ -1088,9 +1088,9 @@ object SnapshotLog {
       val mf2 = manifest(dbFile, 2L).map(_._1).toSet
       val removed = (mf1 -- mf2).toSeq.sorted
       val added = (mf2 -- mf1).toSeq.sorted
-      val pre = spark.read.parquet(removed: _*).select(
+      val pre = Tables.parquet(spark, removed: _*).select(
         col("k").as("rk"), col("cents").as("pre_cents"))
-      val post = spark.read.parquet(added: _*).select(
+      val post = Tables.parquet(spark, added: _*).select(
         col("k").as("ak"), col("cents").as("post_cents"))
       val changes = pre
         .join(post, col("rk") === col("ak"), "full_outer")
@@ -1178,14 +1178,12 @@ object SnapshotLog {
       val cA = commit(dbFile, 1L, 2L, files1 ++ filesBad, ref = Some("wap"))
 
       // audit the staged snapshot through the log; count bad rows
-      def audit(snap: Long): Long = spark.read
-        .parquet(manifest(dbFile, snap).map(_._1): _*)
+      def audit(snap: Long): Long = Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
         .filter(col("cents") < 0L).count()
       val nBadStaged = audit(refSnapshot(dbFile, "wap"))
 
       // isolation: main readers, DURING staging, see snapshot 1 exactly
-      val mainStaged = spark.read
-        .parquet(manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val mainStaged = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       // staged commit B: the fixed append; audit passes; publish
@@ -1197,8 +1195,7 @@ object SnapshotLog {
       // a stale retry of the ABANDONED bad stage must reject
       val stalePub = moveCurrent(dbFile, expected = 1L, to = 2L)
 
-      val mainPub = spark.read
-        .parquet(manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val mainPub = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
       val wapOk = c1 && cA && cB && pub && !stalePub &&
         nBadStaged > 0L && nBadFixed == 0L &&
@@ -1363,14 +1360,14 @@ object SnapshotLog {
       // the pruned read, its full-scan foil, and the snapshot-1 time
       // travel are independent scans — overlapped (guide §2.6, r21)
       val Seq(sel, full, snap1) = graft.ops.Par.run(Seq(
-        () => spark.read.parquet(pruned: _*)
+        () => Tables.parquet(spark, pruned: _*)
           .filter(col("k") % 8 === 5)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         // the full-scan answer the pruned read must reproduce
-        () => spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
           .filter(col("k") % 8 === 5)
           .agg(count(lit(1)), sum(col("cents"))).head(),
-        () => spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+        () => Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head()))
       val evolutionOk = c1 && c2 &&
         currentSnapshot(dbFile) == 2L &&
@@ -1518,7 +1515,7 @@ object SnapshotLog {
     fileSchema.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (sid, entries) =>
         val have = schemaFields(dbFile, sid).map(f => f._1 -> f._2).toMap
-        spark.read.parquet(entries.keys.toSeq.sorted: _*)
+        Tables.parquet(spark, entries.keys.toSeq.sorted: _*)
           .select(want.map { case (fid, name, dtype) =>
             have.get(fid)
               .map(physical => col(physical).as(name))
@@ -1616,8 +1613,7 @@ object SnapshotLog {
       // the dropped field id 3 into the live field id 4 — its census
       // must DIFFER from the by-id read or the indirection proves
       // nothing
-      val leak = spark.read
-        .parquet((files2 ++ files3).map(_._1): _*)
+      val leak = Tables.parquet(spark, (files2 ++ files3).map(_._1): _*)
         .agg(coalesce(sum(col("disc")), lit(0L))).head().getLong(0)
 
       val mf3 = manifest(dbFile, 3L)
@@ -1713,7 +1709,7 @@ object SnapshotLog {
       // immutable, so reading them after the pointer ops is identical
       val censusOf: Map[Long, (Long, Long)] =
         Seq(asOf2500.getOrElse(0L), curSnap, 3L, 4L).distinct
-          .map(snap => spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+          .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
             .select(lit(snap).as("snap"), col("cents")))
           .reduce(_ unionByName _)
           .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
@@ -1777,7 +1773,7 @@ object SnapshotLog {
       initLog(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
-      val schema = s.read.parquet(s"$staged/0.parquet").schema
+      val schema = Tables.parquet(s, s"$staged/0.parquet").schema
       val commits = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
       val q = s.readStream
         .schema(schema)
@@ -1819,7 +1815,7 @@ object SnapshotLog {
         val data = manifestSeq(dbFile, snap)
           .groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (sq, fs) =>
-            spark.read.parquet(fs.map(_._1): _*).withColumn("fseq", lit(sq))
+            Tables.parquet(spark, fs.map(_._1): _*).withColumn("fseq", lit(sq))
           }
           .reduce(_ unionByName _)
         val dels = deleteSeq(dbFile, snap)
@@ -1827,7 +1823,7 @@ object SnapshotLog {
         else data.as("f").join(
           dels.groupBy(_._2).toSeq.sortBy(_._1)
             .map { case (sq, fs) =>
-              spark.read.parquet(fs.map(_._1): _*).withColumn("dseq", lit(sq))
+              Tables.parquet(spark, fs.map(_._1): _*).withColumn("dseq", lit(sq))
             }
             .reduce(_ unionByName _)
             .as("dv"),
@@ -1910,7 +1906,7 @@ object SnapshotLog {
         val data = manifestSeq(dbFile, snap)
           .groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (seq, fs) =>
-            spark.read.parquet(fs.map(_._1): _*).withColumn("fseq", lit(seq))
+            Tables.parquet(spark, fs.map(_._1): _*).withColumn("fseq", lit(seq))
           }
           .reduce(_ unionByName _)
         val dels = deleteSeq(dbFile, snap)
@@ -1919,7 +1915,7 @@ object SnapshotLog {
           val dv = dels
             .groupBy(_._2).toSeq.sortBy(_._1)
             .map { case (seq, fs) =>
-              spark.read.parquet(fs.map(_._1): _*).withColumn("dseq", lit(seq))
+              Tables.parquet(spark, fs.map(_._1): _*).withColumn("dseq", lit(seq))
             }
             .reduce(_ unionByName _)
           data.as("f").join(
@@ -1966,14 +1962,14 @@ object SnapshotLog {
       val compacted = affectedSeq
         .groupBy(_._2).toSeq.sortBy(_._1)
         .map { case (seq, fs) =>
-          spark.read.parquet(fs.map(_._1): _*).withColumn("fseq", lit(seq))
+          Tables.parquet(spark, fs.map(_._1): _*).withColumn("fseq", lit(seq))
         }
         .reduce(_ unionByName _)
         .as("f")
         .join(
           dv3.groupBy(_._2).toSeq.sortBy(_._1)
             .map { case (seq, fs) =>
-              spark.read.parquet(fs.map(_._1): _*).withColumn("dseq", lit(seq))
+              Tables.parquet(spark, fs.map(_._1): _*).withColumn("dseq", lit(seq))
             }
             .reduce(_ unionByName _)
             .as("dv"),
@@ -2092,7 +2088,7 @@ object SnapshotLog {
       //     masking 4 of ITS OWN 10 rows — depends on ins2 and follows
       //     sequentially; it scans one 10-row file).
       val Seq(pd1, del1, ins1, ins2) = graft.ops.Par.run(Seq(
-        () => writeCounted(spark, spark.read.parquet(baseFiles.map(_._1): _*)
+        () => writeCounted(spark, Tables.parquet(spark, baseFiles.map(_._1): _*)
           .select(
             col("_metadata.file_path").as("pd_path"),
             col("_metadata.row_index").as("pd_pos"),
@@ -2104,7 +2100,7 @@ object SnapshotLog {
           o.filter(updPred).withColumn("cents", col("cents") + 1000L),
           s"$base/i1", 1),
         () => writeCounted(spark, inserts, s"$base/i2", 1)))
-      val pd2 = writeCounted(spark, spark.read.parquet(ins2.map(_._1): _*)
+      val pd2 = writeCounted(spark, Tables.parquet(spark, ins2.map(_._1): _*)
         .select(
           col("_metadata.file_path").as("pd_path"),
           col("_metadata.row_index").as("pd_pos"),
@@ -2131,7 +2127,7 @@ object SnapshotLog {
       // the position deletes' referenced files (exact — read from the
       // delta-sized delete files, Iceberg's referenced-data-file stat)
       // ∪ equality-key bucket files with seq strictly below the delete
-      val posRefs = spark.read.parquet(posDeleteSeq(dbFile, 4L).map(_._1): _*)
+      val posRefs = Tables.parquet(spark, posDeleteSeq(dbFile, 4L).map(_._1): _*)
         .select(col("pd_path")).distinct()
         .collect() // bounded by the file count — manifest-scale metadata
         .map(r => new java.net.URI(r.getString(0)).getPath)
@@ -2400,7 +2396,7 @@ object SnapshotLog {
       recordColStats(dbFile, "c0", f1.map(_.range("cents")))
       val c1 = commit(dbFile, 0L, 1L, f1.map(_.entry))
       val scan1 = pruneByCols(dbFile, 1L, Seq(("c0", lo, hi)))
-      val sel1 = spark.read.parquet(scan1: _*)
+      val sel1 = Tables.parquet(spark, scan1: _*)
         .filter(col("cents").between(lo, hi))
         .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
 
@@ -2408,7 +2404,7 @@ object SnapshotLog {
       // range buckets, disjoint per-file cents ranges
       val f2 = writeBucketed(
         spark,
-        spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+        Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
           .select(col("k"), col("cents"))
           .withColumn("g", expr(s"(cents - $mn) div $bw")),
         s"$base/c",
@@ -2421,10 +2417,10 @@ object SnapshotLog {
       // the four audit censuses are independent scans — overlapped
       // (guide §2.6, r21)
       val Seq(sel2, full2, direct, total) = graft.ops.Par.run(Seq(
-        () => spark.read.parquet(scan2: _*)
+        () => Tables.parquet(spark, scan2: _*)
           .filter(col("cents").between(lo, hi))
           .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head(),
-        () => spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         () => o.filter(col("cents").between(lo, hi))
           .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head(),
@@ -2507,7 +2503,7 @@ object SnapshotLog {
       val c2 = commit(dbFile, 1L, 2L, f1 ++ f2)
       createRef(dbFile, "audit-snap1", 1L)
       // snapshot 3: compaction — every row rewritten into one new file
-      val f3 = writeCounted(spark, spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*), s"$base/f3", 1)
+      val f3 = writeCounted(spark, Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*), s"$base/f3", 1)
       val c3 = commit(dbFile, 2L, 3L, f3)
 
       val live0 = liveFiles(dbFile).size.toLong
@@ -2516,10 +2512,9 @@ object SnapshotLog {
 
       // the tagged snapshot is still readable THROUGH the tag
       val tagSnap = refSnapshot(dbFile, "audit-snap1")
-      val tagged = spark.read.parquet(manifest(dbFile, tagSnap).map(_._1): _*)
+      val tagged = Tables.parquet(spark, manifest(dbFile, tagSnap).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
-      val current = spark.read
-        .parquet(manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val current = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       val dropped = dropRef(dbFile, "audit-snap1")
@@ -2605,7 +2600,7 @@ object SnapshotLog {
       val nViolating = f2.count(minCents(_) < 0L).toLong
       // REJECTED: nothing recorded, pointer untouched
       val curAfterReject = currentSnapshot(dbFile)
-      val s1 = spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+      val s1 = Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       // the retry, cleaned
@@ -2616,7 +2611,7 @@ object SnapshotLog {
       val v3 = minCentsOk(f3)
       recordColStats(dbFile, "c0", f3.map(_.range("cents")))
       val c3 = v3 && commit(dbFile, 1L, 2L, (f1 ++ f3).map(_.entry))
-      val fin = spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+      val fin = Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       val constraintOk = c1 && !v2 && c3 &&
@@ -2722,7 +2717,7 @@ object SnapshotLog {
       // the three snapshots' audit censuses fused into ONE tagged union
       // job (the s49 r20 pattern, guide §2.4; values unchanged)
       val audits: Map[Long, (Long, Long)] = (1L to 3L)
-        .map(snap => spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
           .select(lit(snap).as("snap"), col("cents")))
         .reduce(_ unionByName _)
         .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
@@ -2823,7 +2818,7 @@ object SnapshotLog {
           ins: Seq[(Long, Long)], out: String): Unit = {
         val affected = prunePaths(dbFile, parent, Seq(bucket))
         val carried = manifest(dbFile, parent).filterNot(f => affected.contains(f._1))
-        val nf = writeCounted(spark, spark.read.parquet(affected: _*)
+        val nf = writeCounted(spark, Tables.parquet(spark, affected: _*)
           .filter(col("k") % 20 =!= delMod)
           .withColumn("cents",
             when(col("k") % 20 === updMod, col("cents") + bump).otherwise(col("cents")))
@@ -2841,7 +2836,7 @@ object SnapshotLog {
         },
         () =>
           // replica bootstrap: full copy of snapshot 1, its OWN layout
-          spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+          Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
             .repartition(2).write.parquet(s"$base/rep1"))
 
       def applyStep(
@@ -2851,9 +2846,9 @@ object SnapshotLog {
         val mfPost = manifest(dbFile, post).map(_._1).toSet
         val removed = (mfPre -- mfPost).toSeq.sorted
         val added = (mfPost -- mfPre).toSeq.sorted
-        val preDf = spark.read.parquet(removed: _*)
+        val preDf = Tables.parquet(spark, removed: _*)
           .select(col("k").as("rk"), col("cents").as("pre_cents"))
-        val postDf = spark.read.parquet(added: _*)
+        val postDf = Tables.parquet(spark, added: _*)
           .select(col("k").as("ak"), col("cents").as("post_cents"))
         // (r20 note: persisting this frame was measured SLOWER than the
         // recompute — the columnar cache build costs more than the small
@@ -2872,7 +2867,7 @@ object SnapshotLog {
         // deterministic read of already-staged or committed files)
         val Seq(repCA, ccA, srcCA) = graft.ops.Par.run(Seq[() => Any](
           () => {
-            spark.read.parquet(repIn)
+            Tables.parquet(spark, repIn)
               .join(
                 changes.filter(col("change_type").isin("delete", "update"))
                   .select(col("rk").as("k")),
@@ -2881,12 +2876,12 @@ object SnapshotLog {
                 changes.filter(col("change_type").isin("insert", "update"))
                   .select(col("ak").as("k"), col("post_cents").as("cents")))
               .repartition(2).write.parquet(repOut)
-            spark.read.parquet(repOut)
+            Tables.parquet(spark, repOut)
               .agg(count(lit(1)), sum(col("cents"))).head()
           },
           () => changes.groupBy(col("change_type")).count().collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap,
-          () => spark.read.parquet(manifest(dbFile, post).map(_._1): _*)
+          () => Tables.parquet(spark, manifest(dbFile, post).map(_._1): _*)
             .agg(count(lit(1)), sum(col("cents"))).head()))
         val repC = repCA.asInstanceOf[org.apache.spark.sql.Row]
         val cc = ccA.asInstanceOf[Map[String, Long]]
@@ -2974,7 +2969,7 @@ object SnapshotLog {
 
       val f2 = writeBucketed(
         spark,
-        spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+        Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
           .select(col("k"), col("cents"), col("x"), col("y"))
           .withColumn("g", expr(zKey)),
         s"$base/z", 0L to 15L, Seq("x", "y"))
@@ -2999,7 +2994,7 @@ object SnapshotLog {
       } yield { () =>
         val scanned = pruneByCols(dbFile, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
         val boxPred = col("x").between(xlo, xhi) && col("y").between(ylo, yhi)
-        val sel = spark.read.parquet(scanned: _*)
+        val sel = Tables.parquet(spark, scanned: _*)
           .filter(boxPred)
           .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
         val direct = directs(qn)
@@ -3120,7 +3115,7 @@ object SnapshotLog {
       // per-group rewrites are independent — overlapped (guide §2.6)
       val packed = graft.ops.Par.run(plan.map { case (b, paths) => () =>
         val out = s"$base/packed_$b"
-        val pf = writeCounted(spark, spark.read.parquet(paths: _*), out, 1)
+        val pf = writeCounted(spark, Tables.parquet(spark, paths: _*), out, 1)
         recordStats(dbFile, pf.map(p => (p._1, b)))
         pf
       }).flatten
@@ -3130,9 +3125,9 @@ object SnapshotLog {
       // the three audit censuses (snapshot 2, time-travel snapshot 1,
       // direct recompute) are independent scans — overlapped (§2.6)
       val Seq(census2, census1, direct) = graft.ops.Par.run(Seq(
-        () => spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head(),
-        () => spark.read.parquet(tt1.map(_._1): _*)
+        () => Tables.parquet(spark, tt1.map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         () => o.agg(count(lit(1)), sum(col("cents"))).head()))
       val bigCarried = big.forall(f =>
@@ -3220,9 +3215,9 @@ object SnapshotLog {
       // (guide §2.6, r21)
       val Seq((n2, s2), (n3, s3), (nb, sb)) = graft.ops.Par.run(
         Seq(
-          () => spark.read.parquet(manifest(dbFile, 2L).map(_._1): _*)
+          () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
             .agg(count(lit(1)), sum(col("cents"))).head(),
-          () => spark.read.parquet(manifest(dbFile, 3L).map(_._1): _*)
+          () => Tables.parquet(spark, manifest(dbFile, 3L).map(_._1): _*)
             .agg(count(lit(1)), sum(col("cents"))).head(),
           () => o.agg(count(lit(1)), sum(col("cents"))).head())
           .map(t => () => { val r = t(); (r.getLong(0), r.getLong(1)) }))
@@ -3276,7 +3271,7 @@ object SnapshotLog {
       initStats(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
-      val schema = s.read.parquet(s"$staged/0.parquet").schema
+      val schema = Tables.parquet(s, s"$staged/0.parquet").schema
       val oks = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
       val compactions = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
       val q = s.readStream
@@ -3297,7 +3292,7 @@ object SnapshotLog {
             val plan = planBinpack(dbFile, head, Long.MaxValue)
             val packed = plan.flatMap { case (bkt, paths) =>
               val pout = s"$base/packed_${head}_$bkt"
-              val ppf = writeCounted(s, s.read.parquet(paths: _*), pout, 1)
+              val ppf = writeCounted(s, Tables.parquet(s, paths: _*), pout, 1)
               recordStats(dbFile, ppf.map(p => (p._1, bkt)))
               ppf
             }
@@ -3320,7 +3315,7 @@ object SnapshotLog {
       // the four snapshots' censuses fused into ONE tagged union job
       // (the s49 r20 pattern, guide §2.4; per-snapshot values unchanged)
       val census: Map[Long, (Long, Long)] = (1L to 4L)
-        .map(snap => spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
           .select(lit(snap).as("snap"), col("cents")))
         .reduce(_ unionByName _)
         .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
@@ -3434,7 +3429,7 @@ object SnapshotLog {
           ins: Seq[(Long, Long)], out: String): Unit = {
         val affected = prunePaths(dbFile, parent, Seq(bucket))
         val carried = manifest(dbFile, parent).filterNot(f => affected.contains(f._1))
-        val nf = writeCounted(spark, spark.read.parquet(affected: _*)
+        val nf = writeCounted(spark, Tables.parquet(spark, affected: _*)
           .filter(col("k") % 20 =!= delMod)
           .withColumn("cents",
             when(col("k") % 20 === updMod, col("cents") + bump).otherwise(col("cents")))
@@ -3453,10 +3448,10 @@ object SnapshotLog {
         val mfPost = manifest(dbFile, post).map(_._1).toSet
         val removed = (mfPre -- mfPost).toSeq.sorted
         val added = (mfPost -- mfPre).toSeq.sorted
-        spark.read.parquet(removed: _*)
+        Tables.parquet(spark, removed: _*)
           .select(col("k").as("rk"), col("cents").as("pre_cents"))
           .join(
-            spark.read.parquet(added: _*)
+            Tables.parquet(spark, added: _*)
               .select(col("k").as("ak"), col("cents").as("post_cents")),
             col("rk") === col("ak"), "full_outer")
           .withColumn("change_type",
@@ -3490,7 +3485,7 @@ object SnapshotLog {
         () => stageOne(changes(2L, 3L).withColumn("batch_id", lit(2L)), "d2", 2000000L),
         () => {
           // replica bootstrap: full copy of snapshot 1, its OWN layout
-          spark.read.parquet(manifest(dbFile, 1L).map(_._1): _*)
+          Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
             .repartition(2).write.parquet(s"$base/rep1")
         }))
       locally {
@@ -3502,7 +3497,7 @@ object SnapshotLog {
       }
 
       // ---- the consumer stream ----
-      val schema = s.read.parquet(s"$stage/d1.parquet").schema
+      val schema = Tables.parquet(s, s"$stage/d1.parquet").schema
       val results = new java.util.concurrent.ConcurrentHashMap[
         Long, (Long, Long, Long, Long, Boolean, Long, Long, Long, Long)]()
       @volatile var repStep = 1L
@@ -3537,7 +3532,7 @@ object SnapshotLog {
           val claimed = claimApply(dbFile, bid)
           if (claimed) {
             val repOut = s"$base/rep${repStep + 1}"
-            s.read.parquet(s"$base/rep$repStep")
+            Tables.parquet(s, s"$base/rep$repStep")
               .join(
                 batch.filter(col("change_type").isin("delete", "update"))
                   .select(col("k")),
@@ -3551,11 +3546,11 @@ object SnapshotLog {
           // replica census and (memoized) source census are independent
           // reads — overlapped (guide §2.6, r21)
           val (repC, srcC) = graft.ops.Par.run2(
-            () => s.read.parquet(s"$base/rep$repStep")
+            () => Tables.parquet(s, s"$base/rep$repStep")
               .agg(count(lit(1)), sum(col("cents"))).head(),
             () => srcCCache.computeIfAbsent(
               repStep,
-              snap => s.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+              snap => Tables.parquet(s, manifest(dbFile, snap).map(_._1): _*)
                 .agg(count(lit(1)), sum(col("cents"))).head()))
           results.put(epoch, (bid,
             cc.getOrElse("delete", 0L), cc.getOrElse("update", 0L),
@@ -3643,7 +3638,7 @@ object SnapshotLog {
           delMod: Long, updMod: Long, bump: Long,
           ins: Seq[(Long, Long)], out: String): Seq[(String, Long)] = {
         val affected = prunePaths(dbFile, fromSnap, Seq(bucket))
-        val nf = writeCounted(spark, spark.read.parquet(affected: _*)
+        val nf = writeCounted(spark, Tables.parquet(spark, affected: _*)
           .filter(col("k") % 20 =!= delMod)
           .withColumn("cents",
             when(col("k") % 20 === updMod, col("cents") + bump).otherwise(col("cents")))
@@ -3688,8 +3683,7 @@ object SnapshotLog {
       val (mnAdd, mnRem) = delta(3L, 1L)
 
       val (merged, conflict1) = mergeBranch("dev", 1L)
-      val mergedC = spark.read
-        .parquet(manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val mergedC = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       // branch `dev2`, also cut at 1, rewrites bucket 0 like main did:
@@ -4217,7 +4211,7 @@ object SnapshotLog {
       val paths = files.map(_._1)
       val man = manifest(dbFile, 1L).toMap
       val nRows = files.map(f => man(f._1)).sum
-      val big = spark.read.parquet(paths: _*)
+      val big = Tables.parquet(spark, paths: _*)
 
       // broadcast off + AQE off, scoped-and-restored (the BucketedJoin /
       // q216 discipline): the dim stands in for a big⋈big edge at SF
@@ -4581,8 +4575,8 @@ object SnapshotLog {
           val se = spark.newSession()
           se.conf.set("spark.sql.session.timeZone", "UTC")
           se.conf.set("spark.sql.adaptive.enabled", "false")
-          val ordersDf = se.read.parquet(pO: _*)
-          val build = se.read.parquet(buildPaths: _*)
+          val ordersDf = Tables.parquet(se, pO: _*)
+          val build = Tables.parquet(se, buildPaths: _*)
           // ---- the DECISION: log metadata only, no data touched ----
           val (nP, nB) = (nRows(fO), nRows(buildFiles))
           val (budget, buildBytes) = (nP * 8L / 4L, nB * 8L)
@@ -4836,8 +4830,8 @@ object SnapshotLog {
       require(commit(dbB, 0L, 1L, fP ++ fB), "q225 log B commit rejected")
 
       val (pP, pB) = (fP.map(_._1), fB.map(_._1))
-      val probeDf = spark.read.parquet(pP: _*)
-      val buildDf = spark.read.parquet(pB: _*)
+      val probeDf = Tables.parquet(spark, pP: _*)
+      val buildDf = Tables.parquet(spark, pB: _*)
       val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
       try {
@@ -5125,8 +5119,8 @@ object SnapshotLog {
       val (pB, pP) = (fB.map(_._1), fP.map(_._1))
       val man = manifest(dbFile, 1L).toMap
       val (nB, nP) = (pB.map(man).sum, pP.map(man).sum)
-      val big = spark.read.parquet(pB: _*)
-      val probe = spark.read.parquet(pP: _*)
+      val big = Tables.parquet(spark, pB: _*)
+      val probe = Tables.parquet(spark, pP: _*)
 
       val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -5290,7 +5284,7 @@ object SnapshotLog {
       val files2 = writeCounted(spark, delta.select("k", "rid", "cents"),
         s"$tmp/delta", 1)
       statsFor(
-        spark.read.parquet(files2.map(_._1): _*).withColumn("g", lit(4L)),
+        Tables.parquet(spark, files2.map(_._1): _*).withColumn("g", lit(4L)),
         Map(4L -> files2.head._1))
       val c2 = commit(
         dbFile, 1L, 2L, files1.map(_.entry) ++ files2)
@@ -5322,7 +5316,7 @@ object SnapshotLog {
           val (t1k, t1c) = colTopkMergedTop1(dbFile, paths, "k")
           val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
           val strategy = if (skewX100 >= 800L) "salted" else "shuffle"
-          val fact = spark.read.parquet(paths: _*)
+          val fact = Tables.parquet(spark, paths: _*)
           def census(j: DataFrame): (Long, Long) = {
             val r = j.agg(count(lit(1)), sum(col("cents"))).head()
             (r.getLong(0), r.getLong(1))
@@ -5484,7 +5478,7 @@ object SnapshotLog {
           // g = cust % 4 and delPred requires cust % 4 = 2, so only the
           // g=2 file can hold matching rows — the delete scans that one
           // file instead of the full scope (rows elsewhere can't match).
-          val pd = writeCounted(spark, spark.read.parquet(pathOf(2L))
+          val pd = writeCounted(spark, Tables.parquet(spark, pathOf(2L))
             .select(
               col("_metadata.file_path").as("pd_path"),
               col("_metadata.row_index").as("pd_pos"),
@@ -5495,7 +5489,7 @@ object SnapshotLog {
           // referenced data files: read from the delta-sized delete
           // file, BEFORE the commit — the markers ride the commit's
           // transaction
-          val rf = spark.read.parquet(pd.map(_._1): _*)
+          val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
             .map(r => new java.net.URI(r.getString(0)).getPath)
@@ -5618,7 +5612,7 @@ object SnapshotLog {
           // PARTITION PRUNING (guide §6): the table is partitioned by
           // g = cust % 4 and delPred requires cust % 4 = 2, so only the
           // g=2 file can hold matching rows
-          val pd = writeCounted(spark, spark.read.parquet(pathOf(2L))
+          val pd = writeCounted(spark, Tables.parquet(spark, pathOf(2L))
             .select(
               col("_metadata.file_path").as("pd_path"),
               col("_metadata.row_index").as("pd_pos"),
@@ -5626,7 +5620,7 @@ object SnapshotLog {
             .filter(delPred)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
           recordSeq(dbFile, pd.map(_._1), 2L)
-          val rf = spark.read.parquet(pd.map(_._1): _*)
+          val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
             .map(r => new java.net.URI(r.getString(0)).getPath)
@@ -5930,7 +5924,7 @@ object SnapshotLog {
           // PRUNING (guide §6): the table is partitioned by g = k % 4
           // and the purge predicate is k = 1, so only the g=1 file can
           // hold matching rows — scan that one file, not the full scope.
-          val pd = writeCounted(spark, spark.read.parquet(pathOf(1L))
+          val pd = writeCounted(spark, Tables.parquet(spark, pathOf(1L))
             .select(
               col("_metadata.file_path").as("pd_path"),
               col("_metadata.row_index").as("pd_pos"),
@@ -5938,7 +5932,7 @@ object SnapshotLog {
             .filter(col("k") === 1L)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
           recordSeq(dbFile, pd.map(_._1), 2L)
-          val rf = spark.read.parquet(pd.map(_._1): _*)
+          val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
             .map(r => new java.net.URI(r.getString(0)).getPath)
@@ -6107,7 +6101,7 @@ object SnapshotLog {
           // PRUNING (guide §6): the table is partitioned by g = k % 4
           // and the purge predicate is k = 1, so only the g=1 file can
           // hold matching rows — scan that one file, not the full scope.
-          val pd = writeCounted(spark, spark.read.parquet(pathOf(1L))
+          val pd = writeCounted(spark, Tables.parquet(spark, pathOf(1L))
             .select(
               col("_metadata.file_path").as("pd_path"),
               col("_metadata.row_index").as("pd_pos"),
@@ -6115,7 +6109,7 @@ object SnapshotLog {
             .filter(col("k") === 1L)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
           recordSeq(dbFile, pd.map(_._1), 2L)
-          val rf = spark.read.parquet(pd.map(_._1): _*)
+          val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
             .map(r => new java.net.URI(r.getString(0)).getPath)
@@ -6256,7 +6250,7 @@ object SnapshotLog {
         // audit scan, fused: exact NDV + direct census from ONE
         // per-key pass (ndvAudit — previously two scans per scope)
         val (_, exact, direct) =
-          ndvAudit(spark.read.parquet(paths: _*), "cust")
+          ndvAudit(Tables.parquet(spark, paths: _*), "cust")
         (scope, paths.size.toLong, colNdvRowCount(dbFile, paths, "cust"), est, exact,
           math.abs(est - exact) * 10000L / exact,
           merged.sortBy(_._1) == direct, true)
@@ -6510,7 +6504,7 @@ object SnapshotLog {
         val est = Hll.estimateInt(merged)
         // audit scan, fused: exact NDV + direct census from ONE
         // per-key pass (ndvAudit — previously two scans per scope)
-        val (_, exact, direct) = ndvAudit(spark.read.parquet(paths: _*), "cust")
+        val (_, exact, direct) = ndvAudit(Tables.parquet(spark, paths: _*), "cust")
         (scope, paths.size.toLong, est, exact,
           math.abs(est - exact) * 10000L / exact, merged == direct, true)
       }
@@ -6929,7 +6923,7 @@ object SnapshotLog {
 
       def queryRow(name: String, lo: Long, hi: Long) = {
         val (nGroups, nEntries, files) = plan(lo, hi)
-        val planned = spark.read.parquet(files: _*)
+        val planned = Tables.parquet(spark, files: _*)
           .agg(count(lit(1)), sum(col("cents"))).head()
         val direct = o.filter(col("b") >= lo && col("b") <= hi)
           .agg(count(lit(1)), sum(col("cents"))).head()

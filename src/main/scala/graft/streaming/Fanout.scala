@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -38,7 +39,7 @@ object Fanout {
   def fanoutTwoSinks(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val scratch = graft.ops.Scratch.scratchDir("graft_s32_")
     val rowSink = s"$scratch/rows"
     val aggSink = s"$scratch/agg"
@@ -89,7 +90,7 @@ object Fanout {
       import scala.jdk.CollectionConverters._
       val missing = (committedA.asScala.toSet -- committedB.asScala.toSet).toSeq.sorted
       missing.foreach { id =>
-        writeAgg(spark.read.parquet(s"$rowSink/batch=$id"), id)
+        writeAgg(Tables.parquet(spark, s"$rowSink/batch=$id"), id)
         committedB.add(id)
       }
       missing.nonEmpty

@@ -71,7 +71,7 @@ object Recovery {
         java.nio.file.Paths.get(staged, s"$name.parquet"),
         streamDir.resolve(s"$name.parquet")
       )
-    val schema = spark.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$staged/0.parquet").schema
     // one lifecycle run: a NEW query object on the SAME checkpoint/sink
     def runOnce(): Long = {
       val src = Tables.normalizeEvents(
@@ -97,8 +97,7 @@ object Recovery {
     val run1Rows = runOnce() // drains generation 0, then the query STOPS
     arrive("1")
     val run2Rows = runOnce() // resumed query must process generation 1 ONLY
-    spark.read
-      .parquet(outDir) // reads through the sink's _spark_metadata commit log
+    Tables.parquet(spark, outDir) // reads through the sink's _spark_metadata commit log
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),

@@ -191,7 +191,7 @@ object StateV2 {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     import spark.implicits._
     val evs = Tables
       .normalizeEvents(
@@ -249,7 +249,7 @@ object StateV2 {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     import spark.implicits._
     val evs = Tables
       .normalizeEvents(
@@ -310,7 +310,7 @@ object StateV2 {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     import spark.implicits._
     val initState = Tables
       .normalizeEvents(spark.read.schema(schema).parquet(s"$streamDir/0.parquet"))

@@ -28,7 +28,7 @@ object StreamAssign {
       dir,
       d => {
         val base = graft.ops.Scratch.scratchDir("graft_s14_").toString
-        val e = spark.read.parquet(s"$d/embeddings.parquet")
+        val e = Tables.parquet(spark, s"$d/embeddings.parquet")
         def writeOne(df: DataFrame, out: String, name: String, mtime: Long): Unit = {
           df.coalesce(1).write.mode("overwrite").parquet(out)
           val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
@@ -47,7 +47,7 @@ object StreamAssign {
     val spark = StreamSessions.tuned(session)
     val cents = IvfKMeans.codebookSeq(spark, Tables.embeddings(spark, dir))
     val streamDir = stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     // literal argmax: ties to the lowest cent_id via the -cid struct field
     val cell = greatest(cents.map { case (cid, c) =>
       struct(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.TimeCodec
+import graft.ops.{Tables, TimeCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -27,7 +27,7 @@ object StreamBars {
   def runDayBars(session: SparkSession, eventsPath: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = Tables.parquet(spark, eventsPath).schema
     // A glob path: FileStreamSource force-sets basePath to the literal path
     // when it is NOT a glob, and then rejects it for not being a directory.
     val baseDir = java.nio.file.Paths.get(eventsPath).getParent.toString

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.FeatureKernel
 import graft.model.{FeaturesConfig, FeaturesRow}
+import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -188,11 +189,11 @@ object StreamFeatures {
     val spark = StreamSessions.tuned(session)
     import spark.implicits._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = Tables.parquet(spark, eventsPath).schema
     val baseDir = java.nio.file.Paths.get(eventsPath).getParent.toString
     val reader = spark.readStream.schema(schema).option("basePath", baseDir)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val evs = graft.ops.Tables
+    val evs = Tables
       .normalizeEvents(reader.parquet(s"$baseDir/$fileGlob"))
       .select("user_id", "ts", "value")
       .as[Ev]

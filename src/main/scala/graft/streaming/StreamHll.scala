@@ -29,7 +29,7 @@ object StreamHll {
   def streamedHllRegisters(outer: SparkSession, dir: String): DataFrame = {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s36_")
     // epoch -> (bucket -> max rank): per-epoch register partials
     val partials =
@@ -111,7 +111,7 @@ object StreamHll {
     import graft.sinks.SnapshotLog
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s70_")
 
     val dbFile = s"$base/stats.duckdb"
@@ -143,7 +143,7 @@ object StreamHll {
         val est = Hll.estimateInt(merged)
         val nStat = SnapshotLog.colNdvRowCount(dbFile, paths, "text")
         // audit layer: exact + direct census over everything so far
-        val cum = s.read.parquet((0L to epoch).map(e => s"$staged/$e.parquet"): _*)
+        val cum = Tables.parquet(s, (0L to epoch).map(e => s"$staged/$e.parquet"): _*)
         val exact = cum.agg(countDistinct(col("text"))).head().getLong(0)
         val direct = Hll.registerCensus(cum, col("text"))
         results.computeIfAbsent(

@@ -45,7 +45,7 @@ object StreamJoins {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     def src(): DataFrame = Tables.normalizeEvents(
       spark.readStream
         .schema(schema)
@@ -128,7 +128,7 @@ object StreamJoins {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     def src(): DataFrame = Tables.normalizeEvents(
       spark.readStream
         .schema(schema)
@@ -209,7 +209,7 @@ object StreamJoins {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     def src(): DataFrame = Tables.normalizeEvents(
       spark.readStream
         .schema(schema)

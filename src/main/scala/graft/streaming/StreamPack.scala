@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Tables
 import graft.queries.TextQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,7 +38,7 @@ object StreamPack {
   def streamedPackedWindows(outer: SparkSession, dir: String): DataFrame = {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s37_")
     val outDir = s"$base/segments"
 
@@ -86,8 +87,7 @@ object StreamPack {
     q.awaitTermination()
 
     require(offsets.size() == 3, s"s37 expected 2 epochs, got ${offsets.size() - 1}")
-    s.read
-      .parquet(s"$outDir/epoch=0", s"$outDir/epoch=1")
+    Tables.parquet(s, s"$outDir/epoch=0", s"$outDir/epoch=1")
       .select("source", "window_id", "doc_id", "seg_start", "seg_len", "is_doc_start")
       .orderBy("source", "window_id", "seg_start")
   }

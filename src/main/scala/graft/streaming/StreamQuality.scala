@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -81,7 +82,7 @@ object StreamQuality {
   def streamQualityMonitor(outer: SparkSession, dir: String): DataFrame = {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s59_")
 
     val results =
@@ -178,7 +179,7 @@ object StreamQuality {
     import graft.ops.Hashing
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s66_")
 
     val results = new java.util.concurrent.ConcurrentHashMap[
@@ -287,7 +288,7 @@ object StreamQuality {
     import graft.ops.Hashing
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s68_")
 
     val results = new java.util.concurrent.ConcurrentHashMap[

@@ -44,7 +44,7 @@ object StreamRecall {
   def recallLedger(outer: SparkSession, dir: String): DataFrame = {
     val s = StreamSessions.tuned(outer)
     val staged = StreamAssign.stageBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s38_")
     import s.implicits._
 
@@ -65,7 +65,7 @@ object StreamRecall {
 
     // serving-codebook chain: epoch 0 serves the pre-stream-trained
     // codebook; epoch e+1 serves epoch e's retained refresh (s34)
-    val cInit = IvfKMeans.codebookSeq(s, s.read.parquet(s"$staged/0.parquet"))
+    val cInit = IvfKMeans.codebookSeq(s, Tables.parquet(s, s"$staged/0.parquet"))
     val codebooks =
       new java.util.concurrent.ConcurrentHashMap[Long, Seq[(Long, Array[Double])]]()
     codebooks.put(0L, cInit)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{FeatureOps, IvfKMeans, VectorOps}
+import graft.ops.{FeatureOps, IvfKMeans, Tables, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -58,13 +58,13 @@ object StreamRefresh {
   def refreshLedger(outer: SparkSession, dir: String): DataFrame = {
     val s = StreamSessions.tuned(outer)
     val staged = StreamAssign.stageBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s34_")
 
     // initial codebook: trained pre-stream on the epoch-0 regime only
     // (seeds vec_id < K, Lloyd over vec_id ∈ [K, 250)) — the served
     // index that epoch 1's unseen slice will drift away from
-    val cInit = IvfKMeans.codebookSeq(s, s.read.parquet(s"$staged/0.parquet"))
+    val cInit = IvfKMeans.codebookSeq(s, Tables.parquet(s, s"$staged/0.parquet"))
 
     // epoch-keyed chains: codebooks(e) = codebook SERVING epoch e;
     // computeIfAbsent keeps a retried epoch from double-advancing it

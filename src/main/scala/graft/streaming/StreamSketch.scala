@@ -32,7 +32,7 @@ object StreamSketch {
   def streamedQuantileSketch(outer: SparkSession, dir: String): DataFrame = {
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageBatches(s, dir)
-    val schema = s.read.parquet(s"$staged/0.parquet").schema
+    val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s33_")
     // epoch -> (bin -> count): per-epoch partial sketches. putIfAbsent
     // semantics via put-on-epoch-key keeps a retried epoch idempotent.

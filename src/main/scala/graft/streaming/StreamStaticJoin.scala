@@ -38,7 +38,7 @@ object StreamStaticJoin {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val facts = Tables.normalizeEvents(
       spark.readStream
         .schema(schema)
@@ -83,8 +83,7 @@ object StreamStaticJoin {
       plan.contains("BroadcastHashJoin") &&
       !plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin")
     }
-    val summary = spark.read
-      .parquet(s"$out/rows")
+    val summary = Tables.parquet(spark, s"$out/rows")
       .groupBy("segment")
       .agg(
         count(lit(1)).as("n_rows"),

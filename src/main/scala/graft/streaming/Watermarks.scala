@@ -73,7 +73,7 @@ object Watermarks {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val deduped = Tables
       .normalizeEvents(
         spark.readStream
@@ -159,7 +159,7 @@ object Watermarks {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageDedupBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val deduped = Tables
       .normalizeEvents(
         spark.readStream
@@ -202,7 +202,7 @@ object Watermarks {
       dir,
       d => {
         val base = graft.ops.Scratch.scratchDir("graft_s12_").toString
-        val docs = spark.read.parquet(s"$d/documents.parquet")
+        val docs = Tables.parquet(spark, s"$d/documents.parquet")
         def writeOne(df: DataFrame, out: String, name: String, mtime: Long): Unit = {
           df.coalesce(1).write.mode("overwrite").parquet(out)
           val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
@@ -232,7 +232,7 @@ object Watermarks {
   def streamNearDupClusters(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
     val streamDir = stageDocBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val fp = call_function("graft_minhash", split(col("text"), " "), lit(3), lit(""))
     val clusters = spark.readStream
       .schema(schema)
@@ -263,7 +263,7 @@ object Watermarks {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val counts = Tables
       .normalizeEvents(
         spark.readStream
@@ -309,7 +309,7 @@ object Watermarks {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val sessions = Tables
       .normalizeEvents(
         spark.readStream
@@ -360,7 +360,7 @@ object Watermarks {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val counts = Tables
       .normalizeEvents(
         spark.readStream
@@ -410,7 +410,7 @@ object Watermarks {
     val spark = StreamSessions.tuned(session)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
-    val schema = spark.read.parquet(s"$streamDir/0.parquet").schema
+    val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val counts = Tables
       .normalizeEvents(
         spark.readStream

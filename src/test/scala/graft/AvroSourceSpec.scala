@@ -12,18 +12,8 @@ import scala.jdk.CollectionConverters._
   * round-trip checksum depends on, unit-pinned so a mapping regression
   * fails here before it fails a 100-TB export.
   */
-class AvroSourceSpec extends AnyFunSuite {
+class AvroSourceSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
-
-  private def tmp(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }))
-    p.toString
-  }
 
   test("round-trip preserves every mapped type, including a nulls-in-every-column row") {
     val schema = StructType(Seq(
@@ -49,7 +39,7 @@ class AvroSourceSpec extends AnyFunSuite {
     )
     val df = spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
       .repartition(2) // exercise the file-per-partition write
-    val dir = s"${tmp("graft_avro_spec_")}/t"
+    val dir = s"${tempDir("graft_avro_spec_")}/t"
     AvroSource.writeAvro(df, dir)
     val back = AvroSource.readAvro(spark, dir, schema).collect()
     assert(back.length == 3)
@@ -69,7 +59,7 @@ class AvroSourceSpec extends AnyFunSuite {
   test("writer emits one container file per partition; reader parallelizes over them") {
     val df = spark.range(100).toDF("k").repartition(4)
     val schema = StructType(Seq(StructField("k", LongType, nullable = false)))
-    val dir = s"${tmp("graft_avro_parts_")}/t"
+    val dir = s"${tempDir("graft_avro_parts_")}/t"
     AvroSource.writeAvro(df.select(df("k")), dir)
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
       .iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".avro")).toSeq

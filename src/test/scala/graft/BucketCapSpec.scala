@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * duplicate-cluster connectivity (every member pairs with the bucket
   * representative).
   */
-class BucketCapSpec extends AnyFunSuite {
+class BucketCapSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -43,7 +43,7 @@ class BucketCapSpec extends AnyFunSuite {
   test("q34 stays bounded on 1000 identical documents and keeps cluster connectivity") {
     val n = 1000
     val cap = BucketCap.MaxPerBucket
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen_").toAbsolutePath.toString
+    val dir = tempDir("graft_degen_").toString
     (0L until n.toLong)
       .map((_, "the quick brown fox jumps over the lazy dog again", "en", "degen", 49L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -64,7 +64,7 @@ class BucketCapSpec extends AnyFunSuite {
 
   test("q39 candidates stay bounded on identical embeddings; every vector keeps a top-k") {
     val n = 300
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen_e_").toAbsolutePath.toString
+    val dir = tempDir("graft_degen_e_").toString
     val vec = (1 to 64).map(i => (if (i % 3 == 0) -1.0f else 1.0f) * 0.5f).toArray
     (0L until n.toLong)
       .map((_, vec, 1))

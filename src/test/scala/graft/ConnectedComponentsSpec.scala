@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * diameter rounds, the loop must run them all), component separation,
   * and orientation-independence of the input pair list.
   */
-class ConnectedComponentsSpec extends AnyFunSuite {
+class ConnectedComponentsSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -66,7 +66,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("q59 clusters the degenerate all-identical corpus into one component") {
     val n = 300
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_").toAbsolutePath.toString
+    val dir = tempDir("graft_cc_").toString
     (0L until n.toLong)
       .map((_, "the quick brown fox jumps over the lazy dog again", "en", "degen", 49L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

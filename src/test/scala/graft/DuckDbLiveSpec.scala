@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * over the offline-cached public duckdb_jdbc driver): jar discovery,
   * DDL execution, native-appender round trip, commit cadence.
   */
-class DuckDbLiveSpec extends AnyFunSuite {
+class DuckDbLiveSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -30,7 +30,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
     val ordered = df.select(
       DuckDbSink.ordinalColumns(df.schema).map(f => org.apache.spark.sql.functions.col(f.name)): _*
     )
-    val db = java.nio.file.Files.createTempDirectory("graft_live_test_").toString + "/t.db"
+    val db = tempDir("graft_live_test_").toString + "/t.db"
     val (n, back) = DuckDbLive.withConnection(db) { c =>
       DuckDbLive.execute(c, DuckDbSink.ddlFor(df.schema, "T", useFloat32 = false))
       val n = DuckDbLive.appendAll(c, "T", ordered, commitEvery = 2)
@@ -88,7 +88,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
     )
     val df = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava), schema)
-    val db = java.nio.file.Files.createTempDirectory("graft_live_types_").toString + "/w.db"
+    val db = tempDir("graft_live_types_").toString + "/w.db"
     val (n, back) = DuckDbLive.withConnection(db) { c =>
       DuckDbLive.execute(c, DuckDbSink.ddlFor(schema, "W", useFloat32 = false))
       val n = DuckDbLive.appendAll(c, "W", df, commitEvery = 2)
@@ -122,7 +122,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
     // single-writer DuckDB file each; the union of the files is the frame
     import org.apache.spark.sql.functions.col
     val df = spark.range(0, 100).toDF("id").withColumn("v", col("id") * 2).repartition(3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_live_part_").toString
+    val dir = tempDir("graft_live_part_").toString
     val files = DuckDbLive.appendPartitioned(df, dir, "P", commitEvery = 10)
     assert(files.size >= 2, s"expected multiple per-partition files, got $files")
     val (rows, idSum) = files.map { f =>
@@ -137,7 +137,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
   test("insertRows rejects a template with a suffix clause before anything runs") {
     // the tuple after VALUES is replicated per row, so a trailing clause
     // would be replicated too and fail late inside DuckDB's parser
-    val db = java.nio.file.Files.createTempDirectory("graft_live_ins_").toString + "/t.db"
+    val db = tempDir("graft_live_ins_").toString + "/t.db"
     val sql = "INSERT INTO t VALUES (?, ?) ON CONFLICT DO NOTHING"
     val n = DuckDbLive.withConnection(db) { c =>
       DuckDbLive.execute(c, "CREATE TABLE t(k BIGINT PRIMARY KEY, v BIGINT)")
@@ -180,8 +180,8 @@ class DuckDbLiveSpec extends AnyFunSuite {
     // a child Verify run whose user.home is an empty dir finds no jar in
     // any artifact cache; each entry must fail with the one named error
     // from DuckDbLive.openConnection and write no result
-    val home = java.nio.file.Files.createTempDirectory("graft_nojar_home_")
-    val out = java.nio.file.Files.createTempDirectory("graft_nojar_out_")
+    val home = tempDir("graft_nojar_home_")
+    val out = tempDir("graft_nojar_out_")
     val log = out.resolve("verify.log").toFile
     val entries = Seq("s39_snapshot_commits", "s01_duckdb_sink")
     val rc = childVerify(Seq(s"-Duser.home=$home"), out, log, entries)
@@ -200,28 +200,23 @@ class DuckDbLiveSpec extends AnyFunSuite {
     // returns; q218 memoizes its staging for the JVM's lifetime and
     // reclaims it at exit. A child Verify with its own java.io.tmpdir
     // must leave that dir free of graft_* entries.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_leak_tmp_")
-    val out = java.nio.file.Files.createTempDirectory("graft_leak_out_")
+    val tmp = tempDir("graft_leak_tmp_")
+    val out = tempDir("graft_leak_out_")
     val log = out.resolve("verify.log").toFile
     val entries = Seq("s01_duckdb_sink", "s10_partitioned_export", "q218_skew_salt_decision")
-    try {
-      val rc = childVerify(Seq(s"-Djava.io.tmpdir=$tmp"), out, log, entries)
-      val text = new String(java.nio.file.Files.readAllBytes(log.toPath))
-      assert(rc == 0, text.takeRight(2000))
-      entries.foreach(name => assert(out.resolve(name).toFile.exists, s"$name wrote no result:\n${text.takeRight(2000)}"))
-      val left = Option(tmp.toFile.list()).toSeq.flatten.filter(_.startsWith("graft_")).sorted
-      assert(left.isEmpty, s"staging left behind: ${left.mkString(", ")}")
-    } finally {
-      graft.ops.Scratch.deleteTree(tmp)
-      graft.ops.Scratch.deleteTree(out)
-    }
+    val rc = childVerify(Seq(s"-Djava.io.tmpdir=$tmp"), out, log, entries)
+    val text = new String(java.nio.file.Files.readAllBytes(log.toPath))
+    assert(rc == 0, text.takeRight(2000))
+    entries.foreach(name => assert(out.resolve(name).toFile.exists, s"$name wrote no result:\n${text.takeRight(2000)}"))
+    val left = Option(tmp.toFile.list()).toSeq.flatten.filter(_.startsWith("graft_")).sorted
+    assert(left.isEmpty, s"staging left behind: ${left.mkString(", ")}")
   }
 
   test("a caching scope closes its own connections on exit inside an open outer scope") {
     // the inner scope's connection must close when the inner scope exits,
     // not when the outermost one does: its owner deletes the files next,
     // and a database recreated at the same path must read fresh
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scope_test_")
+    val tmp = tempDir("graft_scope_test_")
     val outer = java.nio.file.Files.createDirectory(tmp.resolve("outer"))
     val inner = outer.resolve("inner")
     val db = s"$inner/x.duckdb"
@@ -229,7 +224,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
       DuckDbLive.queryRow(c, "SELECT count(*) FROM duckdb_tables() WHERE table_name = 't'")(0)
         .asInstanceOf[Number].longValue
     }
-    try DuckDbLive.cachingScope(outer) {
+    DuckDbLive.cachingScope(outer) {
       java.nio.file.Files.createDirectory(inner)
       DuckDbLive.cachingScope(inner) {
         DuckDbLive.withConnection(db)(c => DuckDbLive.execute(c, "CREATE TABLE t(i INTEGER)"))
@@ -238,7 +233,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
       graft.ops.Scratch.deleteTree(inner)
       java.nio.file.Files.createDirectory(inner)
       assert(tables() == 0L, "a connection cached by the exited inner scope outlived it")
-    } finally graft.ops.Scratch.deleteTree(tmp)
+    }
   }
 
   test("featuresF32Schema matches the pipeline's real f32 export schema") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Dynamic-schema sink: ordinal column sort, identifier quoting, type
   * map, float32 downcast (DatabaseWriter.cs:131-256,299-315,467).
   */
-class DuckDbSinkSpec extends AnyFunSuite {
+class DuckDbSinkSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -31,7 +31,7 @@ class DuckDbSinkSpec extends AnyFunSuite {
   }
 
   test("write lands ordinal-ordered parquet with float32 doubles") {
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_test_").toString
+    val out = tempDir("graft_sink_test_").toString
     val df = Seq((1.5, 10L, "x")).toDF("Value", "Key", "Tag")
     val (ddl, ins) = DuckDbSink.write(df, "T", out)
     val back = spark.read.parquet(out)

@@ -45,6 +45,29 @@ class FoldParitySpec extends AnyFunSuite {
     got.foreach { case (native, hof) => assert(native == hof) }
   }
 
+  test("graft_autocorr1 over a NaN gives NaN on both paths, as the DuckDB oracle does") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val xs = Array(1.0, 2.5, Double.NaN, 4.0)
+    val ac = graft.functions.AutocorrLag1(BoundReference(0, ArrayType(DoubleType), nullable = true), Literal(1e-6))
+    val row = InternalRow(ArrayData.toArrayData(xs))
+    val interpreted = ac.eval(row).asInstanceOf[Double]
+    val generated = GenerateUnsafeProjection.generate(Seq(ac)).apply(row).getDouble(0)
+    assert(interpreted.isNaN, s"interpreted: $interpreted")
+    assert(generated.isNaN, s"generated: $generated")
+
+    assume(graft.sinks.DuckDbLive.available, "duckdb_jdbc jar not in the offline cache")
+    val list = xs.map(x => if (x.isNaN) "'nan'::DOUBLE" else s"${x}::DOUBLE").mkString("[", ", ", "]")
+    val oracle = graft.sinks.DuckDbLive.withConnection("") { c =>
+      graft.sinks.DuckDbLive.queryRow(c,
+        s"SELECT ${graft.oracle.OracleSql.autocorrLag1("l")} FROM (SELECT $list AS l)")(0)
+    }
+    assert(oracle.asInstanceOf[Number].doubleValue.isNaN, s"oracle: $oracle")
+  }
+
   test("native expressions survive both codegen and interpreted eval") {
     // interpreted path: eval() via a filter on a literal-backed row
     val df = Seq(Seq(1.0, 2.0, 3.0)).toDF("xs")

@@ -32,7 +32,7 @@ class IncrementalCurationSpec extends AnyFunSuite {
   ).map { case (id, t) => (id, t, "en", "s0", t.length.toLong) }
 
   private lazy val dir: String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_incr_").toAbsolutePath.toString
+    val base = graft.ops.Scratch.scratchDir("graft_incr_").toString
     docs
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1)

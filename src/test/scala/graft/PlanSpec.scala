@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an extra shuffle, loses a broadcast, or widens a scan fails here — not
   * in a cluster.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -501,7 +501,7 @@ class PlanSpec extends AnyFunSuite {
     // hashpartitioning Exchange (the final orderBy's range exchange is
     // the only one allowed).
     val par = spark.sparkContext.defaultParallelism
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_spread_").toString
+    val docsDir = tempDir("graft_spread_").toString
     graft.ops.Tables
       .documents(spark, dir)
       .repartition(par)

@@ -12,11 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * partial view rows AND the ledger row — the id is not burned and the
   * retry applies cleanly.
   */
-class RefreshIdempotenceSpec extends AnyFunSuite {
+class RefreshIdempotenceSpec extends AnyFunSuite with TempDirs {
 
   private def freshStore(): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_s35_spec_")
-    base.toFile.deleteOnExit()
+    val base = tempDir("graft_s35_spec_")
     val f = s"$base/view.duckdb"
     IncrementalRefresh.initStore(f)
     f

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * every pair within the hamming<=3 verification radius shares at least
   * one triple key (100% candidate recall at any corpus size).
   */
-class SimHashBandSpec extends AnyFunSuite {
+class SimHashBandSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
 
   private val triples: Seq[Seq[Int]] = (0 until 6).combinations(3).map(_.toSeq).toSeq
@@ -70,7 +70,7 @@ class SimHashBandSpec extends AnyFunSuite {
   test("degenerate corpus (all-identical docs): cap bounds pairs at O(n*cap), connectivity survives") {
     import spark.implicits._
     val n = 200
-    val base = java.nio.file.Files.createTempDirectory("graft_sh_degen_").toAbsolutePath.toString
+    val base = tempDir("graft_sh_degen_").toString
     (0 until n)
       .map(i => (i.toLong, "spark scan join filter agg row key", "en", "s0", 33L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -8,17 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the pointer (not just a stale re-delivery), and log-only isolation
   * of historical snapshots.
   */
-class SnapshotLogSpec extends AnyFunSuite {
+class SnapshotLogSpec extends AnyFunSuite with TempDirs {
 
   private def withLog(f: String => Unit): Unit = {
     assume(DuckDbLive.available, "duckdb_jdbc jar not in the offline cache")
-    val base = java.nio.file.Files.createTempDirectory("graft_s39_spec_")
-    try f(s"$base/log.duckdb")
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    f(s"${tempDir("graft_s39_spec_")}/log.duckdb")
   }
 
   test("bucket-spec evolution: a stale 8-bucket reader is rejected, never silently wrong") {
@@ -287,42 +281,36 @@ class SnapshotLogSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     withLog { db =>
-      val base = java.nio.file.Files.createTempDirectory("graft_s50_spec_")
-      try {
-        SnapshotLog.initLog(db)
-        SnapshotLog.initSchemas(db)
-        // schema 1: (1:k, 2:v); schema 2 renames v→w + adds (3:x);
-        // schema 3 drops field 3 and adds a NEW (4:x) under the old name
-        SnapshotLog.recordSchema(db, 1L, Seq((1L, "k", "bigint"), (2L, "v", "bigint")))
-        SnapshotLog.recordSchema(db, 2L,
-          Seq((1L, "k", "bigint"), (2L, "w", "bigint"), (3L, "x", "bigint")))
-        SnapshotLog.recordSchema(db, 3L,
-          Seq((1L, "k", "bigint"), (2L, "w", "bigint"), (4L, "x", "bigint")))
-        Seq((1L, 10L)).toDF("k", "v").coalesce(1).write.parquet(s"$base/a")
-        Seq((2L, 20L, 777L)).toDF("k", "w", "x").coalesce(1).write.parquet(s"$base/b")
-        Seq((3L, 30L, 9L)).toDF("k", "w", "x").coalesce(1).write.parquet(s"$base/c")
-        def pf(d: String) = new java.io.File(s"$base/$d").listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(f => (f.getAbsolutePath, 1L)).toSeq
-        val (fa, fb, fc) = (pf("a"), pf("b"), pf("c"))
-        SnapshotLog.recordFileSchema(db, fa.map(_._1), 1L)
-        SnapshotLog.recordFileSchema(db, fb.map(_._1), 2L)
-        SnapshotLog.recordFileSchema(db, fc.map(_._1), 3L)
-        assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb ++ fc))
-        val got = SnapshotLog.evolvedRead(spark, db, 1L, 3L)
-          .orderBy("k")
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2))))
-          .toSeq
-        // file A: w served from physical "v" (same id 2), x NULL;
-        // file B: x NULL despite a physical column named x (id 3 ≠ 4 —
-        // 777 must NOT leak); file C: the live field 4
-        assert(got == Seq((1L, 10L, None), (2L, 20L, None), (3L, 30L, Some(9L))))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      val base = tempDir("graft_s50_spec_")
+      SnapshotLog.initLog(db)
+      SnapshotLog.initSchemas(db)
+      // schema 1: (1:k, 2:v); schema 2 renames v→w + adds (3:x);
+      // schema 3 drops field 3 and adds a NEW (4:x) under the old name
+      SnapshotLog.recordSchema(db, 1L, Seq((1L, "k", "bigint"), (2L, "v", "bigint")))
+      SnapshotLog.recordSchema(db, 2L,
+        Seq((1L, "k", "bigint"), (2L, "w", "bigint"), (3L, "x", "bigint")))
+      SnapshotLog.recordSchema(db, 3L,
+        Seq((1L, "k", "bigint"), (2L, "w", "bigint"), (4L, "x", "bigint")))
+      Seq((1L, 10L)).toDF("k", "v").coalesce(1).write.parquet(s"$base/a")
+      Seq((2L, 20L, 777L)).toDF("k", "w", "x").coalesce(1).write.parquet(s"$base/b")
+      Seq((3L, 30L, 9L)).toDF("k", "w", "x").coalesce(1).write.parquet(s"$base/c")
+      def pf(d: String) = new java.io.File(s"$base/$d").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(f => (f.getAbsolutePath, 1L)).toSeq
+      val (fa, fb, fc) = (pf("a"), pf("b"), pf("c"))
+      SnapshotLog.recordFileSchema(db, fa.map(_._1), 1L)
+      SnapshotLog.recordFileSchema(db, fb.map(_._1), 2L)
+      SnapshotLog.recordFileSchema(db, fc.map(_._1), 3L)
+      assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb ++ fc))
+      val got = SnapshotLog.evolvedRead(spark, db, 1L, 3L)
+        .orderBy("k")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2))))
+        .toSeq
+      // file A: w served from physical "v" (same id 2), x NULL;
+      // file B: x NULL despite a physical column named x (id 3 ≠ 4 —
+      // 777 must NOT leak); file C: the live field 4
+      assert(got == Seq((1L, 10L, None), (2L, 20L, None), (3L, 30L, Some(9L))))
     }
   }
 
@@ -337,39 +325,33 @@ class SnapshotLogSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     withLog { db =>
-      val base = java.nio.file.Files.createTempDirectory("graft_s49_spec_")
-      try {
-        SnapshotLog.initLog(db)
-        val rows = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "cents")
-        rows.coalesce(1).write.parquet(s"$base/a")
-        rows.coalesce(1).write.parquet(s"$base/b")
-        def pf(d: String) = new java.io.File(s"$base/$d").listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(f => (f.getAbsolutePath, 3L)).toSeq
-        val (fa, fb) = (pf("a"), pf("b"))
-        // the delete file names file A ordinal 0 (k=1's row)
-        spark.read.parquet(fa.map(_._1): _*)
-          .select(col("_metadata.file_path").as("pd_path"),
-            col("_metadata.row_index").as("pd_pos"), col("k"))
-          .filter(col("k") === 1L).select("pd_path", "pd_pos")
-          .coalesce(1).write.parquet(s"$base/pd")
-        val pd = pf("pd").map { case (p, _) => (p, 1L) }
-        // an equality delete for k=2, committed at the SAME seq as data
-        Seq(2L).toDF("k").coalesce(1).write.parquet(s"$base/eq")
-        val eq = pf("eq").map { case (p, _) => (p, 1L) }
-        SnapshotLog.recordSeq(db, (fa ++ fb ++ pd ++ eq).map(_._1), 1L)
-        assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb, eq, pd))
-        val got = SnapshotLog.morReadV2(spark, db, 1L, "k")
-          .groupBy("k").count().orderBy("k")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        // k=1: one of two copies position-deleted (file A only);
-        // k=2: BOTH survive (same-seq equality delete must not bite);
-        // k=3: untouched
-        assert(got == Seq((1L, 1L), (2L, 2L), (3L, 2L)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      val base = tempDir("graft_s49_spec_")
+      SnapshotLog.initLog(db)
+      val rows = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "cents")
+      rows.coalesce(1).write.parquet(s"$base/a")
+      rows.coalesce(1).write.parquet(s"$base/b")
+      def pf(d: String) = new java.io.File(s"$base/$d").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(f => (f.getAbsolutePath, 3L)).toSeq
+      val (fa, fb) = (pf("a"), pf("b"))
+      // the delete file names file A ordinal 0 (k=1's row)
+      spark.read.parquet(fa.map(_._1): _*)
+        .select(col("_metadata.file_path").as("pd_path"),
+          col("_metadata.row_index").as("pd_pos"), col("k"))
+        .filter(col("k") === 1L).select("pd_path", "pd_pos")
+        .coalesce(1).write.parquet(s"$base/pd")
+      val pd = pf("pd").map { case (p, _) => (p, 1L) }
+      // an equality delete for k=2, committed at the SAME seq as data
+      Seq(2L).toDF("k").coalesce(1).write.parquet(s"$base/eq")
+      val eq = pf("eq").map { case (p, _) => (p, 1L) }
+      SnapshotLog.recordSeq(db, (fa ++ fb ++ pd ++ eq).map(_._1), 1L)
+      assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb, eq, pd))
+      val got = SnapshotLog.morReadV2(spark, db, 1L, "k")
+        .groupBy("k").count().orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      // k=1: one of two copies position-deleted (file A only);
+      // k=2: BOTH survive (same-seq equality delete must not bite);
+      // k=3: untouched
+      assert(got == Seq((1L, 1L), (2L, 2L), (3L, 2L)))
     }
   }
 

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      bounded state makes, and why the delay must cover the real
   *      re-delivery horizon.
   */
-class StreamDedupBoundedSpec extends AnyFunSuite {
+class StreamDedupBoundedSpec extends AnyFunSuite with TempDirs {
   private val spark = graft.streaming.StreamSessions.tuned(TestSpark.spark)
   import spark.implicits._
 
@@ -25,7 +25,7 @@ class StreamDedupBoundedSpec extends AnyFunSuite {
     java.sql.Timestamp.valueOf(f"2024-02-$day%02d $hour%02d:00:00")
 
   test("live-state dup dropped; beyond-watermark same-ts dup late-filtered; fresh-ts rekey passes") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s17spec_").toAbsolutePath.toString
+    val base = tempDir("graft_s17spec_").toString
     def writeOne(rows: Seq[(Long, java.sql.Timestamp)], name: String, mtime: Long): Unit = {
       val out = s"$base/_$name"
       rows.toDF("event_id", "ts").coalesce(1).write.mode("overwrite").parquet(out)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Batch-stream parity (SURVEY.md §5.2.4): the Structured Streaming
   * day-bar build must produce exactly the batch operator's rows.
   */
-class StreamParitySpec extends AnyFunSuite {
+class StreamParitySpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
 
   test("streaming day bars equal batch day bars on sf0.001") {
@@ -51,7 +51,7 @@ class StreamParitySpec extends AnyFunSuite {
     * file-0 event precedes every file-1 event).
     */
   private def stageSplit(dir: String, firstBatch: org.apache.spark.sql.Column): String = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_s04mb_").toAbsolutePath.toString
+    val staged = tempDir("graft_s04mb_").toString
     val ev = Tables.events(spark, dir)
     def writeOne(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
       val tmp = s"$staged/_w"
