@@ -3339,7 +3339,7 @@ object RelQueries {
     // r17-verdict headline: q210's CBO estimate read a DEDICATED
     // register census for one key; here s64's per-file HLL sketches are
     // generalized by col_name into ONE long-form stat table (col_ndv,
-    // the initColStats shape) and the SAME estimator answers TWO
+    // the col_stats shape) and the SAME estimator answers TWO
     // different join keys (orders⋈customer on custkey, orders⋈lineitem
     // on orderkey) entirely from log metadata — row counts from the
     // committed manifest, registers merged per-bucket-max out of

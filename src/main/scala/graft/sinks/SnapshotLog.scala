@@ -4,33 +4,12 @@ import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** s39 — a minimal snapshot-isolated table format over the parquet lake:
-  * the commit-log layer (Iceberg/Delta shape) that q131's compaction
-  * planning, q148's manifest diff, and s35's incremental refresh would
-  * actually run AGAINST at 100 TB, reduced to its load-bearing core:
-  *
-  *   - DATA lives as immutable parquet files, written once, never
-  *     rewritten — a commit only writes NEW files plus log rows;
-  *   - each SNAPSHOT owns its full manifest list (snapshot_id → the
-  *     exact file set + per-file row counts), so any historical state
-  *     is reconstructible from the log alone — time travel is "read
-  *     the files snapshot N lists", nothing else;
-  *   - the CURRENT pointer advances by an atomic conditional swap
-  *     inside one transaction (the s35 ledger discipline): a commit
-  *     declares the parent snapshot it built on, and the swap succeeds
-  *     only if the pointer still equals that parent — a concurrent or
-  *     stale committer gets a clean REJECT (optimistic concurrency,
-  *     exactly Iceberg's commit protocol), never a half-visible table.
-  *
-  * The protocol has one version of each primitive: [[initLog]] creates
-  * every table a commit touches; [[commit]] is the only writer of a
-  * snapshot — it swaps main's pointer or a named branch ref and writes
-  * the snapshot, data-manifest, delete-manifest and stale-marker rows in
-  * that one transaction; [[moveCurrent]] is the only snapshot-less
-  * pointer move (publish, rollback); [[expireSnapshots]] is the only
-  * expiry, and always keeps the root, the current snapshot and every
-  * ref-named snapshot. Every pointer move goes through one conditional
-  * swap statement.
+/** The table-log entry family: the 40 lifecycle and planner-stat
+  * entries (s39–s58, s60–s65, s67, s71–s76, q212, q215, q218, q220,
+  * q222, q225, q226) that run on the snapshot-isolated log of
+  * [[TableLog]]. Each stages immutable parquet
+  * files (writeCounted, writeBucketed), commits them through
+  * `TableLog.commit`, and audits what the log reconstructs.
   *
   * The s39 query drives the full lifecycle: two committed snapshots
   * (epoch-0 slice, then append), one INJECTED stale-parent commit that
@@ -39,48 +18,10 @@ import org.apache.spark.sql.functions._
   * oracle's from-scratch recompute over `orders`, so a commit that
   * loses files, a manifest that leaks the other epoch's rows, or a
   * swap that let the stale commit through all fail the gate.
-  *
-  * Scale shape: the log is METADATA (snapshots × files rows through one
-  * JDBC hop — the DuckDbLive bounded-export contract); data files never
-  * move after write, and a time-travel read plans a plain parquet scan
-  * of the listed files (all Catalyst pushdowns intact). Reference
-  * anchor: the commit cadence + CHECKPOINT lifecycle of
-  * `DatabaseWriter.cs:357-464` is this protocol's single-writer
-  * degenerate case.
   */
 object SnapshotLog {
 
   private val Cutoff = "2001-07-15"
-
-  /** DuckDB's optimistic-MVCC write-write conflict (measured from the
-    * engine: "TransactionContext Error: Conflict on update!") — the ONLY
-    * failure the commit path maps to a clean retryable reject. Missing
-    * tables ("Catalog Error"), PK violations ("Constraint Error") and
-    * I/O faults carry different prefixes and RETHROW: a genuine failure
-    * masquerading as a stale-parent reject would send callers into a
-    * futile retry loop against a broken log.
-    *
-    * Matched against BOTH message fragments the engine emits for this
-    * condition — the "TransactionContext Error" category prefix and the
-    * "Conflict on update" detail — so a driver release that re-words or
-    * wraps one half still classifies the conflict instead of crashing a
-    * racing committer. Message shape is pinned against duckdb_jdbc
-    * 1.0.0 (the version in build.sbt); on a driver upgrade, re-run
-    * SnapshotLogSpec's 4-way race test deliberately — it is the thing
-    * that measures this string.
-    */
-  private def isWriteConflict(e: Throwable): Boolean =
-    Option(e.getMessage).exists(m =>
-      m.contains("TransactionContext Error") || m.contains("Conflict on update"))
-
-  /** Rollback + clean reject on a write-write conflict; rollback +
-    * rethrow on anything else. The tail of [[commit]].
-    */
-  private def rejectOnConflict(c: java.sql.Connection, e: Throwable): Boolean = {
-    try c.rollback()
-    catch { case scala.util.control.NonFatal(_) => () }
-    if (isWriteConflict(e)) false else throw e
-  }
 
   /** Run `body` against a fresh temp dir and ALWAYS delete it on the way
     * out: every lifecycle fully materializes its censuses inside the
@@ -93,413 +34,6 @@ object SnapshotLog {
     try DuckDbLive.cachingScope(base)(body(base))
     finally graft.ops.Scratch.deleteTree(base)
   }
-
-  /** Insert log rows via PreparedStatement inside the caller's
-    * transaction — paths are DATA, never spliced into SQL text (an
-    * apostrophe in a path must not be able to tear the layer whose
-    * whole contract is torn-proof commits). Every row a commit writes
-    * (snapshot, data/delete manifest entries, stale markers) goes
-    * through here; `DuckDbLive.insertRows` commits on its own and would
-    * split the commit's transaction.
-    */
-  private def insertManifests(
-      c: java.sql.Connection,
-      table: String,
-      rows: Seq[Product]): Unit =
-    if (rows.nonEmpty) {
-      val ps = c.prepareStatement(
-        s"INSERT INTO $table VALUES (${Seq.fill(rows.head.productArity)("?").mkString(", ")})")
-      try rows.foreach { r =>
-        r.productIterator.zipWithIndex.foreach {
-          case (v: Long, i) => ps.setLong(i + 1, v)
-          case (v: String, i) => ps.setString(i + 1, v)
-        }
-        ps.executeUpdate()
-      } finally ps.close()
-    }
-
-  /** Create the empty commit log — every table a commit touches, in one
-    * DDL: snapshot 0 is the empty table and the current pointer starts
-    * there.
-    *
-    *   - `refs`: named branch refs (Iceberg refs / Nessie branches). A
-    *     ref is a movable pointer into the SAME snapshot DAG the main
-    *     `current` pointer reads — staged work advances a branch ref
-    *     with the identical optimistic-swap discipline, and publishing
-    *     is a pointer move, never a data copy.
-    *   - `delete_manifests` + `file_seq`: merge-on-read metadata
-    *     (Iceberg v2 row-level-delete shape). Delete files are
-    *     first-class manifest entries per snapshot, and every file —
-    *     data or delete — carries the SEQUENCE NUMBER of the commit that
-    *     added it. The sequence number is the load-bearing rule: an
-    *     equality delete applies only to data files with a STRICTLY
-    *     LOWER seq, which is exactly what lets an update (delete old
-    *     version + insert new version in the same commit) not delete its
-    *     own re-inserted rows.
-    *   - `position_delete_manifests`: POSITION deletes (Iceberg v2's
-    *     second row-level-delete kind, the one Spark/Iceberg writers
-    *     emit by default) — a delete file of (data-file path, row
-    *     ordinal) tuples masking exact rows. The seq rule is deliberately
-    *     ASYMMETRIC to equality deletes: a position delete applies to
-    *     data files with seq <= its own (it names an exact file, so a
-    *     commit can position-delete rows of the file it writes — the
-    *     streaming-upsert flush pattern), while an equality delete
-    *     applies strictly below (so an update never eats its own
-    *     re-inserted keys).
-    *   - `stat_stale`: staleness markers for the long-form stat tables.
-    *     col_ndv is append-only and HLL registers cannot be decremented,
-    *     so a delete that removes rows from a file makes that file's
-    *     sketch rows an OVER-COUNT — silently, unless the delete commit
-    *     marks them. The marker is a separate log table (Iceberg's
-    *     stats-invalidation shape: metadata marks, never mutation of the
-    *     immutable sketch rows); readers exclude marked (path, column)
-    *     pairs and recompute the stale scope from data (q215's
-    *     pruned-scope read).
-    */
-  private[graft] def initLog(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val manifestCols = "snapshot_id BIGINT NOT NULL, path VARCHAR NOT NULL, n_rows BIGINT NOT NULL"
-      Seq(
-        "CREATE TABLE snapshots(snapshot_id BIGINT PRIMARY KEY, parent_id BIGINT NOT NULL)",
-        s"CREATE TABLE manifests($manifestCols)",
-        s"CREATE TABLE delete_manifests($manifestCols)",
-        s"CREATE TABLE position_delete_manifests($manifestCols)",
-        "CREATE TABLE current(pin BIGINT PRIMARY KEY CHECK (pin = 0), snapshot_id BIGINT NOT NULL)",
-        "CREATE TABLE refs(name VARCHAR PRIMARY KEY, snapshot_id BIGINT NOT NULL)",
-        "CREATE TABLE file_seq(path VARCHAR PRIMARY KEY, seq BIGINT NOT NULL)",
-        "CREATE TABLE stat_stale(path VARCHAR NOT NULL, col_name VARCHAR NOT NULL)",
-        "INSERT INTO current VALUES (0, 0)",
-        "INSERT INTO snapshots VALUES (0, 0)"
-      ).foreach(DuckDbLive.execute(c, _))
-    }
-
-  /** The conditional pointer swap: move main's `current` pointer
-    * (`ref` = None) or the named branch ref from `expected` to `to`,
-    * true iff the pointer still sat at `expected`. The only statement in
-    * the log that moves a pointer.
-    */
-  private def swap(c: java.sql.Connection, ref: Option[String], expected: Long, to: Long): Boolean = {
-    val ps = c.prepareStatement(ref.fold(
-      "UPDATE current SET snapshot_id = ? WHERE snapshot_id = ? AND pin = 0")(_ =>
-      "UPDATE refs SET snapshot_id = ? WHERE snapshot_id = ? AND name = ?"))
-    try {
-      ps.setLong(1, to)
-      ps.setLong(2, expected)
-      ref.foreach(ps.setString(3, _))
-      ps.executeUpdate() == 1
-    } finally ps.close()
-  }
-
-  /** Commit `snapshotId` whose manifest list is `dataFiles`, built on
-    * `expectedParent`. TRANSACTIONAL + OPTIMISTIC: the conditional
-    * pointer swap runs in the same transaction as the snapshot row and
-    * every manifest row, so a stale parent (update count 0) rolls
-    * everything back and returns false — and a RACING committer that
-    * touched the pointer row first surfaces as DuckDB's optimistic-MVCC
-    * write-write conflict, which is caught and reported as the same
-    * clean reject (the loser retries against the new parent or gives
-    * up; it never half-commits). Returns true iff this call advanced
-    * the table.
-    *
-    * With `ref` set the commit advances that BRANCH ref instead of main:
-    * same transaction shape, so staged history is exactly as torn-proof
-    * as published history; main's pointer is never touched.
-    *
-    * Row-level deletes ride the same transaction: equality-delete and
-    * position-delete manifests land with the data manifest, so a torn
-    * commit can never leave data files visible without the delete
-    * files that mask their dead rows. `staleMarkers` (path, col) rows
-    * land in `stat_stale` INSIDE that transaction too — a delete that
-    * invalidates sketch rows must never become visible without its
-    * markers (a crash between the swap and a follow-up marker insert
-    * would leave col_ndv/col_topk/col_cms looking fresh over rows that
-    * no longer exist — the silent over-count s71/s74 exist to prevent).
-    */
-  private[graft] def commit(
-      dbFile: String,
-      expectedParent: Long,
-      snapshotId: Long,
-      dataFiles: Seq[(String, Long)],
-      eqDeletes: Seq[(String, Long)] = Nil,
-      posDeletes: Seq[(String, Long)] = Nil,
-      staleMarkers: Seq[(String, String)] = Nil,
-      ref: Option[String] = None): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      def entries(files: Seq[(String, Long)]) = files.map { case (p, n) => (snapshotId, p, n) }
-      c.setAutoCommit(false)
-      try {
-        if (swap(c, ref, expectedParent, snapshotId)) {
-          insertManifests(c, "snapshots", Seq((snapshotId, expectedParent)))
-          insertManifests(c, "manifests", entries(dataFiles))
-          insertManifests(c, "delete_manifests", entries(eqDeletes))
-          insertManifests(c, "position_delete_manifests", entries(posDeletes))
-          insertManifests(c, "stat_stale", staleMarkers)
-          c.commit()
-          true
-        } else {
-          c.rollback()
-          false
-        }
-      } catch {
-        // racing committer won the pointer row (MVCC write-write
-        // conflict) — same clean reject as the stale-parent path;
-        // any OTHER failure rethrows (see isWriteConflict)
-        case scala.util.control.NonFatal(e) => rejectOnConflict(c, e)
-      } finally c.setAutoCommit(true)
-    }
-
-  /** Move main's pointer from `expected` to `to` without writing a
-    * snapshot — conditional on the expected head, so a racing writer is
-    * never silently clobbered or undone:
-    *
-    *   - PUBLISH: fast-forward main to an audited staged snapshot; it
-    *     succeeds only if main still sits at the parent the stage was
-    *     cut from (a concurrent main commit makes the staged lineage
-    *     stale, and the publish must reject, not clobber).
-    *   - ROLLBACK: move main back to an older snapshot, rewriting NO
-    *     history: the rolled-back-from lineage stays in the log,
-    *     readable and expirable, exactly like Iceberg's
-    *     rollback_to_snapshot.
-    */
-  private[graft] def moveCurrent(dbFile: String, expected: Long, to: Long): Boolean =
-    DuckDbLive.withConnection(dbFile)(swap(_, None, expected, to))
-
-  /** Expire every snapshot older than `olderThan` — never the empty root
-    * 0, never the current pointer, and never a snapshot any ref names
-    * (Iceberg's tag semantics: a tag pinning an audited state or a
-    * branch head survives expiry regardless of age): delete their
-    * snapshot + manifest rows in ONE transaction. Iceberg's
-    * `expire_snapshots` shape — after this, those historical states are
-    * no longer time-travelable and any file referenced ONLY by them
-    * becomes garbage. Returns the expired ids (ascending).
-    */
-  private[graft] def expireSnapshots(dbFile: String, olderThan: Long): Seq[Long] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      c.setAutoCommit(false)
-      try {
-        val ids = DuckDbLive
-          .queryRows(
-            c,
-            s"""SELECT snapshot_id FROM snapshots
-               WHERE snapshot_id > 0 AND snapshot_id < $olderThan
-               AND snapshot_id <> (SELECT snapshot_id FROM current WHERE pin = 0)
-               AND snapshot_id NOT IN (SELECT snapshot_id FROM refs)
-               ORDER BY snapshot_id""")
-          .map(_.head.asInstanceOf[Number].longValue)
-        val st = c.createStatement()
-        try ids.foreach { id =>
-          st.executeUpdate(s"DELETE FROM manifests WHERE snapshot_id = $id")
-          st.executeUpdate(s"DELETE FROM snapshots WHERE snapshot_id = $id")
-        } finally st.close()
-        c.commit()
-        ids
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          try c.rollback()
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw e
-      } finally c.setAutoCommit(true)
-    }
-
-  /** Every data file still referenced by ANY retained snapshot — the
-    * reachability set orphan-file GC deletes against. Pure log metadata
-    * (one DISTINCT over manifest rows), never a storage listing join
-    * against data contents.
-    */
-  private[graft] def liveFiles(dbFile: String): Set[String] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(c, "SELECT DISTINCT path FROM manifests")
-        .map(_.head.toString)
-        .toSet
-    }
-
-  /** File-level partition stats (Iceberg manifest-entry shape): each
-    * immutable data file records the single partition value it covers,
-    * so scan planning / merge-affected-file selection is a METADATA
-    * lookup — no data file is opened to decide which files matter.
-    */
-  private[graft] def initStats(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        "CREATE TABLE file_stats(path VARCHAR PRIMARY KEY, bucket BIGINT NOT NULL)")
-    }
-
-  private[graft] def recordStats(dbFile: String, stats: Seq[(String, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_stats VALUES (?, ?)", stats) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setLong(o + 2, r._2)
-      }
-    }
-
-  private[graft] def createRef(dbFile: String, name: String, at: Long): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val ps = c.prepareStatement("INSERT INTO refs VALUES (?, ?)")
-      try {
-        ps.setString(1, name)
-        ps.setLong(2, at)
-        ps.executeUpdate()
-        ()
-      } finally ps.close()
-    }
-
-  private[graft] def refSnapshot(dbFile: String, name: String): Long =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val ps = c.prepareStatement("SELECT snapshot_id FROM refs WHERE name = ?")
-      try {
-        ps.setString(1, name)
-        val rs = ps.executeQuery()
-        try { rs.next(); rs.getLong(1) }
-        finally rs.close()
-      } finally ps.close()
-    }
-
-  private[graft] def recordSeq(dbFile: String, paths: Seq[String], seq: Long): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_seq VALUES (?, ?)", paths) {
-        (ps, o, p) =>
-          ps.setString(o + 1, p)
-          ps.setLong(o + 2, seq)
-      }
-    }
-
-  /** Snapshot N's position-delete files with their sequence numbers. */
-  private[graft] def posDeleteSeq(dbFile: String, snapshotId: Long): Seq[(String, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT m.path, s.seq FROM position_delete_manifests m
-             JOIN file_seq s ON m.path = s.path
-             WHERE m.snapshot_id = $snapshotId ORDER BY m.path""")
-        .map(r => (r(0).toString, r(1).asInstanceOf[Number].longValue))
-    }
-
-  /** The v2 MOR read path, reconstructed from the log alone: data files
-    * unioned with their seq AND their per-row (file, ordinal) identity
-    * (Spark's `_metadata.file_path` / `_metadata.row_index` hidden
-    * columns — the engine-native row-position source, no synthetic
-    * zipWithIndex pass), equality-dead rows masked by the strictly-
-    * lower-seq anti-join on `keyCol`, position-dead rows masked by the
-    * ordinal anti-join SCOPED PER FILE (path equality) under the <=
-    * rule (pseq >= fseq). Scale shape: both masks are anti-joins of the
-    * scan against delta-sized delete frames (broadcastable); ordinals
-    * never materialize outside the join keys.
-    */
-  private[graft] def morReadV2(
-      spark: SparkSession,
-      dbFile: String,
-      snap: Long,
-      keyCol: String,
-      onlyFiles: Option[Set[String]] = None): DataFrame = {
-    val dataFiles = manifestSeq(dbFile, snap)
-      .filter(f => onlyFiles.forall(_.contains(f._1)))
-    require(
-      dataFiles.nonEmpty,
-      s"morReadV2: snapshot $snap has no data files" +
-        onlyFiles.fold("")(s => s" after onlyFiles filter (${s.size} allowed)") +
-        " — reduce over zero per-seq groups would throw an opaque " +
-        "UnsupportedOperationException")
-    val data = dataFiles
-      .groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (sq, fs) =>
-        Tables.parquet(spark, fs.map(_._1): _*)
-          .withColumn("fseq", lit(sq))
-          .withColumn("fpath", col("_metadata.file_path"))
-          .withColumn("fpos", col("_metadata.row_index"))
-      }
-      .reduce(_ unionByName _)
-    val eq = deleteSeq(dbFile, snap)
-    val afterEq =
-      if (eq.isEmpty) data
-      else data.as("f").join(
-        eq.groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (sq, fs) =>
-            Tables.parquet(spark, fs.map(_._1): _*).withColumn("dseq", lit(sq))
-          }
-          .reduce(_ unionByName _)
-          .as("dv"),
-        col(s"f.$keyCol") === col(s"dv.$keyCol") && col("dv.dseq") > col("f.fseq"),
-        "left_anti")
-    val pos = posDeleteSeq(dbFile, snap)
-    val out =
-      if (pos.isEmpty) afterEq
-      else afterEq.as("f").join(
-        pos.groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (sq, fs) =>
-            Tables.parquet(spark, fs.map(_._1): _*).withColumn("pseq", lit(sq))
-          }
-          .reduce(_ unionByName _)
-          .as("pv"),
-        col("f.fpath") === col("pv.pd_path") && col("f.fpos") === col("pv.pd_pos") &&
-          col("pv.pseq") >= col("f.fseq"),
-        "left_anti")
-    out.drop("fseq", "fpath", "fpos")
-  }
-
-  /** Snapshot N's data files with their sequence numbers. */
-  private[graft] def manifestSeq(dbFile: String, snapshotId: Long): Seq[(String, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT m.path, s.seq FROM manifests m JOIN file_seq s ON m.path = s.path
-             WHERE m.snapshot_id = $snapshotId ORDER BY m.path""")
-        .map(r => (r(0).toString, r(1).asInstanceOf[Number].longValue))
-    }
-
-  /** Snapshot N's delete files with their sequence numbers. */
-  private[graft] def deleteSeq(dbFile: String, snapshotId: Long): Seq[(String, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT m.path, s.seq FROM delete_manifests m
-             JOIN file_seq s ON m.path = s.path
-             WHERE m.snapshot_id = $snapshotId ORDER BY m.path""")
-        .map(r => (r(0).toString, r(1).asInstanceOf[Number].longValue))
-    }
-
-  /** The data files of snapshot `snapshotId` whose recorded partition
-    * value overlaps the delta's buckets — Iceberg scan planning reduced
-    * to its core: manifest rows × file stats, zero data-file reads.
-    */
-  private[graft] def prunePaths(
-      dbFile: String,
-      snapshotId: Long,
-      buckets: Seq[Long]): Seq[String] =
-    if (buckets.isEmpty) Seq.empty
-    else
-      DuckDbLive.withConnection(dbFile) { c =>
-        DuckDbLive
-          .queryRows(
-            c,
-            s"""SELECT m.path FROM manifests m JOIN file_stats f ON m.path = f.path
-               WHERE m.snapshot_id = $snapshotId
-               AND f.bucket IN (${buckets.mkString(",")})
-               ORDER BY m.path""")
-          .map(_.head.toString)
-      }
-
-  /** Snapshot N's manifest list (path, n_rows) — the full file set. */
-  private[graft] def manifest(dbFile: String, snapshotId: Long): Seq[(String, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"SELECT path, n_rows FROM manifests WHERE snapshot_id = $snapshotId ORDER BY path")
-        .map(r => (r(0).toString, r(1).asInstanceOf[Number].longValue))
-    }
-
-  private[graft] def currentSnapshot(dbFile: String): Long =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(c, "SELECT snapshot_id FROM current WHERE pin = 0")
-        .head.head.asInstanceOf[Number].longValue
-    }
 
   /** COMMIT-CARRIED counts for the s39-class lifecycles (no post-write
     * `_metadata.file_path` re-scan, like the bucket-base lifecycles):
@@ -596,43 +130,35 @@ object SnapshotLog {
 
     withTempTableDir("graft_s39_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       // epoch 0: the pre-cutoff slice, exactly 2 data files (repartition
       // pins the file count; both non-empty at every SF)
       val files1 = writeCounted(spark, o.filter(col("d") < lit(Cutoff).cast("date"))
         .drop("d"), s"$base/b1", 2)
-      val c1 = commit(dbFile, expectedParent = 0L, snapshotId = 1L, files1)
+      val c1 = TableLog.commit(dbFile, expectedParent = 0L, snapshotId = 1L, files1)
 
       // epoch 1: append the rest as 3 new files; snapshot 2's manifest
       // lists the FULL file set (snapshot-owns-its-manifest-list shape)
       val files2 = writeCounted(spark, o.filter(!(col("d") < lit(Cutoff).cast("date")))
         .drop("d"), s"$base/b2", 3)
-      val c2 = commit(dbFile, expectedParent = 1L, snapshotId = 2L, files1 ++ files2)
+      val c2 = TableLog.commit(dbFile, expectedParent = 1L, snapshotId = 2L, files1 ++ files2)
 
       // INJECTED stale commit: a writer that still thinks the table is
       // at snapshot 1 (the retried-job / concurrent-committer failure
       // mode) — the conditional swap must reject it cleanly
-      val stale = commit(dbFile, expectedParent = 1L, snapshotId = 3L, files2)
+      val stale = TableLog.commit(dbFile, expectedParent = 1L, snapshotId = 3L, files2)
       val conflictRejected = c1 && c2 && !stale &&
-        currentSnapshot(dbFile) == 2L
+        TableLog.currentSnapshot(dbFile) == 2L
 
       // time-travel read: reconstruct each snapshot FROM THE LOG ALONE
       // and census the actual parquet read (not the manifest counts) —
       // the hash proves the historical state is bit-reconstructible
-      // both snapshots' censuses fused into ONE tagged union job (the
-      // s49 r20 pattern, guide §2.4; per-snapshot values unchanged)
-      val census: Map[Long, (Long, Long)] = Seq(1L, 2L)
-        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
-          .select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 2 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      val census = TableLog.census(spark, dbFile, Seq(1L, 2L))()
       val rows = Seq(1L, 2L).map { snap =>
-        (snap, manifest(dbFile, snap).size.toLong,
+        (snap, TableLog.manifest(dbFile, snap).size.toLong,
           census(snap)._1, census(snap)._2,
-          snap == currentSnapshot(dbFile), conflictRejected)
+          snap == TableLog.currentSnapshot(dbFile), conflictRejected)
       }
       rows
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
@@ -671,7 +197,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s41_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
       val schema = Tables.parquet(s, s"$staged/0.parquet").schema
@@ -691,7 +217,7 @@ object SnapshotLog {
             s, b.select(col("event_id"), col("user_id"), cents), out, 2)
           commits.put(
             epoch,
-            commit(dbFile, epoch, epoch + 1, manifest(dbFile, epoch) ++ ef))
+            TableLog.commit(dbFile, epoch, epoch + 1, TableLog.manifest(dbFile, epoch) ++ ef))
           ()
         }
         .trigger(Trigger.AvailableNow())
@@ -702,24 +228,16 @@ object SnapshotLog {
       // swap's parent check (pointer = 3 ≠ 1) must reject it cleanly
       // the retried payload comes FROM THE LOG: snapshot 2's manifest is
       // exactly manifest(1) ++ epoch-1's files — no post-write re-scan
-      val retry = commit(dbFile, 1L, 2L, manifest(dbFile, 2L))
+      val retry = TableLog.commit(dbFile, 1L, 2L, TableLog.manifest(dbFile, 2L))
       import scala.jdk.CollectionConverters._
       val exactlyOnce = commits.asScala.values.forall(identity) &&
-        commits.size == 3 && !retry && currentSnapshot(dbFile) == 3L
+        commits.size == 3 && !retry && TableLog.currentSnapshot(dbFile) == 3L
 
-      // the three snapshots' censuses fused into ONE tagged union job
-      // (the s49 r20 pattern, guide §2.4; per-snapshot values unchanged)
-      val census: Map[Long, (Long, Long)] = Seq(1L, 2L, 3L)
-        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
-          .select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 3 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      val census = TableLog.census(spark, dbFile, Seq(1L, 2L, 3L))()
       val rows = Seq(1L, 2L, 3L).map { snap =>
-        (snap, manifest(dbFile, snap).size.toLong,
+        (snap, TableLog.manifest(dbFile, snap).size.toLong,
           census(snap)._1, census(snap)._2,
-          snap == currentSnapshot(dbFile), exactlyOnce)
+          snap == TableLog.currentSnapshot(dbFile), exactlyOnce)
       }
       rows
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
@@ -765,30 +283,30 @@ object SnapshotLog {
 
     withTempTableDir("graft_s40_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
       IncrementalRefresh.initStore(dbFile)
 
       val files1 = writeCounted(spark, o.filter(col("d") < lit(Cutoff).cast("date")).drop("d"), s"$base/b1", 2)
-      commit(dbFile, 0L, 1L, files1)
+      TableLog.commit(dbFile, 0L, 1L, files1)
       // full build from SNAPSHOT 1's manifest (the log is the source of
       // truth for what the table contains, not the raw fixture)
       val built = IncrementalRefresh.applyRefresh(
         dbFile, 1L,
-        partials(Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)))
+        partials(TableLog.read(spark, dbFile, 1L)))
 
       val files2 = writeCounted(spark, o.filter(!(col("d") < lit(Cutoff).cast("date"))).drop("d"), s"$base/b2", 3)
-      commit(dbFile, 1L, 2L, files1 ++ files2)
+      TableLog.commit(dbFile, 1L, 2L, files1 ++ files2)
 
       // the refresh delta = manifest(2) \ manifest(1): log metadata only
-      val added = manifest(dbFile, 2L).map(_._1)
-        .filterNot(manifest(dbFile, 1L).map(_._1).toSet)
+      val added = TableLog.manifest(dbFile, 2L).map(_._1)
+        .filterNot(TableLog.manifest(dbFile, 1L).map(_._1).toSet)
       val addedPartials = partials(Tables.parquet(spark, added: _*))
       val refreshed = IncrementalRefresh.applyRefresh(dbFile, 2L, addedPartials)
       // injected re-delivery of the same refresh batch: ledger rejects
       val redelivered = IncrementalRefresh.applyRefresh(dbFile, 2L, addedPartials)
 
       // per-bucket from-scratch equality over snapshot 2's full manifest
-      val scratch = Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+      val scratch = TableLog.read(spark, dbFile, 2L)
         .withColumn("fp",
           expr("""(o_orderkey * 1000003 + cents * 31 + o_custkey) % 1000000007"""))
         .groupBy("bucket")
@@ -859,29 +377,29 @@ object SnapshotLog {
 
     withTempTableDir("graft_s42_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       // snapshots 1 and 2: the s39 append lifecycle (2 then +3 files)
       val files1 = writeCounted(spark, o.filter(col("d") < lit(Cutoff).cast("date")).drop("d"), s"$base/b1", 2)
-      val c1 = commit(dbFile, 0L, 1L, files1)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, files1)
       val files2 = writeCounted(spark, o.filter(!(col("d") < lit(Cutoff).cast("date"))).drop("d"), s"$base/b2", 3)
-      val c2 = commit(dbFile, 1L, 2L, files1 ++ files2)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, files1 ++ files2)
 
       // snapshot 3: COMPACTION — q131's algebra run against the log:
       // read exactly what snapshot 2's manifest lists, rewrite as 2 new
       // files, commit a manifest that references ONLY the new files
-      val files3 = writeCounted(spark, Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*), s"$base/b3", 2)
-      val c3 = commit(dbFile, 2L, 3L, files3)
+      val files3 = writeCounted(spark, TableLog.read(spark, dbFile, 2L), s"$base/b3", 2)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, files3)
 
       // ORPHANS: a loser of the commit race has already written its data
       // files when the conditional swap rejects it — they exist on
       // storage but no manifest row ever points at them
       val filesX = writeCounted(spark, o.filter(col("d") < lit(Cutoff).cast("date")).drop("d"), s"$base/bx", 2)
-      val stale = commit(dbFile, 1L, 9L, filesX)
+      val stale = TableLog.commit(dbFile, 1L, 9L, filesX)
 
       // expire 1 and 2, then GC against the retained reachability set
-      val expired = expireSnapshots(dbFile, olderThan = 3L)
-      val live = liveFiles(dbFile)
+      val expired = TableLog.expireSnapshots(dbFile, olderThan = 3L)
+      val live = TableLog.liveFiles(dbFile)
       val all = (files1 ++ files2 ++ files3 ++ filesX).map(_._1)
       val garbage = all.filterNot(live)
       garbage.foreach(p => java.nio.file.Files.delete(java.nio.file.Paths.get(p)))
@@ -890,13 +408,13 @@ object SnapshotLog {
 
       // census snapshot 3 AFTER the deletions — the proof GC kept every
       // live file and compaction preserved every row
-      val mf3 = manifest(dbFile, 3L)
+      val mf3 = TableLog.manifest(dbFile, 3L)
       val agg = Tables.parquet(spark, mf3.map(_._1): _*)
         .agg(count(lit(1)), sum(col("cents"))).head()
       val gcSafe = c1 && c2 && c3 && !stale &&
         expired == Seq(1L, 2L) &&
-        currentSnapshot(dbFile) == 3L &&
-        manifest(dbFile, 1L).isEmpty && manifest(dbFile, 2L).isEmpty &&
+        TableLog.currentSnapshot(dbFile) == 3L &&
+        TableLog.manifest(dbFile, 1L).isEmpty && TableLog.manifest(dbFile, 2L).isEmpty &&
         garbage.forall(p => !java.nio.file.Files.exists(java.nio.file.Paths.get(p))) &&
         live.forall(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
 
@@ -965,14 +483,13 @@ object SnapshotLog {
 
     withTempTableDir("graft_s43_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       // base table: one immutable file per bucket, partition value
       // recorded in the log (the Iceberg manifest-entry stat)
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
-      val c1 = commit(dbFile, 0L, 1L, baseFiles)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, baseFiles)
 
       // the delta's touched buckets, computed FROM the delta (domain ≤ 4
       // values — a bounded collect by construction)
@@ -981,8 +498,8 @@ object SnapshotLog {
         .distinct().collect().map(_.getLong(0)).sorted.toSeq
 
       // metadata-only scan planning: which files must be rewritten
-      val affected = prunePaths(dbFile, 1L, deltaBuckets)
-      val carried = manifest(dbFile, 1L).filterNot(f => affected.contains(f._1))
+      val affected = TableLog.prunePaths(dbFile, 1L, deltaBuckets)
+      val carried = TableLog.manifest(dbFile, 1L).filterNot(f => affected.contains(f._1))
 
       // COW rewrite of exactly the affected file(s)
       val newFiles = writeCounted(spark, Tables.parquet(spark, affected: _*)
@@ -990,21 +507,21 @@ object SnapshotLog {
         .withColumn("cents",
           when(updPred, col("cents") + 1000L).otherwise(col("cents")))
         .unionByName(inserts), s"$base/m", 1)
-      recordStats(dbFile, newFiles.map(p => (p._1, 2L)))
-      val c2 = commit(dbFile, 1L, 2L, carried ++ newFiles)
+      TableLog.recordStats(dbFile, newFiles.map(p => (p._1, 2L)))
+      val c2 = TableLog.commit(dbFile, 1L, 2L, carried ++ newFiles)
 
       // post-merge census from snapshot 2, pre-merge TIME TRAVEL from
       // snapshot 1 — both read after the merge committed; independent
-      // scans, overlapped (guide §2.6, r21)
+      // scans, overlapped
       val (post, pre) = graft.ops.Par.run2(
-        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+        () => TableLog.read(spark, dbFile, 2L)
           .agg(count(lit(1)), sum(col("cents"))).head(),
-        () => Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+        () => TableLog.read(spark, dbFile, 1L)
           .agg(count(lit(1)), sum(col("cents"))).head())
       val mergeOk = c1 && c2 &&
         affected.size == 1 && carried.size == 3 &&
-        currentSnapshot(dbFile) == 2L &&
-        carried.forall(f => manifest(dbFile, 2L).contains(f)) &&
+        TableLog.currentSnapshot(dbFile) == 2L &&
+        carried.forall(f => TableLog.manifest(dbFile, 2L).contains(f)) &&
         post.getLong(0) == pre.getLong(0) - nd + 10L
 
       Seq((
@@ -1066,26 +583,25 @@ object SnapshotLog {
 
     withTempTableDir("graft_s45_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       // s43's COW lifecycle: 4 bucket files, prune to bucket 2, rewrite
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
-      commit(dbFile, 0L, 1L, baseFiles)
-      val affected = prunePaths(dbFile, 1L, Seq(2L))
-      val carried = manifest(dbFile, 1L).filterNot(f => affected.contains(f._1))
+      TableLog.commit(dbFile, 0L, 1L, baseFiles)
+      val affected = TableLog.prunePaths(dbFile, 1L, Seq(2L))
+      val carried = TableLog.manifest(dbFile, 1L).filterNot(f => affected.contains(f._1))
       val newFiles = writeCounted(spark, Tables.parquet(spark, affected: _*)
         .filter(!delPred)
         .withColumn("cents",
           when(updPred, col("cents") + 1000L).otherwise(col("cents")))
         .unionByName(inserts), s"$base/m", 1)
-      commit(dbFile, 1L, 2L, carried ++ newFiles)
+      TableLog.commit(dbFile, 1L, 2L, carried ++ newFiles)
 
       // the changelog: manifest diff → removed/added file sets (log
       // metadata), then one full-outer join of exactly those files
-      val mf1 = manifest(dbFile, 1L).map(_._1).toSet
-      val mf2 = manifest(dbFile, 2L).map(_._1).toSet
+      val mf1 = TableLog.manifest(dbFile, 1L).map(_._1).toSet
+      val mf2 = TableLog.manifest(dbFile, 2L).map(_._1).toSet
       val removed = (mf1 -- mf2).toSeq.sorted
       val added = (mf2 -- mf1).toSeq.sorted
       val pre = Tables.parquet(spark, removed: _*).select(
@@ -1163,43 +679,43 @@ object SnapshotLog {
 
     withTempTableDir("graft_s46_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       // main at snapshot 1: the non-staged two-thirds
       val files1 = writeCounted(spark, o.filter(!stagePred).select("k", "cents"), s"$base/b1", 2)
-      val c1 = commit(dbFile, 0L, 1L, files1)
-      createRef(dbFile, "wap", at = 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, files1)
+      TableLog.createRef(dbFile, "wap", at = 1L)
 
       // staged commit A (branch only): the append, CORRUPTED — the
       // ingest bug the audit exists to catch
       val filesBad = writeCounted(spark, o.filter(stagePred)
         .select(col("k"),
           when(corruptPred, -col("cents")).otherwise(col("cents")).as("cents")), s"$base/bad", 2)
-      val cA = commit(dbFile, 1L, 2L, files1 ++ filesBad, ref = Some("wap"))
+      val cA = TableLog.commit(dbFile, 1L, 2L, files1 ++ filesBad, ref = Some("wap"))
 
       // audit the staged snapshot through the log; count bad rows
-      def audit(snap: Long): Long = Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
+      def audit(snap: Long): Long = TableLog.read(spark, dbFile, snap)
         .filter(col("cents") < 0L).count()
-      val nBadStaged = audit(refSnapshot(dbFile, "wap"))
+      val nBadStaged = audit(TableLog.refSnapshot(dbFile, "wap"))
 
       // isolation: main readers, DURING staging, see snapshot 1 exactly
-      val mainStaged = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val mainStaged = TableLog.read(spark, dbFile, TableLog.currentSnapshot(dbFile))
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       // staged commit B: the fixed append; audit passes; publish
       val filesGood = writeCounted(spark, o.filter(stagePred).select("k", "cents"), s"$base/good", 2)
-      val cB = commit(dbFile, 2L, 3L, files1 ++ filesGood, ref = Some("wap"))
-      val nBadFixed = audit(refSnapshot(dbFile, "wap"))
-      val pub = nBadFixed == 0L && moveCurrent(dbFile, expected = 1L, to = 3L)
+      val cB = TableLog.commit(dbFile, 2L, 3L, files1 ++ filesGood, ref = Some("wap"))
+      val nBadFixed = audit(TableLog.refSnapshot(dbFile, "wap"))
+      val pub = nBadFixed == 0L && TableLog.moveCurrent(dbFile, expected = 1L, to = 3L)
 
       // a stale retry of the ABANDONED bad stage must reject
-      val stalePub = moveCurrent(dbFile, expected = 1L, to = 2L)
+      val stalePub = TableLog.moveCurrent(dbFile, expected = 1L, to = 2L)
 
-      val mainPub = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val mainPub = TableLog.read(spark, dbFile, TableLog.currentSnapshot(dbFile))
         .agg(count(lit(1)), sum(col("cents"))).head()
       val wapOk = c1 && cA && cB && pub && !stalePub &&
         nBadStaged > 0L && nBadFixed == 0L &&
-        currentSnapshot(dbFile) == 3L && refSnapshot(dbFile, "wap") == 3L
+        TableLog.currentSnapshot(dbFile) == 3L && TableLog.refSnapshot(dbFile, "wap") == 3L
 
       Seq((
         nBadStaged, mainStaged.getLong(0), mainStaged.getLong(1),
@@ -1210,56 +726,6 @@ object SnapshotLog {
         .orderBy("n_bad_staged")
     }
   }
-
-  /** Partition-spec registry (Iceberg partition evolution): each data
-    * file records WHICH spec partitioned it and its value under that
-    * spec — changing the table's partitioning is a metadata change,
-    * never a rewrite of existing files.
-    */
-  private[graft] def initSpecs(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE file_spec(
-          |path VARCHAR PRIMARY KEY, spec_id BIGINT NOT NULL,
-          |pval BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordSpec(
-      dbFile: String,
-      stats: Seq[(String, Long, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_spec VALUES (?, ?, ?)", stats) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setLong(o + 2, r._2)
-          ps.setLong(o + 3, r._3)
-      }
-    }
-
-  /** Spec-aware scan planning: the files of `snapshotId` whose partition
-    * value can contain rows matching the per-spec value map — one
-    * metadata query across ALL specs at once (`wanted` maps spec_id →
-    * the value the predicate implies under that spec's transform).
-    */
-  private[graft] def pruneAcrossSpecs(
-      dbFile: String,
-      snapshotId: Long,
-      wanted: Map[Long, Long]): Seq[String] =
-    if (wanted.isEmpty) Seq.empty
-    else
-      DuckDbLive.withConnection(dbFile) { c =>
-        val cond = wanted
-          .map { case (spec, v) => s"(f.spec_id = $spec AND f.pval = $v)" }
-          .mkString(" OR ")
-        DuckDbLive
-          .queryRows(
-            c,
-            s"""SELECT m.path FROM manifests m JOIN file_spec f ON m.path = f.path
-               WHERE m.snapshot_id = $snapshotId AND ($cond)
-               ORDER BY m.path""")
-          .map(_.head.toString)
-      }
 
   /** s48 — PARTITION-SPEC EVOLUTION (Iceberg's partition evolution): at
     * 100 TB the original partitioning eventually stops fitting the data
@@ -1299,8 +765,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s48_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initSpecs(dbFile)
+      TableLog.init(dbFile)
 
       // hive-style partitioned write; one file per present value, the
       // per-value counts carried by the WRITE JOB's Observation (the
@@ -1341,22 +806,22 @@ object SnapshotLog {
           s"partitioned write under $out listed values " +
             s"${files.map(_._2).sorted.mkString(",")} but the write observed " +
             s"${present.toSeq.sorted.mkString(",")} — counts would be mis-attributed")
-        recordSpec(dbFile, files.map { case (p, v) => (p, specId, v) })
+        TableLog.recordSpec(dbFile, files.map { case (p, v) => (p, specId, v) })
         files.map { case (p, v) => (p, m(s"n_$v").asInstanceOf[Long]) }
       }
 
       val files1 = writeSpec(
         o.filter(col("d") < lit(Cutoff).cast("date")).drop("d"),
         s"$base/g1", modBy = 4L, specId = 1L)
-      val c1 = commit(dbFile, 0L, 1L, files1)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, files1)
       // EVOLUTION: the append lands under spec 2; old files carry by path
       val files2 = writeSpec(
         o.filter(!(col("d") < lit(Cutoff).cast("date"))).drop("d"),
         s"$base/g2", modBy = 8L, specId = 2L)
-      val c2 = commit(dbFile, 1L, 2L, files1 ++ files2)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, files1 ++ files2)
 
       // plan k%8 == 5 across both specs: 5 under spec 2, 5 mod 4 under 1
-      val pruned = pruneAcrossSpecs(dbFile, 2L, Map(1L -> (5L % 4L), 2L -> 5L))
+      val pruned = TableLog.pruneAcrossSpecs(dbFile, 2L, Map(1L -> (5L % 4L), 2L -> 5L))
       // the pruned read, its full-scan foil, and the snapshot-1 time
       // travel are independent scans — overlapped (guide §2.6, r21)
       val Seq(sel, full, snap1) = graft.ops.Par.run(Seq(
@@ -1364,165 +829,24 @@ object SnapshotLog {
           .filter(col("k") % 8 === 5)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         // the full-scan answer the pruned read must reproduce
-        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+        () => TableLog.read(spark, dbFile, 2L)
           .filter(col("k") % 8 === 5)
           .agg(count(lit(1)), sum(col("cents"))).head(),
-        () => Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+        () => TableLog.read(spark, dbFile, 1L)
           .agg(count(lit(1)), sum(col("cents"))).head()))
       val evolutionOk = c1 && c2 &&
-        currentSnapshot(dbFile) == 2L &&
-        files1.forall(f => manifest(dbFile, 2L).contains(f)) && // never rewritten
+        TableLog.currentSnapshot(dbFile) == 2L &&
+        files1.forall(f => TableLog.manifest(dbFile, 2L).contains(f)) && // never rewritten
         sel.getLong(0) == full.getLong(0) && sel.getLong(1) == full.getLong(1)
 
       Seq((
-        manifest(dbFile, 2L).size.toLong, pruned.size.toLong,
+        TableLog.manifest(dbFile, 2L).size.toLong, pruned.size.toLong,
         sel.getLong(0), sel.getLong(1),
         snap1.getLong(0), snap1.getLong(1), evolutionOk))
         .toDF("n_files_total", "n_files_scanned", "n_rows_sel",
           "sum_cents_sel", "n_rows_snap1", "sum_cents_snap1", "evolution_ok")
         .orderBy("n_rows_sel")
     }
-  }
-
-  /** Snapshot timestamps (Iceberg's snapshot history / Delta's commit
-    * timestamps): each snapshot records WHEN it committed, so readers
-    * can address the table by time ("FOR TIMESTAMP AS OF t" = the
-    * newest snapshot with ts <= t) and operators can ROLL BACK — a
-    * pointer move to an older snapshot that preserves history (the
-    * abandoned lineage stays time-travelable until expiration).
-    * Timestamps here are caller-supplied logical instants, not wall
-    * clock — determinism is the gate's contract.
-    */
-  private[graft] def initTimestamps(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        "CREATE TABLE snapshot_ts(snapshot_id BIGINT PRIMARY KEY, ts BIGINT NOT NULL)")
-    }
-
-  private[graft] def recordTimestamp(dbFile: String, snapshotId: Long, ts: Long): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val ps = c.prepareStatement("INSERT INTO snapshot_ts VALUES (?, ?)")
-      try { ps.setLong(1, snapshotId); ps.setLong(2, ts); ps.executeUpdate(); () }
-      finally ps.close()
-    }
-
-  /** FOR TIMESTAMP AS OF: the newest snapshot committed at or before
-    * `ts`, or None if the table didn't exist yet. Pure log metadata.
-    */
-  private[graft] def resolveAsOf(dbFile: String, ts: Long): Option[Long] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT snapshot_id FROM snapshot_ts WHERE ts <= $ts
-             ORDER BY ts DESC, snapshot_id DESC LIMIT 1""")
-        .headOption
-        .map(_.head.asInstanceOf[Number].longValue)
-    }
-
-  /** Schema registry (Iceberg schema evolution): schemas are LOG
-    * metadata with per-column FIELD IDS, and every data file records
-    * which schema it was written under. Column evolution — add, drop,
-    * rename — is a metadata change that never rewrites a file: readers
-    * project each file's columns BY FIELD ID through the log, so a
-    * renamed column still reads from the old file's physical column
-    * (same id, old name) and a field the file predates projects NULL.
-    */
-  private[graft] def initSchemas(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE schema_fields(
-          |schema_id BIGINT NOT NULL, field_id BIGINT NOT NULL,
-          |name VARCHAR NOT NULL, dtype VARCHAR NOT NULL)""".stripMargin)
-      DuckDbLive.execute(
-        c,
-        "CREATE TABLE file_schema(path VARCHAR PRIMARY KEY, schema_id BIGINT NOT NULL)")
-    }
-
-  private[graft] def recordSchema(
-      dbFile: String,
-      schemaId: Long,
-      fields: Seq[(Long, String, String)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(
-        c, "INSERT INTO schema_fields VALUES (?, ?, ?, ?)", fields) {
-        (ps, o, r) =>
-          ps.setLong(o + 1, schemaId)
-          ps.setLong(o + 2, r._1)
-          ps.setString(o + 3, r._2)
-          ps.setString(o + 4, r._3)
-      }
-    }
-
-  private[graft] def recordFileSchema(
-      dbFile: String,
-      paths: Seq[String],
-      schemaId: Long): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_schema VALUES (?, ?)", paths) {
-        (ps, o, p) =>
-          ps.setString(o + 1, p)
-          ps.setLong(o + 2, schemaId)
-      }
-    }
-
-  /** Schema N's fields, field-id-ordered: (field_id, name, dtype). */
-  private[graft] def schemaFields(
-      dbFile: String,
-      schemaId: Long): Seq[(Long, String, String)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT field_id, name, dtype FROM schema_fields
-             WHERE schema_id = $schemaId ORDER BY field_id""")
-        .map(r => (r(0).asInstanceOf[Number].longValue, r(1).toString, r(2).toString))
-    }
-
-  /** Read snapshot `snap` PROJECTED UNDER `readSchema`, purely from log
-    * metadata: group the snapshot's files by their recorded write
-    * schema; for each group, resolve every requested field BY ID
-    * against that schema — same id under an old name reads the old
-    * physical column (rename), an id the file's schema lacks projects
-    * typed NULL (add / the re-added-name trap) — then union the groups.
-    * Name-based projection here would silently RESURRECT dropped
-    * columns whose name was later reused; the field-id indirection is
-    * the whole soundness argument, and s50 pins it in-hash.
-    */
-  private[graft] def evolvedRead(
-      spark: SparkSession,
-      dbFile: String,
-      snap: Long,
-      readSchema: Long): DataFrame = {
-    val want = schemaFields(dbFile, readSchema)
-    val fileSchema: Map[String, Long] = DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT m.path, f.schema_id FROM manifests m
-             JOIN file_schema f ON m.path = f.path
-             WHERE m.snapshot_id = $snap ORDER BY m.path""")
-        .map(r => r(0).toString -> r(1).asInstanceOf[Number].longValue)
-        .toMap
-    }
-    require(
-      fileSchema.nonEmpty,
-      s"evolvedRead: snapshot $snap lists no data files with schema ids — " +
-        "reduce over zero per-schema groups would throw an opaque " +
-        "UnsupportedOperationException")
-    fileSchema.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (sid, entries) =>
-        val have = schemaFields(dbFile, sid).map(f => f._1 -> f._2).toMap
-        Tables.parquet(spark, entries.keys.toSeq.sorted: _*)
-          .select(want.map { case (fid, name, dtype) =>
-            have.get(fid)
-              .map(physical => col(physical).as(name))
-              .getOrElse(lit(null).cast(dtype).as(name))
-          }: _*)
-      }
-      .reduce(_ unionByName _)
   }
 
   /** s50 — COLUMN evolution through the log (the half of Iceberg
@@ -1565,34 +889,33 @@ object SnapshotLog {
 
     withTempTableDir("graft_s50_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initSchemas(dbFile)
-      recordSchema(dbFile, 1L, Seq((1L, "k", "bigint"), (2L, "amount", "bigint")))
-      recordSchema(dbFile, 2L,
+      TableLog.init(dbFile)
+      TableLog.recordSchema(dbFile, 1L, Seq((1L, "k", "bigint"), (2L, "amount", "bigint")))
+      TableLog.recordSchema(dbFile, 2L,
         Seq((1L, "k", "bigint"), (2L, "cents", "bigint"), (3L, "disc", "bigint")))
-      recordSchema(dbFile, 3L,
+      TableLog.recordSchema(dbFile, 3L,
         Seq((1L, "k", "bigint"), (2L, "cents", "bigint"), (4L, "disc", "bigint")))
 
       // slice 0 under schema 1: physical columns (k, amount)
       val files1 = writeCounted(spark, o.filter(col("k") % 3 === 0).select(col("k"), col("cents").as("amount")), s"$base/g1", 2)
-      recordFileSchema(dbFile, files1.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, files1)
+      TableLog.recordFileSchema(dbFile, files1.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, files1)
 
       // slice 1 under schema 2: (k, cents, disc=k%5+1)
       val files2 = writeCounted(spark, o.filter(col("k") % 3 === 1)
         .select(col("k"), col("cents"), (col("k") % 5 + 1).as("disc")), s"$base/g2", 2)
-      recordFileSchema(dbFile, files2.map(_._1), 2L)
-      val c2 = commit(dbFile, 1L, 2L, files1 ++ files2)
+      TableLog.recordFileSchema(dbFile, files2.map(_._1), 2L)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, files1 ++ files2)
 
       // slice 2 under schema 3: (k, cents, disc=k%7+3 — NEW field id 4
       // reusing the dropped field's NAME)
       val files3 = writeCounted(spark, o.filter(col("k") % 3 === 2)
         .select(col("k"), col("cents"), (col("k") % 7 + 3).as("disc")), s"$base/g3", 2)
-      recordFileSchema(dbFile, files3.map(_._1), 3L)
-      val c3 = commit(dbFile, 2L, 3L, files1 ++ files2 ++ files3)
+      TableLog.recordFileSchema(dbFile, files3.map(_._1), 3L)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, files1 ++ files2 ++ files3)
 
       def census(snap: Long, schema: Long): (Long, Long, Long, Long) = {
-        val df = evolvedRead(spark, dbFile, snap, schema)
+        val df = TableLog.evolvedRead(spark, dbFile, snap, schema)
         if (schema == 1L) {
           // schema 1 predates field 3/4 entirely: value column still
           // carries its pre-rename name, no disc at all
@@ -1616,9 +939,9 @@ object SnapshotLog {
       val leak = Tables.parquet(spark, (files2 ++ files3).map(_._1): _*)
         .agg(coalesce(sum(col("disc")), lit(0L))).head().getLong(0)
 
-      val mf3 = manifest(dbFile, 3L)
+      val mf3 = TableLog.manifest(dbFile, 3L)
       val evolutionOk = c1 && c2 && c3 &&
-        currentSnapshot(dbFile) == 3L &&
+        TableLog.currentSnapshot(dbFile) == 3L &&
         (files1 ++ files2).forall(mf3.contains) && // never rewritten
         leak != r3._4 && r3._4 > 0L && leak > r3._4
 
@@ -1667,8 +990,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s51_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initTimestamps(dbFile)
+      TableLog.init(dbFile)
 
       def slice(r: Long) = o.filter(col("k") % 3 === r)
 
@@ -1678,43 +1000,36 @@ object SnapshotLog {
         () => writeCounted(spark, slice(0), s"$base/b1", 2),
         () => writeCounted(spark, slice(1), s"$base/b2", 2),
         () => writeCounted(spark, slice(2), s"$base/b3", 2)))
-      val c1 = commit(dbFile, 0L, 1L, files1)
-      recordTimestamp(dbFile, 1L, 1000L)
-      val c2 = commit(dbFile, 1L, 2L, files1 ++ files2)
-      recordTimestamp(dbFile, 2L, 2000L)
-      val c3 = commit(dbFile, 2L, 3L, files1 ++ files2 ++ files3)
-      recordTimestamp(dbFile, 3L, 3000L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, files1)
+      TableLog.recordTimestamp(dbFile, 1L, 1000L)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, files1 ++ files2)
+      TableLog.recordTimestamp(dbFile, 2L, 2000L)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, files1 ++ files2 ++ files3)
+      TableLog.recordTimestamp(dbFile, 3L, 3000L)
 
       // FOR TIMESTAMP AS OF: mid-history instant and pre-table instant
-      val asOf2500 = resolveAsOf(dbFile, 2500L)
-      val preTable = resolveAsOf(dbFile, 500L)
+      val asOf2500 = TableLog.resolveAsOf(dbFile, 2500L)
+      val preTable = TableLog.resolveAsOf(dbFile, 500L)
 
       // ROLLBACK 3 → 1 (the bad-deploy recovery), then: current serves
       // snapshot 1, the abandoned head still time-travels, and a retry
       // claiming it is rejected
-      val rb = moveCurrent(dbFile, expected = 3L, to = 1L)
+      val rb = TableLog.moveCurrent(dbFile, expected = 3L, to = 1L)
       // the pointer is read HERE (between rollback and redo — the value
       // under audit); the census scan itself runs fused below, over
       // immutable committed files
-      val curSnap = currentSnapshot(dbFile)
-      val staleRetry = commit(dbFile, 3L, 9L, files3)
+      val curSnap = TableLog.currentSnapshot(dbFile)
+      val staleRetry = TableLog.commit(dbFile, 3L, 9L, files3)
 
       // REDO on the rolled-back head: re-ingest slice 1 as NEW files
       val files4 = writeCounted(spark, slice(1), s"$base/b4", 2)
-      val c4 = commit(dbFile, 1L, 4L, files1 ++ files4)
-      recordTimestamp(dbFile, 4L, 4000L)
+      val c4 = TableLog.commit(dbFile, 1L, 4L, files1 ++ files4)
+      TableLog.recordTimestamp(dbFile, 4L, 4000L)
 
-      // the four read-surface censuses fused into ONE tagged union job
-      // (the s49 r20 pattern, guide §2.4) — every snapshot's files are
-      // immutable, so reading them after the pointer ops is identical
-      val censusOf: Map[Long, (Long, Long)] =
-        Seq(asOf2500.getOrElse(0L), curSnap, 3L, 4L).distinct
-          .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
-            .select(lit(snap).as("snap"), col("cents")))
-          .reduce(_ unionByName _)
-          .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-          .collect() // ≤4 rows — one census per read surface
-          .map(r2 => (r2.getLong(0), (r2.getLong(1), r2.getLong(2)))).toMap
+      // the four read surfaces: every snapshot's files are immutable,
+      // so reading them after the pointer ops is identical
+      val censusOf = TableLog.census(
+        spark, dbFile, Seq(asOf2500.getOrElse(0L), curSnap, 3L, 4L).distinct)()
       val asOfCensus = censusOf(asOf2500.getOrElse(0L))
       val currentCensus = censusOf(curSnap)
       val historyCensus = censusOf(3L)
@@ -1722,8 +1037,8 @@ object SnapshotLog {
 
       val ok = c1 && c2 && c3 && rb && !staleRetry && c4 &&
         asOf2500.contains(2L) && preTable.isEmpty &&
-        currentSnapshot(dbFile) == 4L &&
-        resolveAsOf(dbFile, 9999L).contains(4L)
+        TableLog.currentSnapshot(dbFile) == 4L &&
+        TableLog.resolveAsOf(dbFile, 9999L).contains(4L)
 
       Seq(
         ("asof_t2500", 2L, asOfCensus._1, asOfCensus._2, ok),
@@ -1770,7 +1085,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s47_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
       val schema = Tables.parquet(s, s"$staged/0.parquet").schema
@@ -1796,12 +1111,12 @@ object SnapshotLog {
           val (dataF, delF) = graft.ops.Par.run2(
             () => writeCounted(s, up, s"$base/u$epoch", 1),
             () => writeCounted(s, up.select(col("user_id")), s"$base/k$epoch", 1))
-          recordSeq(dbFile, (dataF ++ delF).map(_._1), seqNo)
+          TableLog.recordSeq(dbFile, (dataF ++ delF).map(_._1), seqNo)
           commits.put(
             epoch,
-            commit(dbFile, epoch, seqNo,
-              manifest(dbFile, epoch) ++ dataF,
-              deleteSeq(dbFile, epoch).map { case (p, _) =>
+            TableLog.commit(dbFile, epoch, seqNo,
+              TableLog.manifest(dbFile, epoch) ++ dataF,
+              TableLog.deleteSeq(dbFile, epoch).map { case (p, _) =>
                 (p, 0L) // carried delete entries; n_rows not re-derived
               } ++ delF))
           ()
@@ -1812,13 +1127,13 @@ object SnapshotLog {
 
       // the s44 read path, per snapshot
       def morRead(snap: Long): DataFrame = {
-        val data = manifestSeq(dbFile, snap)
+        val data = TableLog.manifestSeq(dbFile, snap)
           .groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (sq, fs) =>
             Tables.parquet(spark, fs.map(_._1): _*).withColumn("fseq", lit(sq))
           }
           .reduce(_ unionByName _)
-        val dels = deleteSeq(dbFile, snap)
+        val dels = TableLog.deleteSeq(dbFile, snap)
         if (dels.isEmpty) data
         else data.as("f").join(
           dels.groupBy(_._2).toSeq.sortBy(_._1)
@@ -1833,18 +1148,11 @@ object SnapshotLog {
 
       import scala.jdk.CollectionConverters._
       val ok = commits.asScala.values.forall(identity) && commits.size == 3 &&
-        currentSnapshot(dbFile) == 3L
-      // the three snapshots' MOR censuses fused into ONE tagged union
-      // job (the s49 r20 pattern, guide §2.4; values unchanged)
-      val census: Map[Long, (Long, Long)] = (1L to 3L)
-        .map(snap => morRead(snap).select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 3 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+        TableLog.currentSnapshot(dbFile) == 3L
+      val census = TableLog.census(spark, dbFile, 1L to 3L)(morRead)
       (1L to 3L).map { snap =>
-        (snap, manifest(dbFile, snap).size.toLong,
-          deleteSeq(dbFile, snap).size.toLong,
+        (snap, TableLog.manifest(dbFile, snap).size.toLong,
+          TableLog.deleteSeq(dbFile, snap).size.toLong,
           census(snap)._1, census(snap)._2, ok)
       }
         .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_users",
@@ -1896,20 +1204,19 @@ object SnapshotLog {
 
     withTempTableDir("graft_s44_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       // the MOR read path, reconstructed from the log alone: data files
       // unioned with their seq, dead rows masked by the seq-scoped
       // anti-join against the snapshot's delete files
       def morRead(snap: Long): DataFrame = {
-        val data = manifestSeq(dbFile, snap)
+        val data = TableLog.manifestSeq(dbFile, snap)
           .groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (seq, fs) =>
             Tables.parquet(spark, fs.map(_._1): _*).withColumn("fseq", lit(seq))
           }
           .reduce(_ unionByName _)
-        val dels = deleteSeq(dbFile, snap)
+        val dels = TableLog.deleteSeq(dbFile, snap)
         if (dels.isEmpty) data
         else {
           val dv = dels
@@ -1928,8 +1235,8 @@ object SnapshotLog {
       // snapshot 1 (seq 1): one immutable data file per bucket
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
-      recordSeq(dbFile, baseFiles.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, baseFiles)
+      TableLog.recordSeq(dbFile, baseFiles.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, baseFiles)
 
       // The three delta-file WRITES of snapshots 2–3 depend only on the
       // source relation — independent, overlapped (guide §2.6, r21);
@@ -1943,22 +1250,22 @@ object SnapshotLog {
 
       // snapshot 2 (seq 2): MOR DELETE — dead keys land in an equality-
       // delete file; no data file is touched
-      recordSeq(dbFile, del1.map(_._1), 2L)
-      val c2 = commit(dbFile, 1L, 2L, baseFiles, del1)
+      TableLog.recordSeq(dbFile, del1.map(_._1), 2L)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, baseFiles, del1)
 
       // snapshot 3 (seq 3): MOR UPDATE = delete(old) + insert(new) in
       // one commit; the seq rule keeps the delete off the new versions
-      recordSeq(dbFile, (del2 ++ ins1).map(_._1), 3L)
-      recordStats(dbFile, ins1.map(p => (p._1, 2L))) // all updated keys ≡ 2 (mod 4)
-      val c3 = commit(dbFile, 2L, 3L, baseFiles ++ ins1, del1 ++ del2)
+      TableLog.recordSeq(dbFile, (del2 ++ ins1).map(_._1), 3L)
+      TableLog.recordStats(dbFile, ins1.map(p => (p._1, 2L))) // all updated keys ≡ 2 (mod 4)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, baseFiles ++ ins1, del1 ++ del2)
 
       // snapshot 4 (seq 4): COMPACTION — partition stats prune the two
       // bucket-2 files (f2 + the update inserts), the delete files fold
       // into one rewritten file, the rest carries by path, deletes drop
-      val affected = prunePaths(dbFile, 3L, Seq(2L))
-      val carried = manifestSeq(dbFile, 3L).map(_._1).filterNot(affected.toSet)
-      val affectedSeq = manifestSeq(dbFile, 3L).filter(f => affected.contains(f._1))
-      val dv3 = deleteSeq(dbFile, 3L)
+      val affected = TableLog.prunePaths(dbFile, 3L, Seq(2L))
+      val carried = TableLog.manifestSeq(dbFile, 3L).map(_._1).filterNot(affected.toSet)
+      val affectedSeq = TableLog.manifestSeq(dbFile, 3L).filter(f => affected.contains(f._1))
+      val dv3 = TableLog.deleteSeq(dbFile, 3L)
       val compacted = affectedSeq
         .groupBy(_._2).toSeq.sortBy(_._1)
         .map { case (seq, fs) =>
@@ -1977,31 +1284,23 @@ object SnapshotLog {
           "left_anti")
         .drop("fseq")
       val comp = writeCounted(spark, compacted, s"$base/c1", 1)
-      recordSeq(dbFile, comp.map(_._1), 4L)
-      recordStats(dbFile, comp.map(p => (p._1, 2L)))
-      val carriedEntries = manifest(dbFile, 3L).filter(f => carried.contains(f._1))
-      val c4 = commit(dbFile, 3L, 4L, carriedEntries ++ comp)
+      TableLog.recordSeq(dbFile, comp.map(_._1), 4L)
+      TableLog.recordStats(dbFile, comp.map(p => (p._1, 2L)))
+      val carriedEntries = TableLog.manifest(dbFile, 3L).filter(f => carried.contains(f._1))
+      val c4 = TableLog.commit(dbFile, 3L, 4L, carriedEntries ++ comp)
 
-      // time-travel censuses of ALL FOUR snapshots through the MOR read,
-      // fused into ONE tagged union job (the s49 r20 pattern, guide
-      // §2.4 — previously one job per snapshot; per-snapshot values
-      // unchanged)
-      val census: Map[Long, (Long, Long)] = (1L to 4L)
-        .map(snap => morRead(snap).select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 4 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      // time-travel censuses of ALL FOUR snapshots through the MOR read
+      val census = TableLog.census(spark, dbFile, 1L to 4L)(morRead)
       val morOk = c1 && c2 && c3 && c4 &&
         affected.size == 2 && carried.size == 3 &&
-        currentSnapshot(dbFile) == 4L &&
-        deleteSeq(dbFile, 4L).isEmpty &&
+        TableLog.currentSnapshot(dbFile) == 4L &&
+        TableLog.deleteSeq(dbFile, 4L).isEmpty &&
         census(3L) == census(4L)
 
       (1L to 4L).map { snap =>
         (snap,
-          manifest(dbFile, snap).size.toLong,
-          deleteSeq(dbFile, snap).size.toLong,
+          TableLog.manifest(dbFile, snap).size.toLong,
+          TableLog.deleteSeq(dbFile, snap).size.toLong,
           census(snap)._1, census(snap)._2, morOk)
       }
         .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_rows",
@@ -2063,16 +1362,15 @@ object SnapshotLog {
 
     withTempTableDir("graft_s49_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
-      def read(snap: Long): DataFrame = morReadV2(spark, dbFile, snap, "k")
+      def read(snap: Long): DataFrame = TableLog.morReadV2(spark, dbFile, snap, "k")
 
       // snapshot 1 (seq 1): one immutable data file per bucket
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
-      recordSeq(dbFile, baseFiles.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, baseFiles)
+      TableLog.recordSeq(dbFile, baseFiles.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, baseFiles)
 
       // The four delta-file WRITES of snapshots 2–4 are independent of
       // one another (each depends only on the base files / source
@@ -2109,33 +1407,33 @@ object SnapshotLog {
         .select("pd_path", "pd_pos"), s"$base/pd2", 1)
 
       // snapshot 2 (seq 2)
-      recordSeq(dbFile, pd1.map(_._1), 2L)
-      val c2 = commit(dbFile, 1L, 2L, baseFiles, posDeletes = pd1)
+      TableLog.recordSeq(dbFile, pd1.map(_._1), 2L)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, baseFiles, posDeletes = pd1)
 
       // snapshot 3 (seq 3): delete(old) + insert(new) in one commit; the
       // strict seq rule keeps the delete off its own inserts
-      recordSeq(dbFile, (del1 ++ ins1).map(_._1), 3L)
-      recordStats(dbFile, ins1.map(p => (p._1, 2L)))
-      val c3 = commit(dbFile, 2L, 3L, baseFiles ++ ins1, del1, pd1)
+      TableLog.recordSeq(dbFile, (del1 ++ ins1).map(_._1), 3L)
+      TableLog.recordStats(dbFile, ins1.map(p => (p._1, 2L)))
+      val c3 = TableLog.commit(dbFile, 2L, 3L, baseFiles ++ ins1, del1, pd1)
 
       // snapshot 4 (seq 4): pseq >= fseq must bite
-      recordStats(dbFile, ins2.map(p => (p._1, 2L)))
-      recordSeq(dbFile, (ins2 ++ pd2).map(_._1), 4L)
-      val c4 = commit(dbFile, 3L, 4L, baseFiles ++ ins1 ++ ins2, del1, pd1 ++ pd2)
+      TableLog.recordStats(dbFile, ins2.map(p => (p._1, 2L)))
+      TableLog.recordSeq(dbFile, (ins2 ++ pd2).map(_._1), 4L)
+      val c4 = TableLog.commit(dbFile, 3L, 4L, baseFiles ++ ins1 ++ ins2, del1, pd1 ++ pd2)
 
       // snapshot 5 (seq 5): COMPACTION folding BOTH kinds. Affected =
       // the position deletes' referenced files (exact — read from the
       // delta-sized delete files, Iceberg's referenced-data-file stat)
       // ∪ equality-key bucket files with seq strictly below the delete
-      val posRefs = Tables.parquet(spark, posDeleteSeq(dbFile, 4L).map(_._1): _*)
+      val posRefs = Tables.parquet(spark, TableLog.posDeleteSeq(dbFile, 4L).map(_._1): _*)
         .select(col("pd_path")).distinct()
         .collect() // bounded by the file count — manifest-scale metadata
         .map(r => new java.net.URI(r.getString(0)).getPath)
         .toSet
-      val eqSeqs = deleteSeq(dbFile, 4L).map(_._2)
-      val seq4 = manifestSeq(dbFile, 4L)
+      val eqSeqs = TableLog.deleteSeq(dbFile, 4L).map(_._2)
+      val seq4 = TableLog.manifestSeq(dbFile, 4L)
       val seq4ByPath = seq4.toMap
-      val eqAffected = prunePaths(dbFile, 4L, Seq(2L)).filter { p =>
+      val eqAffected = TableLog.prunePaths(dbFile, 4L, Seq(2L)).filter { p =>
         seq4ByPath.get(p).exists(fs => eqSeqs.exists(_ > fs))
       }
       val affected = (posRefs ++ eqAffected).toSeq.sorted
@@ -2143,33 +1441,25 @@ object SnapshotLog {
       // the compaction read: snapshot 4's masks applied to ONLY the
       // affected files (the onlyFiles restriction — carried files are
       // never opened)
-      val comp = writeCounted(spark, morReadV2(spark, dbFile, 4L, "k", Some(affected.toSet)), s"$base/c1", 1)
-      recordSeq(dbFile, comp.map(_._1), 5L)
-      recordStats(dbFile, comp.map(p => (p._1, 2L)))
-      val carriedEntries = manifest(dbFile, 4L).filter(f => carried.contains(f._1))
-      val c5 = commit(dbFile, 4L, 5L, carriedEntries ++ comp)
+      val comp = writeCounted(spark, TableLog.morReadV2(spark, dbFile, 4L, "k", Some(affected.toSet)), s"$base/c1", 1)
+      TableLog.recordSeq(dbFile, comp.map(_._1), 5L)
+      TableLog.recordStats(dbFile, comp.map(p => (p._1, 2L)))
+      val carriedEntries = TableLog.manifest(dbFile, 4L).filter(f => carried.contains(f._1))
+      val c5 = TableLog.commit(dbFile, 4L, 5L, carriedEntries ++ comp)
 
-      // time-travel censuses of ALL FIVE snapshots through the v2 read,
-      // fused into ONE tagged job (previously one job per snapshot —
-      // five separate masked-union scans; r20, guide §2.4; per-snapshot
-      // count/sum values are unchanged)
-      val census: Map[Long, (Long, Long)] = (1L to 5L)
-        .map(snap => read(snap).select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 5 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      // time-travel censuses of ALL FIVE snapshots through the v2 read
+      val census = TableLog.census(spark, dbFile, 1L to 5L)(read)
       val posOk = c1 && c2 && c3 && c4 && c5 &&
         affected.size == 2 && carried.size == 4 &&
-        currentSnapshot(dbFile) == 5L &&
-        deleteSeq(dbFile, 5L).isEmpty && posDeleteSeq(dbFile, 5L).isEmpty &&
+        TableLog.currentSnapshot(dbFile) == 5L &&
+        TableLog.deleteSeq(dbFile, 5L).isEmpty && TableLog.posDeleteSeq(dbFile, 5L).isEmpty &&
         census(4L) == census(5L)
 
       (1L to 5L).map { snap =>
         (snap,
-          manifest(dbFile, snap).size.toLong,
-          deleteSeq(dbFile, snap).size.toLong,
-          posDeleteSeq(dbFile, snap).size.toLong,
+          TableLog.manifest(dbFile, snap).size.toLong,
+          TableLog.deleteSeq(dbFile, snap).size.toLong,
+          TableLog.posDeleteSeq(dbFile, snap).size.toLong,
           census(snap)._1, census(snap)._2, posOk)
       }
         .toDF("snapshot_id", "n_data_files", "n_eq_delete_files",
@@ -2181,67 +1471,6 @@ object SnapshotLog {
   // ------------------------------------------------------------------
   // s52 — per-file column MIN/MAX stats + range data skipping
   // ------------------------------------------------------------------
-
-  /** ONE long-form stat table for every column-stats consumer (the
-    * Iceberg shape: lower_bounds/upper_bounds keyed by column): s52/s55
-    * record single-column cents ranges, s57 records the (x, y) pair —
-    * all land as (path, col_name, min_v, max_v) rows, and a 1-D range
-    * and a 2-D box are the SAME planner query (pruneByCols) with one
-    * resp. two per-column stat joins (an n-dimensional box is n joins).
-    * Idempotent so lifecycles composing several columns share the table.
-    */
-  private[graft] def initColStats(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE IF NOT EXISTS col_stats(
-          |path VARCHAR NOT NULL, col_name VARCHAR NOT NULL,
-          |min_v BIGINT NOT NULL, max_v BIGINT NOT NULL,
-          |PRIMARY KEY (path, col_name))""".stripMargin)
-    }
-
-  private[graft] def recordColStats(
-      dbFile: String,
-      col: String,
-      stats: Seq[(String, Long, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_stats VALUES (?, ?, ?, ?)", stats) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setString(o + 2, col)
-          ps.setLong(o + 3, r._2)
-          ps.setLong(o + 4, r._3)
-      }
-    }
-
-  /** Snapshot N's data files whose recorded per-column [min, max] range
-    * OVERLAPS [lo, hi] on EVERY queried column — Iceberg's
-    * lower_bounds/upper_bounds skipping as a pure metadata join:
-    * manifest rows × one stat join per queried column, zero data reads.
-    * (s43's prunePaths skips on partition EQUALITY; this is the RANGE
-    * half — the one that rewards clustering.)
-    */
-  private[graft] def pruneByCols(
-      dbFile: String,
-      snapshotId: Long,
-      bounds: Seq[(String, Long, Long)]): Seq[String] = {
-    require(bounds.nonEmpty, "pruneByCols needs at least one column bound")
-    val joins = bounds.zipWithIndex.map { case ((col, _, _), i) =>
-      s"""JOIN col_stats s$i ON m.path = s$i.path AND s$i.col_name = '$col'"""
-    }.mkString(" ")
-    val preds = bounds.zipWithIndex.map { case ((_, lo, hi), i) =>
-      s"s$i.max_v >= $lo AND s$i.min_v <= $hi"
-    }.mkString(" AND ")
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT m.path FROM manifests m $joins
-             WHERE m.snapshot_id = $snapshotId AND $preds
-             ORDER BY m.path""")
-        .map(_.head.toString)
-    }
-  }
 
   /** One file of a [[writeBucketed]] write: its bucket value `g`, row
     * count, and the observed (min, max) of each requested stat column.
@@ -2333,7 +1562,7 @@ object SnapshotLog {
       spark, o.select(col("k"), col("cents"), (col("k") % nBuckets).as("g")), out,
       0L until nBuckets.toLong, Nil)
       .map(f => (f.path, f.nRows, f.g))
-    recordStats(dbFile, files.map(f => (f._1, f._3)))
+    TableLog.recordStats(dbFile, files.map(f => (f._1, f._3)))
     files
   }
 
@@ -2385,17 +1614,16 @@ object SnapshotLog {
 
     withTempTableDir("graft_s52_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColStats(dbFile)
+      TableLog.init(dbFile)
 
       // snapshot 1: unclustered layout (file = k%4 — uncorrelated with
       // cents, so every file's range covers ~the whole domain)
       val f1 = writeBucketed(
         spark, o.withColumn("g", pmod(col("k"), lit(4L))), s"$base/u", 0L to 3L,
         Seq("cents"))
-      recordColStats(dbFile, "c0", f1.map(_.range("cents")))
-      val c1 = commit(dbFile, 0L, 1L, f1.map(_.entry))
-      val scan1 = pruneByCols(dbFile, 1L, Seq(("c0", lo, hi)))
+      TableLog.recordColStats(dbFile, "c0", f1.map(_.range("cents")))
+      val c1 = TableLog.commit(dbFile, 0L, 1L, f1.map(_.entry))
+      val scan1 = TableLog.pruneByCols(dbFile, 1L, Seq(("c0", lo, hi)))
       val sel1 = Tables.parquet(spark, scan1: _*)
         .filter(col("cents").between(lo, hi))
         .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
@@ -2404,29 +1632,29 @@ object SnapshotLog {
       // range buckets, disjoint per-file cents ranges
       val f2 = writeBucketed(
         spark,
-        Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+        TableLog.read(spark, dbFile, 1L)
           .select(col("k"), col("cents"))
           .withColumn("g", expr(s"(cents - $mn) div $bw")),
         s"$base/c",
         // bw = (mx-mn)/4 + 1 > (mx-mn)/4, so (cents-mn) div bw ∈ [0, 3]
         0L to 3L,
         Seq("cents"))
-      recordColStats(dbFile, "c0", f2.map(_.range("cents")))
-      val c2 = commit(dbFile, 1L, 2L, f2.map(_.entry))
-      val scan2 = pruneByCols(dbFile, 2L, Seq(("c0", lo, hi)))
+      TableLog.recordColStats(dbFile, "c0", f2.map(_.range("cents")))
+      val c2 = TableLog.commit(dbFile, 1L, 2L, f2.map(_.entry))
+      val scan2 = TableLog.pruneByCols(dbFile, 2L, Seq(("c0", lo, hi)))
       // the four audit censuses are independent scans — overlapped
       // (guide §2.6, r21)
       val Seq(sel2, full2, direct, total) = graft.ops.Par.run(Seq(
         () => Tables.parquet(spark, scan2: _*)
           .filter(col("cents").between(lo, hi))
           .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head(),
-        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+        () => TableLog.read(spark, dbFile, 2L)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         () => o.filter(col("cents").between(lo, hi))
           .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head(),
         () => o.agg(count(lit(1)), sum(col("cents"))).head()))
 
-      val skipOk = c1 && c2 && currentSnapshot(dbFile) == 2L &&
+      val skipOk = c1 && c2 && TableLog.currentSnapshot(dbFile) == 2L &&
         sel1.getLong(0) == direct.getLong(0) &&
         sel1.getLong(1) == direct.getLong(1) &&
         sel2.getLong(0) == direct.getLong(0) &&
@@ -2449,15 +1677,6 @@ object SnapshotLog {
   // ------------------------------------------------------------------
   // s54 — snapshot TAGS + retention-aware expiry
   // ------------------------------------------------------------------
-
-  private[graft] def dropRef(dbFile: String, name: String): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val ps = c.prepareStatement("DELETE FROM refs WHERE name = ?")
-      try {
-        ps.setString(1, name)
-        ps.executeUpdate() == 1
-      } finally ps.close()
-    }
 
   /** s54 — snapshot TAGS and retention-aware expiry (Iceberg tags /
     * `expire_snapshots` honoring refs): the compliance story — "keep
@@ -2492,40 +1711,40 @@ object SnapshotLog {
 
     withTempTableDir("graft_s54_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       // the two generation stagings are independent writes — overlapped
       // (guide §2.6, r21); commits stay strictly ordered
       val (f1, f2) = graft.ops.Par.run2(
         () => writeCounted(spark, o.filter(col("k") % 4 < 2), s"$base/f1", 2),
         () => writeCounted(spark, o.filter(col("k") % 4 >= 2), s"$base/f2", 1))
-      val c1 = commit(dbFile, 0L, 1L, f1)
-      val c2 = commit(dbFile, 1L, 2L, f1 ++ f2)
-      createRef(dbFile, "audit-snap1", 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, f1)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, f1 ++ f2)
+      TableLog.createRef(dbFile, "audit-snap1", 1L)
       // snapshot 3: compaction — every row rewritten into one new file
-      val f3 = writeCounted(spark, Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*), s"$base/f3", 1)
-      val c3 = commit(dbFile, 2L, 3L, f3)
+      val f3 = writeCounted(spark, TableLog.read(spark, dbFile, 2L), s"$base/f3", 1)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, f3)
 
-      val live0 = liveFiles(dbFile).size.toLong
-      val exp1 = expireSnapshots(dbFile, olderThan = 99L)
-      val live1 = liveFiles(dbFile).size.toLong
+      val live0 = TableLog.liveFiles(dbFile).size.toLong
+      val exp1 = TableLog.expireSnapshots(dbFile, olderThan = 99L)
+      val live1 = TableLog.liveFiles(dbFile).size.toLong
 
       // the tagged snapshot is still readable THROUGH the tag
-      val tagSnap = refSnapshot(dbFile, "audit-snap1")
-      val tagged = Tables.parquet(spark, manifest(dbFile, tagSnap).map(_._1): _*)
+      val tagSnap = TableLog.refSnapshot(dbFile, "audit-snap1")
+      val tagged = TableLog.read(spark, dbFile, tagSnap)
         .agg(count(lit(1)), sum(col("cents"))).head()
-      val current = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val current = TableLog.read(spark, dbFile, TableLog.currentSnapshot(dbFile))
         .agg(count(lit(1)), sum(col("cents"))).head()
 
-      val dropped = dropRef(dbFile, "audit-snap1")
-      val exp2 = expireSnapshots(dbFile, olderThan = 99L)
-      val live2 = liveFiles(dbFile).size.toLong
+      val dropped = TableLog.dropRef(dbFile, "audit-snap1")
+      val exp2 = TableLog.expireSnapshots(dbFile, olderThan = 99L)
+      val live2 = TableLog.liveFiles(dbFile).size.toLong
 
       val tagsOk = c1 && c2 && c3 && dropped &&
-        currentSnapshot(dbFile) == 3L && tagSnap == 1L &&
+        TableLog.currentSnapshot(dbFile) == 3L && tagSnap == 1L &&
         exp1 == Seq(2L) && exp2 == Seq(1L) &&
         live0 == 4L && live1 == 3L && live2 == 1L &&
-        manifest(dbFile, 1L).isEmpty
+        TableLog.manifest(dbFile, 1L).isEmpty
 
       Seq((
         tagged.getLong(0), tagged.getLong(1),
@@ -2572,8 +1791,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s55_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColStats(dbFile)
+      TableLog.init(dbFile)
       def minCents(f: BucketFile): Long = f.stats("cents")._1
       def minCentsOk(files: Seq[BucketFile]): Boolean =
         files.forall(minCents(_) >= 0L) // metadata-only: the recorded min
@@ -2583,8 +1801,8 @@ object SnapshotLog {
         o.filter(col("k") % 2 === 0).withColumn("g", pmod(col("k"), lit(2L))),
         s"$base/f1", 0L to 1L, Seq("cents"))
       val v1 = minCentsOk(f1)
-      recordColStats(dbFile, "c0", f1.map(_.range("cents")))
-      val c1 = v1 && commit(dbFile, 0L, 1L, f1.map(_.entry))
+      TableLog.recordColStats(dbFile, "c0", f1.map(_.range("cents")))
+      val c1 = v1 && TableLog.commit(dbFile, 0L, 1L, f1.map(_.entry))
 
       // staged second commit: cleaned slice + 5 poison rows
       val mx = o.agg(max(col("k"))).head().getLong(0)
@@ -2599,8 +1817,8 @@ object SnapshotLog {
       val v2 = minCentsOk(f2)
       val nViolating = f2.count(minCents(_) < 0L).toLong
       // REJECTED: nothing recorded, pointer untouched
-      val curAfterReject = currentSnapshot(dbFile)
-      val s1 = Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+      val curAfterReject = TableLog.currentSnapshot(dbFile)
+      val s1 = TableLog.read(spark, dbFile, 1L)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       // the retry, cleaned
@@ -2609,13 +1827,13 @@ object SnapshotLog {
         o.filter(col("k") % 2 === 1).withColumn("g", pmod(col("k"), lit(2L))),
         s"$base/f3", 0L to 1L, Seq("cents"))
       val v3 = minCentsOk(f3)
-      recordColStats(dbFile, "c0", f3.map(_.range("cents")))
-      val c3 = v3 && commit(dbFile, 1L, 2L, (f1 ++ f3).map(_.entry))
-      val fin = Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+      TableLog.recordColStats(dbFile, "c0", f3.map(_.range("cents")))
+      val c3 = v3 && TableLog.commit(dbFile, 1L, 2L, (f1 ++ f3).map(_.entry))
+      val fin = TableLog.read(spark, dbFile, 2L)
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       val constraintOk = c1 && !v2 && c3 &&
-        curAfterReject == 1L && currentSnapshot(dbFile) == 2L &&
+        curAfterReject == 1L && TableLog.currentSnapshot(dbFile) == 2L &&
         nViolating == 2L && f2.size == 2
 
       Seq((
@@ -2668,32 +1886,21 @@ object SnapshotLog {
 
     withTempTableDir("graft_s53_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       def writeSlice(pred: org.apache.spark.sql.Column, out: String, parts: Int) =
         writeCounted(spark, o.filter(pred), out, parts)
       val f1 = writeSlice(col("k") % 4 < 2, s"$base/f1", 2)
-      val c1 = commit(dbFile, 0L, 1L, f1)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, f1)
       val f2 = writeSlice(col("k") % 4 === 2, s"$base/f2", 1)
-      val c2 = commit(dbFile, 1L, 2L, f1 ++ f2)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, f1 ++ f2)
       val f3 = writeSlice(col("k") % 4 === 3, s"$base/f3", 1)
-      val c3 = commit(dbFile, 2L, 3L, f1 ++ f2 ++ f3)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, f1 ++ f2 ++ f3)
 
       // the log exported as bounded metadata frames (Iceberg's
       // .snapshots / .files): snapshots × files rows, never data
-      val snapRows = DuckDbLive.withConnection(dbFile) { c =>
-        DuckDbLive.queryRows(c, "SELECT snapshot_id, parent_id FROM snapshots ORDER BY 1")
-          .map(r => (
-            r(0).asInstanceOf[Number].longValue,
-            r(1).asInstanceOf[Number].longValue))
-      }
-      val maniRows = DuckDbLive.withConnection(dbFile) { c =>
-        DuckDbLive.queryRows(c, "SELECT snapshot_id, path, n_rows FROM manifests ORDER BY 1, 2")
-          .map(r => (
-            r(0).asInstanceOf[Number].longValue,
-            r(1).toString,
-            r(2).asInstanceOf[Number].longValue))
-      }
+      val snapRows = TableLog.snapshotRows(dbFile)
+      val maniRows = TableLog.manifestRows(dbFile)
       val snapsDf = snapRows.toDF("snapshot_id", "parent_id")
       val maniDf = maniRows.toDF("snapshot_id", "path", "n_rows")
 
@@ -2714,15 +1921,7 @@ object SnapshotLog {
       def depth(s: Long): Long =
         if (s == 0L) 0L else 1L + depth(parentOf(s))
 
-      // the three snapshots' audit censuses fused into ONE tagged union
-      // job (the s49 r20 pattern, guide §2.4; values unchanged)
-      val audits: Map[Long, (Long, Long)] = (1L to 3L)
-        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
-          .select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 3 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      val audits = TableLog.census(spark, dbFile, 1L to 3L)()
 
       val metaBase = filesMeta
         .join(added, Seq("snapshot_id"))
@@ -2737,7 +1936,7 @@ object SnapshotLog {
         .sortBy(_._1)
         .toSeq // 3 metadata rows — bounded by #snapshots
 
-      val metaOk = c1 && c2 && c3 && currentSnapshot(dbFile) == 3L &&
+      val metaOk = c1 && c2 && c3 && TableLog.currentSnapshot(dbFile) == 3L &&
         metaBase.forall { case (snap, _, _, _, _, nMeta) =>
           nMeta == audits(snap)._1
         }
@@ -2801,8 +2000,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s56_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       // base write and the max-key probe: independent scans of the same
       // input, overlapped (guide §2.6, r21)
@@ -2810,21 +2008,21 @@ object SnapshotLog {
         () => writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
           .map(f => (f._1, f._2)),
         () => mxb)
-      commit(dbFile, 0L, 1L, baseFiles)
+      TableLog.commit(dbFile, 0L, 1L, baseFiles)
 
       def rewrite(
           parent: Long, snap: Long, bucket: Long,
           delMod: Long, updMod: Long, bump: Long,
           ins: Seq[(Long, Long)], out: String): Unit = {
-        val affected = prunePaths(dbFile, parent, Seq(bucket))
-        val carried = manifest(dbFile, parent).filterNot(f => affected.contains(f._1))
+        val affected = TableLog.prunePaths(dbFile, parent, Seq(bucket))
+        val carried = TableLog.manifest(dbFile, parent).filterNot(f => affected.contains(f._1))
         val nf = writeCounted(spark, Tables.parquet(spark, affected: _*)
           .filter(col("k") % 20 =!= delMod)
           .withColumn("cents",
             when(col("k") % 20 === updMod, col("cents") + bump).otherwise(col("cents")))
           .unionByName(ins.toDF("k", "cents")), out, 1)
-        recordStats(dbFile, nf.map(p => (p._1, bucket)))
-        commit(dbFile, parent, snap, carried ++ nf)
+        TableLog.recordStats(dbFile, nf.map(p => (p._1, bucket)))
+        TableLog.commit(dbFile, parent, snap, carried ++ nf)
       }
       // the rewrite chain (strictly ordered commits) and the replica
       // bootstrap (reads only snapshot 1, already committed) are
@@ -2836,14 +2034,14 @@ object SnapshotLog {
         },
         () =>
           // replica bootstrap: full copy of snapshot 1, its OWN layout
-          Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+          TableLog.read(spark, dbFile, 1L)
             .repartition(2).write.parquet(s"$base/rep1"))
 
       def applyStep(
           step: Long, pre: Long, post: Long,
           repIn: String, repOut: String) = {
-        val mfPre = manifest(dbFile, pre).map(_._1).toSet
-        val mfPost = manifest(dbFile, post).map(_._1).toSet
+        val mfPre = TableLog.manifest(dbFile, pre).map(_._1).toSet
+        val mfPost = TableLog.manifest(dbFile, post).map(_._1).toSet
         val removed = (mfPre -- mfPost).toSeq.sorted
         val added = (mfPost -- mfPre).toSeq.sorted
         val preDf = Tables.parquet(spark, removed: _*)
@@ -2881,7 +2079,7 @@ object SnapshotLog {
           },
           () => changes.groupBy(col("change_type")).count().collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap,
-          () => Tables.parquet(spark, manifest(dbFile, post).map(_._1): _*)
+          () => TableLog.read(spark, dbFile, post)
             .agg(count(lit(1)), sum(col("cents"))).head()))
         val repC = repCA.asInstanceOf[org.apache.spark.sql.Row]
         val cc = ccA.asInstanceOf[Map[String, Long]]
@@ -2958,25 +2156,24 @@ object SnapshotLog {
 
     withTempTableDir("graft_s57_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColStats(dbFile)
+      TableLog.init(dbFile)
 
       val f1 = writeBucketed(
         spark, d.withColumn("g", col("x")), s"$base/lin", 0L to 15L, Seq("x", "y"))
-      recordColStats(dbFile, "x", f1.map(_.range("x")))
-      recordColStats(dbFile, "y", f1.map(_.range("y")))
-      val c1 = commit(dbFile, 0L, 1L, f1.map(_.entry))
+      TableLog.recordColStats(dbFile, "x", f1.map(_.range("x")))
+      TableLog.recordColStats(dbFile, "y", f1.map(_.range("y")))
+      val c1 = TableLog.commit(dbFile, 0L, 1L, f1.map(_.entry))
 
       val f2 = writeBucketed(
         spark,
-        Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+        TableLog.read(spark, dbFile, 1L)
           .select(col("k"), col("cents"), col("x"), col("y"))
           .withColumn("g", expr(zKey)),
         s"$base/z", 0L to 15L, Seq("x", "y"))
-      recordColStats(dbFile, "x", f2.map(_.range("x")))
-      recordColStats(dbFile, "y", f2.map(_.range("y")))
-      val c2 = commit(dbFile, 1L, 2L, f2.map(_.entry))
-      val committed = c1 && c2 && currentSnapshot(dbFile) == 2L
+      TableLog.recordColStats(dbFile, "x", f2.map(_.range("x")))
+      TableLog.recordColStats(dbFile, "y", f2.map(_.range("y")))
+      val c2 = TableLog.commit(dbFile, 1L, 2L, f2.map(_.entry))
+      val committed = c1 && c2 && TableLog.currentSnapshot(dbFile) == 2L
 
       // the DIRECT ground-truth census depends only on the query box,
       // not the layout — computed once per query (was once per
@@ -2992,7 +2189,7 @@ object SnapshotLog {
         (layout, snap) <- Seq(("linear", 1L), ("zorder", 2L))
         (qn, xlo, xhi, ylo, yhi) <- queries
       } yield { () =>
-        val scanned = pruneByCols(dbFile, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
+        val scanned = TableLog.pruneByCols(dbFile, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
         val boxPred = col("x").between(xlo, xhi) && col("y").between(ylo, yhi)
         val sel = Tables.parquet(spark, scanned: _*)
           .filter(boxPred)
@@ -3001,7 +2198,7 @@ object SnapshotLog {
         val ok = committed &&
           sel.getLong(0) == direct.getLong(0) &&
           sel.getLong(1) == direct.getLong(1)
-        (layout, qn, manifest(dbFile, snap).size.toLong, scanned.size.toLong,
+        (layout, qn, TableLog.manifest(dbFile, snap).size.toLong, scanned.size.toLong,
           direct.getLong(0), direct.getLong(1), ok)
       })
       rows
@@ -3014,33 +2211,6 @@ object SnapshotLog {
   // ------------------------------------------------------------------
   // s58 — small-file bin-packing compaction (OPTIMIZE)
   // ------------------------------------------------------------------
-
-  /** The bin-pack PLAN, computed purely from log metadata: snapshot N's
-    * manifest rows joined to the partition stats, filtered to files
-    * with n_rows < threshold, grouped by bucket — only groups of ≥ 2
-    * small files are worth a rewrite (one small file alone gains
-    * nothing). Zero data reads; at 100 TB this is the planning query
-    * Delta's OPTIMIZE runs over its own metadata.
-    */
-  private[graft] def planBinpack(
-      dbFile: String,
-      snapshotId: Long,
-      threshold: Long): Seq[(Long, Seq[String])] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          s"""SELECT f.bucket, m.path
-             FROM manifests m JOIN file_stats f ON m.path = f.path
-             WHERE m.snapshot_id = $snapshotId AND m.n_rows < $threshold
-             ORDER BY f.bucket, m.path""")
-        .map(r => (r(0).asInstanceOf[Number].longValue, r(1).toString))
-        .groupBy(_._1)
-        .map { case (b, rows) => (b, rows.map(_._2)) }
-        .filter(_._2.size >= 2)
-        .toSeq
-        .sortBy(_._1)
-    }
 
   /** s58 — SMALL-FILE bin-packing compaction (Delta OPTIMIZE / Iceberg
     * rewrite_data_files binpack): the #1 operational problem of a
@@ -3080,8 +2250,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s58_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       // the nine ingest-footprint writes are independent jobs over the
       // same source — overlapped (guide §2.6, r21); stat rows are keyed
@@ -3093,46 +2262,46 @@ object SnapshotLog {
             spark,
             o.filter(col("k") % 3 === b && expr("(k div 3) % 4") === sub),
             out, 1)
-          recordStats(dbFile, pf.map(p => (p._1, b)))
+          TableLog.recordStats(dbFile, pf.map(p => (p._1, b)))
           pf
         }).toSeq :+ { () =>
           val pf = writeCounted(spark, o.filter(col("k") % 3 === 2), s"$base/f2", 1)
-          recordStats(dbFile, pf.map(p => (p._1, 2L)))
+          TableLog.recordStats(dbFile, pf.map(p => (p._1, 2L)))
           pf
         })
       val big = small.last
       val s1Files = small.flatten
-      val c1 = commit(dbFile, 0L, 1L, s1Files)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, s1Files)
 
       // metadata-only planning
       val total = s1Files.map(_._2).sum
       val threshold = total / 6L
-      val plan = planBinpack(dbFile, 1L, threshold)
+      val plan = TableLog.planBinpack(dbFile, 1L, threshold)
       val planned = plan.flatMap(_._2).toSet
-      val carried = manifest(dbFile, 1L).filterNot(f => planned.contains(f._1))
+      val carried = TableLog.manifest(dbFile, 1L).filterNot(f => planned.contains(f._1))
 
       // the rewrite: one file per group, large file untouched; the
       // per-group rewrites are independent — overlapped (guide §2.6)
       val packed = graft.ops.Par.run(plan.map { case (b, paths) => () =>
         val out = s"$base/packed_$b"
         val pf = writeCounted(spark, Tables.parquet(spark, paths: _*), out, 1)
-        recordStats(dbFile, pf.map(p => (p._1, b)))
+        TableLog.recordStats(dbFile, pf.map(p => (p._1, b)))
         pf
       }).flatten
-      val c2 = commit(dbFile, 1L, 2L, carried ++ packed)
+      val c2 = TableLog.commit(dbFile, 1L, 2L, carried ++ packed)
 
-      val tt1 = manifest(dbFile, 1L)
+      val tt1 = TableLog.manifest(dbFile, 1L)
       // the three audit censuses (snapshot 2, time-travel snapshot 1,
       // direct recompute) are independent scans — overlapped (§2.6)
       val Seq(census2, census1, direct) = graft.ops.Par.run(Seq(
-        () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+        () => TableLog.read(spark, dbFile, 2L)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         () => Tables.parquet(spark, tt1.map(_._1): _*)
           .agg(count(lit(1)), sum(col("cents"))).head(),
         () => o.agg(count(lit(1)), sum(col("cents"))).head()))
       val bigCarried = big.forall(f =>
-        manifest(dbFile, 2L).exists(_._1 == f._1))
-      val ok = c1 && c2 && currentSnapshot(dbFile) == 2L && bigCarried &&
+        TableLog.manifest(dbFile, 2L).exists(_._1 == f._1))
+      val ok = c1 && c2 && TableLog.currentSnapshot(dbFile) == 2L && bigCarried &&
         census2.getLong(0) == direct.getLong(0) &&
         census2.getLong(1) == direct.getLong(1) &&
         census1.getLong(0) == direct.getLong(0) &&
@@ -3140,7 +2309,7 @@ object SnapshotLog {
 
       Seq((
         s1Files.size.toLong, planned.size.toLong, plan.size.toLong,
-        manifest(dbFile, 2L).size.toLong, tt1.size.toLong,
+        TableLog.manifest(dbFile, 2L).size.toLong, tt1.size.toLong,
         direct.getLong(0), direct.getLong(1), ok))
         .toDF("n_files_s1", "n_small_planned", "n_groups", "n_files_s2",
           "n_files_tt1", "n_rows", "sum_cents", "compact_ok")
@@ -3189,7 +2358,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s60_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
+      TableLog.init(dbFile)
 
       // the two base-bucket writes and both writers' staged appends are
       // four independent write jobs — overlapped (guide §2.6, r21);
@@ -3200,28 +2369,27 @@ object SnapshotLog {
         () => writeCounted(spark, insA.toDF("k", "cents"), s"$base/a", 1),
         () => writeCounted(spark, insB.toDF("k", "cents"), s"$base/b", 1)))
       val baseFiles = b0 ++ b1
-      val c1 = commit(dbFile, 0L, 1L, baseFiles)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, baseFiles)
       val planParentB = 1L
 
-      val cA = commit(dbFile, 1L, 2L, manifest(dbFile, 1L) ++ fa)
+      val cA = TableLog.commit(dbFile, 1L, 2L, TableLog.manifest(dbFile, 1L) ++ fa)
       // B's first attempt on its stale plan parent
-      val bFirst = commit(dbFile, planParentB, 3L, manifest(dbFile, planParentB) ++ fb)
+      val bFirst = TableLog.commit(dbFile, planParentB, 3L, TableLog.manifest(dbFile, planParentB) ++ fb)
       // rebase: re-read the head; an append's file set is disjoint from
       // any concurrent change, so the same staged file re-proposes as-is
-      val head = currentSnapshot(dbFile)
-      val bRebase = !bFirst && commit(dbFile, head, 3L, manifest(dbFile, head) ++ fb)
+      val head = TableLog.currentSnapshot(dbFile)
+      val bRebase = !bFirst && TableLog.commit(dbFile, head, 3L, TableLog.manifest(dbFile, head) ++ fb)
 
       // the three audit censuses are independent scans — overlapped
-      // (guide §2.6, r21)
       val Seq((n2, s2), (n3, s3), (nb, sb)) = graft.ops.Par.run(
         Seq(
-          () => Tables.parquet(spark, manifest(dbFile, 2L).map(_._1): _*)
+          () => TableLog.read(spark, dbFile, 2L)
             .agg(count(lit(1)), sum(col("cents"))).head(),
-          () => Tables.parquet(spark, manifest(dbFile, 3L).map(_._1): _*)
+          () => TableLog.read(spark, dbFile, 3L)
             .agg(count(lit(1)), sum(col("cents"))).head(),
           () => o.agg(count(lit(1)), sum(col("cents"))).head())
           .map(t => () => { val r = t(); (r.getLong(0), r.getLong(1)) }))
-      val ok = c1 && cA && !bFirst && bRebase && currentSnapshot(dbFile) == 3L &&
+      val ok = c1 && cA && !bFirst && bRebase && TableLog.currentSnapshot(dbFile) == 3L &&
         n2 == nb + insA.size && s2 == sb + insA.map(_._2).sum &&
         n3 == nb + insA.size + insB.size &&
         s3 == sb + insA.map(_._2).sum + insB.map(_._2).sum
@@ -3267,8 +2435,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s61_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       val staged = graft.streaming.Watermarks.stageBatches(s, dir)
       val schema = Tables.parquet(s, s"$staged/0.parquet").schema
@@ -3283,22 +2450,22 @@ object SnapshotLog {
         .foreachBatch { (b: DataFrame, epoch: Long) =>
           val out = s"$base/e$epoch"
           val pf = writeCounted(s, b.select(col("event_id"), col("user_id"), cents), out, 2)
-          recordStats(dbFile, pf.map(p => (p._1, 0L)))
-          val parent = currentSnapshot(dbFile)
-          var ok = commit(dbFile, parent, parent + 1, manifest(dbFile, parent) ++ pf)
+          TableLog.recordStats(dbFile, pf.map(p => (p._1, 0L)))
+          val parent = TableLog.currentSnapshot(dbFile)
+          var ok = TableLog.commit(dbFile, parent, parent + 1, TableLog.manifest(dbFile, parent) ++ pf)
           // the auto-compact policy: manifest grew past the cap
-          val head = currentSnapshot(dbFile)
-          if (ok && manifest(dbFile, head).size >= 4) {
-            val plan = planBinpack(dbFile, head, Long.MaxValue)
+          val head = TableLog.currentSnapshot(dbFile)
+          if (ok && TableLog.manifest(dbFile, head).size >= 4) {
+            val plan = TableLog.planBinpack(dbFile, head, Long.MaxValue)
             val packed = plan.flatMap { case (bkt, paths) =>
               val pout = s"$base/packed_${head}_$bkt"
               val ppf = writeCounted(s, Tables.parquet(s, paths: _*), pout, 1)
-              recordStats(dbFile, ppf.map(p => (p._1, bkt)))
+              TableLog.recordStats(dbFile, ppf.map(p => (p._1, bkt)))
               ppf
             }
             val planned = plan.flatMap(_._2).toSet
-            val carried = manifest(dbFile, head).filterNot(f => planned.contains(f._1))
-            ok = commit(dbFile, head, head + 1, carried ++ packed)
+            val carried = TableLog.manifest(dbFile, head).filterNot(f => planned.contains(f._1))
+            ok = TableLog.commit(dbFile, head, head + 1, carried ++ packed)
             compactions.put(head + 1, head)
           }
           oks.put(epoch, ok)
@@ -3310,21 +2477,13 @@ object SnapshotLog {
 
       import scala.jdk.CollectionConverters._
       val loopOk = oks.asScala.values.forall(identity) && oks.size == 3 &&
-        currentSnapshot(dbFile) == 4L && compactions.keySet.asScala == Set(3L)
+        TableLog.currentSnapshot(dbFile) == 4L && compactions.keySet.asScala == Set(3L)
 
-      // the four snapshots' censuses fused into ONE tagged union job
-      // (the s49 r20 pattern, guide §2.4; per-snapshot values unchanged)
-      val census: Map[Long, (Long, Long)] = (1L to 4L)
-        .map(snap => Tables.parquet(spark, manifest(dbFile, snap).map(_._1): _*)
-          .select(lit(snap).as("snap"), col("cents")))
-        .reduce(_ unionByName _)
-        .groupBy("snap").agg(count(lit(1)), sum(col("cents")))
-        .collect() // 4 rows — one census per snapshot
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      val census = TableLog.census(spark, dbFile, 1L to 4L)()
       val rows = (1L to 4L).map { snap =>
-        (snap, manifest(dbFile, snap).size.toLong,
+        (snap, TableLog.manifest(dbFile, snap).size.toLong,
           census(snap)._1, census(snap)._2,
-          compactions.containsKey(snap), snap == currentSnapshot(dbFile),
+          compactions.containsKey(snap), snap == TableLog.currentSnapshot(dbFile),
           loopOk)
       }
       rows
@@ -3333,37 +2492,6 @@ object SnapshotLog {
         .orderBy("snapshot_id")
     }
   }
-
-  /** The s62 consumer's idempotence ledger: one row per APPLIED change
-    * batch. The claim is a single-statement `INSERT .. ON CONFLICT DO
-    * NOTHING` (update count 0 = already applied), the same
-    * no-check-then-act window discipline as
-    * `IncrementalRefresh.applyRefresh` — a redelivered batch is
-    * rejected atomically, never half-applied.
-    *
-    * Scope: the single-statement claim closes the check-then-act RACE
-    * (two concurrent deliveries of one batch id), which is the
-    * concurrency discipline this ledger pins. It does NOT give crash
-    * atomicity — the claim precedes the replica write, so a crash in
-    * between would leave the batch claimed-but-unapplied; true
-    * exactly-once under crashes requires committing the batch id
-    * transactionally WITH the sink data (Delta's txnAppId/txnVersion).
-    * In this deterministic lifecycle the in-hash consume_ok equality
-    * (replica census == source-of-truth census per step) would surface
-    * any such gap.
-    */
-  private[graft] def initApplyLog(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(c, "CREATE TABLE IF NOT EXISTS apply_log(batch_id BIGINT PRIMARY KEY)")
-    }
-
-  private[graft] def claimApply(dbFile: String, batchId: Long): Boolean =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"INSERT INTO apply_log VALUES ($batchId) ON CONFLICT DO NOTHING") == 1
-      finally st.close()
-    }
 
   /** s62 — STREAMING CDC CONSUMER: s56's replica maintenance as a
     * Structured Streaming job (Delta CDF consumed by a continuous
@@ -3411,9 +2539,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s62_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
-      initApplyLog(dbFile)
+      TableLog.init(dbFile)
 
       // ---- producer: s56's three snapshots ----
       // base write and the max-key probe: independent scans of the same
@@ -3422,20 +2548,20 @@ object SnapshotLog {
         () => writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
           .map(f => (f._1, f._2)),
         () => mxb)
-      commit(dbFile, 0L, 1L, baseFiles)
+      TableLog.commit(dbFile, 0L, 1L, baseFiles)
       def rewrite(
           parent: Long, snap: Long, bucket: Long,
           delMod: Long, updMod: Long, bump: Long,
           ins: Seq[(Long, Long)], out: String): Unit = {
-        val affected = prunePaths(dbFile, parent, Seq(bucket))
-        val carried = manifest(dbFile, parent).filterNot(f => affected.contains(f._1))
+        val affected = TableLog.prunePaths(dbFile, parent, Seq(bucket))
+        val carried = TableLog.manifest(dbFile, parent).filterNot(f => affected.contains(f._1))
         val nf = writeCounted(spark, Tables.parquet(spark, affected: _*)
           .filter(col("k") % 20 =!= delMod)
           .withColumn("cents",
             when(col("k") % 20 === updMod, col("cents") + bump).otherwise(col("cents")))
           .unionByName(ins.toDF("k", "cents")), out, 1)
-        recordStats(dbFile, nf.map(p => (p._1, bucket)))
-        commit(dbFile, parent, snap, carried ++ nf)
+        TableLog.recordStats(dbFile, nf.map(p => (p._1, bucket)))
+        TableLog.commit(dbFile, parent, snap, carried ++ nf)
       }
       rewrite(1L, 2L, 2L, 6L, 2L, 1000L, ins1, s"$base/m1")
       rewrite(2L, 3L, 1L, 13L, 17L, 500L, ins2, s"$base/m2")
@@ -3444,8 +2570,8 @@ object SnapshotLog {
       // delivery; mtime fixes the FileStreamSource order; delivery 3 is
       // the injected REDELIVERY of batch 2) ----
       def changes(pre: Long, post: Long): DataFrame = {
-        val mfPre = manifest(dbFile, pre).map(_._1).toSet
-        val mfPost = manifest(dbFile, post).map(_._1).toSet
+        val mfPre = TableLog.manifest(dbFile, pre).map(_._1).toSet
+        val mfPost = TableLog.manifest(dbFile, post).map(_._1).toSet
         val removed = (mfPre -- mfPost).toSeq.sorted
         val added = (mfPost -- mfPre).toSeq.sorted
         Tables.parquet(spark, removed: _*)
@@ -3485,7 +2611,7 @@ object SnapshotLog {
         () => stageOne(changes(2L, 3L).withColumn("batch_id", lit(2L)), "d2", 2000000L),
         () => {
           // replica bootstrap: full copy of snapshot 1, its OWN layout
-          Tables.parquet(spark, manifest(dbFile, 1L).map(_._1): _*)
+          TableLog.read(spark, dbFile, 1L)
             .repartition(2).write.parquet(s"$base/rep1")
         }))
       locally {
@@ -3529,7 +2655,7 @@ object SnapshotLog {
               "carries at least one row, so the batch id cannot be read")
           val bid = hdr.map(_.getLong(2)).max
           val cc = hdr.map(r => r.getString(0) -> r.getLong(1)).toMap
-          val claimed = claimApply(dbFile, bid)
+          val claimed = TableLog.claimApply(dbFile, bid)
           if (claimed) {
             val repOut = s"$base/rep${repStep + 1}"
             Tables.parquet(s, s"$base/rep$repStep")
@@ -3550,7 +2676,7 @@ object SnapshotLog {
               .agg(count(lit(1)), sum(col("cents"))).head(),
             () => srcCCache.computeIfAbsent(
               repStep,
-              snap => Tables.parquet(s, manifest(dbFile, snap).map(_._1): _*)
+              snap => TableLog.read(s, dbFile, snap)
                 .agg(count(lit(1)), sum(col("cents"))).head()))
           results.put(epoch, (bid,
             cc.getOrElse("delete", 0L), cc.getOrElse("update", 0L),
@@ -3626,76 +2752,75 @@ object SnapshotLog {
 
     withTempTableDir("graft_s63_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
+      TableLog.init(dbFile)
 
       val baseFiles = writeBaseBuckets(spark, dbFile, o, s"$base/data", 4)
         .map(f => (f._1, f._2))
-      val c1 = commit(dbFile, 0L, 1L, baseFiles)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, baseFiles)
 
       def rewriteFiles(
           fromSnap: Long, bucket: Long,
           delMod: Long, updMod: Long, bump: Long,
           ins: Seq[(Long, Long)], out: String): Seq[(String, Long)] = {
-        val affected = prunePaths(dbFile, fromSnap, Seq(bucket))
+        val affected = TableLog.prunePaths(dbFile, fromSnap, Seq(bucket))
         val nf = writeCounted(spark, Tables.parquet(spark, affected: _*)
           .filter(col("k") % 20 =!= delMod)
           .withColumn("cents",
             when(col("k") % 20 === updMod, col("cents") + bump).otherwise(col("cents")))
           .unionByName(ins.toDF("k", "cents")), out, 1)
-        recordStats(dbFile, nf.map(p => (p._1, bucket)))
-        manifest(dbFile, fromSnap)
+        TableLog.recordStats(dbFile, nf.map(p => (p._1, bucket)))
+        TableLog.manifest(dbFile, fromSnap)
           .filterNot(f => affected.contains(f._1)) ++ nf
       }
 
       // branch `dev` cut at 1: bucket-3 rewrite → snapshot 2 (ref only)
-      createRef(dbFile, "dev", at = 1L)
-      val cDev = commit(dbFile, 1L, 2L,
+      TableLog.createRef(dbFile, "dev", at = 1L)
+      val cDev = TableLog.commit(dbFile, 1L, 2L,
         rewriteFiles(1L, 3L, 7L, 11L, 300L, insDev, s"$base/mdev"), ref = Some("dev"))
       // main moves independently: bucket-0 rewrite → snapshot 3
-      val cMain = commit(dbFile, 1L, 3L,
+      val cMain = TableLog.commit(dbFile, 1L, 3L,
         rewriteFiles(1L, 0L, 8L, 0L, 200L, insMain, s"$base/mmain"))
 
       /** Replay `ref`'s delta vs `baseSnap` onto main's head; returns
         * (merged, conflictDetected). Metadata-only.
         */
       def mergeBranch(ref: String, baseSnap: Long): (Boolean, Boolean) = {
-        val head = currentSnapshot(dbFile)
-        val baseMf = manifest(dbFile, baseSnap).map(_._1).toSet
-        val brMf = manifest(dbFile, refSnapshot(dbFile, ref))
+        val head = TableLog.currentSnapshot(dbFile)
+        val baseMf = TableLog.manifest(dbFile, baseSnap).map(_._1).toSet
+        val brMf = TableLog.manifest(dbFile, TableLog.refSnapshot(dbFile, ref))
         val brRemoved = baseMf -- brMf.map(_._1).toSet
         val brAdded = brMf.filterNot(f => baseMf.contains(f._1))
-        val headMf = manifest(dbFile, head)
+        val headMf = TableLog.manifest(dbFile, head)
         val headPaths = headMf.map(_._1).toSet
         if (brRemoved.exists(p => !headPaths.contains(p))) (false, true)
         else {
           val newMf = headMf.filterNot(f => brRemoved.contains(f._1)) ++ brAdded
-          (commit(dbFile, head, head + 1, newMf), false)
+          (TableLog.commit(dbFile, head, head + 1, newMf), false)
         }
       }
 
       def delta(snap: Long, vs: Long): (Long, Long) = {
-        val a = manifest(dbFile, snap).map(_._1).toSet
-        val b = manifest(dbFile, vs).map(_._1).toSet
+        val a = TableLog.manifest(dbFile, snap).map(_._1).toSet
+        val b = TableLog.manifest(dbFile, vs).map(_._1).toSet
         ((a -- b).size.toLong, (b -- a).size.toLong)
       }
       val (brAdd, brRem) = delta(2L, 1L)
       val (mnAdd, mnRem) = delta(3L, 1L)
 
       val (merged, conflict1) = mergeBranch("dev", 1L)
-      val mergedC = Tables.parquet(spark, manifest(dbFile, currentSnapshot(dbFile)).map(_._1): _*)
+      val mergedC = TableLog.read(spark, dbFile, TableLog.currentSnapshot(dbFile))
         .agg(count(lit(1)), sum(col("cents"))).head()
 
       // branch `dev2`, also cut at 1, rewrites bucket 0 like main did:
       // its merge must conflict on f0 and leave the pointer at 4
-      createRef(dbFile, "dev2", at = 1L)
-      val cDev2 = commit(dbFile, 1L, 5L,
+      TableLog.createRef(dbFile, "dev2", at = 1L)
+      val cDev2 = TableLog.commit(dbFile, 1L, 5L,
         rewriteFiles(1L, 0L, 16L, 12L, 100L, Seq.empty, s"$base/mdev2"), ref = Some("dev2"))
       val (merged2, conflict2) = mergeBranch("dev2", 1L)
 
       val mergeOk = c1 && cDev && cMain && cDev2 &&
         merged && !conflict1 && !merged2 && conflict2 &&
-        currentSnapshot(dbFile) == 4L
+        TableLog.currentSnapshot(dbFile) == 4L
 
       Seq((brAdd, brRem, mnAdd, mnRem, merged,
         mergedC.getLong(0), mergedC.getLong(1), conflict2, mergeOk))
@@ -3719,288 +2844,9 @@ object SnapshotLog {
     (Seq[(String, Long)], Seq[(String, Long)], Seq[(String, Long)],
       Seq[(String, String, Long, Long)])]()
 
-  /** Per-file NDV sketches (Iceberg puffin / theta-sketch shape, on the
-    * exact-integer HLL kernel `graft.ops.Hll`): each data file carries
-    * its ≤64 (bucket, max-rank) register rows per column as STATS
-    * METADATA, and a planner estimates the distinct count of any file
-    * subset by merging registers (per-bucket max) — metadata-only, no
-    * scan. Long-form by col_name exactly as initColStats is for the
-    * min/max stats: ONE table answers "registers of column c over file
-    * scope X" for ANY recorded column, which is what turns q210's
-    * dedicated-census demo into a planner input (q212).
-    */
-  private[graft] def initColNdv(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE IF NOT EXISTS col_ndv(
-          |path VARCHAR NOT NULL, col_name VARCHAR NOT NULL,
-          |bucket BIGINT NOT NULL, mr BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordColNdv(
-      dbFile: String,
-      rows: Seq[(String, String, Long, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_ndv VALUES (?, ?, ?, ?)", rows) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setString(o + 2, r._2)
-          ps.setLong(o + 3, r._3)
-          ps.setLong(o + 4, r._4)
-      }
-    }
-
-  /** Merged register set of (file scope, column) — per-bucket max over
-    * the scope's long-form sketch rows. ≤64 metadata rows per call.
-    */
-  private[graft] def colNdvRegisters(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Seq[(Long, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      // col_name and paths bound, never spliced (ADVICE r18): same
-      // parameter discipline as recordColNdv's insert.
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT bucket, CAST(max(mr) AS BIGINT) FROM col_ndv
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})
-             GROUP BY bucket ORDER BY bucket""",
-          colName +: paths)
-        .map(r => (r(0).asInstanceOf[Number].longValue, r(1).asInstanceOf[Number].longValue))
-    }
-
-  private[graft] def colNdvRowCount(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Long =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT count(*) FROM col_ndv
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})""",
-          colName +: paths)
-        .head(0).asInstanceOf[Number].longValue
-    }
-
-  /** Stat-table row count of (scope, column) for one family — the
-    * metadata-coverage measure s75 surfaces per family (coverage drops
-    * while a file's stats are stale-excluded and recovers when the
-    * compaction re-stats the rewritten file).
-    */
-  private[graft] def statRowCount(
-      dbFile: String,
-      table: String,
-      paths: Seq[String],
-      colName: String): Long = {
-    require(Set("col_ndv", "col_topk", "col_cms")(table), s"unknown stat table $table")
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT count(*) FROM $table
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})""",
-          colName +: paths)
-        .head(0).asInstanceOf[Number].longValue
-    }
-  }
-
   // ------------------------------------------------------------------
   // q218 — per-column HEAVY-HITTER rows in the long-form stat table
   // ------------------------------------------------------------------
-
-  /** Long-form per-file, per-column top-k frequency rows — the fourth
-    * stat the planner-decision family needs (q212 cardinality → q214
-    * order → q216 broadcast → q218 skew): col_ndv answers "how many
-    * distinct keys", col_topk answers "how hot is the hottest one".
-    * Exact capped top-k per file at these SFs; the 100 TB row shape is
-    * identical for a count-min/SpaceSaving summary.
-    */
-  private[graft] def initColTopk(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE IF NOT EXISTS col_topk(
-          |path VARCHAR NOT NULL, col_name VARCHAR NOT NULL,
-          |key_val BIGINT NOT NULL, cnt BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordColTopk(
-      dbFile: String,
-      rows: Seq[(String, String, Long, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_topk VALUES (?, ?, ?, ?)", rows) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setString(o + 2, r._2)
-          ps.setLong(o + 3, r._3)
-          ps.setLong(o + 4, r._4)
-      }
-    }
-
-  /** The merged heaviest key of (file scope, column): per-file top-k
-    * rows summed per key, argmax by (count desc, key asc) — exact for a
-    * dominant key (it sits in EVERY file's top-k by construction),
-    * an underestimate for uniform columns, which only pushes the skew
-    * ratio DOWN — the safe direction for a salt decision. Metadata only
-    * (≤ k·n_files rows); col_name/paths bound, never spliced.
-    */
-  private[graft] def colTopkMergedTop1(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): (Long, Long) =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val r = DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT key_val, CAST(sum(cnt) AS BIGINT) AS c FROM col_topk
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})
-             GROUP BY key_val ORDER BY c DESC, key_val LIMIT 1""",
-          colName +: paths)
-        .head
-      (r(0).asInstanceOf[Number].longValue, r(1).asInstanceOf[Number].longValue)
-    }
-
-  /** The file-grain top-1 RELIABILITY decision over raw (file, key,
-    * cnt) top-k rows — the theoretical bound behind "merged top-1 is
-    * exact only when the key is genuinely hot". A key absent from file
-    * f's top-k has true count ≤ f's k-th-place count (or 0 when f
-    * listed fewer than k rows — its top-k is exhaustive), so:
-    *   - an unseen key's count is ≤ Σ_f threshold_f,
-    *   - a partially-seen key's count is ≤ observed + Σ over its
-    *     MISSING files' thresholds.
-    * The merged top-1 is CERTAIN to be the true heaviest key iff its
-    * (lower-bound) observed sum beats both bounds. On a uniform column
-    * the bit goes FALSE — exactly the q222-measured underestimate
-    * (merged 11 vs exact 24) a planner must not silently trust.
-    * Pure arithmetic over ≤ k·n_files metadata rows.
-    */
-  private[graft] def top1Reliability(
-      rows: Seq[(String, Long, Long)],
-      k: Int = 8): (Long, Long, Boolean) = {
-    val th: Map[String, Long] = rows.groupBy(_._1).map { case (p, rs) =>
-      (p, if (rs.size >= k) rs.map(_._3).min else 0L)
-    }
-    val totalTh = th.values.sum
-    val obs: Map[Long, Long] =
-      rows.groupBy(_._2).map { case (key, rs) => (key, rs.map(_._3).sum) }
-    val presentBy: Map[Long, Set[String]] =
-      rows.groupBy(_._2).map { case (key, rs) => (key, rs.map(_._1).toSet) }
-    val (t1k, t1c) = obs.toSeq.maxBy { case (key, c) => (c, -key) }
-    val reliable = t1c >= totalTh && obs.forall { case (key, c) =>
-      key == t1k || {
-        val ub = c + th.collect {
-          case (p, t) if !presentBy(key).contains(p) => t
-        }.sum
-        ub <= t1c
-      }
-    }
-    (t1k, t1c, reliable)
-  }
-
-  /** [[colTopkMergedTop1]] with the [[top1Reliability]] bit — reads the
-    * scope's raw top-k rows (≤ k·n_files, bounded) and decides on the
-    * driver. Decisions on a FALSE bit should treat top1_cnt as a lower
-    * bound only (safe for the ≥-threshold salt rule — an underestimate
-    * pushes the ratio down — but not for anything that needs the exact
-    * argmax).
-    */
-  private[graft] def colTopkMergedTop1Checked(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): (Long, Long, Boolean) = {
-    val rows = DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT path, key_val, cnt FROM col_topk
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})
-             ORDER BY path, key_val""",
-          colName +: paths)
-        .map(r => (r(0).asInstanceOf[String],
-          r(1).asInstanceOf[Number].longValue,
-          r(2).asInstanceOf[Number].longValue))
-    }
-    top1Reliability(rows)
-  }
-
-  // ------------------------------------------------------------------
-  // s71 — stat STALENESS markers (the delete-side contract of col_ndv)
-  // ------------------------------------------------------------------
-
-  /** Mark `paths`' `colName` stat rows stale outside a commit (the
-    * `stat_stale` table is created by [[initLog]]).
-    */
-  private[graft] def markStatsStale(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO stat_stale VALUES (?, ?)", paths) {
-        (ps, o, p) =>
-          ps.setString(o + 1, p)
-          ps.setString(o + 2, colName)
-      }
-    }
-
-  /** Which of `paths` carry a stale marker for `colName` — the
-    * metadata question the estimator asks before trusting col_ndv.
-    */
-  private[graft] def staleIn(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Seq[String] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT DISTINCT path FROM stat_stale
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})
-             ORDER BY path""",
-          colName +: paths)
-        .map(_(0).asInstanceOf[String])
-    }
-
-  /** [[colNdvRegisters]] with the staleness GUARD: a scope containing a
-    * stale path is REJECTED loudly — an estimator that merged a stale
-    * sketch row would silently over-count (registers can't decrement),
-    * which is strictly worse than failing. Callers exclude the stale
-    * paths (staleIn) and recompute that scope from data.
-    */
-  private[graft] def colNdvRegistersFresh(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Seq[(Long, Long)] = {
-    val stale = staleIn(dbFile, paths, colName)
-    require(
-      stale.isEmpty,
-      s"colNdvRegistersFresh: scope contains ${stale.size} stale stat " +
-        s"path(s) for column '$colName' (e.g. ${stale.head}) — merging " +
-        "them would over-count; exclude them and recompute from data")
-    colNdvRegisters(dbFile, paths, colName)
-  }
-
-  /** The scope's full merged frequency view: per-key SUMS over the
-    * files' top-k rows (s74 merges this with a recomputed stale scope
-    * before taking the argmax). ≤ k·n_files metadata rows; bound.
-    */
-  private[graft] def colTopkMerged(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Seq[(Long, Long)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT key_val, CAST(sum(cnt) AS BIGINT) AS c FROM col_topk
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})
-             GROUP BY key_val ORDER BY key_val""",
-          colName +: paths)
-        .map(r => (r(0).asInstanceOf[Number].longValue,
-          r(1).asInstanceOf[Number].longValue))
-    }
 
   /** q218's memoized staging per source dir: (manifest files, col_topk
     * rows, col_ndv rows) — the write-once stats cost (the q212Staged
@@ -4010,82 +2856,6 @@ object SnapshotLog {
     String,
     (Seq[(String, Long)], Seq[(String, String, Long, Long)],
       Seq[(String, String, Long, Long)])]()
-
-  // ------------------------------------------------------------------
-  // q220 — per-column COUNT-MIN rows (the 100 TB frequency-stat shape)
-  // ------------------------------------------------------------------
-
-  /** Long-form per-file count-min sketch rows — q218's declared scale
-    * path made real: col_topk's per-file exact top-k merges by SUM only
-    * for keys present in every file's top-k (reliable exactly when skew
-    * exists); a count-min sketch's cells merge by SUM exactly for EVERY
-    * key, with a one-sided error (never an underestimate), so the stat
-    * table can answer point-frequency questions for ANY key at plan
-    * time from 4·64 counters per (file, column) regardless of key
-    * cardinality. Row shape: (path, col_name, row_i, col_j, cnt);
-    * hash_i(k) = h60("i:" || k) % 64 — shared h60, so the oracle
-    * replays every cell.
-    */
-  private[graft] val CmsDepth = 4
-  private[graft] val CmsWidth = 64L
-
-  private[graft] def initColCms(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE IF NOT EXISTS col_cms(
-          |path VARCHAR NOT NULL, col_name VARCHAR NOT NULL,
-          |row_i BIGINT NOT NULL, col_j BIGINT NOT NULL,
-          |cnt BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordColCms(
-      dbFile: String,
-      rows: Seq[(String, String, Long, Long, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_cms VALUES (?, ?, ?, ?, ?)", rows) {
-        (ps, o, r) =>
-          ps.setString(o + 1, r._1)
-          ps.setString(o + 2, r._2)
-          ps.setLong(o + 3, r._3)
-          ps.setLong(o + 4, r._4)
-          ps.setLong(o + 5, r._5)
-      }
-    }
-
-  /** The merged sketch of (file scope, column): cell-wise SUM over the
-    * scope's rows — exact for count-min (counters are additive), the
-    * property col_topk lacks. ≤ 4·64 metadata rows; params bound.
-    */
-  private[graft] def colCmsMerged(
-      dbFile: String,
-      paths: Seq[String],
-      colName: String): Map[(Long, Long), Long] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          s"""SELECT row_i, col_j, CAST(sum(cnt) AS BIGINT) FROM col_cms
-             WHERE col_name = ? AND path IN (${paths.map(_ => "?").mkString(", ")})
-             GROUP BY 1, 2""",
-          colName +: paths)
-        .map(r => ((r(0).asInstanceOf[Number].longValue,
-          r(1).asInstanceOf[Number].longValue),
-          r(2).asInstanceOf[Number].longValue))
-        .toMap
-    }
-
-
-  /** CMS point-frequency probe: min over the depth rows of the key's
-    * cell — the one-sided (never-under) estimate, driver-side over
-    * merged cells (`h60Local` is the bit-identical driver h60). Shared
-    * by s74/s75's staleness audits and q226's split-join sizing.
-    */
-  private[graft] def cmsPointMin(cells: Map[(Long, Long), Long], key: Long): Long =
-    (0 until CmsDepth).map { i =>
-      cells.getOrElse(
-        (i.toLong, graft.ops.Hashing.h60Local(s"$i:$key") % CmsWidth), 0L)
-    }.min
 
   /** q218 — HEAVY-HITTER STATISTICS → AUTOMATIC SALTED-JOIN DECISION:
     * the fourth planner decision, made entirely from the long-form stat
@@ -4201,15 +2971,13 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      initColTopk(dbFile)
-      recordColNdv(dbFile, regRows)
-      recordColTopk(dbFile, topkRows)
-      require(commit(dbFile, 0L, 1L, files), "q218 snapshot commit rejected")
+      TableLog.init(dbFile)
+      TableLog.recordColNdv(dbFile, regRows)
+      TableLog.recordColTopk(dbFile, topkRows)
+      require(TableLog.commit(dbFile, 0L, 1L, files), "q218 snapshot commit rejected")
 
       val paths = files.map(_._1)
-      val man = manifest(dbFile, 1L).toMap
+      val man = TableLog.manifest(dbFile, 1L).toMap
       val nRows = files.map(f => man(f._1)).sum
       val big = Tables.parquet(spark, paths: _*)
 
@@ -4224,11 +2992,11 @@ object SnapshotLog {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         def edgeRow(cn: String) = {
           // ---- the decision: long-form stat table + manifest ONLY ----
-          val ndv = Hll.estimateInt(colNdvRegisters(dbFile, paths, cn))
+          val ndv = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, cn))
           // the reliability bit rides the decision: a FALSE bit means
           // top1_cnt is a lower bound only (safe for the ≥-threshold
           // salt rule; unsafe for anything needing the exact argmax)
-          val (t1k, t1c, t1Rel) = colTopkMergedTop1Checked(dbFile, paths, cn)
+          val (t1k, t1c, t1Rel) = TableLog.colTopkMergedTop1Checked(dbFile, paths, cn)
           val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
           val salted = skewX100 >= 800L
           // ---- execution: the chosen physical shape ----
@@ -4279,6 +3047,10 @@ object SnapshotLog {
       }
     }
   }
+
+  // ------------------------------------------------------------------
+  // q220 — per-column COUNT-MIN rows (the 100 TB frequency-stat shape)
+  // ------------------------------------------------------------------
 
   /** q220's memoized staging per source dir: (manifest files, col_cms
     * rows) — the write-once stats cost (the q212Staged discipline).
@@ -4332,7 +3104,7 @@ object SnapshotLog {
     val probes = Seq(("hot_sentinel", 1L), ("typical", 5L), ("absent", 999999937L))
 
     def cellJ(i: Int, k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      pmod(Hashing.h60(concat(lit(s"$i:"), k.cast("string"))), lit(CmsWidth))
+      pmod(Hashing.h60(concat(lit(s"$i:"), k.cast("string"))), lit(TableLog.CmsWidth))
 
     withTempTableDir("graft_q220_") { tmp =>
       val (files, cmsRows) = q220Staged.computeIfAbsent(
@@ -4345,7 +3117,7 @@ object SnapshotLog {
           // rows' cells, all map-side-combined aggregation
           val cells = bigRel
             .groupBy(col("g"), col("k")).agg(count(lit(1)).as("c"))
-            .select(col("g"), col("c"), explode(array((0 until CmsDepth).map(i =>
+            .select(col("g"), col("c"), explode(array((0 until TableLog.CmsDepth).map(i =>
               struct(lit(i.toLong).as("i"), cellJ(i, col("k")).as("j"))): _*)).as("ij"))
             .groupBy(col("g"), col("ij.i").as("i"), col("ij.j").as("j"))
             .agg(sum(col("c")).as("cnt"))
@@ -4356,21 +3128,20 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initColCms(dbFile)
-      recordColCms(dbFile, cmsRows)
-      require(commit(dbFile, 0L, 1L, files), "q220 snapshot commit rejected")
+      TableLog.init(dbFile)
+      TableLog.recordColCms(dbFile, cmsRows)
+      require(TableLog.commit(dbFile, 0L, 1L, files), "q220 snapshot commit rejected")
 
       val paths = files.map(_._1)
-      val man = manifest(dbFile, 1L).toMap
+      val man = TableLog.manifest(dbFile, 1L).toMap
       val nRows = files.map(f => man(f._1)).sum
       // plan time: the merged sketch — metadata only
-      val sketch = colCmsMerged(dbFile, paths, "k")
+      val sketch = TableLog.colCmsMerged(dbFile, paths, "k")
       val nStatRows = sketch.size.toLong // merged cells = distinct (i, j) recorded
       def estimate(key: Long): Long =
-        (0 until CmsDepth).map { i =>
+        (0 until TableLog.CmsDepth).map { i =>
           sketch.getOrElse(
-            (i.toLong, Hashing.h60Local(s"$i:$key") % CmsWidth), 0L)
+            (i.toLong, Hashing.h60Local(s"$i:$key") % TableLog.CmsWidth), 0L)
         }.min
       // the audit layer: exact probe counts from one scan
       val exact: Map[Long, Long] = bigRel
@@ -4518,10 +3289,10 @@ object SnapshotLog {
             // the fourth branch's broadcast-size check consumes
             val cms = perKey
               .select(col("g"), col("cn"), col("c"),
-                explode(array((0 until CmsDepth).map(i =>
+                explode(array((0 until TableLog.CmsDepth).map(i =>
                   struct(lit(i.toLong).as("i"),
                     pmod(Hashing.h60(concat(lit(s"$i:"), col("k").cast("string"))),
-                      lit(CmsWidth)).as("j"))): _*)).as("ij"))
+                      lit(TableLog.CmsWidth)).as("j"))): _*)).as("ij"))
               .groupBy(col("g"), col("cn"), col("ij.i").as("i"), col("ij.j").as("j"))
               .agg(sum(col("c")).as("cnt"))
               .collect() // ≤ nB·n_cols·256 sketch cells — metadata
@@ -4548,16 +3319,13 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      initColTopk(dbFile)
-      initColCms(dbFile)
-      recordColNdv(dbFile, regRows)
-      recordColTopk(dbFile, topkRows)
-      recordColCms(dbFile, cmsRows)
-      require(commit(dbFile, 0L, 1L, fO ++ fC ++ fL), "q222 snapshot commit rejected")
+      TableLog.init(dbFile)
+      TableLog.recordColNdv(dbFile, regRows)
+      TableLog.recordColTopk(dbFile, topkRows)
+      TableLog.recordColCms(dbFile, cmsRows)
+      require(TableLog.commit(dbFile, 0L, 1L, fO ++ fC ++ fL), "q222 snapshot commit rejected")
 
-      val man = manifest(dbFile, 1L).toMap
+      val man = TableLog.manifest(dbFile, 1L).toMap
       def nRows(files: Seq[(String, Long)]): Long = files.map(f => man(f._1)).sum
       val (pO, pC, pL) = (fO.map(_._1), fC.map(_._1), fL.map(_._1))
 
@@ -4580,25 +3348,25 @@ object SnapshotLog {
           // ---- the DECISION: log metadata only, no data touched ----
           val (nP, nB) = (nRows(fO), nRows(buildFiles))
           val (budget, buildBytes) = (nP * 8L / 4L, nB * 8L)
-          val ndvRowsRead = colNdvRowCount(dbFile, pO, probeKey)
-          val (t1k, t1c) = colTopkMergedTop1(dbFile, pO, probeKey)
-          val ndv = Hll.estimateInt(colNdvRegistersFresh(dbFile, pO, probeKey))
+          val ndvRowsRead = TableLog.statRowCount(dbFile, "col_ndv", pO, probeKey)
+          val (t1k, t1c) = TableLog.colTopkMergedTop1(dbFile, pO, probeKey)
+          val ndv = Hll.estimateInt(TableLog.colNdvRegistersFresh(dbFile, pO, probeKey))
           val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nP)).toLong
           // fourth branch inputs (q226's split, now IN the tree): hot
           // BUILD keys from the build side's merged col_topk + col_ndv,
           // the probe's hot slice bounded by its col_cms point
           // estimates — all committed-log metadata
-          val bNdv = Hll.estimateInt(colNdvRegistersFresh(dbFile, buildPaths, buildKey))
-          val (_, bt1c) = colTopkMergedTop1(dbFile, buildPaths, buildKey)
+          val bNdv = Hll.estimateInt(TableLog.colNdvRegistersFresh(dbFile, buildPaths, buildKey))
+          val (_, bt1c) = TableLog.colTopkMergedTop1(dbFile, buildPaths, buildKey)
           val bSkew = (BigInt(bt1c) * 100 * BigInt(bNdv) / BigInt(nB)).toLong
-          val hot = colTopkMerged(dbFile, buildPaths, buildKey)
+          val hot = TableLog.colTopkMerged(dbFile, buildPaths, buildKey)
             .filter { case (_, c) => BigInt(c) * 100 * BigInt(bNdv) / BigInt(nB) >= 800 }
             .map(_._1).sorted
           val hotEst =
             if (hot.isEmpty) 0L
             else {
-              val cmsP = colCmsMerged(dbFile, pO, probeKey)
-              hot.map(cmsPointMin(cmsP, _)).sum
+              val cmsP = TableLog.colCmsMerged(dbFile, pO, probeKey)
+              hot.map(TableLog.cmsPointMin(cmsP, _)).sum
             }
           val strategy =
             if (buildBytes <= budget) "broadcast"
@@ -4660,30 +3428,6 @@ object SnapshotLog {
             "generates", "plan_ok", "live_log")
           .orderBy("edge")
       }
-    }
-  }
-
-  /** Pair-NDV with the declared fallback: the composite "a|b" col_ndv
-    * row family when the log carries it (q225's write-time stat), else
-    * the independence product of the single-column estimates capped at
-    * the scope's row count — the only honest estimate a log without
-    * pair stats can offer. Returns (estimate, n_pair_rows_read);
-    * rows_read = 0 marks the fallback path, in-hash at the call sites.
-    */
-  private[graft] def pairNdvOrProduct(
-      dbFile: String,
-      paths: Seq[String],
-      pairName: String,
-      aName: String,
-      bName: String,
-      nRows: Long): (Long, Long) = {
-    val nPairRows = colNdvRowCount(dbFile, paths, pairName)
-    if (nPairRows > 0L)
-      (graft.ops.Hll.estimateInt(colNdvRegisters(dbFile, paths, pairName)), nPairRows)
-    else {
-      val a = graft.ops.Hll.estimateInt(colNdvRegisters(dbFile, paths, aName))
-      val b = graft.ops.Hll.estimateInt(colNdvRegisters(dbFile, paths, bName))
-      ((BigInt(a) * BigInt(b)).min(BigInt(nRows)).toLong, 0L)
     }
   }
 
@@ -4823,11 +3567,11 @@ object SnapshotLog {
       // regime is committed state, not a simulation
       val dbA = s"$tmp/logA.duckdb"
       val dbB = s"$tmp/logB.duckdb"
-      Seq(dbA, dbB).foreach { f => initLog(f); initColNdv(f) }
-      recordColNdv(dbA, regRows)
-      recordColNdv(dbB, regRows.filterNot(_._2.contains("|")))
-      require(commit(dbA, 0L, 1L, fP ++ fB), "q225 log A commit rejected")
-      require(commit(dbB, 0L, 1L, fP ++ fB), "q225 log B commit rejected")
+      Seq(dbA, dbB).foreach(TableLog.init)
+      TableLog.recordColNdv(dbA, regRows)
+      TableLog.recordColNdv(dbB, regRows.filterNot(_._2.contains("|")))
+      require(TableLog.commit(dbA, 0L, 1L, fP ++ fB), "q225 log A commit rejected")
+      require(TableLog.commit(dbB, 0L, 1L, fP ++ fB), "q225 log B commit rejected")
 
       val (pP, pB) = (fP.map(_._1), fB.map(_._1))
       val probeDf = Tables.parquet(spark, pP: _*)
@@ -4846,14 +3590,14 @@ object SnapshotLog {
 
         def edgeRow(edge: String, dbFile: String) = {
           // ---- the DECISION: log metadata only, no data touched ----
-          val man = manifest(dbFile, 1L).toMap
+          val man = TableLog.manifest(dbFile, 1L).toMap
           val nP = fP.map(f => man(f._1)).sum
           val nB = fB.map(f => man(f._1)).sum
-          val ndvCust = Hll.estimateInt(colNdvRegisters(dbFile, pP, "k_cust"))
-          val ndvSeg = Hll.estimateInt(colNdvRegisters(dbFile, pP, "k_seg"))
-          val (pairP, rowsP) = pairNdvOrProduct(
+          val ndvCust = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pP, "k_cust"))
+          val ndvSeg = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pP, "k_seg"))
+          val (pairP, rowsP) = TableLog.pairNdvOrProduct(
             dbFile, pP, "k_cust|k_seg", "k_cust", "k_seg", nP)
-          val (pairB, rowsB) = pairNdvOrProduct(
+          val (pairB, rowsB) = TableLog.pairNdvOrProduct(
             dbFile, pB, "bk_cust|bk_seg", "bk_cust", "bk_seg", nB)
           val used = if (rowsP > 0L) "pair" else "product"
           val estJ = (BigInt(nP) * BigInt(nB) /
@@ -4892,76 +3636,8 @@ object SnapshotLog {
   }
 
   // ------------------------------------------------------------------
-  // s76 — planner DECISION-HISTORY rows (drift observable across commits)
+  // q226 + s76 — build-side skew split join, decision history across commits
   // ------------------------------------------------------------------
-
-  /** The decision-history table: one row per (snapshot, edge) planner
-    * decision — the inputs read, the strategy chosen, and the audit
-    * verdict. q212–q226 each audit a decision WITHIN one entry run;
-    * recording the row makes estimator/stat drift observable ACROSS
-    * commits (the s76 lifecycle replays two commits whose stats drift
-    * and surfaces the flipped decision from the persisted rows alone).
-    */
-  private[graft] def initDecisionLog(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val st = c.createStatement()
-      try st.execute(
-        """CREATE TABLE IF NOT EXISTS decision_log (
-           snapshot_id BIGINT, edge VARCHAR, n_rows BIGINT, ndv_est BIGINT,
-           top1_key BIGINT, top1_cnt BIGINT, skew_x100 BIGINT,
-           strategy VARCHAR, audit_ok BOOLEAN)""")
-      finally st.close()
-    }
-
-  private[graft] def recordDecision(
-      dbFile: String,
-      snapshotId: Long,
-      edge: String,
-      nRows: Long,
-      ndvEst: Long,
-      top1Key: Long,
-      top1Cnt: Long,
-      skewX100: Long,
-      strategy: String,
-      auditOk: Boolean): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val ps = c.prepareStatement(
-        "INSERT INTO decision_log VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)")
-      try {
-        ps.setLong(1, snapshotId)
-        ps.setString(2, edge)
-        ps.setLong(3, nRows)
-        ps.setLong(4, ndvEst)
-        ps.setLong(5, top1Key)
-        ps.setLong(6, top1Cnt)
-        ps.setLong(7, skewX100)
-        ps.setString(8, strategy)
-        ps.setBoolean(9, auditOk)
-        ps.executeUpdate()
-      } finally ps.close()
-    }
-
-  /** All decision rows for an edge, oldest snapshot first. */
-  private[graft] def decisionRows(
-      dbFile: String,
-      edge: String): Seq[(Long, Long, Long, Long, Long, Long, String, Boolean)] =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRowsBound(
-          c,
-          """SELECT snapshot_id, n_rows, ndv_est, top1_key, top1_cnt,
-             skew_x100, strategy, audit_ok FROM decision_log
-             WHERE edge = ? ORDER BY snapshot_id""",
-          Seq(edge))
-        .map(r => (r(0).asInstanceOf[Number].longValue,
-          r(1).asInstanceOf[Number].longValue,
-          r(2).asInstanceOf[Number].longValue,
-          r(3).asInstanceOf[Number].longValue,
-          r(4).asInstanceOf[Number].longValue,
-          r(5).asInstanceOf[Number].longValue,
-          r(6).asInstanceOf[String],
-          r(7).asInstanceOf[Boolean]))
-    }
 
   /** q226's memoized staging per source dir: (build files, probe files,
     * col_topk rows, col_ndv rows, col_cms rows) — the write-once stats
@@ -5087,10 +3763,10 @@ object SnapshotLog {
           val perKeyP = probeRel.groupBy(col("g"), col("k"))
             .agg(count(lit(1)).as("c"))
           val cmsP = perKeyP
-            .select(col("g"), col("c"), explode(array((0 until CmsDepth).map(i =>
+            .select(col("g"), col("c"), explode(array((0 until TableLog.CmsDepth).map(i =>
               struct(lit(i.toLong).as("i"),
                 pmod(Hashing.h60(concat(lit(s"$i:"), col("k").cast("string"))),
-                  lit(CmsWidth)).as("j"))): _*)).as("ij"))
+                  lit(TableLog.CmsWidth)).as("j"))): _*)).as("ij"))
             .groupBy(col("g"), col("ij.i").as("i"), col("ij.j").as("j"))
             .agg(sum(col("c")).as("cnt"))
             .collect() // ≤ 2·4·64 sketch cells — metadata
@@ -5107,17 +3783,14 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      initColTopk(dbFile)
-      initColCms(dbFile)
-      recordColNdv(dbFile, regRows)
-      recordColTopk(dbFile, topkRows)
-      recordColCms(dbFile, cmsRows)
-      require(commit(dbFile, 0L, 1L, fB ++ fP), "q226 snapshot commit rejected")
+      TableLog.init(dbFile)
+      TableLog.recordColNdv(dbFile, regRows)
+      TableLog.recordColTopk(dbFile, topkRows)
+      TableLog.recordColCms(dbFile, cmsRows)
+      require(TableLog.commit(dbFile, 0L, 1L, fB ++ fP), "q226 snapshot commit rejected")
 
       val (pB, pP) = (fB.map(_._1), fP.map(_._1))
-      val man = manifest(dbFile, 1L).toMap
+      val man = TableLog.manifest(dbFile, 1L).toMap
       val (nB, nP) = (pB.map(man).sum, pP.map(man).sum)
       val big = Tables.parquet(spark, pB: _*)
       val probe = Tables.parquet(spark, pP: _*)
@@ -5132,14 +3805,14 @@ object SnapshotLog {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         def edgeRow(cn: String) = {
           // ---- the decision: stat tables + manifest counts ONLY ----
-          val ndvB = Hll.estimateInt(colNdvRegisters(dbFile, pB, cn))
-          val hot = colTopkMerged(dbFile, pB, cn)
+          val ndvB = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pB, cn))
+          val hot = TableLog.colTopkMerged(dbFile, pB, cn)
             .filter { case (_, c) => BigInt(c) * 100 * BigInt(ndvB) / BigInt(nB) >= 800 }
             .map(_._1).sorted
-          val (t1k, t1c) = colTopkMergedTop1(dbFile, pB, cn)
+          val (t1k, t1c) = TableLog.colTopkMergedTop1(dbFile, pB, cn)
           val skewX100 = (BigInt(t1c) * 100 * BigInt(ndvB) / BigInt(nB)).toLong
-          val cmsP = colCmsMerged(dbFile, pP, "k")
-          val hotEst = hot.map(cmsPointMin(cmsP, _)).sum
+          val cmsP = TableLog.colCmsMerged(dbFile, pP, "k")
+          val hotEst = hot.map(TableLog.cmsPointMin(cmsP, _)).sum
           val (estBytes, budget) = (hotEst * 8L, nP * 8L / 2L)
           val strategy =
             if (hot.isEmpty) "shuffle"
@@ -5242,10 +3915,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s76_") { tmp =>
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      initColTopk(dbFile)
-      initDecisionLog(dbFile)
+      TableLog.init(dbFile)
 
       /** Stats job of one staged frame (per-key counts → top-8 rows +
         * register cells per file) — the q218 shape.
@@ -5270,15 +3940,15 @@ object SnapshotLog {
             .collect() // ≤ n_files·64 sketch cells — metadata
             .map(r => (byG(r.getLong(0)), "k", r.getLong(1), r.getLong(2)))
             .toSeq
-          recordColTopk(dbFile, topk)
-          recordColNdv(dbFile, cells)
+          TableLog.recordColTopk(dbFile, topk)
+          TableLog.recordColNdv(dbFile, cells)
         } finally { perKey.unpersist(); () }
       }
 
       val files1 = writeBucketed(spark, base, s"$tmp/data", 0L to 3L, Nil)
       val byG1: Map[Long, String] = files1.map(f => (f.g, f.path)).toMap
       statsFor(base, byG1)
-      val c1 = commit(dbFile, 0L, 1L, files1.map(_.entry))
+      val c1 = TableLog.commit(dbFile, 0L, 1L, files1.map(_.entry))
 
       // the appended skew delta (snapshot 2): one file, own stat rows
       val files2 = writeCounted(spark, delta.select("k", "rid", "cents"),
@@ -5286,7 +3956,7 @@ object SnapshotLog {
       statsFor(
         Tables.parquet(spark, files2.map(_._1): _*).withColumn("g", lit(4L)),
         Map(4L -> files2.head._1))
-      val c2 = commit(
+      val c2 = TableLog.commit(
         dbFile, 1L, 2L, files1.map(_.entry) ++ files2)
 
       // the dim is probed by FOUR join censuses below (plain + salted at
@@ -5309,11 +3979,11 @@ object SnapshotLog {
         // foil censuses are independent — all overlapped (guide §2.6,
         // r21); both run under the SAME scoped conf values.
         graft.ops.Par.run(Seq(1L, 2L).map(snap => () => {
-          val man = manifest(dbFile, snap)
+          val man = TableLog.manifest(dbFile, snap)
           val paths = man.map(_._1)
           val nRows = man.map(_._2).sum
-          val ndv = Hll.estimateInt(colNdvRegisters(dbFile, paths, "k"))
-          val (t1k, t1c) = colTopkMergedTop1(dbFile, paths, "k")
+          val ndv = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, "k"))
+          val (t1k, t1c) = TableLog.colTopkMergedTop1(dbFile, paths, "k")
           val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
           val strategy = if (skewX100 >= 800L) "salted" else "shuffle"
           val fact = Tables.parquet(spark, paths: _*)
@@ -5331,7 +4001,7 @@ object SnapshotLog {
             () => census(if (strategy == "salted") plainJ else saltJ))
           val auditOk =
             foil == cen && gen == (if (strategy == "salted") 1L else 0L)
-          recordDecision(dbFile, snap, "fact_dim_k", nRows, ndv, t1k, t1c,
+          TableLog.recordDecision(dbFile, snap, "fact_dim_k", nRows, ndv, t1k, t1c,
             skewX100, strategy, auditOk)
         }))
       } finally {
@@ -5341,7 +4011,7 @@ object SnapshotLog {
       }
 
       // the REPLAY: history read back from the persisted rows alone
-      val hist = decisionRows(dbFile, "fact_dim_k")
+      val hist = TableLog.decisionRows(dbFile, "fact_dim_k")
       val rows = hist.zipWithIndex.map { case ((snap, n, ndv, t1k, t1c, skew,
           strat, ok), i) =>
         val flipped = i > 0 && hist(i - 1)._7 != strat
@@ -5411,8 +4081,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s71_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
+      TableLog.init(dbFile)
 
       // snapshot 1: one immutable file per cust%4 bucket + ONE stats
       // job recording each file's cust registers — two independent
@@ -5430,20 +4099,20 @@ object SnapshotLog {
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
       val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       val cells = rawCells.map { case (g, b, mr) => (pathOf(g), "cust", b, mr) }
-      recordColNdv(dbFile, cells)
+      TableLog.recordColNdv(dbFile, cells)
       val dataFiles = files.map(_.entry)
-      recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, dataFiles)
+      TableLog.recordSeq(dbFile, dataFiles.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, dataFiles)
 
       def snapRow(step: Long, snap: Long, ok: Boolean) = {
-        val paths = manifestSeq(dbFile, snap).map(_._1)
-        val stale = staleIn(dbFile, paths, "cust") // metadata
+        val paths = TableLog.manifestSeq(dbFile, snap).map(_._1)
+        val stale = TableLog.staleIn(dbFile, paths, "cust") // metadata
         val freshPaths = paths.filterNot(stale.toSet)
         // the guard must reject the FULL scope exactly when stale rows
         // are in it — the pinned failure mode, exercised in-entry too
         val rejected = scala.util.Try(
-          colNdvRegistersFresh(dbFile, paths, "cust")).isFailure
-        val freshRegs = colNdvRegistersFresh(dbFile, freshPaths, "cust")
+          TableLog.colNdvRegistersFresh(dbFile, paths, "cust")).isFailure
+        val freshRegs = TableLog.colNdvRegistersFresh(dbFile, freshPaths, "cust")
         // the pruned-scope recompute (ONLY the stale files, masked) and
         // the exact audit (ndvAudit's one per-key pass) are independent
         // scans — overlapped (guide §2.6, r21)
@@ -5451,15 +4120,15 @@ object SnapshotLog {
           () =>
             if (stale.isEmpty) Seq.empty[(Long, Long)]
             else Hll.registerCensus(
-              morReadV2(spark, dbFile, snap, "cust", Some(stale.toSet)),
+              TableLog.morReadV2(spark, dbFile, snap, "cust", Some(stale.toSet)),
               col("cust").cast("string")),
-          () => ndvAudit(morReadV2(spark, dbFile, snap, "cust"), "cust"))
+          () => ndvAudit(TableLog.morReadV2(spark, dbFile, snap, "cust"), "cust"))
         val merged = Hll.mergeRegisters(freshRegs, recomputed)
         val est = Hll.estimateInt(merged)
-        val naive = Hll.estimateInt(colNdvRegisters(dbFile, paths, "cust"))
+        val naive = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, "cust"))
         val regsMatch = merged == liveRegs
         (step, nLive, paths.size.toLong, stale.size.toLong,
-          colNdvRowCount(dbFile, freshPaths, "cust"), est, naive, exact,
+          TableLog.statRowCount(dbFile, "col_ndv", freshPaths, "cust"), est, naive, exact,
           errBp(est, exact), errBp(naive, exact), regsMatch,
           rejected == stale.nonEmpty && stale.nonEmpty == (step == 2L),
           ok)
@@ -5485,7 +4154,7 @@ object SnapshotLog {
               col("cust"))
             .filter(delPred)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
-          recordSeq(dbFile, pd.map(_._1), 2L)
+          TableLog.recordSeq(dbFile, pd.map(_._1), 2L)
           // referenced data files: read from the delta-sized delete
           // file, BEFORE the commit — the markers ride the commit's
           // transaction
@@ -5496,7 +4165,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
+      val c2 = TableLog.commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "cust")))
 
       Seq(row1, snapRow(2L, 2L, c1 && c2))
@@ -5555,8 +4224,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s73_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
+      TableLog.init(dbFile)
 
       // bucketed write + write-time register job: independent scans of
       // the same input, overlapped (guide §2.6, r21)
@@ -5573,34 +4241,34 @@ object SnapshotLog {
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
       val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       val cells = rawCells.map { case (g, b, mr) => (pathOf(g), "cust", b, mr) }
-      recordColNdv(dbFile, cells)
+      TableLog.recordColNdv(dbFile, cells)
       val dataFiles = files.map(_.entry)
-      recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, dataFiles)
+      TableLog.recordSeq(dbFile, dataFiles.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, dataFiles)
 
       def snapRow(step: Long, snap: Long, ok: Boolean) = {
-        val paths = manifestSeq(dbFile, snap).map(_._1)
-        val stale = staleIn(dbFile, paths, "cust") // metadata
+        val paths = TableLog.manifestSeq(dbFile, snap).map(_._1)
+        val stale = TableLog.staleIn(dbFile, paths, "cust") // metadata
         val freshPaths = paths.filterNot(stale.toSet)
         val rejected = scala.util.Try(
-          colNdvRegistersFresh(dbFile, paths, "cust")).isFailure
-        val freshRegs = colNdvRegistersFresh(dbFile, freshPaths, "cust")
+          TableLog.colNdvRegistersFresh(dbFile, paths, "cust")).isFailure
+        val freshRegs = TableLog.colNdvRegistersFresh(dbFile, freshPaths, "cust")
         // the pruned-scope recompute and the exact audit are independent
         // scans — overlapped (guide §2.6, r21)
         val (recomputed, (nLive, exact, liveRegs)) = graft.ops.Par.run2(
           () =>
             if (stale.isEmpty) Seq.empty[(Long, Long)]
             else Hll.registerCensus(
-              morReadV2(spark, dbFile, snap, "cust", Some(stale.toSet)),
+              TableLog.morReadV2(spark, dbFile, snap, "cust", Some(stale.toSet)),
               col("cust").cast("string")),
-          () => ndvAudit(morReadV2(spark, dbFile, snap, "cust"), "cust"))
+          () => ndvAudit(TableLog.morReadV2(spark, dbFile, snap, "cust"), "cust"))
         val merged = Hll.mergeRegisters(freshRegs, recomputed)
         val est = Hll.estimateInt(merged)
-        val naive = Hll.estimateInt(colNdvRegisters(dbFile, paths, "cust"))
+        val naive = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, "cust"))
         val regsMatch = merged == liveRegs
         ((step, nLive, paths.size.toLong, stale.size.toLong, stale.size.toLong,
-          posDeleteSeq(dbFile, snap).map(_._1).distinct.size.toLong,
-          colNdvRowCount(dbFile, freshPaths, "cust"), est, naive, exact,
+          TableLog.posDeleteSeq(dbFile, snap).map(_._1).distinct.size.toLong,
+          TableLog.statRowCount(dbFile, "col_ndv", freshPaths, "cust"), est, naive, exact,
           errBp(est, exact), errBp(naive, exact), regsMatch,
           rejected == stale.nonEmpty, ok), recomputed)
       }
@@ -5619,7 +4287,7 @@ object SnapshotLog {
               col("cust"))
             .filter(delPred)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
-          recordSeq(dbFile, pd.map(_._1), 2L)
+          TableLog.recordSeq(dbFile, pd.map(_._1), 2L)
           val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
@@ -5627,19 +4295,19 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
+      val c2 = TableLog.commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "cust")))
 
       // snapshot 3: COMPACTION of exactly the stale scope + re-stat.
       // The snapshot-2 reads and the compaction REWRITE (file write — no
       // commit, no stats yet) are independent scans of snapshot-2 state,
       // overlapped (guide §2.6, r21).
-      val stale2 = staleIn(dbFile, dataFiles.map(_._1), "cust")
+      val stale2 = TableLog.staleIn(dbFile, dataFiles.map(_._1), "cust")
       val ((row2, rec2), comp) = graft.ops.Par.run2(
         () => snapRow(2L, 2L, c1 && c2),
         () => writeCounted(
           spark,
-          morReadV2(spark, dbFile, 2L, "cust", Some(stale2.toSet))
+          TableLog.morReadV2(spark, dbFile, 2L, "cust", Some(stale2.toSet))
             .select("k", "cents", "cust"),
           s"$base/c1", 1))
       // fresh registers for the new file = snapshot 2's pruned-scope
@@ -5650,10 +4318,10 @@ object SnapshotLog {
       // full re-scan of the new file (guide §2.4: don't recompute what a
       // completed pass already produced).
       val newRegs = rec2
-      recordColNdv(dbFile, newRegs.map { case (b, mr) => (comp.head._1, "cust", b, mr) })
-      recordSeq(dbFile, comp.map(_._1), 3L)
+      TableLog.recordColNdv(dbFile, newRegs.map { case (b, mr) => (comp.head._1, "cust", b, mr) })
+      TableLog.recordSeq(dbFile, comp.map(_._1), 3L)
       val carried = dataFiles.filterNot(f => stale2.contains(f._1))
-      val c3 = commit(dbFile, 2L, 3L, carried ++ comp)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, carried ++ comp)
       val (row3, _) = snapRow(3L, 3L, c1 && c2 && c3)
 
       Seq(row1, row2, row3)
@@ -5692,10 +4360,10 @@ object SnapshotLog {
         .collect() // ≤64 register cells — sketch metadata
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
       val cms = perKey
-        .select(col("c"), explode(array((0 until CmsDepth).map(i =>
+        .select(col("c"), explode(array((0 until TableLog.CmsDepth).map(i =>
           struct(lit(i.toLong).as("i"),
             pmod(Hashing.h60(concat(lit(s"$i:"), col("k").cast("string"))),
-              lit(CmsWidth)).as("j"))): _*)).as("ij"))
+              lit(TableLog.CmsWidth)).as("j"))): _*)).as("ij"))
         .groupBy(col("ij.i").as("i"), col("ij.j").as("j"))
         .agg(sum(col("c")).as("cnt"))
         .collect() // ≤ 4·64 sketch cells — metadata
@@ -5731,10 +4399,10 @@ object SnapshotLog {
         .collect() // ≤ n_buckets·64 sketch cells — metadata
         .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toSeq
       val cms = perKey
-        .select(col("g"), col("c"), explode(array((0 until CmsDepth).map(i =>
+        .select(col("g"), col("c"), explode(array((0 until TableLog.CmsDepth).map(i =>
           struct(lit(i.toLong).as("i"),
             pmod(Hashing.h60(concat(lit(s"$i:"), col("k").cast("string"))),
-              lit(CmsWidth)).as("j"))): _*)).as("ij"))
+              lit(TableLog.CmsWidth)).as("j"))): _*)).as("ij"))
         .groupBy(col("g"), col("ij.i").as("i"), col("ij.j").as("j"))
         .agg(sum(col("c")).as("cnt"))
         .collect() // ≤ n_buckets·4·64 sketch cells — metadata
@@ -5841,10 +4509,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s74_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      initColTopk(dbFile)
-      initColCms(dbFile)
+      TableLog.init(dbFile)
 
       // the bucketed write and the write-time stats job are independent
       // scans of the same input — overlapped (guide §2.6, r21); the
@@ -5859,13 +4524,13 @@ object SnapshotLog {
       (0L to 3L).foreach { g =>
         val (tk, rg, cm) = statsAll(g)
         val p = pathOf(g)
-        recordColTopk(dbFile, tk.map { case (k, c) => (p, "k", k, c) })
-        recordColNdv(dbFile, rg.map { case (b, mr) => (p, "k", b, mr) })
-        recordColCms(dbFile, cm.toSeq.map { case ((i, j), c) => (p, "k", i, j, c) })
+        TableLog.recordColTopk(dbFile, tk.map { case (k, c) => (p, "k", k, c) })
+        TableLog.recordColNdv(dbFile, rg.map { case (b, mr) => (p, "k", b, mr) })
+        TableLog.recordColCms(dbFile, cm.toSeq.map { case ((i, j), c) => (p, "k", i, j, c) })
       }
       val dataFiles = files.map(_.entry)
-      recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, dataFiles)
+      TableLog.recordSeq(dbFile, dataFiles.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, dataFiles)
 
       def addCells(a: Map[(Long, Long), Long], b: Map[(Long, Long), Long]) =
         (a.keySet ++ b.keySet).map(k =>
@@ -5876,12 +4541,12 @@ object SnapshotLog {
       }
 
       def snapRow(step: Long, snap: Long, ok: Boolean) = {
-        val paths = manifestSeq(dbFile, snap).map(_._1)
-        val stale = staleIn(dbFile, paths, "k")
+        val paths = TableLog.manifestSeq(dbFile, snap).map(_._1)
+        val stale = TableLog.staleIn(dbFile, paths, "k")
         val freshPaths = paths.filterNot(stale.toSet)
         val rejected = scala.util.Try(
-          colNdvRegistersFresh(dbFile, paths, "k")).isFailure
-        val nMan = manifest(dbFile, snap).map(_._2).sum
+          TableLog.colNdvRegistersFresh(dbFile, paths, "k")).isFailure
+        val nMan = TableLog.manifest(dbFile, snap).map(_._2).sum
         // the FRESH path's recompute (all three families over ONLY the
         // masked stale scope) and the exact ground-truth audit are
         // independent scans — overlapped (guide §2.6, r21)
@@ -5892,19 +4557,19 @@ object SnapshotLog {
                 (Seq.empty[(Long, Long)], Seq.empty[(Long, Long)],
                   Map.empty[(Long, Long), Long])
               else freqStatFamilies(
-                morReadV2(spark, dbFile, snap, "k", Some(stale.toSet))),
-            () => exactKeyAudit(morReadV2(spark, dbFile, snap, "k")))
-        val (t1k, t1c) = top1Of(colTopkMerged(dbFile, freshPaths, "k") ++ recTk)
+                TableLog.morReadV2(spark, dbFile, snap, "k", Some(stale.toSet))),
+            () => exactKeyAudit(TableLog.morReadV2(spark, dbFile, snap, "k")))
+        val (t1k, t1c) = top1Of(TableLog.colTopkMerged(dbFile, freshPaths, "k") ++ recTk)
         val ndv = Hll.estimateInt(Hll.mergeRegisters(
-          colNdvRegistersFresh(dbFile, freshPaths, "k"), recRg))
+          TableLog.colNdvRegistersFresh(dbFile, freshPaths, "k"), recRg))
         val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nMan)).toLong
         // the NAIVE stale-inclusive path — the audit layer's foil
-        val (n1k, n1c) = top1Of(colTopkMerged(dbFile, paths, "k"))
-        val nNdv = Hll.estimateInt(colNdvRegisters(dbFile, paths, "k"))
+        val (n1k, n1c) = top1Of(TableLog.colTopkMerged(dbFile, paths, "k"))
+        val nNdv = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, "k"))
         val nSkew = (BigInt(n1c) * 100 * BigInt(nNdv) / BigInt(nMan)).toLong
-        val cmsFresh = cmsPointMin(
-          addCells(colCmsMerged(dbFile, freshPaths, "k"), recCms), 1L)
-        val cmsNaive = cmsPointMin(colCmsMerged(dbFile, paths, "k"), 1L)
+        val cmsFresh = TableLog.cmsPointMin(
+          addCells(TableLog.colCmsMerged(dbFile, freshPaths, "k"), recCms), 1L)
+        val cmsNaive = TableLog.cmsPointMin(TableLog.colCmsMerged(dbFile, paths, "k"), 1L)
         val exSkew = (BigInt(exC) * 100 * BigInt(exNdv) / BigInt(nMan)).toLong
         (step, nLive, stale.size.toLong,
           t1k, t1c, ndv, skew, skew >= 800L,
@@ -5931,7 +4596,7 @@ object SnapshotLog {
               col("k"))
             .filter(col("k") === 1L)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
-          recordSeq(dbFile, pd.map(_._1), 2L)
+          TableLog.recordSeq(dbFile, pd.map(_._1), 2L)
           val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
@@ -5939,7 +4604,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
+      val c2 = TableLog.commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "k")))
       val row2 = snapRow(2L, 2L, c1 && c2)
 
@@ -6004,10 +4669,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s75_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      initColTopk(dbFile)
-      initColCms(dbFile)
+      TableLog.init(dbFile)
 
       // the bucketed write and the write-time stats job are independent
       // scans of the same input — overlapped (guide §2.6, r21); the
@@ -6022,17 +4684,17 @@ object SnapshotLog {
 
       def recordAll(p: String, tk: Seq[(Long, Long)], rg: Seq[(Long, Long)],
           cm: Map[(Long, Long), Long]): Unit = {
-        recordColTopk(dbFile, tk.map { case (k, c) => (p, "k", k, c) })
-        recordColNdv(dbFile, rg.map { case (b, mr) => (p, "k", b, mr) })
-        recordColCms(dbFile, cm.toSeq.map { case ((i, j), c) => (p, "k", i, j, c) })
+        TableLog.recordColTopk(dbFile, tk.map { case (k, c) => (p, "k", k, c) })
+        TableLog.recordColNdv(dbFile, rg.map { case (b, mr) => (p, "k", b, mr) })
+        TableLog.recordColCms(dbFile, cm.toSeq.map { case ((i, j), c) => (p, "k", i, j, c) })
       }
       (0L to 3L).foreach { g =>
         val (tk, rg, cm) = statsAll(g)
         recordAll(pathOf(g), tk, rg, cm)
       }
       val dataFiles = files.map(_.entry)
-      recordSeq(dbFile, dataFiles.map(_._1), 1L)
-      val c1 = commit(dbFile, 0L, 1L, dataFiles)
+      TableLog.recordSeq(dbFile, dataFiles.map(_._1), 1L)
+      val c1 = TableLog.commit(dbFile, 0L, 1L, dataFiles)
 
       def addCells(a: Map[(Long, Long), Long], b: Map[(Long, Long), Long]) =
         (a.keySet ++ b.keySet).map(k =>
@@ -6043,12 +4705,12 @@ object SnapshotLog {
       }
 
       def snapRow(step: Long, snap: Long, ok: Boolean) = {
-        val paths = manifestSeq(dbFile, snap).map(_._1)
-        val stale = staleIn(dbFile, paths, "k")
+        val paths = TableLog.manifestSeq(dbFile, snap).map(_._1)
+        val stale = TableLog.staleIn(dbFile, paths, "k")
         val freshPaths = paths.filterNot(stale.toSet)
         val rejected = scala.util.Try(
-          colNdvRegistersFresh(dbFile, paths, "k")).isFailure
-        val nMan = manifest(dbFile, snap).map(_._2).sum
+          TableLog.colNdvRegistersFresh(dbFile, paths, "k")).isFailure
+        val nMan = TableLog.manifest(dbFile, snap).map(_._2).sum
         // the fresh path's recompute (families over ONLY the masked
         // stale scope) and the exact ground-truth audit are independent
         // scans — overlapped (guide §2.6, r21)
@@ -6059,26 +4721,26 @@ object SnapshotLog {
                 (Seq.empty[(Long, Long)], Seq.empty[(Long, Long)],
                   Map.empty[(Long, Long), Long])
               else freqStatFamilies(
-                morReadV2(spark, dbFile, snap, "k", Some(stale.toSet))),
-            () => exactKeyAudit(morReadV2(spark, dbFile, snap, "k")))
-        val (t1k, t1c) = top1Of(colTopkMerged(dbFile, freshPaths, "k") ++ recTk)
+                TableLog.morReadV2(spark, dbFile, snap, "k", Some(stale.toSet))),
+            () => exactKeyAudit(TableLog.morReadV2(spark, dbFile, snap, "k")))
+        val (t1k, t1c) = top1Of(TableLog.colTopkMerged(dbFile, freshPaths, "k") ++ recTk)
         val ndv = Hll.estimateInt(Hll.mergeRegisters(
-          colNdvRegistersFresh(dbFile, freshPaths, "k"), recRg))
+          TableLog.colNdvRegistersFresh(dbFile, freshPaths, "k"), recRg))
         val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nMan)).toLong
-        val cmsFresh = cmsPointMin(
-          addCells(colCmsMerged(dbFile, freshPaths, "k"), recCms), 1L)
+        val cmsFresh = TableLog.cmsPointMin(
+          addCells(TableLog.colCmsMerged(dbFile, freshPaths, "k"), recCms), 1L)
         // per-family metadata coverage of the FRESH scope — drops at
         // snapshot 2, recovers at 3 (≤ 8/64/256 rows per file each)
-        val nTk = statRowCount(dbFile, "col_topk", freshPaths, "k")
-        val nNd = statRowCount(dbFile, "col_ndv", freshPaths, "k")
-        val nCm = statRowCount(dbFile, "col_cms", freshPaths, "k")
+        val nTk = TableLog.statRowCount(dbFile, "col_topk", freshPaths, "k")
+        val nNd = TableLog.statRowCount(dbFile, "col_ndv", freshPaths, "k")
+        val nCm = TableLog.statRowCount(dbFile, "col_cms", freshPaths, "k")
         // naive stale-inclusive path over the MANIFEST scope — the
         // audit foil; after the compaction the stale path is out of
         // the manifest, so this COLLAPSES onto the fresh path
-        val (n1k, n1c) = top1Of(colTopkMerged(dbFile, paths, "k"))
-        val nNdv = Hll.estimateInt(colNdvRegisters(dbFile, paths, "k"))
+        val (n1k, n1c) = top1Of(TableLog.colTopkMerged(dbFile, paths, "k"))
+        val nNdv = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, "k"))
         val nSkew = (BigInt(n1c) * 100 * BigInt(nNdv) / BigInt(nMan)).toLong
-        val cmsNaive = cmsPointMin(colCmsMerged(dbFile, paths, "k"), 1L)
+        val cmsNaive = TableLog.cmsPointMin(TableLog.colCmsMerged(dbFile, paths, "k"), 1L)
         val exSkew = (BigInt(exC) * 100 * BigInt(exNdv) / BigInt(nMan)).toLong
         ((step, nLive, stale.size.toLong,
           nTk, nNd, nCm,
@@ -6108,7 +4770,7 @@ object SnapshotLog {
               col("k"))
             .filter(col("k") === 1L)
             .select("pd_path", "pd_pos"), s"$base/pd1", 1)
-          recordSeq(dbFile, pd.map(_._1), 2L)
+          TableLog.recordSeq(dbFile, pd.map(_._1), 2L)
           val rf = Tables.parquet(spark, pd.map(_._1): _*)
             .select(col("pd_path")).distinct()
             .collect() // bounded by the file count — manifest-scale metadata
@@ -6116,7 +4778,7 @@ object SnapshotLog {
             .toSeq.sorted
           (pd, rf)
         })
-      val c2 = commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
+      val c2 = TableLog.commit(dbFile, 1L, 2L, dataFiles, posDeletes = pd1,
         staleMarkers = refs.map((_, "k")))
 
       // snapshot 3: COMPACTION of exactly the stale scope + a re-stat of
@@ -6124,12 +4786,12 @@ object SnapshotLog {
       // snapshot-2 reads and the compaction REWRITE (file write — no
       // commit, no stats yet) are independent scans of snapshot-2 state,
       // overlapped (guide §2.6, r21).
-      val stale2 = staleIn(dbFile, dataFiles.map(_._1), "k")
+      val stale2 = TableLog.staleIn(dbFile, dataFiles.map(_._1), "k")
       val ((row2, rec2), comp) = graft.ops.Par.run2(
         () => snapRow(2L, 2L, c1 && c2),
         () => writeCounted(
           spark,
-          morReadV2(spark, dbFile, 2L, "k", Some(stale2.toSet))
+          TableLog.morReadV2(spark, dbFile, 2L, "k", Some(stale2.toSet))
             .select("k", "rid", "cents"),
           s"$base/c1", 1))
       // the new file's three families = snapshot 2's recompute: the
@@ -6140,9 +4802,9 @@ object SnapshotLog {
       // re-scan of the new file (guide §2.4).
       val (tk3, rg3, cm3) = rec2
       recordAll(comp.head._1, tk3, rg3, cm3)
-      recordSeq(dbFile, comp.map(_._1), 3L)
+      TableLog.recordSeq(dbFile, comp.map(_._1), 3L)
       val carried = dataFiles.filterNot(f => stale2.contains(f._1))
-      val c3 = commit(dbFile, 2L, 3L, carried ++ comp)
+      val c3 = TableLog.commit(dbFile, 2L, 3L, carried ++ comp)
       val (row3, _) = snapRow(3L, 3L, c1 && c2 && c3)
 
       Seq(row1, row2, row3)
@@ -6196,9 +4858,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_s64_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
-      initColNdv(dbFile)
+      TableLog.init(dbFile)
 
       // ONE write-time scan: per-file (= per residue) register census
       val perFileRegs = o
@@ -6235,23 +4895,23 @@ object SnapshotLog {
       val byF: Map[Long, String] = grouped.view.mapValues(_.head).toMap
       val files = (0L to 3L).map { b =>
         val pf = (byF(b), m(s"n_$b").asInstanceOf[Long])
-        recordStats(dbFile, Seq((pf._1, b)))
-        recordColNdv(dbFile, perFileRegs.collect {
+        TableLog.recordStats(dbFile, Seq((pf._1, b)))
+        TableLog.recordColNdv(dbFile, perFileRegs.collect {
           case (f, bkt, mr) if f == b => (pf._1, "cust", bkt, mr)
         }.toSeq)
         pf
       }
-      commit(dbFile, 0L, 1L, files)
+      TableLog.commit(dbFile, 0L, 1L, files)
 
       def scopeRow(scope: String, buckets: Seq[Long]) = {
-        val paths = prunePaths(dbFile, 1L, buckets)
-        val merged = colNdvRegisters(dbFile, paths, "cust") // plan-time: metadata only
+        val paths = TableLog.prunePaths(dbFile, 1L, buckets)
+        val merged = TableLog.colNdvRegisters(dbFile, paths, "cust") // plan-time: metadata only
         val est = estimate(merged)
         // audit scan, fused: exact NDV + direct census from ONE
         // per-key pass (ndvAudit — previously two scans per scope)
         val (_, exact, direct) =
           ndvAudit(Tables.parquet(spark, paths: _*), "cust")
-        (scope, paths.size.toLong, colNdvRowCount(dbFile, paths, "cust"), est, exact,
+        (scope, paths.size.toLong, TableLog.statRowCount(dbFile, "col_ndv", paths, "cust"), est, exact,
           math.abs(est - exact) * 10000L / exact,
           merged.sortBy(_._1) == direct, true)
       }
@@ -6266,7 +4926,7 @@ object SnapshotLog {
     * q210's CBO formula |A⋈B| ≈ |A|·|B| / max(ndv_A(k), ndv_B(k))
     * evaluated for TWO different join keys entirely from ONE per-column
     * register stat table (col_ndv — s64's per-file sketches generalized
-    * by col_name, the same long-form shape as initColStats), with row
+    * by col_name, the same long-form shape as col_stats), with row
     * counts read from the committed manifest: the whole estimator path
     * touches METADATA ONLY. Lifecycle:
     *
@@ -6376,13 +5036,12 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initColNdv(dbFile)
-      recordColNdv(dbFile, regsAll)
-      require(commit(dbFile, 0L, 1L, fO ++ fC ++ fL), "q212 snapshot commit rejected")
+      TableLog.init(dbFile)
+      TableLog.recordColNdv(dbFile, regsAll)
+      require(TableLog.commit(dbFile, 0L, 1L, fO ++ fC ++ fL), "q212 snapshot commit rejected")
 
       // ---- plan time: manifest row counts + col_ndv register merges ----
-      val man = manifest(dbFile, 1L).toMap
+      val man = TableLog.manifest(dbFile, 1L).toMap
       def nRows(files: Seq[(String, Long)]): Long = files.map(f => man(f._1)).sum
       // the regs_match audit's four direct censuses from ONE union job
       // (identical registers: same h60 over the same cast strings,
@@ -6405,8 +5064,8 @@ object SnapshotLog {
         () => graft.ops.Par.run(Seq(() => trueOCJob(), () => trueOLJob())))
       val Seq(trueOC, trueOL) = trues
       def side(paths: Seq[String], cn: String) = {
-        val merged = colNdvRegisters(dbFile, paths, cn)
-        (Hll.estimateInt(merged), colNdvRowCount(dbFile, paths, cn),
+        val merged = TableLog.colNdvRegisters(dbFile, paths, cn)
+        (Hll.estimateInt(merged), TableLog.statRowCount(dbFile, "col_ndv", paths, cn),
           merged == directRegs(cn))
       }
       val (pO, pC, pL) = (fO.map(_._1), fC.map(_._1), fL.map(_._1))
@@ -6471,9 +5130,7 @@ object SnapshotLog {
 
     withTempTableDir("graft_q215_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initColStats(dbFile)
-      initColNdv(dbFile)
+      TableLog.init(dbFile)
 
       // the bucketed write and the write-time stats job are independent
       // scans of the same input — overlapped (guide §2.6, r21); the
@@ -6493,14 +5150,14 @@ object SnapshotLog {
           .groupBy("g", "bucket").agg(max("rk").as("mr"))
           .collect() // ≤256 sketch cells — stats metadata
           .map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2))).toSeq)
-      recordColStats(dbFile, "c0", files.map(_.range("cents")))
+      TableLog.recordColStats(dbFile, "c0", files.map(_.range("cents")))
       val pathOf: Map[Long, String] = files.map(f => (f.g, f.path)).toMap
       val cells = rawCells.map { case (g, b, mr) => (pathOf(g), "cust", b, mr) }
-      recordColNdv(dbFile, cells)
-      require(commit(dbFile, 0L, 1L, files.map(_.entry)), "q215 commit rejected")
+      TableLog.recordColNdv(dbFile, cells)
+      require(TableLog.commit(dbFile, 0L, 1L, files.map(_.entry)), "q215 commit rejected")
 
       def scopeRow(scope: String, paths: Seq[String]) = {
-        val merged = colNdvRegisters(dbFile, paths, "cust") // metadata only
+        val merged = TableLog.colNdvRegisters(dbFile, paths, "cust") // metadata only
         val est = Hll.estimateInt(merged)
         // audit scan, fused: exact NDV + direct census from ONE
         // per-key pass (ndvAudit — previously two scans per scope)
@@ -6508,7 +5165,7 @@ object SnapshotLog {
         (scope, paths.size.toLong, est, exact,
           math.abs(est - exact) * 10000L / exact, merged == direct, true)
       }
-      val pruned = pruneByCols(dbFile, 1L, Seq(("c0", lo, hi))) // col_stats: the s52 plan
+      val pruned = TableLog.pruneByCols(dbFile, 1L, Seq(("c0", lo, hi))) // col_stats: the s52 plan
       // [lo, hi] sits inside bucket 0's value domain and every bucket is
       // non-empty by quartile construction — an empty prune is a stats
       // defect, failed loudly instead of dividing by zero below
@@ -6528,58 +5185,6 @@ object SnapshotLog {
   // ------------------------------------------------------------------
   // s67 — bucket-layout evolution
   // ------------------------------------------------------------------
-
-  /** Bucket-spec rows in the log: the bucket COUNT each snapshot's
-    * co-located layout was written with — s48's cross-spec discipline
-    * (partition-spec evolution) applied to bucket specs, so a layout
-    * rewrite is planned from metadata and a reader pinned to the old
-    * layout is REJECTED, never silently mis-co-located.
-    */
-  private[graft] def initBucketSpecs(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE IF NOT EXISTS bucket_specs(
-          |snapshot_id BIGINT NOT NULL, n_buckets BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordBucketSpec(
-      dbFile: String,
-      snapshotId: Long,
-      nBuckets: Long): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        s"INSERT INTO bucket_specs VALUES ($snapshotId, $nBuckets)")
-    }
-
-  /** Bucket spec of the CURRENT snapshot — the metadata a layout
-    * rewrite (and every reader) plans from.
-    */
-  private[graft] def currentBucketSpec(dbFile: String): Long =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive
-        .queryRows(
-          c,
-          """SELECT b.n_buckets FROM bucket_specs b
-            |JOIN current c ON b.snapshot_id = c.snapshot_id
-            |WHERE c.pin = 0""".stripMargin)
-        .head.head.asInstanceOf[Number].longValue
-    }
-
-  /** Stale-reader guard: a reader compiled against an `expected`-bucket
-    * layout must validate the log's current spec BEFORE planning a
-    * co-located join — joining 8-bucket task assignments against a
-    * 16-bucket layout would be silently WRONG co-location, the failure
-    * mode this guard turns into a loud reject.
-    */
-  private[graft] def requireBucketSpec(dbFile: String, expected: Long): Unit = {
-    val cur = currentBucketSpec(dbFile)
-    require(
-      cur == expected,
-      s"stale bucket-spec reader: compiled for $expected buckets, " +
-        s"current layout spec is $cur — re-plan from the log")
-  }
 
   /** Memoized s67 catalog tables per dir: (orders8, cust8, orders16,
     * cust16). The bucketed writes are the op's declared one-time layout
@@ -6663,14 +5268,13 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initBucketSpecs(dbFile)
-      require(commit(dbFile, 0L, 1L, Nil), "s67 snapshot 1 rejected")
-      recordBucketSpec(dbFile, 1L, 8L)
+      TableLog.init(dbFile)
+      require(TableLog.commit(dbFile, 0L, 1L, Nil), "s67 snapshot 1 rejected")
+      TableLog.recordBucketSpec(dbFile, 1L, 8L)
 
       // snapshot 1: pinned-8 reader accepted; zero-exchange join; the
       // census audited against the plain-parquet join (ground truth)
-      val guard1 = try { requireBucketSpec(dbFile, 8L); true }
+      val guard1 = try { TableLog.requireBucketSpec(dbFile, 8L); true }
       catch { case _: IllegalArgumentException => false }
       val j8 = joined(spark.table(o8), spark.table(c8))
       val ex8 = countShuffles(j8)
@@ -6678,16 +5282,16 @@ object SnapshotLog {
       val (nP, sP) = census(joined(ordersDf, custDf))
 
       // the evolution: next spec planned FROM the log's current spec
-      val next = currentBucketSpec(dbFile) * 2L
-      require(commit(dbFile, 1L, 2L, Nil), "s67 snapshot 2 rejected")
-      recordBucketSpec(dbFile, 2L, next)
+      val next = TableLog.currentBucketSpec(dbFile) * 2L
+      require(TableLog.commit(dbFile, 1L, 2L, Nil), "s67 snapshot 2 rejected")
+      TableLog.recordBucketSpec(dbFile, 2L, next)
 
       // snapshot 2: join stays exchange-free on the new layout,
       // census-neutral; the stale pinned-8 reader is REJECTED
       val j16 = joined(spark.table(o16), spark.table(c16))
       val ex16 = countShuffles(j16)
       val (n16, s16) = census(j16)
-      val guard2 = try { requireBucketSpec(dbFile, 8L); false }
+      val guard2 = try { TableLog.requireBucketSpec(dbFile, 8L); false }
       catch { case _: IllegalArgumentException => true }
 
       Seq(
@@ -6776,8 +5380,7 @@ object SnapshotLog {
         })
 
       val dbFile = s"$tmp/log.duckdb"
-      initLog(dbFile)
-      initBucketSpecs(dbFile)
+      TableLog.init(dbFile)
       val (nP, sP) = census(joined(ordersDf, custDf)) // ground truth once
 
       val gens = Seq(
@@ -6786,11 +5389,11 @@ object SnapshotLog {
         (3L, 32L, names(4), names(5)))
       val perGen = gens.map { case (snap, b, ot, ct) =>
         // every evolution's spec comes FROM the log, never a constant
-        val planned = if (snap == 1L) 8L else currentBucketSpec(dbFile) * 2L
+        val planned = if (snap == 1L) 8L else TableLog.currentBucketSpec(dbFile) * 2L
         require(planned == b, s"s72: planned spec $planned != staged layout $b")
-        require(commit(dbFile, snap - 1L, snap, Nil), s"s72 snapshot $snap rejected")
-        recordBucketSpec(dbFile, snap, b)
-        val acceptOk = try { requireBucketSpec(dbFile, b); true }
+        require(TableLog.commit(dbFile, snap - 1L, snap, Nil), s"s72 snapshot $snap rejected")
+        TableLog.recordBucketSpec(dbFile, snap, b)
+        val acceptOk = try { TableLog.requireBucketSpec(dbFile, b); true }
         catch { case _: IllegalArgumentException => false }
         val j = joined(spark.table(ot), spark.table(ct))
         val ex = countShuffles(j)
@@ -6800,7 +5403,7 @@ object SnapshotLog {
       // end state (spec 32): both OLD generations' pinned readers must
       // be rejected, the current one accepted
       def rejectedNow(b: Long): Boolean =
-        try { requireBucketSpec(dbFile, b); false }
+        try { TableLog.requireBucketSpec(dbFile, b); false }
         catch { case _: IllegalArgumentException => true }
       val finalOk = Seq(rejectedNow(8L), rejectedNow(16L), !rejectedNow(32L))
       perGen.zip(finalOk)
@@ -6812,46 +5415,6 @@ object SnapshotLog {
         .orderBy("snapshot_id")
     }
   }
-
-  /** Two-level manifest list (Iceberg's snapshot → manifest-list →
-    * manifest-file hierarchy): data-file entries are grouped into
-    * MANIFEST GROUPS, each carrying a partition-value summary
-    * (min_b/max_b) in the top-level list, so planning prunes whole
-    * groups before reading any per-file entry rows.
-    */
-  private[graft] def initManifestGroups(dbFile: String): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE manifest_groups(
-          |snapshot_id BIGINT NOT NULL, group_id BIGINT NOT NULL,
-          |min_b BIGINT NOT NULL, max_b BIGINT NOT NULL,
-          |n_entries BIGINT NOT NULL)""".stripMargin)
-      DuckDbLive.execute(
-        c,
-        """CREATE TABLE group_entries(
-          |group_id BIGINT NOT NULL, path VARCHAR NOT NULL,
-          |bucket BIGINT NOT NULL)""".stripMargin)
-    }
-
-  private[graft] def recordGroup(
-      dbFile: String,
-      snapshotId: Long,
-      groupId: Long,
-      entries: Seq[(String, Long)]): Unit =
-    DuckDbLive.withConnection(dbFile) { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""INSERT INTO manifest_groups VALUES ($snapshotId, $groupId,
-           ${entries.map(_._2).min}, ${entries.map(_._2).max}, ${entries.size})""")
-      finally st.close()
-      DuckDbLive.insertRows(c, "INSERT INTO group_entries VALUES (?, ?, ?)", entries) {
-        (ps, o, r) =>
-          ps.setLong(o + 1, groupId)
-          ps.setString(o + 2, r._1)
-          ps.setLong(o + 3, r._2)
-      }
-    }
 
   /** s65 — TWO-LEVEL MANIFEST PRUNING: the metadata-scalability layer
     * s52/s57/s58 all skipped — they plan over a FLAT per-file stat
@@ -6887,42 +5450,17 @@ object SnapshotLog {
 
     withTempTableDir("graft_s65_") { base =>
       val dbFile = s"$base/log.duckdb"
-      initLog(dbFile)
-      initStats(dbFile)
-      initManifestGroups(dbFile)
+      TableLog.init(dbFile)
 
       val files = writeBaseBuckets(spark, dbFile, o.select("k", "cents"), s"$base/data", 16)
-      commit(dbFile, 0L, 1L, files.map(f => (f._1, f._2)))
+      TableLog.commit(dbFile, 0L, 1L, files.map(f => (f._1, f._2)))
       (0L to 3L).foreach { g =>
-        recordGroup(dbFile, 1L, g,
+        TableLog.recordGroup(dbFile, 1L, g,
           files.filter(_._3 / 4 == g).map(f => (f._1, f._3)))
       }
 
-      def plan(lo: Long, hi: Long): (Long, Long, Seq[String]) =
-        DuckDbLive.withConnection(dbFile) { c =>
-          val gids = DuckDbLive.queryRows(
-            c,
-            s"""SELECT group_id FROM manifest_groups
-               WHERE snapshot_id = 1 AND max_b >= $lo AND min_b <= $hi
-               ORDER BY group_id""").map(_(0).asInstanceOf[Number].longValue)
-          // an empty survivor set would make the IN () clause a syntax
-          // error and the downstream read a confusing failure — fail
-          // loudly at the plan layer instead (q204-class guard)
-          require(
-            gids.nonEmpty,
-            s"two-level plan for [$lo, $hi] pruned every manifest group — " +
-              "no group summary overlaps the predicate")
-          val entries = DuckDbLive.queryRows(
-            c,
-            s"""SELECT path, bucket FROM group_entries
-               WHERE group_id IN (${gids.mkString(", ")}) ORDER BY path""")
-            .map(r => (r(0).toString, r(1).asInstanceOf[Number].longValue))
-          (gids.size.toLong, entries.size.toLong,
-            entries.collect { case (p, b) if b >= lo && b <= hi => p })
-        }
-
       def queryRow(name: String, lo: Long, hi: Long) = {
-        val (nGroups, nEntries, files) = plan(lo, hi)
+        val (nGroups, nEntries, files) = TableLog.planGroups(dbFile, 1L, lo, hi)
         val planned = Tables.parquet(spark, files: _*)
           .agg(count(lit(1)), sum(col("cents"))).head()
         val direct = o.filter(col("b") >= lo && col("b") <= hi)

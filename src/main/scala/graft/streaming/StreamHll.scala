@@ -108,14 +108,14 @@ object StreamHll {
     * (doc_id < 250 is epoch 0 — the stageDocBatches split).
     */
   def streamedNdvMaintenance(outer: SparkSession, dir: String): DataFrame = {
-    import graft.sinks.SnapshotLog
+    import graft.sinks.TableLog
     val s = StreamSessions.tuned(outer)
     val staged = Watermarks.stageDocBatches(s, dir)
     val schema = Tables.parquet(s, s"$staged/0.parquet").schema
     val base = graft.ops.Scratch.scratchDir("graft_s70_")
 
     val dbFile = s"$base/stats.duckdb"
-    SnapshotLog.initColNdv(dbFile)
+    TableLog.init(dbFile)
     val results = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Long, Long, Long, Long, Boolean)]()
     val q = s.readStream
@@ -136,12 +136,12 @@ object StreamHll {
           .groupBy("bucket").agg(max("rk").as("mr"))
           .collect() // ≤64 register cells — the epoch's stats append
           .map(r => (s"epoch$epoch", "text", r.getLong(0), r.getLong(1)))
-        SnapshotLog.recordColNdv(dbFile, cells.toSeq)
+        TableLog.recordColNdv(dbFile, cells.toSeq)
         // the planner read: cumulative merge out of the stat table
         val paths = (0L to epoch).map(e => s"epoch$e")
-        val merged = SnapshotLog.colNdvRegisters(dbFile, paths, "text")
+        val merged = TableLog.colNdvRegisters(dbFile, paths, "text")
         val est = Hll.estimateInt(merged)
-        val nStat = SnapshotLog.colNdvRowCount(dbFile, paths, "text")
+        val nStat = TableLog.statRowCount(dbFile, "col_ndv", paths, "text")
         // audit layer: exact + direct census over everything so far
         val cum = Tables.parquet(s, (0L to epoch).map(e => s"$staged/$e.parquet"): _*)
         val exact = cum.agg(countDistinct(col("text"))).head().getLong(0)

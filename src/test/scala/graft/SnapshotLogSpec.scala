@@ -1,6 +1,6 @@
 package graft
 
-import graft.sinks.{DuckDbLive, SnapshotLog}
+import graft.sinks.{DuckDbLive, TableLog}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** s39's commit protocol under adversarial schedules — the properties
@@ -17,185 +17,273 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
 
   test("bucket-spec evolution: a stale 8-bucket reader is rejected, never silently wrong") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initBucketSpecs(db)
-      assert(SnapshotLog.commit(db, 0L, 1L, Nil))
-      SnapshotLog.recordBucketSpec(db, 1L, 8L)
-      SnapshotLog.requireBucketSpec(db, 8L) // pinned reader accepted pre-evolution
-      assert(SnapshotLog.currentBucketSpec(db) == 8L)
-      assert(SnapshotLog.commit(db, 1L, 2L, Nil))
-      SnapshotLog.recordBucketSpec(db, 2L, 16L)
-      assert(SnapshotLog.currentBucketSpec(db) == 16L)
+      TableLog.init(db)
+      assert(TableLog.commit(db, 0L, 1L, Nil))
+      TableLog.recordBucketSpec(db, 1L, 8L)
+      TableLog.requireBucketSpec(db, 8L) // pinned reader accepted pre-evolution
+      assert(TableLog.currentBucketSpec(db) == 8L)
+      assert(TableLog.commit(db, 1L, 2L, Nil))
+      TableLog.recordBucketSpec(db, 2L, 16L)
+      assert(TableLog.currentBucketSpec(db) == 16L)
       // the SAME pinned-8 reader must now fail loudly
-      val e = intercept[IllegalArgumentException](SnapshotLog.requireBucketSpec(db, 8L))
+      val e = intercept[IllegalArgumentException](TableLog.requireBucketSpec(db, 8L))
       assert(e.getMessage.contains("stale bucket-spec reader"))
-      SnapshotLog.requireBucketSpec(db, 16L) // a re-planned reader is accepted
+      TableLog.requireBucketSpec(db, 16L) // a re-planned reader is accepted
     }
   }
 
   test("bucket-spec evolution COMPOSES: after 8→16→32 BOTH old generations' readers are rejected") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initBucketSpecs(db)
+      TableLog.init(db)
       // generation chain, each spec planned from the log's current one
-      assert(SnapshotLog.commit(db, 0L, 1L, Nil))
-      SnapshotLog.recordBucketSpec(db, 1L, 8L)
-      SnapshotLog.requireBucketSpec(db, 8L)
-      val next16 = SnapshotLog.currentBucketSpec(db) * 2L
+      assert(TableLog.commit(db, 0L, 1L, Nil))
+      TableLog.recordBucketSpec(db, 1L, 8L)
+      TableLog.requireBucketSpec(db, 8L)
+      val next16 = TableLog.currentBucketSpec(db) * 2L
       assert(next16 == 16L)
-      assert(SnapshotLog.commit(db, 1L, 2L, Nil))
-      SnapshotLog.recordBucketSpec(db, 2L, next16)
-      SnapshotLog.requireBucketSpec(db, 16L) // current generation accepted
-      val next32 = SnapshotLog.currentBucketSpec(db) * 2L
+      assert(TableLog.commit(db, 1L, 2L, Nil))
+      TableLog.recordBucketSpec(db, 2L, next16)
+      TableLog.requireBucketSpec(db, 16L) // current generation accepted
+      val next32 = TableLog.currentBucketSpec(db) * 2L
       assert(next32 == 32L)
-      assert(SnapshotLog.commit(db, 2L, 3L, Nil))
-      SnapshotLog.recordBucketSpec(db, 3L, next32)
+      assert(TableLog.commit(db, 2L, 3L, Nil))
+      TableLog.recordBucketSpec(db, 3L, next32)
       // the compounding failure mode: a reader that survived one
       // evolution must not survive the second — BOTH stale generations
       // fail loudly, only the current one plans
-      val e8 = intercept[IllegalArgumentException](SnapshotLog.requireBucketSpec(db, 8L))
+      val e8 = intercept[IllegalArgumentException](TableLog.requireBucketSpec(db, 8L))
       assert(e8.getMessage.contains("stale bucket-spec reader"))
-      val e16 = intercept[IllegalArgumentException](SnapshotLog.requireBucketSpec(db, 16L))
+      val e16 = intercept[IllegalArgumentException](TableLog.requireBucketSpec(db, 16L))
       assert(e16.getMessage.contains("current layout spec is 32"))
-      SnapshotLog.requireBucketSpec(db, 32L)
+      TableLog.requireBucketSpec(db, 32L)
     }
   }
 
   test("stale-parent commit is rejected and leaves no log rows") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      assert(SnapshotLog.commit(db, 0L, 1L, Seq(("f1", 10L), ("f2", 5L))))
-      assert(SnapshotLog.commit(db, 1L, 2L, Seq(("f1", 10L), ("f2", 5L), ("f3", 7L))))
+      TableLog.init(db)
+      assert(TableLog.commit(db, 0L, 1L, Seq(("f1", 10L), ("f2", 5L))))
+      assert(TableLog.commit(db, 1L, 2L, Seq(("f1", 10L), ("f2", 5L), ("f3", 7L))))
       // a writer still at snapshot 1: clean reject, nothing written
-      assert(!SnapshotLog.commit(db, 1L, 3L, Seq(("f4", 1L))))
-      assert(SnapshotLog.currentSnapshot(db) == 2L)
-      assert(SnapshotLog.manifest(db, 3L).isEmpty)
+      assert(!TableLog.commit(db, 1L, 3L, Seq(("f4", 1L))))
+      assert(TableLog.currentSnapshot(db) == 2L)
+      assert(TableLog.manifest(db, 3L).isEmpty)
     }
   }
 
   test("time travel: snapshot 1's manifest never sees snapshot 2's files") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("a", 3L)))
-      SnapshotLog.commit(db, 1L, 2L, Seq(("a", 3L), ("b", 4L)))
-      assert(SnapshotLog.manifest(db, 1L) == Seq(("a", 3L)))
-      assert(SnapshotLog.manifest(db, 2L) == Seq(("a", 3L), ("b", 4L)))
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("a", 3L)))
+      TableLog.commit(db, 1L, 2L, Seq(("a", 3L), ("b", 4L)))
+      assert(TableLog.manifest(db, 1L) == Seq(("a", 3L)))
+      assert(TableLog.manifest(db, 2L) == Seq(("a", 3L), ("b", 4L)))
     }
   }
 
   test("expiration never touches the root, the current snapshot, or newer history") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("a", 1L)))
-      SnapshotLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L)))
-      SnapshotLog.commit(db, 2L, 3L, Seq(("c", 3L)))
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("a", 1L)))
+      TableLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L)))
+      TableLog.commit(db, 2L, 3L, Seq(("c", 3L)))
       // olderThan covers EVERYTHING — current (3) and root (0) must survive
-      val expired = SnapshotLog.expireSnapshots(db, olderThan = 99L)
+      val expired = TableLog.expireSnapshots(db, olderThan = 99L)
       assert(expired == Seq(1L, 2L))
-      assert(SnapshotLog.currentSnapshot(db) == 3L)
-      assert(SnapshotLog.manifest(db, 1L).isEmpty)
-      assert(SnapshotLog.manifest(db, 2L).isEmpty)
-      assert(SnapshotLog.manifest(db, 3L) == Seq(("c", 3L)))
+      assert(TableLog.currentSnapshot(db) == 3L)
+      assert(TableLog.manifest(db, 1L).isEmpty)
+      assert(TableLog.manifest(db, 2L).isEmpty)
+      assert(TableLog.manifest(db, 3L) == Seq(("c", 3L)))
       // reachability after expiry: only the retained manifest's files
-      assert(SnapshotLog.liveFiles(db) == Set("c"))
+      assert(TableLog.liveFiles(db) == Set("c"))
       // expiration is idempotent
-      assert(SnapshotLog.expireSnapshots(db, olderThan = 99L).isEmpty)
+      assert(TableLog.expireSnapshots(db, olderThan = 99L).isEmpty)
     }
   }
 
   test("liveFiles is the union across retained snapshots, not just current") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("a", 1L)))
-      SnapshotLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L)))
-      SnapshotLog.commit(db, 2L, 3L, Seq(("c", 3L))) // compaction dropped a,b
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("a", 1L)))
+      TableLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L)))
+      TableLog.commit(db, 2L, 3L, Seq(("c", 3L))) // compaction dropped a,b
       // nothing expired yet: a file referenced ONLY by history is live
-      assert(SnapshotLog.liveFiles(db) == Set("a", "b", "c"))
-      SnapshotLog.expireSnapshots(db, olderThan = 3L)
-      assert(SnapshotLog.liveFiles(db) == Set("c"))
+      assert(TableLog.liveFiles(db) == Set("a", "b", "c"))
+      TableLog.expireSnapshots(db, olderThan = 3L)
+      assert(TableLog.liveFiles(db) == Set("c"))
+    }
+  }
+
+  test("liveFiles and expiry cover delete manifests: GC keeps a retained snapshot's delete files") {
+    withLog { db =>
+      TableLog.init(db)
+      assert(TableLog.commit(db, 0L, 1L, Seq(("d1", 3L)), eqDeletes = Seq(("eq1", 1L)),
+        posDeletes = Seq(("pos1", 1L))))
+      assert(TableLog.commit(db, 1L, 2L, Seq(("d1", 3L), ("d2", 2L)),
+        eqDeletes = Seq(("eq2", 1L)), posDeletes = Seq(("pos2", 1L))))
+      assert(TableLog.liveFiles(db) == Set("d1", "d2", "eq1", "eq2", "pos1", "pos2"))
+      assert(TableLog.expireSnapshots(db, olderThan = 2L) == Seq(1L))
+      // snapshot 2 still masks rows with eq2 and pos2, so orphan GC must
+      // keep them; eq1 and pos1 were listed only by the expired snapshot
+      assert(TableLog.liveFiles(db) == Set("d1", "d2", "eq2", "pos2"))
+      Seq("manifests", "delete_manifests", "position_delete_manifests").foreach { t =>
+        val left = DuckDbLive.withConnection(db) { c =>
+          DuckDbLive.queryRows(c, s"SELECT count(*) FROM $t WHERE snapshot_id = 1")
+            .head.head.asInstanceOf[Number].longValue
+        }
+        assert(left == 0L, s"expired snapshot 1 left rows in $t")
+      }
+    }
+  }
+
+  test("one DDL: a fresh init serves every recorder and reader, and creates exactly the log tables") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    withLog { db =>
+      val base = tempDir("graft_tablelog_ddl_")
+      Seq((1L, 250L)).toDF("k", "cents").coalesce(1).write.parquet(s"$base/a")
+      val f = new java.io.File(s"$base/a").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
+      TableLog.init(db)
+      // every recorder the entries call
+      TableLog.recordSeq(db, Seq(f), 1L)
+      TableLog.recordStats(db, Seq((f, 0L)))
+      TableLog.recordSpec(db, Seq((f, 1L, 0L)))
+      TableLog.recordColStats(db, "cents", Seq((f, 250L, 250L)))
+      TableLog.recordGroup(db, 1L, 0L, Seq((f, 0L)))
+      TableLog.recordSchema(db, 1L, Seq((1L, "k", "bigint"), (2L, "cents", "bigint")))
+      TableLog.recordFileSchema(db, Seq(f), 1L)
+      TableLog.recordColNdv(db, Seq((f, "k", 0L, 1L)))
+      TableLog.recordColTopk(db, Seq((f, "k", 1L, 1L)))
+      TableLog.recordColCms(db, Seq((f, "k", 0L, 0L, 1L)))
+      TableLog.markStatsStale(db, Seq("other"), "k")
+      TableLog.recordDecision(db, 1L, "e", 1L, 1L, 1L, 1L, 100L, "plain", auditOk = true)
+      assert(TableLog.commit(db, 0L, 1L, Seq((f, 1L)), staleMarkers = Seq(("other", "cents"))))
+      TableLog.recordTimestamp(db, 1L, 1000L)
+      TableLog.recordBucketSpec(db, 1L, 8L)
+      TableLog.createRef(db, "tag", 1L)
+      assert(TableLog.claimApply(db, 7L) && !TableLog.claimApply(db, 7L))
+      // every reader the entries call
+      assert(TableLog.currentSnapshot(db) == 1L && TableLog.refSnapshot(db, "tag") == 1L)
+      assert(TableLog.manifest(db, 1L) == Seq((f, 1L)))
+      assert(TableLog.manifestSeq(db, 1L) == Seq((f, 1L)))
+      assert(TableLog.deleteSeq(db, 1L).isEmpty && TableLog.posDeleteSeq(db, 1L).isEmpty)
+      assert(TableLog.snapshotRows(db) == Seq((0L, 0L), (1L, 0L)))
+      assert(TableLog.manifestRows(db) == Seq((1L, f, 1L)))
+      assert(TableLog.census(spark, db, Seq(1L))() == Map(1L -> ((1L, 250L))))
+      assert(TableLog.census(spark, db, Seq(1L))(TableLog.morReadV2(spark, db, _, "k")) ==
+        Map(1L -> ((1L, 250L))))
+      assert(TableLog.evolvedRead(spark, db, 1L, 1L).as[(Long, Long)].collect().toSeq ==
+        Seq((1L, 250L)))
+      assert(TableLog.prunePaths(db, 1L, Seq(0L)) == Seq(f))
+      assert(TableLog.planBinpack(db, 1L, 10L).isEmpty)
+      assert(TableLog.pruneAcrossSpecs(db, 1L, Map(1L -> 0L)) == Seq(f))
+      assert(TableLog.pruneByCols(db, 1L, Seq(("cents", 0L, 300L))) == Seq(f))
+      assert(TableLog.planGroups(db, 1L, 0L, 0L) == ((1L, 1L, Seq(f))))
+      assert(TableLog.resolveAsOf(db, 1000L).contains(1L))
+      assert(TableLog.schemaFields(db, 1L).map(_._2) == Seq("k", "cents"))
+      TableLog.requireBucketSpec(db, 8L)
+      assert(TableLog.colNdvRegistersFresh(db, Seq(f), "k") == Seq((0L, 1L)))
+      assert(Seq("col_ndv", "col_topk", "col_cms").map(TableLog.statRowCount(db, _, Seq(f), "k")) ==
+        Seq(1L, 1L, 1L))
+      assert(TableLog.pairNdvOrProduct(db, Seq(f), "k|k", "k", "k", 1L)._2 == 0L)
+      assert(TableLog.staleIn(db, Seq(f, "other"), "k") == Seq("other"))
+      assert(TableLog.colTopkMergedTop1(db, Seq(f), "k") == ((1L, 1L)))
+      assert(TableLog.colTopkMergedTop1Checked(db, Seq(f), "k") == ((1L, 1L, true)))
+      assert(TableLog.colTopkMerged(db, Seq(f), "k") == Seq((1L, 1L)))
+      assert(TableLog.colCmsMerged(db, Seq(f), "k") == Map((0L, 0L) -> 1L))
+      assert(TableLog.decisionRows(db, "e").map(_._7) == Seq("plain"))
+      assert(TableLog.moveCurrent(db, 1L, 0L) && TableLog.dropRef(db, "tag"))
+      assert(TableLog.expireSnapshots(db, 2L) == Seq(1L) && TableLog.liveFiles(db).isEmpty)
+      val catalog = DuckDbLive.withConnection(db) { c =>
+        DuckDbLive.queryRows(c, "SELECT table_name FROM duckdb_tables()").map(_.head.toString).toSet
+      }
+      assert(catalog == Set(
+        "snapshots", "manifests", "delete_manifests", "position_delete_manifests", "current",
+        "refs", "file_seq", "stat_stale", "file_stats", "file_spec", "snapshot_ts",
+        "schema_fields", "file_schema", "col_stats", "bucket_specs", "manifest_groups",
+        "group_entries", "col_ndv", "col_topk", "col_cms", "decision_log", "apply_log"))
     }
   }
 
   test("stats pruning selects exactly the overlapping buckets' files") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initStats(db)
-      SnapshotLog.recordStats(db, Seq(("f0", 0L), ("f1", 1L), ("f2", 2L), ("f3", 3L)))
-      SnapshotLog.commit(db, 0L, 1L, Seq(("f0", 1L), ("f1", 1L), ("f2", 1L), ("f3", 1L)))
-      assert(SnapshotLog.prunePaths(db, 1L, Seq(2L)) == Seq("f2"))
-      assert(SnapshotLog.prunePaths(db, 1L, Seq(1L, 3L)) == Seq("f1", "f3"))
-      assert(SnapshotLog.prunePaths(db, 1L, Seq.empty).isEmpty)
+      TableLog.init(db)
+      TableLog.recordStats(db, Seq(("f0", 0L), ("f1", 1L), ("f2", 2L), ("f3", 3L)))
+      TableLog.commit(db, 0L, 1L, Seq(("f0", 1L), ("f1", 1L), ("f2", 1L), ("f3", 1L)))
+      assert(TableLog.prunePaths(db, 1L, Seq(2L)) == Seq("f2"))
+      assert(TableLog.prunePaths(db, 1L, Seq(1L, 3L)) == Seq("f1", "f3"))
+      assert(TableLog.prunePaths(db, 1L, Seq.empty).isEmpty)
       // pruning is snapshot-scoped: a file in stats but NOT in the
       // snapshot's manifest is never selected
-      SnapshotLog.recordStats(db, Seq(("g2", 2L)))
-      assert(SnapshotLog.prunePaths(db, 1L, Seq(2L)) == Seq("f2"))
+      TableLog.recordStats(db, Seq(("g2", 2L)))
+      assert(TableLog.prunePaths(db, 1L, Seq(2L)) == Seq("f2"))
     }
   }
 
   test("MOR commit is atomic over data AND delete manifests; seq metadata round-trips") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.recordSeq(db, Seq("a", "b"), 1L)
-      assert(SnapshotLog.commit(db, 0L, 1L, Seq(("a", 3L), ("b", 4L))))
-      SnapshotLog.recordSeq(db, Seq("del1"), 2L)
-      assert(SnapshotLog.commit(db, 1L, 2L, Seq(("a", 3L), ("b", 4L)), Seq(("del1", 2L))))
-      assert(SnapshotLog.manifestSeq(db, 2L) == Seq(("a", 1L), ("b", 1L)))
-      assert(SnapshotLog.deleteSeq(db, 2L) == Seq(("del1", 2L)))
+      TableLog.init(db)
+      TableLog.recordSeq(db, Seq("a", "b"), 1L)
+      assert(TableLog.commit(db, 0L, 1L, Seq(("a", 3L), ("b", 4L))))
+      TableLog.recordSeq(db, Seq("del1"), 2L)
+      assert(TableLog.commit(db, 1L, 2L, Seq(("a", 3L), ("b", 4L)), Seq(("del1", 2L))))
+      assert(TableLog.manifestSeq(db, 2L) == Seq(("a", 1L), ("b", 1L)))
+      assert(TableLog.deleteSeq(db, 2L) == Seq(("del1", 2L)))
       // snapshot 1 never sees snapshot 2's delete file
-      assert(SnapshotLog.deleteSeq(db, 1L).isEmpty)
+      assert(TableLog.deleteSeq(db, 1L).isEmpty)
       // a stale MOR commit leaves NEITHER data nor delete manifest rows
-      assert(!SnapshotLog.commit(db, 1L, 3L, Seq(("c", 1L)), Seq(("del2", 1L))))
-      assert(SnapshotLog.manifest(db, 3L).isEmpty)
-      assert(SnapshotLog.deleteSeq(db, 3L).isEmpty)
-      assert(SnapshotLog.currentSnapshot(db) == 2L)
+      assert(!TableLog.commit(db, 1L, 3L, Seq(("c", 1L)), Seq(("del2", 1L))))
+      assert(TableLog.manifest(db, 3L).isEmpty)
+      assert(TableLog.deleteSeq(db, 3L).isEmpty)
+      assert(TableLog.currentSnapshot(db) == 2L)
     }
   }
 
   test("branch refs: staged commits never move main; publish is conditional") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      assert(SnapshotLog.commit(db, 0L, 1L, Seq(("a", 1L))))
-      SnapshotLog.createRef(db, "wap", 1L)
+      TableLog.init(db)
+      assert(TableLog.commit(db, 0L, 1L, Seq(("a", 1L))))
+      TableLog.createRef(db, "wap", 1L)
       // two staged commits advance the BRANCH; main never moves
-      assert(SnapshotLog.commit(db, 1L, 2L, Seq(("a", 1L), ("x", 2L)), ref = Some("wap")))
-      assert(SnapshotLog.commit(db, 2L, 3L, Seq(("a", 1L), ("y", 3L)), ref = Some("wap")))
-      assert(SnapshotLog.currentSnapshot(db) == 1L)
-      assert(SnapshotLog.refSnapshot(db, "wap") == 3L)
+      assert(TableLog.commit(db, 1L, 2L, Seq(("a", 1L), ("x", 2L)), ref = Some("wap")))
+      assert(TableLog.commit(db, 2L, 3L, Seq(("a", 1L), ("y", 3L)), ref = Some("wap")))
+      assert(TableLog.currentSnapshot(db) == 1L)
+      assert(TableLog.refSnapshot(db, "wap") == 3L)
       // a stale staged commit rejects without touching either pointer
-      assert(!SnapshotLog.commit(db, 2L, 4L, Seq(("z", 1L)), ref = Some("wap")))
-      assert(SnapshotLog.manifest(db, 4L).isEmpty)
+      assert(!TableLog.commit(db, 2L, 4L, Seq(("z", 1L)), ref = Some("wap")))
+      assert(TableLog.manifest(db, 4L).isEmpty)
       // publish fast-forwards main only from the expected position
-      assert(!SnapshotLog.moveCurrent(db, expected = 2L, to = 3L))
-      assert(SnapshotLog.currentSnapshot(db) == 1L)
-      assert(SnapshotLog.moveCurrent(db, expected = 1L, to = 3L))
-      assert(SnapshotLog.currentSnapshot(db) == 3L)
+      assert(!TableLog.moveCurrent(db, expected = 2L, to = 3L))
+      assert(TableLog.currentSnapshot(db) == 1L)
+      assert(TableLog.moveCurrent(db, expected = 1L, to = 3L))
+      assert(TableLog.currentSnapshot(db) == 3L)
       // re-publishing the superseded stage is rejected
-      assert(!SnapshotLog.moveCurrent(db, expected = 1L, to = 2L))
-      assert(SnapshotLog.currentSnapshot(db) == 3L)
+      assert(!TableLog.moveCurrent(db, expected = 1L, to = 2L))
+      assert(TableLog.currentSnapshot(db) == 3L)
     }
   }
 
   test("cross-spec pruning selects per-spec values and never leaks across specs") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initSpecs(db)
+      TableLog.init(db)
       // generation 1 under spec 1 (k%4), generation 2 under spec 2 (k%8)
-      SnapshotLog.recordSpec(db, Seq(("a0", 1L, 0L), ("a1", 1L, 1L), ("a2", 1L, 2L)))
-      SnapshotLog.recordSpec(db, Seq(("b5", 2L, 5L), ("b1", 2L, 1L)))
-      SnapshotLog.commit(db, 0L, 1L,
+      TableLog.recordSpec(db, Seq(("a0", 1L, 0L), ("a1", 1L, 1L), ("a2", 1L, 2L)))
+      TableLog.recordSpec(db, Seq(("b5", 2L, 5L), ("b1", 2L, 1L)))
+      TableLog.commit(db, 0L, 1L,
         Seq(("a0", 1L), ("a1", 1L), ("a2", 1L), ("b5", 1L), ("b1", 1L)))
       // k%8==5 → spec-2 pval 5 AND spec-1 pval 1 — NOT spec-1 pval 5
       // (which doesn't exist) and NOT spec-2 pval 1 (value collision
       // across specs must not leak)
-      assert(SnapshotLog.pruneAcrossSpecs(db, 1L, Map(1L -> 1L, 2L -> 5L))
+      assert(TableLog.pruneAcrossSpecs(db, 1L, Map(1L -> 1L, 2L -> 5L))
         == Seq("a1", "b5"))
       // a predicate outside every spec's values selects nothing
-      assert(SnapshotLog.pruneAcrossSpecs(db, 1L, Map(1L -> 3L, 2L -> 6L)).isEmpty)
-      assert(SnapshotLog.pruneAcrossSpecs(db, 1L, Map.empty).isEmpty)
+      assert(TableLog.pruneAcrossSpecs(db, 1L, Map(1L -> 3L, 2L -> 6L)).isEmpty)
+      assert(TableLog.pruneAcrossSpecs(db, 1L, Map.empty).isEmpty)
       // pruning is snapshot-scoped: files absent from the manifest are
       // never selected even with matching stats
-      SnapshotLog.recordSpec(db, Seq(("c5", 2L, 5L)))
-      assert(SnapshotLog.pruneAcrossSpecs(db, 1L, Map(2L -> 5L)) == Seq("b5"))
+      TableLog.recordSpec(db, Seq(("c5", 2L, 5L)))
+      assert(TableLog.pruneAcrossSpecs(db, 1L, Map(2L -> 5L)) == Seq("b5"))
     }
   }
 
@@ -205,9 +293,9 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
     // ref and must never move main.
     Seq(None, Some("b")).foreach { ref =>
       withLog { db =>
-        SnapshotLog.initLog(db)
-        assert(SnapshotLog.commit(db, 0L, 1L, Seq(("base", 1L))))
-        ref.foreach(SnapshotLog.createRef(db, _, 1L))
+        TableLog.init(db)
+        assert(TableLog.commit(db, 0L, 1L, Seq(("base", 1L))))
+        ref.foreach(TableLog.createRef(db, _, 1L))
         def extras(i: Int): Seq[(String, Long)] =
           if (ref.isEmpty) Nil else Seq((s"del$i", 1L))
         import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
@@ -218,7 +306,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
             def call(): Boolean = {
               gate.await()
               // each racer proposes its own snapshot id built on parent 1
-              SnapshotLog.commit(db, 1L, 10L + i, Seq((s"race$i", 1L)),
+              TableLog.commit(db, 1L, 10L + i, Seq((s"race$i", 1L)),
                 eqDeletes = extras(i), posDeletes = extras(i),
                 staleMarkers = extras(i).map { case (p, _) => (p, "k") }, ref = ref)
             }
@@ -229,10 +317,10 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
         assert(pool.awaitTermination(60, TimeUnit.SECONDS))
         val wins = results.map(_.get()).count(identity)
         assert(wins == 1, s"expected exactly one winning commit, got $wins")
-        val cur = ref.fold(SnapshotLog.currentSnapshot(db))(SnapshotLog.refSnapshot(db, _))
+        val cur = ref.fold(TableLog.currentSnapshot(db))(TableLog.refSnapshot(db, _))
         assert(cur >= 10L && cur < 14L)
         // a branch commit never moves main
-        if (ref.nonEmpty) assert(SnapshotLog.currentSnapshot(db) == 1L)
+        if (ref.nonEmpty) assert(TableLog.currentSnapshot(db) == 1L)
         def rows(table: String, where: String): Long =
           DuckDbLive.withConnection(db) { c =>
             DuckDbLive.queryRows(c, s"SELECT count(*) FROM $table WHERE $where")
@@ -241,11 +329,11 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
         val deleteTables = Seq("delete_manifests", "position_delete_manifests")
         val nExtras = extras((cur - 10L).toInt).size.toLong
         // the winner's manifests are intact; every loser left zero rows
-        assert(SnapshotLog.manifest(db, cur).size == 1)
+        assert(TableLog.manifest(db, cur).size == 1)
         deleteTables.foreach(t => assert(rows(t, s"snapshot_id = $cur") == nExtras))
         assert(rows("stat_stale", "true") == nExtras)
         (10L until 14L).filter(_ != cur).foreach { l =>
-          assert(SnapshotLog.manifest(db, l).isEmpty, s"loser $l leaked manifest rows")
+          assert(TableLog.manifest(db, l).isEmpty, s"loser $l leaked manifest rows")
           deleteTables.foreach { t =>
             assert(rows(t, s"snapshot_id = $l") == 0L, s"loser $l leaked $t rows")
           }
@@ -258,21 +346,21 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
 
   test("genuine failures rethrow — only MVCC write-write conflicts map to the clean reject") {
     withLog { db =>
-      // missing tables (initLog skipped): a Catalog Error, NOT a
+      // missing tables (init skipped): a Catalog Error, NOT a
       // retryable stale-parent outcome — the old catch-all turned this
       // into `false` and callers would retry a broken log forever
       intercept[Exception] {
-        SnapshotLog.commit(db, 0L, 1L, Seq(("f1", 1L)))
+        TableLog.commit(db, 0L, 1L, Seq(("f1", 1L)))
       }
     }
   }
 
   test("paths are bound as parameters: an apostrophe in a path cannot tear a commit") {
     withLog { db =>
-      SnapshotLog.initLog(db)
+      TableLog.init(db)
       val odd = "/tmp/it's a path/part-00000.parquet"
-      assert(SnapshotLog.commit(db, 0L, 1L, Seq((odd, 3L))))
-      assert(SnapshotLog.manifest(db, 1L) == Seq((odd, 3L)))
+      assert(TableLog.commit(db, 0L, 1L, Seq((odd, 3L))))
+      assert(TableLog.manifest(db, 1L) == Seq((odd, 3L)))
     }
   }
 
@@ -282,14 +370,13 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
     import org.apache.spark.sql.functions._
     withLog { db =>
       val base = tempDir("graft_s50_spec_")
-      SnapshotLog.initLog(db)
-      SnapshotLog.initSchemas(db)
+      TableLog.init(db)
       // schema 1: (1:k, 2:v); schema 2 renames v→w + adds (3:x);
       // schema 3 drops field 3 and adds a NEW (4:x) under the old name
-      SnapshotLog.recordSchema(db, 1L, Seq((1L, "k", "bigint"), (2L, "v", "bigint")))
-      SnapshotLog.recordSchema(db, 2L,
+      TableLog.recordSchema(db, 1L, Seq((1L, "k", "bigint"), (2L, "v", "bigint")))
+      TableLog.recordSchema(db, 2L,
         Seq((1L, "k", "bigint"), (2L, "w", "bigint"), (3L, "x", "bigint")))
-      SnapshotLog.recordSchema(db, 3L,
+      TableLog.recordSchema(db, 3L,
         Seq((1L, "k", "bigint"), (2L, "w", "bigint"), (4L, "x", "bigint")))
       Seq((1L, 10L)).toDF("k", "v").coalesce(1).write.parquet(s"$base/a")
       Seq((2L, 20L, 777L)).toDF("k", "w", "x").coalesce(1).write.parquet(s"$base/b")
@@ -297,11 +384,11 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
       def pf(d: String) = new java.io.File(s"$base/$d").listFiles()
         .filter(_.getName.endsWith(".parquet")).map(f => (f.getAbsolutePath, 1L)).toSeq
       val (fa, fb, fc) = (pf("a"), pf("b"), pf("c"))
-      SnapshotLog.recordFileSchema(db, fa.map(_._1), 1L)
-      SnapshotLog.recordFileSchema(db, fb.map(_._1), 2L)
-      SnapshotLog.recordFileSchema(db, fc.map(_._1), 3L)
-      assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb ++ fc))
-      val got = SnapshotLog.evolvedRead(spark, db, 1L, 3L)
+      TableLog.recordFileSchema(db, fa.map(_._1), 1L)
+      TableLog.recordFileSchema(db, fb.map(_._1), 2L)
+      TableLog.recordFileSchema(db, fc.map(_._1), 3L)
+      assert(TableLog.commit(db, 0L, 1L, fa ++ fb ++ fc))
+      val got = TableLog.evolvedRead(spark, db, 1L, 3L)
         .orderBy("k")
         .collect()
         .map(r => (r.getLong(0), r.getLong(1),
@@ -326,7 +413,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
     import org.apache.spark.sql.functions._
     withLog { db =>
       val base = tempDir("graft_s49_spec_")
-      SnapshotLog.initLog(db)
+      TableLog.init(db)
       val rows = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "cents")
       rows.coalesce(1).write.parquet(s"$base/a")
       rows.coalesce(1).write.parquet(s"$base/b")
@@ -343,9 +430,9 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
       // an equality delete for k=2, committed at the SAME seq as data
       Seq(2L).toDF("k").coalesce(1).write.parquet(s"$base/eq")
       val eq = pf("eq").map { case (p, _) => (p, 1L) }
-      SnapshotLog.recordSeq(db, (fa ++ fb ++ pd ++ eq).map(_._1), 1L)
-      assert(SnapshotLog.commit(db, 0L, 1L, fa ++ fb, eq, pd))
-      val got = SnapshotLog.morReadV2(spark, db, 1L, "k")
+      TableLog.recordSeq(db, (fa ++ fb ++ pd ++ eq).map(_._1), 1L)
+      assert(TableLog.commit(db, 0L, 1L, fa ++ fb, eq, pd))
+      val got = TableLog.morReadV2(spark, db, 1L, "k")
         .groupBy("k").count().orderBy("k")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       // k=1: one of two copies position-deleted (file A only);
@@ -357,38 +444,37 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
 
   test("expiry honors refs: a tagged snapshot survives expire-everything until the tag drops") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("a", 1L), ("b", 2L)))
-      SnapshotLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L), ("c", 3L)))
-      SnapshotLog.commit(db, 2L, 3L, Seq(("d", 6L))) // compaction
-      SnapshotLog.createRef(db, "audit", 1L)
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("a", 1L), ("b", 2L)))
+      TableLog.commit(db, 1L, 2L, Seq(("a", 1L), ("b", 2L), ("c", 3L)))
+      TableLog.commit(db, 2L, 3L, Seq(("d", 6L))) // compaction
+      TableLog.createRef(db, "audit", 1L)
       // tag retains snapshot 1; snapshot 2 expires; files a,b stay live
-      assert(SnapshotLog.expireSnapshots(db, 99L) == Seq(2L))
-      assert(SnapshotLog.manifest(db, 1L) == Seq(("a", 1L), ("b", 2L)))
-      assert(SnapshotLog.liveFiles(db) == Set("a", "b", "d"))
+      assert(TableLog.expireSnapshots(db, 99L) == Seq(2L))
+      assert(TableLog.manifest(db, 1L) == Seq(("a", 1L), ("b", 2L)))
+      assert(TableLog.liveFiles(db) == Set("a", "b", "d"))
       // idempotent while the tag holds
-      assert(SnapshotLog.expireSnapshots(db, 99L).isEmpty)
+      assert(TableLog.expireSnapshots(db, 99L).isEmpty)
       // dropping the tag releases it; only then does the same expiry bite
-      assert(SnapshotLog.dropRef(db, "audit"))
-      assert(!SnapshotLog.dropRef(db, "audit")) // second drop: clean false
-      assert(SnapshotLog.expireSnapshots(db, 99L) == Seq(1L))
-      assert(SnapshotLog.manifest(db, 1L).isEmpty)
-      assert(SnapshotLog.liveFiles(db) == Set("d"))
-      assert(SnapshotLog.currentSnapshot(db) == 3L)
+      assert(TableLog.dropRef(db, "audit"))
+      assert(!TableLog.dropRef(db, "audit")) // second drop: clean false
+      assert(TableLog.expireSnapshots(db, 99L) == Seq(1L))
+      assert(TableLog.manifest(db, 1L).isEmpty)
+      assert(TableLog.liveFiles(db) == Set("d"))
+      assert(TableLog.currentSnapshot(db) == 3L)
     }
   }
 
   test("range pruning keeps exactly the files whose [min,max] OVERLAPS the bounds, endpoints inclusive") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initColStats(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("lo", 4L), ("mid", 4L), ("hi", 4L)))
-      SnapshotLog.recordColStats(
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("lo", 4L), ("mid", 4L), ("hi", 4L)))
+      TableLog.recordColStats(
         db,
         "c0",
         Seq(("lo", 0L, 10L), ("mid", 5L, 15L), ("hi", 20L, 30L)))
       def inRange(snap: Long, lo: Long, hi: Long) =
-        SnapshotLog.pruneByCols(db, snap, Seq(("c0", lo, hi)))
+        TableLog.pruneByCols(db, snap, Seq(("c0", lo, hi)))
       // [12, 22]: "lo" ends at 10 (skipped), "mid" and "hi" overlap
       assert(inRange(1L, 12L, 22L) == Seq("hi", "mid"))
       // touching at a single endpoint is still an overlap (Iceberg's
@@ -400,21 +486,20 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
       assert(inRange(1L, 16L, 19L).isEmpty)
       // stats are per-file, pruning is per-snapshot: a file absent from
       // the snapshot's manifest never resurfaces via its stats row
-      SnapshotLog.commit(db, 1L, 2L, Seq(("lo", 4L)))
+      TableLog.commit(db, 1L, 2L, Seq(("lo", 4L)))
       assert(inRange(2L, 0L, 99L) == Seq("lo"))
     }
   }
 
   test("box pruning requires overlap in BOTH dimensions, endpoints inclusive") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initColStats(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("a", 4L), ("b", 4L), ("c", 4L)))
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("a", 4L), ("b", 4L), ("c", 4L)))
       // a: x[0,3] y[0,3]; b: x[4,7] y[8,11]; c: x[4,7] y[0,3]
-      SnapshotLog.recordColStats(db, "x", Seq(("a", 0L, 3L), ("b", 4L, 7L), ("c", 4L, 7L)))
-      SnapshotLog.recordColStats(db, "y", Seq(("a", 0L, 3L), ("b", 8L, 11L), ("c", 0L, 3L)))
+      TableLog.recordColStats(db, "x", Seq(("a", 0L, 3L), ("b", 4L, 7L), ("c", 4L, 7L)))
+      TableLog.recordColStats(db, "y", Seq(("a", 0L, 3L), ("b", 8L, 11L), ("c", 0L, 3L)))
       def inBox(snap: Long, xlo: Long, xhi: Long, ylo: Long, yhi: Long) =
-        SnapshotLog.pruneByCols(db, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
+        TableLog.pruneByCols(db, snap, Seq(("x", xlo, xhi), ("y", ylo, yhi)))
       // the box hits b only: a fails on x, c fails on y — a file
       // overlapping one dimension but not the other must be pruned
       // (this is the whole point of 2-D stats over 1-D)
@@ -428,49 +513,47 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
       assert(inBox(1L, 0L, 7L, 4L, 7L).isEmpty)
       // pruning is per-snapshot: dropping a file from the manifest
       // hides it regardless of its stats row
-      SnapshotLog.commit(db, 1L, 2L, Seq(("b", 4L)))
+      TableLog.commit(db, 1L, 2L, Seq(("b", 4L)))
       assert(inBox(2L, 0L, 99L, 0L, 99L) == Seq("b"))
     }
   }
 
   test("binpack planning: strictly-below threshold, groups of >= 2, per bucket, per snapshot") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initStats(db)
-      SnapshotLog.commit(
+      TableLog.init(db)
+      TableLog.commit(
         db, 0L, 1L,
         Seq(("s1", 10L), ("s2", 10L), ("s3", 10L), ("big", 100L), ("lone", 10L)))
-      SnapshotLog.recordStats(
+      TableLog.recordStats(
         db,
         Seq(("s1", 0L), ("s2", 0L), ("s3", 1L), ("big", 1L), ("lone", 2L)))
       // threshold 50: s1+s2 group under bucket 0; bucket 1 has only one
       // small file (s3 — big is above threshold) so it does NOT pack
       // (one small file alone gains nothing); bucket 2's lone file
       // likewise stays
-      assert(SnapshotLog.planBinpack(db, 1L, 50L) == Seq((0L, Seq("s1", "s2"))))
+      assert(TableLog.planBinpack(db, 1L, 50L) == Seq((0L, Seq("s1", "s2"))))
       // threshold is strict <: a file AT the threshold is not small
-      assert(SnapshotLog.planBinpack(db, 1L, 10L).isEmpty)
+      assert(TableLog.planBinpack(db, 1L, 10L).isEmpty)
       // the plan is per-snapshot: after compaction the group is gone
-      SnapshotLog.commit(
+      TableLog.commit(
         db, 1L, 2L, Seq(("packed0", 20L), ("s3", 10L), ("big", 100L), ("lone", 10L)))
-      SnapshotLog.recordStats(db, Seq(("packed0", 0L)))
-      assert(SnapshotLog.planBinpack(db, 2L, 50L).isEmpty)
+      TableLog.recordStats(db, Seq(("packed0", 0L)))
+      assert(TableLog.planBinpack(db, 2L, 50L).isEmpty)
     }
   }
 
   test("morReadV2 and evolvedRead fail loudly (not UnsupportedOperationException) on an empty file set") {
     val spark = TestSpark.spark
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.commit(db, 0L, 1L, Seq(("a", 3L)))
-      SnapshotLog.recordSeq(db, Seq("a"), 1L)
+      TableLog.init(db)
+      TableLog.commit(db, 0L, 1L, Seq(("a", 3L)))
+      TableLog.recordSeq(db, Seq("a"), 1L)
       val e = intercept[IllegalArgumentException] {
-        SnapshotLog.morReadV2(spark, db, 1L, "k", onlyFiles = Some(Set("nope")))
+        TableLog.morReadV2(spark, db, 1L, "k", onlyFiles = Some(Set("nope")))
       }
       assert(e.getMessage.contains("no data files"))
-      SnapshotLog.initSchemas(db)
       val e2 = intercept[IllegalArgumentException] {
-        SnapshotLog.evolvedRead(spark, db, snap = 7L, readSchema = 1L)
+        TableLog.evolvedRead(spark, db, snap = 7L, readSchema = 1L)
       }
       assert(e2.getMessage.contains("lists no data files"))
     }
@@ -478,31 +561,30 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
 
   test("stale stat rows: the guarded register read REJECTS a scope with a stale path, accepts after exclusion") {
     withLog { db =>
-      SnapshotLog.initLog(db)
-      SnapshotLog.initColNdv(db)
-      SnapshotLog.recordColNdv(db, Seq(("fA", "cust", 0L, 3L), ("fB", "cust", 0L, 5L)))
+      TableLog.init(db)
+      TableLog.recordColNdv(db, Seq(("fA", "cust", 0L, 3L), ("fB", "cust", 0L, 5L)))
       // fresh everywhere: full scope accepted, per-bucket max merged
-      assert(SnapshotLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "cust") == Seq((0L, 5L)))
+      assert(TableLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "cust") == Seq((0L, 5L)))
       // a delete marks fB's cust rows stale — the full scope must now be
       // rejected BY NAME (merging an undeletable register silently
       // over-counts; loud beats wrong), other columns stay readable
-      SnapshotLog.markStatsStale(db, Seq("fB"), "cust")
-      assert(SnapshotLog.staleIn(db, Seq("fA", "fB"), "cust") == Seq("fB"))
+      TableLog.markStatsStale(db, Seq("fB"), "cust")
+      assert(TableLog.staleIn(db, Seq("fA", "fB"), "cust") == Seq("fB"))
       val e = intercept[IllegalArgumentException] {
-        SnapshotLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "cust")
+        TableLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "cust")
       }
       assert(e.getMessage.contains("stale"))
       assert(e.getMessage.contains("cust"))
       // the fallback path: exclude the stale file, read the rest
-      assert(SnapshotLog.colNdvRegistersFresh(db, Seq("fA"), "cust") == Seq((0L, 3L)))
+      assert(TableLog.colNdvRegistersFresh(db, Seq("fA"), "cust") == Seq((0L, 3L)))
       // staleness is per (path, column): a different column on fB is fresh
-      SnapshotLog.recordColNdv(db, Seq(("fB", "k", 1L, 2L)))
-      assert(SnapshotLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "k") == Seq((1L, 2L)))
+      TableLog.recordColNdv(db, Seq(("fB", "k", 1L, 2L)))
+      assert(TableLog.colNdvRegistersFresh(db, Seq("fA", "fB"), "k") == Seq((1L, 2L)))
     }
   }
 
   test("top1Reliability: certain only when the observed sum beats every file-grain upper bound") {
-    import SnapshotLog.top1Reliability
+    import TableLog.top1Reliability
     // one file, exhaustive top-k (fewer than k rows listed): threshold 0,
     // nothing unseen can hide — reliable
     assert(top1Reliability(Seq(("f1", 10L, 5L), ("f1", 11L, 3L))) == ((10L, 5L, true)))
@@ -536,7 +618,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
   }
 
   test("cmsPointMin: min over depth rows; absent cells read as zero") {
-    import SnapshotLog.cmsPointMin
+    import TableLog.cmsPointMin
     import graft.ops.Hashing
     // cells populated for key 7 on all four rows with different loads —
     // the probe must take the MIN
