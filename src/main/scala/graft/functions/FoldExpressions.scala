@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * FoldParitySpec) and to the DuckDB oracle's list_reduce.
   *
   * Registered as SQL functions (`graft_ema`, `graft_autocorr1`,
-  * `graft_dotf`) via `GraftFunctions.register` /
+  * `graft_dotf`) via `graft.GraftSession.prepare` /
   * `GraftExtensions` (SparkSessionExtensions).
   *
   * Arrays are assumed null-free (ours come from collect_list / parquet

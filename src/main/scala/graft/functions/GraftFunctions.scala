@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, ExpressionInfo, NamedExpression, PythonUDAF, WindowFunctionType}
 import org.apache.spark.sql.catalyst.planning.{PhysicalAggregation, PhysicalWindow}
@@ -9,15 +9,14 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.aggregate.{AggUtils, HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Registration of the engine's native expressions as SQL functions, and
-  * of its planner strategy (`ClusteredAggregate`).
+/** The engine's native expressions as SQL functions, and its planner
+  * strategy (`ClusteredAggregate`).
   *
-  * Two entry points, same function set and strategy:
+  * Two installers, same function set and strategy:
   *   - `GraftExtensions` for `spark.sql.extensions=graft.functions.GraftExtensions`
   *     (the SparkSessionExtensions path — cluster deployments);
-  *   - `GraftFunctions.register(spark)` for sessions the engine doesn't
-  *     build itself (the driver harness creates the SparkSession, so every
-  *     query entry registers idempotently before building its plan).
+  *   - `graft.GraftSession.prepare(spark)` for every session the engine
+  *     runs on, including ones it does not build itself.
   */
 object GraftFunctions {
 
@@ -70,16 +69,6 @@ object GraftFunctions {
       (es: Seq[Expression]) => HashedNgramEmbed(es(0), es(1))
     )
   )
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-    val extra = spark.experimental.extraStrategies
-    if (!extra.contains(ClusteredAggregate)) spark.experimental.extraStrategies = ClusteredAggregate +: extra
-  }
 }
 
 /** Plans a batch aggregate that feeds a window onto the window's exchange.

@@ -67,9 +67,9 @@ object BucketedJoin {
 
   /** Write lineitem/orders bucketed by order key (once per JVM+dir), join
     * co-located, and report (row count, revenue, whether any shuffle
-    * appeared on the join inputs). Broadcast is disabled for the demo so
-    * the plan genuinely exercises the bucket path; the conf is restored
-    * afterwards.
+    * appeared on the join inputs). The join runs on a derived session
+    * with broadcast and AQE off, so the plan genuinely exercises the
+    * bucket path.
     */
   def demo(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -105,32 +105,23 @@ object BucketedJoin {
       }
     )
 
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val joined = spark
-        .table(li)
-        .join(spark.table(ord), col("l_orderkey") === col("o_orderkey"))
-      // inspect the JOIN plan (pre-aggregation): bucketed sides must join
-      // with zero exchanges; the tiny global agg below shuffles by design
-      val shuffles = joined.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
-      val Array(row) = joined
-        .agg(
-          count(lit(1)).as("n_rows"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)"))
-            .cast("double")
-            .as("revenue")
-        )
-        .collect()
-      Seq((row.getLong(0), row.getDouble(1), shuffles.isEmpty))
-        .toDF("n_rows", "revenue", "join_without_shuffle")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      // tables stay registered for reuse (see `staged`) — the warehouse
-      // dirs are temp-dir scoped and die with the JVM's /tmp
-    }
+    val s = graft.GraftSession.derive(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false")
+    val joined = s
+      .table(li)
+      .join(s.table(ord), col("l_orderkey") === col("o_orderkey"))
+    // inspect the JOIN plan (pre-aggregation): bucketed sides must join
+    // with zero exchanges; the tiny global agg below shuffles by design
+    val shuffles = joined.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
+    val Array(row) = joined
+      .agg(
+        count(lit(1)).as("n_rows"),
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)"))
+          .cast("double")
+          .as("revenue")
+      )
+      .collect()
+    Seq((row.getLong(0), row.getDouble(1), shuffles.isEmpty))
+      .toDF("n_rows", "revenue", "join_without_shuffle")
   }
 }

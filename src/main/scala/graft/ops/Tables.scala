@@ -36,14 +36,10 @@ object Tables {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Every query path reads through here and the driver harness builds
-    // its own SparkSession, so this is the engine's central hook: register
-    // the native graft_* functions (idempotent) and pin the session
-    // timezone — every time codec (year()/hour() etc.) and every DuckDB
-    // oracle assumes UTC, and a driver session inheriting a non-UTC JVM
-    // default would silently shift all day/time codes.
-    graft.functions.GraftFunctions.register(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // Sessions built outside the engine (the harness that calls
+    // `SparkEntry`, perfbench, the specs) enter here, so the read
+    // boundary prepares them; on a prepared session this writes nothing.
+    graft.GraftSession.prepare(spark)
     parquet(spark, s"$dir/$name.parquet")
   }
 
@@ -52,10 +48,11 @@ object Tables {
     * regenerations, and every downstream consumer (event-time watermarks,
     * unix_micros, CAST(ts AS BIGINT)) requires TIMESTAMP, not NTZ/raw:
     *   - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; read as
-    *     raw nanos (legacy conf) and truncate to µs — the same ns→µs
-    *     truncation DuckDB applies casting TIMESTAMP_NS to TIMESTAMP, so
-    *     both engines see identical instants. Integer `div` (not FP
-    *     division): epoch-nanos exceed double's 53-bit mantissa.
+    *     raw nanos (`nanosAsLong`, pinned by `GraftSession`) and
+    *     truncate to µs — the same ns→µs truncation DuckDB applies
+    *     casting TIMESTAMP_NS to TIMESTAMP, so both engines see identical
+    *     instants. Integer `div` (not FP division): epoch-nanos exceed
+    *     double's 53-bit mantissa.
     *   - timestamp[us] without UTC adjustment: Spark infers TIMESTAMP_NTZ;
     *     cast to TIMESTAMP under the pinned UTC session timezone, which
     *     reinterprets the same wall-clock instant DuckDB reads — values
@@ -72,10 +69,8 @@ object Tables {
       case _ => df
     }
 
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, dir: String): DataFrame =
     normalizeEvents(table(spark, dir, "events"))
-  }
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "customer")
@@ -92,17 +87,16 @@ object Tables {
     * serialize every md5/shingle-heavy per-row projection onto a single
     * core; at 100 TB the scan already yields thousands of splits and an
     * unconditional repartition would inject a corpus-wide shuffle of the
-    * text/payload column into otherwise map-only plans (round-6 verdict,
-    * "What's wrong" #1). The gate compares the scan's planned partition
-    * count (computed on the driver from file splits — no job runs)
-    * against the session's core count. That bounds the shuffled bytes
-    * because every caller scans PARQUET, a splittable format: fewer
-    * planned splits than cores implies total input ≲ cores ×
+    * text/payload column into otherwise map-only plans. The gate compares
+    * the scan's planned partition count (computed from file splits — no job
+    * runs) against the session's core count. That bounds the shuffled bytes
+    * because every caller scans PARQUET, a splittable format: fewer planned
+    * splits than cores implies total input ≲ cores ×
     * `spark.sql.files.maxPartitionBytes` (128 MB default) — a shuffle of
-    * that size is noise, and the spread buys full-core decode
-    * parallelism. The bound does NOT transfer to unsplittable formats
-    * (gzip JSON, one 100 GB member = one split regardless of size); a
-    * caller adding such a source must gate on scan bytes instead.
+    * that size is noise, and the spread buys full-core decode parallelism.
+    * The bound does NOT transfer to unsplittable formats (gzip JSON, one
+    * 100 GB member = one split regardless of size); a caller adding such a
+    * source must gate on scan bytes instead.
     */
   def spread(df: DataFrame): DataFrame =
     if (df.rdd.getNumPartitions < df.sparkSession.sparkContext.defaultParallelism)
@@ -120,9 +114,8 @@ object Tables {
     * adaptive bucket sizing (VectorOps.adaptivePlanes). The count itself is
     * metadata-cheap (Spark answers parquet count() from row-group footers),
     * but it is still a driver ACTION per invocation; memoizing makes it one
-    * job per table per JVM instead of one per query run (round-5 VERDICT
-    * "What's wrong" #2). Table files are driver-generated and immutable
-    * within a round, so the cache cannot go stale mid-run.
+    * job per table per JVM instead of one per query run. Table files are
+    * generated once and immutable, so the cache cannot go stale mid-run.
     */
   private val countCache = new java.util.concurrent.ConcurrentHashMap[String, Long]()
   def rowCount(spark: SparkSession, dir: String, name: String): Long =

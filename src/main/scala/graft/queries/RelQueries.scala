@@ -3538,8 +3538,8 @@ object RelQueries {
     // from the probe side (est_probe_bytes div 4 — scale-free, so the
     // two dims land on opposite sides of it at EVERY SF: customer is
     // 1/10 of orders, lineitem 4×), and that budget is handed to
-    // Spark's OWN planner as autoBroadcastJoinThreshold (scoped and
-    // restored). The audit is the EXECUTED PLAN SHAPE, structurally:
+    // Spark's OWN planner as autoBroadcastJoinThreshold (on a derived
+    // session). The audit is the EXECUTED PLAN SHAPE, structurally:
     // orders⋈customer must plan a BroadcastHashJoin and zero shuffles;
     // orders⋈lineitem must plan zero broadcasts and shuffle both sides
     // — both counts in-hash, plus decision_ok pinning that the plan
@@ -3553,36 +3553,31 @@ object RelQueries {
       (s, dir) => {
         import s.implicits._
         import graft.ops.BucketedJoin.{countBroadcastHashJoins, countShuffles}
-        val o = Tables.orders(s, dir).select(col("o_custkey").cast("long").as("ck"),
-          col("o_orderkey").cast("long").as("ok"))
-        val c = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("ck"))
-        val l = Tables.lineitem(s, dir).select(col("l_orderkey").cast("long").as("ok"))
-        val (nO, nC, nL) = (o.count(), c.count(), l.count())
+        def rels(ss: SparkSession) = (
+          Tables.orders(ss, dir).select(col("o_custkey").cast("long").as("ck"),
+            col("o_orderkey").cast("long").as("ok")),
+          Tables.customer(ss, dir).select(col("c_custkey").cast("long").as("ck")),
+          Tables.lineitem(ss, dir).select(col("l_orderkey").cast("long").as("ok")))
+        val (nO, nC, nL) = { val (o, c, l) = rels(s); (o.count(), c.count(), l.count()) }
         val budget = nO * 8L / 4L // the size model's broadcast budget
         val (custBytes, lineBytes) = (nC * 8L, nL * 8L)
-        val prevThr = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", budget.toString)
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          val jc = o.join(c, Seq("ck")).select(col("ok"))
-          val jl = o.join(l, Seq("ok")).select(col("ck"))
-          val (bhjC, shC) = (countBroadcastHashJoins(jc), countShuffles(jc))
-          val (bhjL, shL) = (countBroadcastHashJoins(jl), countShuffles(jl))
-          val (censusC, censusL) =
-            (jc.agg(count(lit(1))).head().getLong(0), jl.agg(count(lit(1))).head().getLong(0))
-          Seq((nO, nC, nL, budget, custBytes, lineBytes,
-            censusC, censusL, bhjC, shC, bhjL, shL,
-            bhjC == 1L && shC == 0L && bhjL == 0L && shL == 2L))
-            .toDF("n_orders", "n_customer", "n_lineitem", "budget_bytes",
-              "cust_bytes", "line_bytes", "n_join_cust", "n_join_line",
-              "bhj_cust", "shuffles_cust", "bhj_line", "shuffles_line",
-              "decision_ok")
-            .orderBy("n_orders")
-        } finally {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-          s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        }
+        val (o, c, l) = rels(graft.GraftSession.derive(s,
+          "spark.sql.autoBroadcastJoinThreshold" -> budget.toString,
+          "spark.sql.adaptive.enabled" -> "false"))
+        val jc = o.join(c, Seq("ck")).select(col("ok"))
+        val jl = o.join(l, Seq("ok")).select(col("ck"))
+        val (bhjC, shC) = (countBroadcastHashJoins(jc), countShuffles(jc))
+        val (bhjL, shL) = (countBroadcastHashJoins(jl), countShuffles(jl))
+        val (censusC, censusL) =
+          (jc.agg(count(lit(1))).head().getLong(0), jl.agg(count(lit(1))).head().getLong(0))
+        Seq((nO, nC, nL, budget, custBytes, lineBytes,
+          censusC, censusL, bhjC, shC, bhjL, shL,
+          bhjC == 1L && shC == 0L && bhjL == 0L && shL == 2L))
+          .toDF("n_orders", "n_customer", "n_lineitem", "budget_bytes",
+            "cust_bytes", "line_bytes", "n_join_cust", "n_join_line",
+            "bhj_cust", "shuffles_cust", "bhj_line", "shuffles_line",
+            "decision_ok")
+          .orderBy("n_orders")
       },
       Some("""WITH m AS (SELECT
             (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_orders,
@@ -4093,18 +4088,13 @@ object RelQueries {
             () => probeStatsAll(),
             () => graft.ops.Par.run2(
               () => buildCust(s).count(), () => buildLine(s).count()))
-          // each edge runs in its OWN sub-session (shared SparkContext,
-          // isolated SQL conf): the per-edge broadcast-threshold
-          // enforcement and AQE-off pin stop being shared session state,
-          // so the three independent edges OVERLAP (guide §2.6, r21)
+          // each edge decides, then runs on its OWN derived session with
+          // AQE off and its own broadcast threshold, so the three
+          // independent edges OVERLAP
           def edgeRow(edge: String,
               probeOf: SparkSession => org.apache.spark.sql.DataFrame,
               buildOf: SparkSession => org.apache.spark.sql.DataFrame,
               nB: Long, buildSrc: String) = {
-            val se = s.newSession()
-            se.conf.set("spark.sql.session.timeZone", "UTC")
-            se.conf.set("spark.sql.adaptive.enabled", "false")
-            val (probe, build) = (probeOf(se), buildOf(se))
             // ---- decision inputs: metadata-class statistics (from the
             // fused one-pass probe stats; key = the edge prefix) ----
             val (nP, t1, ndv) = probeStatsByEdge(edge.takeWhile(_ != '_'))
@@ -4123,11 +4113,12 @@ object RelQueries {
             // build side's measured source bytes (projection only ever
             // scales Spark's estimate DOWN from file bytes), so the
             // audited routing can't flip with the codec or SF.
-            se.conf.set(
-              "spark.sql.autoBroadcastJoinThreshold",
-              if (strategy == "broadcast")
-                (parquetBytes(buildSrc) * 4L + 1L).toString
-              else "-1")
+            val se = graft.GraftSession.derive(s,
+              "spark.sql.adaptive.enabled" -> "false",
+              "spark.sql.autoBroadcastJoinThreshold" ->
+                (if (strategy == "broadcast") (parquetBytes(buildSrc) * 4L + 1L).toString
+                else "-1"))
+            val (probe, build) = (probeOf(se), buildOf(se))
             val j = strategy match {
               case "salted" =>
                 Salting.saltedJoinWith(probe, build, col("k"), col("bk"),
@@ -4365,11 +4356,9 @@ object RelQueries {
     // (min(32, ceil(top1 / ceil(n/128))) — 32 at every SF here: the
     // sentinel key is hotter than 32 target-task slices, the
     // executor-width cap binds). Deterministic end to end: the split
-    // is h60(rid) % S, replayed verbatim by the oracle. (The factor-2
-    // leg was dropped and the per-factor subgroup censuses fused into
-    // one exploded pass in r20 — the audit's cost trim, verdict #6;
-    // factor 2 sat between the plain baseline and the recommendation
-    // without informing the model.)
+    // is h60(rid) % S, replayed verbatim by the oracle. Broadcast and
+    // AQE are off on the entry's derived session, so the audited plan
+    // is the plan that runs.
     //
     // Scale shape: the decision inputs are q218's stat-table numbers;
     // ONE exploded map-side-combined (factor, key, salt) grouping
@@ -4378,7 +4367,9 @@ object RelQueries {
     // one streamed join census — nothing materializes.
     Q(
       "q223_salt_factor_audit",
-      (s, dir) => {
+      (outer, dir) => {
+        val s = graft.GraftSession.derive(outer,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false")
         import s.implicits._
         import graft.ops.{BucketedJoin, Hashing, Salting}
         val probe = Tables.orders(s, dir).select(
@@ -4387,74 +4378,63 @@ object RelQueries {
           col("o_orderkey").cast("long").as("rid"))
         val build = Tables.lineitem(s, dir)
           .select(col("l_orderkey").cast("long").as("bk"))
-        val prevThr = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          def census(j: org.apache.spark.sql.DataFrame): (Long, Long) = {
-            val r = j.agg(count(lit(1)), sum(col("k"))).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          val factors = Seq(1, 4, 8, 16)
-          val jPlain = probe.join(build, col("k") === col("bk"))
-          val joins: Map[Int, org.apache.spark.sql.DataFrame] =
-            factors.map { f =>
-              f -> (if (f == 1) jPlain
-                else {
-                  val saltCol =
-                    pmod(Hashing.h60(col("rid").cast("string")), lit(f)).cast("int")
-                  Salting.saltedJoinWith(probe, build, col("k"), col("bk"), saltCol, f)
-                })
-            }.toMap
-          // every factor's straggler metric from ONE exploded
-          // map-side-combined grouping (same h60 % f split values the
-          // per-factor salt columns produce); the factor-1 leg's groups
-          // ARE the per-key counts, so n_probe (Σc at salts=1) and
-          // top1_cnt (max c at salts=1) ride the same job — the two
-          // separate probe scans they used to cost are gone (r20, §2.4).
-          // The four join censuses and the subgroup pass are independent
-          // actions — overlapped (guide §2.6, r21): the salted legs'
-          // straggler tails back-fill each other instead of running
-          // end-to-end.
-          val msThunk: () => Seq[(Long, Long, Long)] = () => probe
-            .select(col("k"), Hashing.h60(col("rid").cast("string")).as("h"))
-            .select(col("k"), col("h"),
-              explode(array(factors.map(f => lit(f.toLong)): _*)).as("salts"))
-            .groupBy(col("salts"), col("k"), pmod(col("h"), col("salts")).as("s"))
-            .agg(count(lit(1)).as("c"))
-            .groupBy("salts").agg(max("c").as("max_sub"), sum("c").as("tot"))
-            .collect() // one row per factor — bounded by |factors|
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-          val acts: Seq[() => AnyRef] =
-            msThunk +: factors.map(f => () => census(joins(f)): AnyRef)
-          val done = graft.ops.Par.run(acts)
-          val msRows = done.head.asInstanceOf[Seq[(Long, Long, Long)]]
-          val censuses: Map[Int, (Long, Long)] = factors.zip(
-            done.tail.map(_.asInstanceOf[(Long, Long)])).toMap
-          val (nPlain, sPlain) = censuses(1)
-          val maxSubs: Map[Long, Long] = msRows.map(r => (r._1, r._2)).toMap
-          val nP = msRows.find(_._1 == 1L).get._3
-          val top1 = maxSubs(1L)
-          val target = math.max(1L, (nP + 127L) / 128L)
-          val rec = math.min(32L, (top1 + target - 1L) / target)
-          factors.map { f =>
-            val (j, (nJ, sJ)) = (joins(f), censuses(f))
-            val gen = BucketedJoin.countGenerates(j)
-            val maxSub = maxSubs(f.toLong)
-            (f.toLong, nP, top1, maxSub,
-              maxSub * f * 100L / top1, nJ,
-              nJ == nPlain && sJ == sPlain, gen,
-              gen == (if (f == 1) 0L else 1L), rec)
-          }
-            .toDF("salts", "n_probe", "top1_cnt", "max_subgroup",
-              "balance_x100", "n_join", "census_ok", "gen_nodes", "plan_ok",
-              "rec_factor")
-            .orderBy("salts")
-        } finally {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-          s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        def census(j: org.apache.spark.sql.DataFrame): (Long, Long) = {
+          val r = j.agg(count(lit(1)), sum(col("k"))).head()
+          (r.getLong(0), r.getLong(1))
         }
+        val factors = Seq(1, 4, 8, 16)
+        val jPlain = probe.join(build, col("k") === col("bk"))
+        val joins: Map[Int, org.apache.spark.sql.DataFrame] =
+          factors.map { f =>
+            f -> (if (f == 1) jPlain
+              else {
+                val saltCol =
+                  pmod(Hashing.h60(col("rid").cast("string")), lit(f)).cast("int")
+                Salting.saltedJoinWith(probe, build, col("k"), col("bk"), saltCol, f)
+              })
+          }.toMap
+        // every factor's straggler metric from ONE exploded
+        // map-side-combined grouping (same h60 % f split values the
+        // per-factor salt columns produce); the factor-1 leg's groups
+        // ARE the per-key counts, so n_probe (Σc at salts=1) and
+        // top1_cnt (max c at salts=1) ride the same job.
+        // The four join censuses and the subgroup pass are independent
+        // actions — overlapped: the salted legs' straggler tails
+        // back-fill each other instead of running end-to-end.
+        val msThunk: () => Seq[(Long, Long, Long)] = () => probe
+          .select(col("k"), Hashing.h60(col("rid").cast("string")).as("h"))
+          .select(col("k"), col("h"),
+            explode(array(factors.map(f => lit(f.toLong)): _*)).as("salts"))
+          .groupBy(col("salts"), col("k"), pmod(col("h"), col("salts")).as("s"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy("salts").agg(max("c").as("max_sub"), sum("c").as("tot"))
+          .collect() // one row per factor — bounded by |factors|
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        val acts: Seq[() => AnyRef] =
+          msThunk +: factors.map(f => () => census(joins(f)): AnyRef)
+        val done = graft.ops.Par.run(acts)
+        val msRows = done.head.asInstanceOf[Seq[(Long, Long, Long)]]
+        val censuses: Map[Int, (Long, Long)] = factors.zip(
+          done.tail.map(_.asInstanceOf[(Long, Long)])).toMap
+        val (nPlain, sPlain) = censuses(1)
+        val maxSubs: Map[Long, Long] = msRows.map(r => (r._1, r._2)).toMap
+        val nP = msRows.find(_._1 == 1L).get._3
+        val top1 = maxSubs(1L)
+        val target = math.max(1L, (nP + 127L) / 128L)
+        val rec = math.min(32L, (top1 + target - 1L) / target)
+        factors.map { f =>
+          val (j, (nJ, sJ)) = (joins(f), censuses(f))
+          val gen = BucketedJoin.countGenerates(j)
+          val maxSub = maxSubs(f.toLong)
+          (f.toLong, nP, top1, maxSub,
+            maxSub * f * 100L / top1, nJ,
+            nJ == nPlain && sJ == sPlain, gen,
+            gen == (if (f == 1) 0L else 1L), rec)
+        }
+          .toDF("salts", "n_probe", "top1_cnt", "max_subgroup",
+            "balance_x100", "n_join", "census_ok", "gen_nodes", "plan_ok",
+            "rec_factor")
+          .orderBy("salts")
       },
       Some {
         import graft.oracle.OracleSql.h60

@@ -93,7 +93,6 @@ object StreamDemos {
         import s.implicits._
         import org.apache.spark.sql.streaming.Trigger
         val base = graft.ops.Scratch.scratchDir("graft_s02_")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // the staged multi-file replay gives one epoch per file — each
         // epoch is a transaction (append + checkpoint), the commit-cadence
         // analog of CommitEveryRows/CHECKPOINT
@@ -274,11 +273,10 @@ object StreamDemos {
     Q(
       "s13_runtime_filter_join",
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.session.timeZone", "UTC")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+        val s = graft.GraftSession.derive(outer,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
         val l = Tables.lineitem(s, dir)
         val o = Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
         val j = l
@@ -452,11 +450,6 @@ object StreamDemos {
     Q(
       "s20_aqe_skew_join",
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.session.timeZone", "UTC")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         // skew detection reads COMPRESSED shuffle bytes (the sf0.001 hot
         // partition is just 640 B — constant columns compress brutally
         // well), so fixed thresholds can't serve every fixture SF; scale
@@ -464,9 +457,13 @@ object StreamDemos {
         // discipline of sizing advisory bytes to data/parallelism, and
         // it bounds the split count at any SF
         val thr = math.max(256L, new java.io.File(s"$dir/events.parquet").length() / 256)
-        s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", thr.toString)
-        s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", thr.toString)
-        s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        val s = graft.GraftSession.derive(outer,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.skewJoin.enabled" -> "true",
+          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> thr.toString,
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> thr.toString,
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
         import s.implicits._
         def keyed() = Tables
           .events(s, dir)

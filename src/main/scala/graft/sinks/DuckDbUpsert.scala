@@ -35,7 +35,6 @@ object DuckDbUpsert {
   def streamUpsertLatest(session: SparkSession, dir: String): DataFrame = {
     import session.implicits._
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val stream = Tables.normalizeEvents(

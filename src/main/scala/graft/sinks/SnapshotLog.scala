@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.GraftSession
 import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -192,7 +193,6 @@ object SnapshotLog {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     val s = graft.streaming.StreamSessions.tuned(spark)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cents = expr("CAST(floor(value * 100) AS BIGINT)").as("cents")
 
     withTempTableDir("graft_s41_") { base =>
@@ -1081,8 +1081,6 @@ object SnapshotLog {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     val s = graft.streaming.StreamSessions.tuned(spark)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
     withTempTableDir("graft_s47_") { base =>
       val dbFile = s"$base/log.duckdb"
       TableLog.init(dbFile)
@@ -2430,7 +2428,6 @@ object SnapshotLog {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     val s = graft.streaming.StreamSessions.tuned(spark)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cents = expr("CAST(floor(value * 100) AS BIGINT)").as("cents")
 
     withTempTableDir("graft_s61_") { base =>
@@ -2882,7 +2879,7 @@ object SnapshotLog {
     *   - the AUDIT, in-hash: the EXECUTED chosen plan's structure
     *     (gen_nodes — the salted path's small-side replication is
     *     exactly one Generate node, the plain path zero; broadcast
-    *     disabled scoped-and-restored so the join genuinely exercises
+    *     disabled on a derived session so the join genuinely exercises
     *     the shuffle path salting exists for), census equality between
     *     the salted and plain variants (salting must never change
     *     results), the load split the salt bought (max per-key group vs
@@ -2915,7 +2912,6 @@ object SnapshotLog {
         col("l_partkey").cast("long").as("pk_unif"),
         (col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("rid"),
         expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").as("cents"))
-    val dim = Tables.part(spark, dir).select(col("p_partkey").cast("long").as("pk"))
     val saltCol = pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int")
 
     withTempTableDir("graft_q218_") { tmp =>
@@ -2979,72 +2975,63 @@ object SnapshotLog {
       val paths = files.map(_._1)
       val man = TableLog.manifest(dbFile, 1L).toMap
       val nRows = files.map(f => man(f._1)).sum
-      val big = Tables.parquet(spark, paths: _*)
 
-      // broadcast off + AQE off, scoped-and-restored (the BucketedJoin /
-      // q216 discipline): the dim stands in for a big⋈big edge at SF
-      // scale — salting is the shuffle-join remedy, so the audited plan
-      // must BE a shuffle join
-      val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        def edgeRow(cn: String) = {
-          // ---- the decision: long-form stat table + manifest ONLY ----
-          val ndv = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, cn))
-          // the reliability bit rides the decision: a FALSE bit means
-          // top1_cnt is a lower bound only (safe for the ≥-threshold
-          // salt rule; unsafe for anything needing the exact argmax)
-          val (t1k, t1c, t1Rel) = TableLog.colTopkMergedTop1Checked(dbFile, paths, cn)
-          val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
-          val salted = skewX100 >= 800L
-          // ---- execution: the chosen physical shape ----
-          def census(j: DataFrame): (Long, Long) = {
-            val r = j.agg(count(lit(1)), sum(col("cents"))).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          val plainJ = big.join(dim, col(cn) === col("pk"))
-          val saltJ = Salting.saltedJoinWith(big, dim, col(cn), col("pk"), saltCol, 8)
-          val chosenJ = if (salted) saltJ else plainJ
-          val gen = BucketedJoin.countGenerates(chosenJ)
-          // the two join censuses and the exact audit are independent
-          // actions — overlapped (guide §2.6, r21). Exact ground truth
-          // stays fused: per-key top-1 and the per-(key, salt) straggler
-          // max both derive from ONE per-(key, salt) aggregation
-          // (Σ over salts = the per-key count; r20, §2.4).
-          val ((nJoin, sumCents), (otherCensus, (exKey, maxGroup, maxSalt))) =
-            graft.ops.Par.run2(
-              () => census(chosenJ),
-              () => graft.ops.Par.run2(
-                () => census(if (salted) plainJ else saltJ),
-                () => {
-                  val perKS = big.groupBy(col(cn).as("k"), saltCol.as("s"))
-                    .agg(count(lit(1)).as("c")).persist()
-                  try {
-                    val ex = perKS.groupBy("k").agg(sum(col("c")).as("c"))
-                      .orderBy(col("c").desc, col("k")).head()
-                    (ex.getLong(0), ex.getLong(1),
-                      perKS.agg(max("c")).head().getLong(0))
-                  } finally { perKS.unpersist(); () }
-                }))
-          val censusMatch = otherCensus == ((nJoin, sumCents))
-          (cn, nRows, ndv, t1k, t1c, t1Rel, skewX100, salted, nJoin, sumCents,
-            censusMatch, gen, maxGroup, maxSalt, exKey,
-            t1k == exKey && t1c == maxGroup, gen == (if (salted) 1L else 0L))
+      // broadcast off + AQE off: the dim stands in for a big⋈big edge at
+      // SF scale — salting is the shuffle-join remedy, so the audited
+      // plan must BE a shuffle join
+      val s = GraftSession.derive(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false")
+      val big = Tables.parquet(s, paths: _*)
+      val dim = Tables.part(s, dir).select(col("p_partkey").cast("long").as("pk"))
+      def edgeRow(cn: String) = {
+        // ---- the decision: long-form stat table + manifest ONLY ----
+        val ndv = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, paths, cn))
+        // the reliability bit rides the decision: a FALSE bit means
+        // top1_cnt is a lower bound only (safe for the ≥-threshold
+        // salt rule; unsafe for anything needing the exact argmax)
+        val (t1k, t1c, t1Rel) = TableLog.colTopkMergedTop1Checked(dbFile, paths, cn)
+        val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
+        val salted = skewX100 >= 800L
+        // ---- execution: the chosen physical shape ----
+        def census(j: DataFrame): (Long, Long) = {
+          val r = j.agg(count(lit(1)), sum(col("cents"))).head()
+          (r.getLong(0), r.getLong(1))
         }
-        // both edges run under the SAME scoped conf (broadcast off, AQE
-        // off) — no per-edge conf difference, so they overlap safely
-        graft.ops.Par.run(Seq(() => edgeRow("pk_skew"), () => edgeRow("pk_unif")))
-          .toDF("edge", "n_rows", "ndv_est", "top1_key", "top1_cnt",
-            "top1_reliable", "skew_x100", "salted", "n_join", "sum_cents",
-            "census_match", "gen_nodes", "max_group", "max_salt_group",
-            "top1_key_exact", "top1_is_exact", "plan_ok")
-          .orderBy("edge")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        val plainJ = big.join(dim, col(cn) === col("pk"))
+        val saltJ = Salting.saltedJoinWith(big, dim, col(cn), col("pk"), saltCol, 8)
+        val chosenJ = if (salted) saltJ else plainJ
+        val gen = BucketedJoin.countGenerates(chosenJ)
+        // the two join censuses and the exact audit are independent
+        // actions — overlapped. Exact ground truth stays fused: per-key
+        // top-1 and the per-(key, salt) straggler max both derive from
+        // ONE per-(key, salt) aggregation (Σ over salts = the per-key
+        // count).
+        val ((nJoin, sumCents), (otherCensus, (exKey, maxGroup, maxSalt))) =
+          graft.ops.Par.run2(
+            () => census(chosenJ),
+            () => graft.ops.Par.run2(
+              () => census(if (salted) plainJ else saltJ),
+              () => {
+                val perKS = big.groupBy(col(cn).as("k"), saltCol.as("s"))
+                  .agg(count(lit(1)).as("c")).persist()
+                try {
+                  val ex = perKS.groupBy("k").agg(sum(col("c")).as("c"))
+                    .orderBy(col("c").desc, col("k")).head()
+                  (ex.getLong(0), ex.getLong(1),
+                    perKS.agg(max("c")).head().getLong(0))
+                } finally { perKS.unpersist(); () }
+              }))
+        val censusMatch = otherCensus == ((nJoin, sumCents))
+        (cn, nRows, ndv, t1k, t1c, t1Rel, skewX100, salted, nJoin, sumCents,
+          censusMatch, gen, maxGroup, maxSalt, exKey,
+          t1k == exKey && t1c == maxGroup, gen == (if (salted) 1L else 0L))
       }
+      graft.ops.Par.run(Seq(() => edgeRow("pk_skew"), () => edgeRow("pk_unif")))
+        .toDF("edge", "n_rows", "ndv_est", "top1_key", "top1_cnt",
+          "top1_reliable", "skew_x100", "salted", "n_join", "sum_cents",
+          "census_match", "gen_nodes", "max_group", "max_salt_group",
+          "top1_key_exact", "top1_is_exact", "plan_ok")
+        .orderBy("edge")
     }
   }
 
@@ -3330,21 +3317,12 @@ object SnapshotLog {
       val (pO, pC, pL) = (fO.map(_._1), fC.map(_._1), fL.map(_._1))
 
       locally {
-        // Each edge runs in its OWN sub-session (shared SparkContext,
-        // isolated SQL conf): the per-edge broadcast-threshold
-        // enforcement and the AQE-off plan pin stop being a shared
-        // mutable session conf, so the four independent
-        // decision+execution edges can OVERLAP (guide §2.6, r21) —
-        // previously they ran end-to-end on one session. Plans are
-        // unchanged: same files, same conf values, per session.
+        // Each edge decides, then runs on its OWN derived session with
+        // AQE off and its own broadcast threshold, so the four
+        // independent decision+execution edges can OVERLAP.
         def edgeRow(edge: String, probeKey: String,
             buildPaths: Seq[String], buildKey: String,
             buildFiles: Seq[(String, Long)]) = {
-          val se = spark.newSession()
-          se.conf.set("spark.sql.session.timeZone", "UTC")
-          se.conf.set("spark.sql.adaptive.enabled", "false")
-          val ordersDf = Tables.parquet(se, pO: _*)
-          val build = Tables.parquet(se, buildPaths: _*)
           // ---- the DECISION: log metadata only, no data touched ----
           val (nP, nB) = (nRows(fO), nRows(buildFiles))
           val (budget, buildBytes) = (nP * 8L / 4L, nB * 8L)
@@ -3379,11 +3357,14 @@ object SnapshotLog {
           // threshold against on-disk file statistics, and projection
           // only ever scales its estimate down from file bytes, so
           // 4·bytes + 1 always clears it regardless of codec or SF.
-          se.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold",
-            if (strategy == "broadcast")
-              (buildPaths.map(p => new java.io.File(p).length()).sum * 4L + 1L).toString
-            else "-1")
+          val se = GraftSession.derive(spark,
+            "spark.sql.adaptive.enabled" -> "false",
+            "spark.sql.autoBroadcastJoinThreshold" ->
+              (if (strategy == "broadcast")
+                (buildPaths.map(p => new java.io.File(p).length()).sum * 4L + 1L).toString
+              else "-1"))
+          val ordersDf = Tables.parquet(se, pO: _*)
+          val build = Tables.parquet(se, buildPaths: _*)
           val j = strategy match {
             case "salted" =>
               Salting.saltedJoinWith(ordersDf, build,
@@ -3574,64 +3555,57 @@ object SnapshotLog {
       require(TableLog.commit(dbB, 0L, 1L, fP ++ fB), "q225 log B commit rejected")
 
       val (pP, pB) = (fP.map(_._1), fB.map(_._1))
-      val probeDf = Tables.parquet(spark, pP: _*)
-      val buildDf = Tables.parquet(spark, pB: _*)
-      val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        // the two-column join J — executed ONCE as the exact audit both
-        // edges compare their estimates against
-        def jDf = probeDf.join(
-          buildDf,
-          col("k_cust") === col("bk_cust") && col("k_seg") === col("bk_seg"))
-        val exactJ = jDf.agg(count(lit(1))).head().getLong(0)
+      val s = GraftSession.derive(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false")
+      val probeDf = Tables.parquet(s, pP: _*)
+      val buildDf = Tables.parquet(s, pB: _*)
+      // the two-column join J — executed ONCE as the exact audit both
+      // edges compare their estimates against
+      def jDf = probeDf.join(
+        buildDf,
+        col("k_cust") === col("bk_cust") && col("k_seg") === col("bk_seg"))
+      val exactJ = jDf.agg(count(lit(1))).head().getLong(0)
 
-        def edgeRow(edge: String, dbFile: String) = {
-          // ---- the DECISION: log metadata only, no data touched ----
-          val man = TableLog.manifest(dbFile, 1L).toMap
-          val nP = fP.map(f => man(f._1)).sum
-          val nB = fB.map(f => man(f._1)).sum
-          val ndvCust = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pP, "k_cust"))
-          val ndvSeg = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pP, "k_seg"))
-          val (pairP, rowsP) = TableLog.pairNdvOrProduct(
-            dbFile, pP, "k_cust|k_seg", "k_cust", "k_seg", nP)
-          val (pairB, rowsB) = TableLog.pairNdvOrProduct(
-            dbFile, pB, "bk_cust|bk_seg", "bk_cust", "bk_seg", nB)
-          val used = if (rowsP > 0L) "pair" else "product"
-          val estJ = (BigInt(nP) * BigInt(nB) /
-            BigInt(math.max(math.max(pairP, pairB), 1L))).toLong
-          val (estBytes, budget) = (estJ * 8L, nP * 8L / 2L)
-          val decision = if (estBytes <= budget) "broadcast" else "shuffle"
-          // ---- execution: the second join J is the build side of ----
-          val probe2 = probeDf.select(col("k_cust").as("p2k"), col("rid"))
-          val j2 =
-            if (decision == "broadcast")
-              probe2.join(broadcast(jDf), col("p2k") === col("k_cust"))
-            else probe2.join(jDf, col("p2k") === col("k_cust"))
-          val (bhj, sh) = (BucketedJoin.countBroadcastHashJoins(j2),
-            BucketedJoin.countShuffles(j2))
-          val r2 = j2.agg(count(lit(1)), sum(col("p2k"))).head()
-          val errBp = (BigInt(estJ - exactJ) * 10000 / BigInt(exactJ)).toLong
-          (edge, used, rowsP, rowsB, nP, nB, ndvCust, ndvSeg, pairP, pairB,
-            estJ, exactJ, errBp, budget, estBytes, decision,
-            r2.getLong(0), r2.getLong(1), bhj, sh,
-            bhj == (if (decision == "broadcast") 1L else 0L), true)
-        }
-        Seq(
-          edgeRow("e1_pair_stats", dbA),
-          edgeRow("e2_no_pair_stats", dbB))
-          .toDF("edge", "used", "pair_rows_probe", "pair_rows_build",
-            "n_probe", "n_build", "ndv_cust", "ndv_seg", "pair_ndv_probe",
-            "pair_ndv_build", "est_join", "exact_join", "err_bp",
-            "budget_bytes", "est_bytes", "decision", "n_second",
-            "sum_second", "bhj", "shuffles", "plan_ok", "live_log")
-          .orderBy("edge")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      def edgeRow(edge: String, dbFile: String) = {
+        // ---- the DECISION: log metadata only, no data touched ----
+        val man = TableLog.manifest(dbFile, 1L).toMap
+        val nP = fP.map(f => man(f._1)).sum
+        val nB = fB.map(f => man(f._1)).sum
+        val ndvCust = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pP, "k_cust"))
+        val ndvSeg = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pP, "k_seg"))
+        val (pairP, rowsP) = TableLog.pairNdvOrProduct(
+          dbFile, pP, "k_cust|k_seg", "k_cust", "k_seg", nP)
+        val (pairB, rowsB) = TableLog.pairNdvOrProduct(
+          dbFile, pB, "bk_cust|bk_seg", "bk_cust", "bk_seg", nB)
+        val used = if (rowsP > 0L) "pair" else "product"
+        val estJ = (BigInt(nP) * BigInt(nB) /
+          BigInt(math.max(math.max(pairP, pairB), 1L))).toLong
+        val (estBytes, budget) = (estJ * 8L, nP * 8L / 2L)
+        val decision = if (estBytes <= budget) "broadcast" else "shuffle"
+        // ---- execution: the second join J is the build side of ----
+        val probe2 = probeDf.select(col("k_cust").as("p2k"), col("rid"))
+        val j2 =
+          if (decision == "broadcast")
+            probe2.join(broadcast(jDf), col("p2k") === col("k_cust"))
+          else probe2.join(jDf, col("p2k") === col("k_cust"))
+        val (bhj, sh) = (BucketedJoin.countBroadcastHashJoins(j2),
+          BucketedJoin.countShuffles(j2))
+        val r2 = j2.agg(count(lit(1)), sum(col("p2k"))).head()
+        val errBp = (BigInt(estJ - exactJ) * 10000 / BigInt(exactJ)).toLong
+        (edge, used, rowsP, rowsB, nP, nB, ndvCust, ndvSeg, pairP, pairB,
+          estJ, exactJ, errBp, budget, estBytes, decision,
+          r2.getLong(0), r2.getLong(1), bhj, sh,
+          bhj == (if (decision == "broadcast") 1L else 0L), true)
       }
+      Seq(
+        edgeRow("e1_pair_stats", dbA),
+        edgeRow("e2_no_pair_stats", dbB))
+        .toDF("edge", "used", "pair_rows_probe", "pair_rows_build",
+          "n_probe", "n_build", "ndv_cust", "ndv_seg", "pair_ndv_probe",
+          "pair_ndv_build", "est_join", "exact_join", "err_bp",
+          "budget_bytes", "est_bytes", "decision", "n_second",
+          "sum_second", "bhj", "shuffles", "plan_ok", "live_log")
+        .orderBy("edge")
     }
   }
 
@@ -3792,73 +3766,66 @@ object SnapshotLog {
       val (pB, pP) = (fB.map(_._1), fP.map(_._1))
       val man = TableLog.manifest(dbFile, 1L).toMap
       val (nB, nP) = (pB.map(man).sum, pP.map(man).sum)
-      val big = Tables.parquet(spark, pB: _*)
-      val probe = Tables.parquet(spark, pP: _*)
 
-      val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      try {
-        // broadcast off + AQE off, scoped-and-restored: the split's one
-        // BroadcastHashJoin must come from ITS OWN broadcast() hint,
-        // and the audited remainder must BE a shuffle SMJ
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        def edgeRow(cn: String) = {
-          // ---- the decision: stat tables + manifest counts ONLY ----
-          val ndvB = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pB, cn))
-          val hot = TableLog.colTopkMerged(dbFile, pB, cn)
-            .filter { case (_, c) => BigInt(c) * 100 * BigInt(ndvB) / BigInt(nB) >= 800 }
-            .map(_._1).sorted
-          val (t1k, t1c) = TableLog.colTopkMergedTop1(dbFile, pB, cn)
-          val skewX100 = (BigInt(t1c) * 100 * BigInt(ndvB) / BigInt(nB)).toLong
-          val cmsP = TableLog.colCmsMerged(dbFile, pP, "k")
-          val hotEst = hot.map(TableLog.cmsPointMin(cmsP, _)).sum
-          val (estBytes, budget) = (hotEst * 8L, nP * 8L / 2L)
-          val strategy =
-            if (hot.isEmpty) "shuffle"
-            else if (estBytes <= budget) "split"
-            else "salted"
-          // ---- execution: the chosen physical shape ----
-          def census(j: DataFrame): (Long, Long) = {
-            val r = j.agg(count(lit(1)), sum(col("cents"))).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          def plainJ = probe.join(big, col("k") === col(cn))
-          def splitJ = {
-            val hotSet = hot
-            val jHot = big.filter(col(cn).isin(hotSet: _*))
-              .join(broadcast(probe.filter(col("k").isin(hotSet: _*))),
-                col("k") === col(cn))
-              .select(col("k"), col(cn), col("cents"))
-            val jRest = probe.filter(!col("k").isin(hotSet: _*))
-              .join(big.filter(!col(cn).isin(hotSet: _*)), col("k") === col(cn))
-              .select(col("k"), col(cn), col("cents"))
-            jHot.unionByName(jRest)
-          }
-          val chosen = if (strategy == "split") splitJ else plainJ
-          val (bhj, smj) = (BucketedJoin.countBroadcastHashJoins(chosen),
-            BucketedJoin.countSortMergeJoins(chosen))
-          val (nJoin, sumCents) = census(chosen)
-          val censusMatch =
-            census(if (strategy == "split") plainJ else splitJ) ==
-              ((nJoin, sumCents))
-          val expected = if (strategy == "split") (1L, 1L) else (0L, 1L)
-          (cn, strategy, nP, nB, ndvB, t1k, t1c, skewX100,
-            hot.size.toLong, hotEst, estBytes, budget,
-            nJoin, sumCents, censusMatch, bhj, smj,
-            (bhj, smj) == expected, true)
+      // broadcast off + AQE off: the split's one BroadcastHashJoin must
+      // come from ITS OWN broadcast() hint, and the audited remainder
+      // must BE a shuffle SMJ
+      val s = GraftSession.derive(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false")
+      val big = Tables.parquet(s, pB: _*)
+      val probe = Tables.parquet(s, pP: _*)
+      def edgeRow(cn: String) = {
+        // ---- the decision: stat tables + manifest counts ONLY ----
+        val ndvB = Hll.estimateInt(TableLog.colNdvRegisters(dbFile, pB, cn))
+        val hot = TableLog.colTopkMerged(dbFile, pB, cn)
+          .filter { case (_, c) => BigInt(c) * 100 * BigInt(ndvB) / BigInt(nB) >= 800 }
+          .map(_._1).sorted
+        val (t1k, t1c) = TableLog.colTopkMergedTop1(dbFile, pB, cn)
+        val skewX100 = (BigInt(t1c) * 100 * BigInt(ndvB) / BigInt(nB)).toLong
+        val cmsP = TableLog.colCmsMerged(dbFile, pP, "k")
+        val hotEst = hot.map(TableLog.cmsPointMin(cmsP, _)).sum
+        val (estBytes, budget) = (hotEst * 8L, nP * 8L / 2L)
+        val strategy =
+          if (hot.isEmpty) "shuffle"
+          else if (estBytes <= budget) "split"
+          else "salted"
+        // ---- execution: the chosen physical shape ----
+        def census(j: DataFrame): (Long, Long) = {
+          val r = j.agg(count(lit(1)), sum(col("cents"))).head()
+          (r.getLong(0), r.getLong(1))
         }
-        Seq(edgeRow("bk_skew"), edgeRow("bk_flat"))
-          .toDF("edge", "strategy", "n_probe", "n_build", "ndv_b",
-            "top1_key", "top1_cnt", "skew_x100", "n_hot_keys",
-            "hot_probe_est", "est_bytes", "budget_bytes",
-            "n_join", "sum_cents", "census_match", "bhj", "smj",
-            "plan_ok", "live_log")
-          .orderBy("edge")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        def plainJ = probe.join(big, col("k") === col(cn))
+        def splitJ = {
+          val hotSet = hot
+          val jHot = big.filter(col(cn).isin(hotSet: _*))
+            .join(broadcast(probe.filter(col("k").isin(hotSet: _*))),
+              col("k") === col(cn))
+            .select(col("k"), col(cn), col("cents"))
+          val jRest = probe.filter(!col("k").isin(hotSet: _*))
+            .join(big.filter(!col(cn).isin(hotSet: _*)), col("k") === col(cn))
+            .select(col("k"), col(cn), col("cents"))
+          jHot.unionByName(jRest)
+        }
+        val chosen = if (strategy == "split") splitJ else plainJ
+        val (bhj, smj) = (BucketedJoin.countBroadcastHashJoins(chosen),
+          BucketedJoin.countSortMergeJoins(chosen))
+        val (nJoin, sumCents) = census(chosen)
+        val censusMatch =
+          census(if (strategy == "split") plainJ else splitJ) ==
+            ((nJoin, sumCents))
+        val expected = if (strategy == "split") (1L, 1L) else (0L, 1L)
+        (cn, strategy, nP, nB, ndvB, t1k, t1c, skewX100,
+          hot.size.toLong, hotEst, estBytes, budget,
+          nJoin, sumCents, censusMatch, bhj, smj,
+          (bhj, smj) == expected, true)
       }
+      Seq(edgeRow("bk_skew"), edgeRow("bk_flat"))
+        .toDF("edge", "strategy", "n_probe", "n_build", "ndv_b",
+          "top1_key", "top1_cnt", "skew_x100", "n_hot_keys",
+          "hot_probe_est", "est_bytes", "budget_bytes",
+          "n_join", "sum_cents", "census_match", "bhj", "smj",
+          "plan_ok", "live_log")
+        .orderBy("edge")
     }
   }
 
@@ -3959,25 +3926,22 @@ object SnapshotLog {
       val c2 = TableLog.commit(
         dbFile, 1L, 2L, files1.map(_.entry) ++ files2)
 
+      // the edge stands in for big⋈big: the audited plan must be the
+      // shuffle-join family salting remedies (q218's discipline)
+      val s = GraftSession.derive(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false")
       // the dim is probed by FOUR join censuses below (plain + salted at
       // two snapshots) — persist it so the distinct is computed once,
       // not once per census (the Generate-count audit is unaffected:
       // the salted explode sits ABOVE the dim subtree either way)
-      val dim = base.select(col("k").as("dk")).distinct().persist()
-      val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      val dim = Tables.orders(s, dir).select(col("o_orderkey").cast("long").as("dk"))
+        .distinct().persist()
       try {
-        // the edge stands in for big⋈big: the audited plan must be the
-        // shuffle-join family salting remedies (q218's discipline)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-
         // one decision per snapshot, from the persisted stats only;
         // executed, audited, RECORDED. The two snapshots' decision+audit
         // legs are independent (decisionRows orders by snapshot_id, so
         // insertion order is immaterial), and within each the chosen and
-        // foil censuses are independent — all overlapped (guide §2.6,
-        // r21); both run under the SAME scoped conf values.
+        // foil censuses are independent — all overlapped.
         graft.ops.Par.run(Seq(1L, 2L).map(snap => () => {
           val man = TableLog.manifest(dbFile, snap)
           val paths = man.map(_._1)
@@ -3986,7 +3950,7 @@ object SnapshotLog {
           val (t1k, t1c) = TableLog.colTopkMergedTop1(dbFile, paths, "k")
           val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
           val strategy = if (skewX100 >= 800L) "salted" else "shuffle"
-          val fact = Tables.parquet(spark, paths: _*)
+          val fact = Tables.parquet(s, paths: _*)
           def census(j: DataFrame): (Long, Long) = {
             val r = j.agg(count(lit(1)), sum(col("cents"))).head()
             (r.getLong(0), r.getLong(1))
@@ -4004,11 +3968,7 @@ object SnapshotLog {
           TableLog.recordDecision(dbFile, snap, "fact_dim_k", nRows, ndv, t1k, t1c,
             skewX100, strategy, auditOk)
         }))
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        dim.unpersist()
-      }
+      } finally { dim.unpersist(); () }
 
       // the REPLAY: history read back from the persisted rows alone
       val hist = TableLog.decisionRows(dbFile, "fact_dim_k")

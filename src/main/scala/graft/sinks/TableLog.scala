@@ -77,6 +77,12 @@ object TableLog {
   private val ManifestTables =
     Seq("manifests", "delete_manifests", "position_delete_manifests")
 
+  /** The tables keyed by file path: a file's sequence number, stats,
+    * spec, schema, column sketches and stale markers.
+    */
+  private val FileTables = Seq("file_seq", "file_stats", "file_spec", "file_schema",
+    "col_stats", "col_ndv", "col_topk", "col_cms", "stat_stale")
+
   /** Insert log rows via PreparedStatement inside the caller's
     * transaction — paths are DATA, never spliced into SQL text (an
     * apostrophe in a path must not be able to tear the layer whose
@@ -261,8 +267,8 @@ object TableLog {
           "CREATE TABLE bucket_specs(snapshot_id BIGINT NOT NULL, n_buckets BIGINT NOT NULL)",
           """CREATE TABLE manifest_groups(snapshot_id BIGINT NOT NULL, group_id BIGINT NOT NULL,
             |min_b BIGINT NOT NULL, max_b BIGINT NOT NULL, n_entries BIGINT NOT NULL)""".stripMargin,
-          """CREATE TABLE group_entries(group_id BIGINT NOT NULL, path VARCHAR NOT NULL,
-            |bucket BIGINT NOT NULL)""".stripMargin,
+          """CREATE TABLE group_entries(snapshot_id BIGINT NOT NULL, group_id BIGINT NOT NULL,
+            |path VARCHAR NOT NULL, bucket BIGINT NOT NULL)""".stripMargin,
           s"CREATE TABLE col_ndv($statKey, bucket BIGINT NOT NULL, mr BIGINT NOT NULL)",
           s"CREATE TABLE col_topk($statKey, key_val BIGINT NOT NULL, cnt BIGINT NOT NULL)",
           s"""CREATE TABLE col_cms($statKey, row_i BIGINT NOT NULL, col_j BIGINT NOT NULL,
@@ -371,7 +377,10 @@ object TableLog {
     * equality-delete, position-delete) in ONE transaction. Iceberg's
     * `expire_snapshots` shape — after this, those historical states are
     * no longer time-travelable and any file referenced ONLY by them
-    * becomes garbage. Returns the expired ids (ascending).
+    * becomes garbage, so the same transaction deletes that file's rows
+    * in every [[FileTables]] table. A file no snapshot ever listed (staged,
+    * not yet committed) keeps its rows. Returns the expired ids
+    * (ascending).
     */
   private[graft] def expireSnapshots(dbFile: String, olderThan: Long): Seq[Long] =
     DuckDbLive.withConnection(dbFile) { c =>
@@ -385,11 +394,19 @@ object TableLog {
                AND snapshot_id NOT IN (SELECT snapshot_id FROM refs)
                ORDER BY snapshot_id""")
           .map(_.head.asInstanceOf[Number].longValue)
-        val st = c.createStatement()
-        try ids.foreach { id =>
-          (ManifestTables :+ "snapshots").foreach(t =>
-            st.executeUpdate(s"DELETE FROM $t WHERE snapshot_id = $id"))
-        } finally st.close()
+        if (ids.nonEmpty) {
+          val expired = ids.mkString(", ")
+          def listed(pred: String) =
+            ManifestTables.map(t => s"SELECT path FROM $t WHERE snapshot_id $pred").mkString(" UNION ")
+          val garbage = s"""SELECT path FROM (${listed(s"IN ($expired)")})
+                            WHERE path NOT IN (${listed(s"NOT IN ($expired)")})"""
+          val st = c.createStatement()
+          try {
+            FileTables.foreach(t => st.executeUpdate(s"DELETE FROM $t WHERE path IN ($garbage)"))
+            (ManifestTables :+ "snapshots").foreach(t =>
+              st.executeUpdate(s"DELETE FROM $t WHERE snapshot_id IN ($expired)"))
+          } finally st.close()
+        }
         ids
       }
     }
@@ -774,11 +791,12 @@ object TableLog {
         s"""INSERT INTO manifest_groups VALUES ($snapshotId, $groupId,
            ${entries.map(_._2).min}, ${entries.map(_._2).max}, ${entries.size})""")
       finally st.close()
-      DuckDbLive.insertRows(c, "INSERT INTO group_entries VALUES (?, ?, ?)", entries) {
+      DuckDbLive.insertRows(c, "INSERT INTO group_entries VALUES (?, ?, ?, ?)", entries) {
         (ps, o, r) =>
-          ps.setLong(o + 1, groupId)
-          ps.setString(o + 2, r._1)
-          ps.setLong(o + 3, r._2)
+          ps.setLong(o + 1, snapshotId)
+          ps.setLong(o + 2, groupId)
+          ps.setString(o + 3, r._1)
+          ps.setLong(o + 4, r._2)
       }
     }
 
@@ -808,7 +826,8 @@ object TableLog {
       val entries = DuckDbLive.queryRows(
         c,
         s"""SELECT path, bucket FROM group_entries
-           WHERE group_id IN (${gids.mkString(", ")}) ORDER BY path""")
+           WHERE snapshot_id = $snapshotId AND group_id IN (${gids.mkString(", ")})
+           ORDER BY path""")
         .map(r => (r(0).toString, r(1).asInstanceOf[Number].longValue))
       (gids.size.toLong, entries.size.toLong,
         entries.collect { case (p, b) if b >= lo && b <= hi => p })

@@ -58,7 +58,6 @@ object Recovery {
 
   def checkpointRecoveryCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val staged = stageGenerations(spark, dir)
     // per-call scratch: each invocation runs the full stop/restart
     // lifecycle from a fresh checkpoint (JVM-lifetime, reclaimed on exit)

@@ -161,7 +161,7 @@ class DailyFinalizeProcessor extends StatefulProcessor[Long, S25Ev, S25Out] {
   * counter beside a MapState day registry, each its own column family in
   * the store) instead of one monolithic case-class blob rewritten per
   * row. Requires the RocksDB state-store provider (column families),
-  * set on the isolated sibling session only.
+  * set on the derived streaming session only.
   *
   * The staged three-batch replay (Watermarks.stageBatches) drives the
   * semantics the oracle pins per user: `n_events_final` INCLUDES the
@@ -174,6 +174,12 @@ class DailyFinalizeProcessor extends StatefulProcessor[Long, S25Ev, S25Out] {
   */
 object StateV2 {
 
+  /** The state-store provider with column families, for the derived
+    * streaming session only.
+    */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** s25's observed state-store row counts (peak across batches / final
     * batch), captured from the query's progress metrics so a spec can
     * ASSERT the boundedness + eviction claims instead of trusting the
@@ -184,12 +190,7 @@ object StateV2 {
   val s25FinalStateRows = new java.util.concurrent.atomic.AtomicLong(-1L)
 
   def transformWithStateCounts(session: SparkSession, dir: String): DataFrame = {
-    val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
+    val spark = StreamSessions.tuned(session, RocksDb)
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     import spark.implicits._
@@ -242,12 +243,7 @@ object StateV2 {
     * proves timer-driven finalize ≡ window+watermark finalize.
     */
   def timerFinalizedDailyCounts(session: SparkSession, dir: String): DataFrame = {
-    val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
+    val spark = StreamSessions.tuned(session, RocksDb)
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     import spark.implicits._
@@ -303,12 +299,7 @@ object StateV2 {
     * the first streamed batch.
     */
   def bootstrappedCounts(session: SparkSession, dir: String): DataFrame = {
-    val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
+    val spark = StreamSessions.tuned(session, RocksDb)
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     import spark.implicits._

@@ -26,7 +26,6 @@ object StreamBars {
     */
   def runDayBars(session: SparkSession, eventsPath: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.parquet(spark, eventsPath).schema
     // A glob path: FileStreamSource force-sets basePath to the literal path
     // when it is NOT a glob, and then rejects it for not being a directory.

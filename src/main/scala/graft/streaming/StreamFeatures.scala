@@ -188,7 +188,6 @@ object StreamFeatures {
   ): DataFrame = {
     val spark = StreamSessions.tuned(session)
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.parquet(spark, eventsPath).schema
     val baseDir = java.nio.file.Paths.get(eventsPath).getParent.toString
     val reader = spark.readStream.schema(schema).option("basePath", baseDir)

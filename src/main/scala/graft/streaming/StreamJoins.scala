@@ -43,7 +43,6 @@ object StreamJoins {
     */
   def alertEnrichment(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     def src(): DataFrame = Tables.normalizeEvents(
@@ -126,7 +125,6 @@ object StreamJoins {
     */
   def alertOuterEnrichment(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     def src(): DataFrame = Tables.normalizeEvents(
@@ -207,7 +205,6 @@ object StreamJoins {
     */
   def alertFullOuterEnrichment(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     def src(): DataFrame = Tables.normalizeEvents(

@@ -15,27 +15,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StreamSessions {
 
-  /** A sibling session (shared SparkContext, isolated SQL conf) with
-    * streaming-appropriate shuffle/state partitioning.
-    *
-    * `newSession()` inherits only SparkConf-level settings, silently
-    * dropping runtime `conf.set` values and session-registered functions —
-    * so the invariants every graft query depends on are re-pinned here:
-    * UTC session timezone (TimeCodec's dayInt/timeInt use year()/hour(),
-    * which read the session timezone) and the graft_* function registry.
-    * The partition count never RAISES above the parent's: a derived
-    * session exists to downsize state-store parallelism, not to add
-    * commit overhead on small runs.
+  private val Partitions = 8
+
+  /** A derived session (see `graft.GraftSession.derive`) with
+    * streaming-appropriate shuffle/state partitioning, plus `confs`. The
+    * partition count never RAISES above the parent's: a derived session
+    * exists to downsize state-store parallelism, not to add commit
+    * overhead on small runs.
     */
-  def tuned(spark: SparkSession, partitions: Int = 8): SparkSession = {
-    val ns = spark.newSession()
-    val parentParts =
-      try spark.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => partitions }
-    ns.conf.set("spark.sql.shuffle.partitions", math.min(partitions, parentParts).toString)
-    ns.conf.set("spark.sql.session.timeZone", "UTC")
-    graft.functions.GraftFunctions.register(ns)
-    ns
+  def tuned(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val parentParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    graft.GraftSession.derive(spark,
+      ("spark.sql.shuffle.partitions" -> math.min(Partitions, parentParts).toString) +: confs: _*)
   }
 
   /** Settle a streaming demo's FINAL result driver-locally and release the

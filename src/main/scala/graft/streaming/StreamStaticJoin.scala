@@ -36,7 +36,6 @@ object StreamStaticJoin {
     */
   def segmentEnrichment(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = Watermarks.stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val facts = Tables.normalizeEvents(

@@ -71,7 +71,6 @@ object Watermarks {
     */
   def streamDedupCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val deduped = Tables
@@ -157,7 +156,6 @@ object Watermarks {
     */
   def streamDedupBoundedCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageDedupBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val deduped = Tables
@@ -261,7 +259,6 @@ object Watermarks {
     */
   def lateDataCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val counts = Tables
@@ -307,7 +304,6 @@ object Watermarks {
     */
   def sessionWindowCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val sessions = Tables
@@ -358,7 +354,6 @@ object Watermarks {
     */
   def chainedDedupDailyCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val counts = Tables
@@ -408,7 +403,6 @@ object Watermarks {
     */
   def updateModeCounts(session: SparkSession, dir: String): DataFrame = {
     val spark = StreamSessions.tuned(session)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = stageBatches(spark, dir)
     val schema = Tables.parquet(spark, s"$streamDir/0.parquet").schema
     val counts = Tables

@@ -24,12 +24,8 @@ class DeterminismSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val alt = {
-    val s = TestSpark.spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "7")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s
-  }
+  private lazy val alt = GraftSession.derive(TestSpark.spark,
+    "spark.sql.shuffle.partitions" -> "7", "spark.sql.adaptive.enabled" -> "false")
 
   private def canonical(v: Any): String = v match {
     case d: Double => if (d == 0.0) "0" else java.lang.Double.toString(d)

@@ -380,7 +380,6 @@ class GoldenSpec extends AnyFunSuite {
 
   test("native functions resolve through the plain SQL surface") {
     val spark = TestSpark.spark
-    graft.functions.GraftFunctions.register(spark)
     val r = spark
       .sql("SELECT graft_ema(array(1.0d, 2.0d, 3.0d), 9) AS e, " +
         "graft_simhash(array('a','b'), 16) AS sh, " +

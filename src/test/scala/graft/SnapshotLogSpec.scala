@@ -630,4 +630,14 @@ class SnapshotLogSpec extends AnyFunSuite with TempDirs {
     // never an exception) — the f̂ ≥ f floor for an unseen key
     assert(cmsPointMin(Map.empty, 123L) == 0L)
   }
+
+  test("two-level plan: a second snapshot that reuses group ids plans only its own entries") {
+    withLog { db =>
+      TableLog.init(db)
+      for (snap <- Seq(1L, 2L); g <- Seq(0L, 1L))
+        TableLog.recordGroup(db, snap, g, Seq((s"s${snap}_g$g", g)))
+      assert(TableLog.planGroups(db, 2L, 0L, 1L) == ((2L, 2L, Seq("s2_g0", "s2_g1"))))
+      assert(TableLog.planGroups(db, 1L, 1L, 1L) == ((1L, 1L, Seq("s1_g1"))))
+    }
+  }
 }

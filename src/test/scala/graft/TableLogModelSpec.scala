@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Model-based test of the table-log commit protocol: random operation
   * sequences run against a real `TableLog` file and against a pure
   * in-memory model of the same protocol, and the two must agree after
-  * every operation.
+  * every operation. Every staged file gets its per-file metadata rows
+  * when it is written, as the entries record stats at write time.
   */
 class TableLogModelSpec extends AnyFunSuite with TempDirs {
   import TableLogModelSpec._
@@ -36,9 +37,29 @@ class TableLogModelSpec extends AnyFunSuite with TempDirs {
   }
 
   /** Apply one operation to the log and to the model; the log's answer
-    * (accepted, rejected, expired ids, claim) must be the model's.
+    * (accepted, rejected, expired ids, claim) must be the model's. Then
+    * record the metadata rows of the files the operation staged.
     */
-  private def step(db: String, m: Model, op: Op): Unit = op match {
+  private def step(db: String, m: Model, op: Op): Unit = {
+    runOp(db, m, op)
+    recordFiles(db, m.unrecorded())
+  }
+
+  /** One row per file in each path-keyed table but `stat_stale`, which
+    * commits write.
+    */
+  private def recordFiles(db: String, paths: Seq[String]): Unit = if (paths.nonEmpty) {
+    TableLog.recordSeq(db, paths, 1L)
+    TableLog.recordStats(db, paths.map((_, 0L)))
+    TableLog.recordSpec(db, paths.map((_, 1L, 0L)))
+    TableLog.recordColStats(db, "k", paths.map((_, 0L, 1L)))
+    TableLog.recordFileSchema(db, paths, 1L)
+    TableLog.recordColNdv(db, paths.map((_, "k", 0L, 1L)))
+    TableLog.recordColTopk(db, paths.map((_, "k", 1L, 1L)))
+    TableLog.recordColCms(db, paths.map((_, "k", 0L, 0L, 1L)))
+  }
+
+  private def runOp(db: String, m: Model, op: Op): Unit = op match {
     case Commit(onRef, stale, nData, deletes, markers) =>
       val head = m.head(onRef)
       val parent =
@@ -57,7 +78,7 @@ class TableLogModelSpec extends AnyFunSuite with TempDirs {
       if (ok) {
         m.snaps += id -> Snap(parent, base.data ++ data, base.eq ++ eq, base.pos ++ pos)
         m.advance(onRef, id)
-        m.markers += marks.size
+        m.markers ++= marks.map(_._1)
       }
     case Race(onRef) =>
       // two writers staged on the same head: the first wins, the second
@@ -86,7 +107,12 @@ class TableLogModelSpec extends AnyFunSuite with TempDirs {
       val keep = m.refs.values.toSet + m.current + 0L
       val expired = m.snaps.keys.filter(id => id < olderThan && !keep(id)).toSeq.sorted
       assert(TableLog.expireSnapshots(db, olderThan) == expired)
+      // a file only the expired snapshots listed loses its metadata rows
+      def listed(ss: Iterable[Snap]) = ss.flatMap(s => s.data ++ s.eq ++ s.pos).toSet
+      val dropped = listed(expired.map(m.snaps)) -- listed(m.snaps.view.filterKeys(!expired.contains(_)).values)
       m.snaps --= expired
+      m.files --= dropped
+      m.markers = m.markers.filterNot(dropped)
     case Claim(batch) =>
       assert(TableLog.claimApply(db, batch) == !m.claimed(batch), s"batch $batch claim")
       m.claimed += batch
@@ -95,7 +121,9 @@ class TableLogModelSpec extends AnyFunSuite with TempDirs {
   /** The invariants: pointers, refs and manifests equal the model's; no
     * manifest row without its snapshot row and no snapshot without its
     * manifest rows; GC against `liveFiles` never removes a file the log
-    * still lists; every claimed batch is in the ledger exactly once.
+    * still lists; every claimed batch is in the ledger exactly once; the
+    * path-keyed tables hold rows for exactly the files expiry has not
+    * made garbage.
     */
   private def check(db: String, m: Model): Unit = {
     assert(TableLog.currentSnapshot(db) == m.current, "current pointer")
@@ -121,12 +149,14 @@ class TableLogModelSpec extends AnyFunSuite with TempDirs {
     m.storage = m.storage.filter(live)
     val dangling = listed.values.flatMap(_.values.flatten).filterNot(m.storage).toSet
     assert(dangling.isEmpty, s"the log lists files GC deleted: $dangling")
-    val counts = DuckDbLive.withConnection(db) { c =>
-      Seq("apply_log", "stat_stale").map { t =>
-        DuckDbLive.queryRows(c, s"SELECT count(*) FROM $t").head.head.asInstanceOf[Number].longValue
-      }
+    val (claims, fileRows) = DuckDbLive.withConnection(db) { c =>
+      def paths(t: String) = DuckDbLive.queryRows(c, s"SELECT path FROM $t").map(_.head.toString).sorted
+      (DuckDbLive.queryRows(c, "SELECT count(*) FROM apply_log").head.head.asInstanceOf[Number].longValue,
+        FileTables.map(t => t -> paths(t)).toMap)
     }
-    assert(counts == Seq(m.claimed.size.toLong, m.markers), "apply_log / stat_stale rows")
+    assert(claims == m.claimed.size.toLong, "apply_log rows")
+    assert(fileRows("stat_stale") == m.markers.sorted, "stat_stale rows")
+    FileTables.filter(_ != "stat_stale").foreach(t => assert(fileRows(t) == m.files.toSeq.sorted, s"$t rows"))
   }
 
   test("model-based: random commit / race / crash / move / expire / claim sequences match the model") {
@@ -145,6 +175,8 @@ class TableLogModelSpec extends AnyFunSuite with TempDirs {
 object TableLogModelSpec {
   private val Ref = "b"
   private val ManifestTables = Seq("manifests", "delete_manifests", "position_delete_manifests")
+  private val FileTables = Seq("file_seq", "file_stats", "file_spec", "file_schema",
+    "col_stats", "col_ndv", "col_topk", "col_cms", "stat_stale")
 
   sealed trait Op
   /** A commit to main or to the ref, on the head or on a stale parent. */
@@ -183,8 +215,12 @@ object TableLogModelSpec {
     var current = 0L
     var refs: Map[String, Long] = Map(Ref -> 0L)
     var claimed = Set.empty[Long]
-    var markers = 0L
+    /** One path per `stat_stale` row. */
+    var markers = Seq.empty[String]
     var storage = Set.empty[String]
+    /** Files whose metadata rows the log still holds. */
+    var files = Set.empty[String]
+    private var recorded = 0
     var nextId = 1L
     private var nextFile = 0
 
@@ -197,7 +233,14 @@ object TableLogModelSpec {
       nextFile += 1
       val p = s"f$nextFile"
       storage += p
+      files += p
       p
+    }
+    /** The files staged since the last call, whose rows are not yet written. */
+    def unrecorded(): Seq[String] = {
+      val ps = (recorded + 1 to nextFile).map(i => s"f$i")
+      recorded = nextFile
+      ps
     }
   }
 

@@ -14,7 +14,6 @@ object TestSpark {
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(s)
-    s
+    graft.GraftSession.prepare(s)
   }
 }

@@ -23,7 +23,6 @@ class WatermarkSpec extends AnyFunSuite {
       .sortBy(_._2)
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    graft.functions.GraftFunctions.register(spark)
     val fp = call_function("graft_minhash", split(col("text"), " "), lit(3), lit(""))
     val batch = docs
       .select(col("doc_id"), fp.as("fp"))
